@@ -76,7 +76,7 @@ object Resources {
     * this is how plan deltas inside staged/iterative pipelines get
     * captured for plans/<round>/. */
   def checkpoint(df: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_CHECKPOINTS"))
+    if (explainCheckpoints(sys.env))
       System.err.println("== checkpoint plan ==\n" +
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
@@ -84,6 +84,12 @@ object Resources {
     register(() => unpersistCheckpoint(cp))
     cp
   }
+
+  /** Whether the environment asks for the checkpoint-plan dump: only
+    * `SPARK_GRAFT_EXPLAIN_CHECKPOINTS=1` does (`0` or empty leaves it
+    * off). */
+  private[graft] def explainCheckpoints(env: Map[String, String]): Boolean =
+    env.get("SPARK_GRAFT_EXPLAIN_CHECKPOINTS").contains("1")
 
   /** `df.cache()` released when the current scope (if any) closes. */
   def cache(df: DataFrame): DataFrame = {

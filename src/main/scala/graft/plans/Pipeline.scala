@@ -833,6 +833,8 @@ final class PipelineManager(spark: SparkSession,
       planned: Seq[(String, DataFrame)], queries: Seq[StreamingQuery],
       explicitStop: Boolean, terminal: Option[TaskStatus] = None)
   private var deployments = Map.empty[String, Running]
+  // sink tables by name, kept for a restart from the checkpoint root
+  private var tables = Map.empty[String, SinkTable]
   private var listeners = Seq.empty[TaskReport => Unit]
 
   /** Subscribe to status broadcasts (bc_server.broadcast analogue). */
@@ -859,29 +861,70 @@ final class PipelineManager(spark: SparkSession,
   }
 
   /** Launch every scheduled sink as a streaming query writing to the
-    * in-memory table `<dep>_<stream>`. With a [[checkpointRoot]], each
-    * sink checkpoints under `<root>/<deployment>/<stream>` — the
-    * topic-space isolation of the reference's per-deployment topic
-    * allocation (task_web.py:267-315): two deployments may reuse the
-    * same task/stream names and share NOTHING — not state, not
-    * offsets, not sink tables. */
+    * in-memory table `<dep>_<stream>` (a [[SinkTable]]). With a
+    * [[checkpointRoot]], each sink checkpoints under
+    * `<root>/<deployment>/<stream>` — the topic-space isolation of the
+    * reference's per-deployment topic allocation
+    * (task_web.py:267-315): two deployments may reuse the same
+    * task/stream names and share NOTHING — not state, not offsets, not
+    * sink tables. A deployment stopped and re-scheduled under the same
+    * name resumes from those checkpoints, state included, and its
+    * sinks keep appending to the tables of the earlier run. */
   def start(name: String): Unit = {
     val r = deployments(name)
     require(r.terminal.isEmpty,
       s"deployment '$name' already terminated (${r.terminal.get}) — " +
         "re-schedule it to run again")
     require(r.queries.isEmpty, s"deployment '$name' already started")
-    val qs = r.planned.map { case (s, df) =>
+    val qs = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try r.planned.foreach { case (s, df) =>
+      val table = s"${name}_$s"
+      val ckpt = s"${checkpointRoot.getOrElse(tempRoot)}/$name/$s"
+      val sink = tables.get(table).filter(_ => resumes(ckpt))
+        .getOrElse(new SinkTable(table, df.schema))
       val w = df.writeStream
-        .format("memory")
-        .queryName(s"${name}_$s")
+        .format(classOf[SinkTableProvider].getName)
+        .queryName(table)
         .outputMode("append")
-      checkpointRoot.foreach(root =>
-        w.option("checkpointLocation", s"$root/$name/$s"))
-      w.start()
+        .option("checkpointLocation", ckpt)
+      SinkTable.lend(sink) { opts =>
+        qs += w.options(opts).start()
+        spark.read.format(classOf[SinkTableProvider].getName).options(opts)
+          .load().createOrReplaceTempView(table)
+      }
+      if (checkpointRoot.isDefined) tables += table -> sink
+    } catch {
+      // all sinks or none: a half-started deployment would keep its
+      // first sinks running untracked, holding their query names
+      case e: Throwable =>
+        qs.foreach(q => try q.stop() catch { case _: Throwable => () })
+        dropTempCheckpoints(name)
+        throw e
     }
-    deployments += name -> r.copy(queries = qs)
+    deployments += name -> r.copy(queries = qs.toSeq)
     broadcastAll(r.dep, TaskStatus.Running)
+  }
+
+  /** Checkpoint root of the deployments started without a
+    * [[checkpointRoot]]: each one's checkpoints go when it stops, the
+    * rest when the JVM exits. */
+  private lazy val tempRoot: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-deployments")
+    sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir.toString
+  }
+
+  private def dropTempCheckpoints(name: String): Unit =
+    if (checkpointRoot.isEmpty)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(tempRoot, name))
+
+  /** Whether the sink checkpointing at `ckpt` has run before. */
+  private def resumes(ckpt: String): Boolean = {
+    val offsets = new org.apache.hadoop.fs.Path(ckpt, "offsets")
+    offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(offsets)
   }
 
   /** schedule + start in one call. */
@@ -941,6 +984,7 @@ final class PipelineManager(spark: SparkSession,
           case None => TaskStatus.Ended
         }
       r.queries.foreach(_.stop())
+      dropTempCheckpoints(name)
       deployments += name ->
         r.copy(explicitStop = true, terminal = Some(terminal))
       broadcastAll(r.dep, terminal)

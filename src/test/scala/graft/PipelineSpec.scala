@@ -567,6 +567,93 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(TaskStatus.Scheduled, TaskStatus.Running, TaskStatus.Ended))
   }
 
+  test("a piped calc -> gate deployment stopped mid-stream restarts " +
+      "from its checkpoint root: the final sink equals the batch compile " +
+      "over all events") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dep = Deployment("rs", Seq(
+      TaskSpec("src", SourceOp(IOMeta.number), Nil, "a"),
+      TaskSpec("ctrl", SourceOp(IOMeta.number), Nil, "play"),
+      TaskSpec("calc", CalculatorOp("a * 2 + 1", Seq("a")), Seq("a"), "doubled"),
+      TaskSpec("gate", GateOp(), Seq("doubled", "play"), "gated")))
+    def sources(evs: DataFrame) = {
+      def topic(t: Int) = evs.filter(col("topic") === t).select(
+        col("ts"), col("value"), lit(null).cast("string").as("text"),
+        lit(false).as("paused"), col("seq"), col("pipe"))
+      Map("a" -> topic(0), "play" -> topic(1))
+    }
+    // two pipes whose gates open before the stop and close after it, so
+    // the restarted run's output depends on the restored gate state
+    val evs = Seq(
+      ("p1", 0, 1L, 1.0), ("p2", 0, 2L, 2.0), ("p1", 1, 3L, 1.0),
+      ("p1", 0, 4L, 3.0), ("p2", 1, 5L, 1.0), ("p2", 0, 6L, 4.0),
+      ("p1", 0, 7L, 5.0), ("p2", 0, 8L, 6.0), ("p1", 1, 9L, 0.0),
+      ("p1", 0, 10L, 7.0), ("p2", 0, 11L, 8.0), ("p2", 1, 12L, 0.0),
+      ("p2", 0, 13L, 9.0)).zipWithIndex.map { case ((p, t, ts, v), i) =>
+        PipedEv(p, t, ts, v, i.toLong) }
+    val root = java.nio.file.Files.createTempDirectory("graft_restart_").toString
+    val mgr = new PipelineManager(spark, Some(root))
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[PipedEv]
+    def run(part: Seq[PipedEv]): Unit = {
+      mgr.start(dep, sources(mem.toDF()), Seq("gated"))
+      try {
+        assert(mgr.status("rs") == "running")
+        // one micro-batch per event: the stop lands between batches
+        part.foreach { e =>
+          mem.addData(e)
+          spark.streams.active.filter(_.name == "rs_gated")
+            .foreach(_.processAllAvailable())
+        }
+      } finally mgr.stop("rs")
+    }
+    val (first, second) = evs.splitAt(6)
+    run(first)
+    val before = spark.table("rs_gated").count()
+    run(second)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val want = rows(Pipeline.compile(dep, sources(evs.toDF()))("gated"))
+    assert(before > 0 && before < want.size)
+    assert(rows(spark.table("rs_gated")) == want)
+    // the restarted run continued the batch ids: one batch per event
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, "rs",
+      "gated", "commits", (evs.size - 1).toString)))
+  }
+
+  test("a sink that fails to start stops the deployment's other sinks: " +
+      "nothing runs untracked and a retry starts cleanly") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    def src(mem: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double, Long)]) =
+      mem.toDS().toDF("ts", "value", "seq")
+        .select(col("ts"), col("value"), lit(null).cast("string").as("text"),
+          lit(false).as("paused"), col("seq"))
+    val dep = Deployment("clash", Seq(
+      TaskSpec("src", SourceOp(IOMeta.number), Nil, "a"),
+      TaskSpec("plus", CalculatorOp("a + 1", Seq("a")), Seq("a"), "out1"),
+      TaskSpec("scale", CalculatorOp("a * 100", Seq("a")), Seq("a"), "out2")))
+    // an unrelated live query already holds the second sink's name
+    val blocker = src(org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double, Long)])
+      .writeStream.format("memory").queryName("clash_out2").start()
+    val mgr = new PipelineManager(spark)
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double, Long)]
+    try {
+      mgr.schedule(dep, Map("a" -> src(mem)), Seq("out1", "out2"))
+      intercept[IllegalArgumentException](mgr.start("clash"))
+      assert(!spark.streams.active.exists(_.name == "clash_out1"),
+        "the sink that did start must be stopped")
+      assert(mgr.status("clash") == "scheduled")
+      blocker.stop()
+      mgr.start("clash")
+      assert(mgr.status("clash") == "running")
+      mem.addData((10L, 1.0, 0L))
+      spark.streams.active.filter(_.name.startsWith("clash_"))
+        .foreach(_.processAllAvailable())
+      assert(spark.table("clash_out2").select("value").as[Double]
+        .collect().toSeq == Seq(100.0))
+    } finally { blocker.stop(); mgr.stop("clash") }
+  }
+
   test("DeploymentJson round-trips spec -> JSON -> spec (fixpoint) and " +
       "matches the reference's task_host_id hash (task.py:153)") {
     import graft.plans.DeploymentJson
@@ -785,3 +872,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mgr.status("live") == "stopped")
   }
 }
+
+/** One event of a multi-pipeline deployment: topic 0 is data, 1 the
+  * gate's control. */
+final case class PipedEv(pipe: String, topic: Int, ts: Long, value: Double,
+    seq: Long)

@@ -91,4 +91,12 @@ class ResourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(outer.storageLevel == StorageLevel.NONE)
   }
+
+  test("the checkpoint-plan dump follows SPARK_GRAFT_EXPLAIN_CHECKPOINTS=1 " +
+      "only") {
+    val key = "SPARK_GRAFT_EXPLAIN_CHECKPOINTS"
+    assert(Resources.explainCheckpoints(Map(key -> "1")))
+    for (off <- Seq(Map(key -> "0"), Map(key -> ""), Map.empty[String, String]))
+      assert(!Resources.explainCheckpoints(off), s"$off must leave it off")
+  }
 }
