@@ -197,5 +197,14 @@ object Bench {
     spark.stop()
     println(json)
     System.out.flush()
+    // The total sums only the queries that ran, so a failure would make
+    // the suite look faster: name every query whose runs all failed and
+    // exit non-zero.
+    val failed = results.collect { case (n, v) if v < 0 => n }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

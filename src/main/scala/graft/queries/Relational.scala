@@ -36,10 +36,11 @@ object Relational {
     * lineitem operands to the values they can actually hold keeps the
     * whole per-row path in Longs: an (8,2) operand (cap 999,999.99 —
     * l_extendedprice is unit-price × qty ≤ 50, ≤ ~105 k by the data's
-    * own construction, so ~9× headroom; overflow under the engine's
-    * non-ANSI mode would surface as NULL sums and fail the oracle
-    * hash LOUDLY, not silently) sums at (18,2), which the
-    * DecimalAggregates rule rewrites to a bare Long sum, and an
+    * own construction, so ~9× headroom; nothing sets
+    * `spark.sql.ansi.enabled`, so Spark 4's default ANSI mode applies
+    * and a wider value fails the query with NUMERIC_VALUE_OUT_OF_RANGE
+    * instead of summing wrong; RelationalSpec pins it) sums at (18,2),
+    * which the DecimalAggregates rule rewrites to a bare Long sum, and an
     * (8,2)·(4,2) product is (13,4), Long-backed, still EXACT — the
     * same rational value, so the same double, as the wide form and as
     * the unchanged DuckDB oracle. */

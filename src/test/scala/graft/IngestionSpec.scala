@@ -36,27 +36,35 @@ class IngestionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  /** The same event rows re-encoded with a different physical `ts`,
-    * laid out as a `<dir>/events.parquet` table Tables.events can read.
-    * (int64-ms is indistinguishable from int64-nanos by schema alone —
-    * both are plain longs — so that variant is out of scope by design:
-    * the normalizer branches on TYPE, never on value magnitude.) */
-  private def writeVariant(encode: org.apache.spark.sql.DataFrame =>
-      org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("events-enc").toString
-    encode(Tables.events(spark, sf)).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
+  private type Encode =
+    org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
 
   // ts is epoch-nanos Long out of Tables.events; fixture precision is
   // ≤ µs, so DIV 1000 → timestamp_micros is lossless.
-  private lazy val asLongNanos = writeVariant(identity) // int64 nanos
-  private lazy val asTimestampLtz = writeVariant( // timestamp[us], UTC
-    _.withColumn("ts", timestamp_micros(expr("ts DIV 1000"))))
-  private lazy val asTimestampNtz = writeVariant( // timestamp[us], naive
+  private val toLtz: Encode = // timestamp[us], UTC
+    _.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+  private val toNtz: Encode = // timestamp[us], naive
     _.withColumn("ts",
-      timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType)))
+      timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType))
+
+  /** The same event rows re-encoded with a different physical `ts`,
+    * written as the `<dir>/events.parquet` table Tables.events reads.
+    * (int64-ms is indistinguishable from int64-nanos by schema alone —
+    * both are plain longs — so that variant is out of scope by design:
+    * the normalizer branches on TYPE, never on value magnitude.) */
+  private def writeEvents(encode: Encode, dir: String): Unit =
+    encode(Tables.events(spark, sf)).coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+  private def writeVariant(encode: Encode): String = {
+    val dir = java.nio.file.Files.createTempDirectory("events-enc").toString
+    writeEvents(encode, dir)
+    dir
+  }
+
+  private lazy val asLongNanos = writeVariant(identity) // int64 nanos
+  private lazy val asTimestampLtz = writeVariant(toLtz)
+  private lazy val asTimestampNtz = writeVariant(toNtz)
 
   private def tsSum(dir: String): (Long, Long, String) = {
     val df = Tables.events(spark, dir)
@@ -75,6 +83,19 @@ class IngestionSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$label: Tables.events must yield ts: bigint, got ${got._3}")
       assert(got == want,
         s"$label: (rows, ts-checksum) drifted: got $got, want $want")
+    }
+  }
+
+  test("a table rewritten in place with another ts encoding is never " +
+      "read with a stale schema") {
+    val want = tsSum(sf)
+    val dir = java.nio.file.Files.createTempDirectory("events-rewrite").toString
+    for ((label, encode) <- Seq[(String, Encode)]("int64-nanos" -> identity,
+        "timestamp[us] utc" -> toLtz, "timestamp[us] naive" -> toNtz)) {
+      writeEvents(encode, dir)
+      val got = tsSum(dir)
+      assert(got._3 == "bigint", s"$label: got ts: ${got._3}")
+      assert(got == want, s"$label: got $got, want $want")
     }
   }
 
