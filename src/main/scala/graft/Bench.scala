@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on
   * SPARK_GRAFT_SF_DIR, printing one JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
   *
-  * Each query is forced with a noop-format write (full computation of
-  * every column — a count() would let Catalyst prune the projections
-  * we mean to measure). One unmeasured warm-up query first so JIT/
+  * Each query is forced with [[GraftSession.force]] (a scoped
+  * noop-format write). One unmeasured warm-up query first so JIT/
   * classloading doesn't land on the first measured query.
   */
 object Bench {
@@ -79,61 +76,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Engine-wide Catalyst additions (range-join rewrite +
-      // graft_long_dot): the engine's own entry points get the same
-      // protections a spark-submit user gets via spark.sql.extensions.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // InferFiltersFromGenerate clones a Generate's entire child
-      // expression into a synthesized filter and pushes it below the
-      // repartition — for explode(shingles(text)) that re-runs the
-      // whole corpus shingling serially in the single-task scan stage
-      // (measured 2-4x on every shingle-exploding query). The rule
-      // only ever skips empty/null arrays, which explode drops anyway.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val probe =
       if (sys.env.contains("SPARK_GRAFT_BENCH_STATS"))
         Some(new StatsProbe(spark.sparkContext))
       else None
 
-    def force(name: String, run: Int = 0): Double = {
-      def body(): Unit =
-        // Scoped run: any intermediate the query materializes
-        // (checkpointed band/edge tables, staging caches) is released
-        // as soon as the action finishes — round 5's bench recorded
-        // the shingle family 2–4× its isolated cost because those
-        // non-evictable blocks accumulated across the session.
-        graft.Resources.withScope {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-      val t0 = System.nanoTime()
-      val t = try {
-        probe match {
-          case Some(p) => p.measure(name, run)(body())
-          case None => body()
-        }
-        (System.nanoTime() - t0) / 1e9
+    def force(name: String, run: Int = 0): Double =
+      try probe match {
+        case Some(p) => p.measure(name, run)(GraftSession.force(spark, name, sfDir))
+        case None => GraftSession.force(spark, name, sfDir)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0
       }
-      // Belt-and-braces between measured queries (unmeasured): drop
-      // any cached plan the scope didn't know about. Deliberately
-      // NOT dropped: the session-scoped cluster-label table d10
-      // publishes for d12 (a localCheckpoint, outside CacheManager).
-      spark.catalog.clearCache()
-      t
-    }
 
     // Optional args: bench only the named queries (default: all).
     // SPARK_GRAFT_BENCH_SEED permutes the run order deterministically:
@@ -192,9 +149,7 @@ object Bench {
       if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
     }
     val json = header + kept.mkString(",") + footer
-    graft.operators.DedupQueries.invalidateLabels(spark)
-    graft.operators.GraphQueries.invalidateEdges(spark)
-    spark.stop()
+    GraftSession.close(spark)
     println(json)
     System.out.flush()
     // The total sums only the queries that ran, so a failure would make

@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Mirrors the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val n = SparkEntry.entry(spark).count()
     println(s"[entry-smoke] rows=$n ok=${n > 0}")
-    spark.stop()
+    GraftSession.close(spark)
   }
 }

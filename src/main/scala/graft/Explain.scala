@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of the named
   * queries (or all, given "all") so scan pruning (ReadSchema,
   * PushedFilters), join strategies (BroadcastHashJoin), and
@@ -52,19 +50,7 @@ object Explain {
       if (args.length < 2 || args(1) == "all" || audit)
         QueryRegistry.all.map(_.name)
       else args(1).split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // Engine-wide Catalyst additions (range-join rewrite +
-      // graft_long_dot): the engine's own entry points get the same
-      // protections a spark-submit user gets via spark.sql.extensions.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      // See Bench.scala: avoids serial re-shingling below repartition.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     var violations = List.empty[String]
     names.foreach { n =>
       if (audit) {
@@ -85,9 +71,7 @@ object Explain {
         }
       }
     }
-    graft.operators.DedupQueries.invalidateLabels(spark)
-    graft.operators.GraphQueries.invalidateEdges(spark)
-    spark.stop()
+    GraftSession.close(spark)
     if (audit) {
       if (violations.nonEmpty) {
         violations.foreach(v => System.err.println(s"[audit] VIOLATION $v"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-lifetime hygiene for materialized intermediates.
   *
@@ -15,8 +15,8 @@ import org.apache.spark.sql.DataFrame
   * inflation of every hash-aggregation-heavy query that ran after the
   * dedup block.
   *
-  * The fix is scoped lifecycle: an engine entry point (Bench, Verify,
-  * ScaleCurve, Explain) opens a [[withScope]] around each query; any
+  * The fix is scoped lifecycle: every engine main runs each query
+  * inside a [[withScope]] (most through [[GraftSession.force]]); any
   * intermediate the query materializes via [[checkpoint]]/[[cache]] is
   * registered in the scope and released when the query's action
   * finishes. Scopes are thread-local, so concurrent queries on one
@@ -26,10 +26,12 @@ import org.apache.spark.sql.DataFrame
   * before: the intermediate lives until the session ends or the caller
   * releases it.
   *
-  * Deliberately-pinned session-scoped intermediates (the
-  * duplicate-cluster label table d10 publishes for d12 — one slim row
-  * per document) bypass the scope on purpose; see
-  * `DedupQueries.publishLabels`.
+  * Deliberately session-pinned intermediates — the duplicate-cluster
+  * labels d10 publishes for d12/d16/d18, the edge table g01 publishes
+  * for the other graph queries, q30's bucketed tables — bypass the
+  * scope on purpose: they live in one map owned here ([[publish]],
+  * [[shared]]) until [[releasePinned]], which [[GraftSession.close]]
+  * runs before stopping the session.
   */
 object Resources {
 
@@ -98,12 +100,42 @@ object Resources {
     c
   }
 
-  /** Schedule an already-localCheckpointed DataFrame for release when
-    * the current scope closes (for checkpoints built elsewhere, e.g. a
-    * label table that lost the publish race and is only read by the
-    * current query). */
-  def releaseOnClose(df: DataFrame): Unit =
-    register(() => unpersistCheckpoint(df))
+  /** Session-pinned values: (session, key) → (value, its release). */
+  private val pinned = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), (AnyRef, () => Unit)]
+
+  /** Pin a freshly computed `fresh` under `key` for the session's
+    * lifetime and return it. If another copy is already pinned, `fresh`
+    * is still returned (the caller's number honestly carries the
+    * computation) but released with the current scope instead. */
+  def publish[A <: AnyRef](s: SparkSession, key: String, fresh: A)(
+      release: A => Unit): A = {
+    if (pinned.putIfAbsent((s, key), (fresh, () => release(fresh))) != null)
+      register(() => release(fresh))
+    fresh
+  }
+
+  /** The value pinned under `key`, computing and pinning it first when
+    * absent. computeIfAbsent serializes concurrent callers (Verify's
+    * pool), so the value is computed once per session. */
+  def shared[A <: AnyRef](s: SparkSession, key: String)(compute: => A)(
+      release: A => Unit): A =
+    pinned.computeIfAbsent((s, key), _ => {
+      val v = compute
+      (v, () => release(v))
+    })._1.asInstanceOf[A]
+
+  /** Unpin and release every value pinned on `s`. */
+  def releasePinned(s: SparkSession): Unit = {
+    val it = pinned.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey._1 eq s) {
+        it.remove()
+        try e.getValue._2() catch { case _: Throwable => () }
+      }
+    }
+  }
 
   /** Release the block-manager storage behind a localCheckpointed
     * DataFrame. Each checkpoint caches a full non-evictable copy of

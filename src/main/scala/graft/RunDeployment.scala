@@ -79,18 +79,10 @@ object RunDeployment {
     val Vector(jsonPath, outDir) = pos
     val binds = bindsB.result()
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // embeddable: reuse a live session (tests, notebooks) and leave
-    // its lifecycle to the owner; stop only a session we created
+    // its lifecycle to the owner; close only a session we created
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(jsonPath)), "UTF-8")
@@ -177,7 +169,7 @@ object RunDeployment {
     println(counts.map { case (n, c) => s""""$n":$c""" }
       .mkString("""{"deployment":"""" + loaded.deployment.name +
         """","outputs":{""", ",", "}}"))
-    if (!preExisting) spark.stop()
+    if (!preExisting) GraftSession.close(spark)
   }
 
   private def rmTree(f: java.io.File): Unit = {

@@ -192,21 +192,9 @@ object ScaleCurve {
     val only = args.drop(1).headOption.map(_.split(",").toSeq)
       .getOrElse(Seq.empty)
     def keep(n: String) = only.isEmpty || only.exists(n.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Engine-wide Catalyst additions (range-join rewrite +
-      // graft_long_dot): the engine's own entry points get the same
-      // protections a spark-submit user gets via spark.sql.extensions.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
+    // buildX10/buildX100 read events.parquet directly
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val x10 = s"$outDir/x10"
     buildX10(spark, "/root/testdata/sf0.1", x10)
@@ -218,16 +206,8 @@ object ScaleCurve {
       ("sf0.1", "/root/testdata/sf0.1", 2.0),
       ("sf0.1x10", x10, 3.0))
 
-    def time(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.Resources.withScope {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // see Bench: between-query hygiene
-      t
-    }
+    def time(name: String, dir: String): Double =
+      GraftSession.force(spark, name, dir)
 
     time(Queries.head, scales.head._2) // JIT warm-up, unmeasured
     val lastTs = scala.collection.mutable.Map.empty[String, Double]
@@ -254,9 +234,7 @@ object ScaleCurve {
     println(s"""{"scales":[${scales.map(s => s""""${s._1}"""").mkString(",")}],""" +
       s""""queries":{${rows.mkString(",")}},""" +
       s""""x100":{${x100Rows.mkString(",")}}}""")
-    graft.operators.DedupQueries.invalidateLabels(spark)
-    graft.operators.GraphQueries.invalidateEdges(spark)
-    spark.stop()
+    GraftSession.close(spark)
   }
 
   /** Replica-amplified documents table (same perturbation scheme as

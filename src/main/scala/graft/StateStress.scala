@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.{StateMachines, StatefulRunner}
 import graft.streaming.StatefulRunner.KEv
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** STATE-LARGER-THAN-MEMORY evidence main: drives the time-buffer
@@ -38,17 +37,10 @@ import org.apache.spark.sql.functions._
   */
 object StateStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val nKeys = sys.env.getOrElse("SPARK_GRAFT_STRESS_KEYS", "30000").toLong
     val perKey = sys.env.getOrElse("SPARK_GRAFT_STRESS_PERKEY", "100").toLong
     val batches = 8
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     import spark.implicits._
 
     val base = new java.io.File(
@@ -96,7 +88,6 @@ object StateStress {
 
     def startQuery(): org.apache.spark.sql.streaming.StreamingQuery = {
       val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", cpus)
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming." +
           "state.RocksDBStateStoreProvider")
@@ -170,7 +161,7 @@ object StateStress {
         f""""ingest_rows_per_sec":${srcRows / ingestSec}%.0f,""" +
         s""""restart_checksum_ok":$ok}""")
     org.apache.hadoop.fs.FileUtil.fullyDelete(base)
-    spark.stop()
+    GraftSession.close(spark)
     if (!ok) sys.exit(1)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.{StateMachines, StatefulRunner}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-throughput curve: the SAME `runStreaming` mount the
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * can).
   *
   * State width follows key cardinality up to the core count —
-  * min(32, pipelines) — the per-stream production knob the parity
+  * min(cpus, pipelines) — the per-stream production knob the parity
   * mounts document. The fixture build (chunk-file write) happens on
   * an UNMEASURED warm pass via the mount's fixture cache; the
   * measured pass re-runs the full stream (fresh session, checkpoint,
@@ -33,15 +33,7 @@ object StreamCurve {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     /** e24's gate fixture re-keyed onto 2·reps pipelines. */
     def gateFixture(reps: Int): DataFrame = {
@@ -301,7 +293,7 @@ object StreamCurve {
                 lit(false).as("paused"))
               .as[KOut](org.apache.spark.sql.Encoders.product[KOut]))
       }
-      val width = math.min(cpus.toInt, math.max(4, pipes)).toString
+      val width = math.min(GraftSession.cpus, math.max(4, pipes)).toString
       val conf = Map("spark.sql.shuffle.partitions" -> width)
       val tag = s"curve-$machine-$reps@$sfDir"
       val rows = fixture.count()
@@ -337,6 +329,6 @@ object StreamCurve {
         s""""rows":$n,"sec":${f"$sec%.3f"},"rows_per_sec":${f"$rps%.0f"}}"""
     }.mkString("[", ",", "]")
     println(s"""{"sf":"$sfDir","curve":$json}""")
-    spark.stop()
+    GraftSession.close(spark)
   }
 }

@@ -201,16 +201,13 @@ object Tables {
     * cutting their taskMs 8.5 s → 0.5 s. Both tables reach full
     * cluster width by the ×10 decade, so no scale path narrows.
     * The byte total comes from the leaf listing of the load's file
-    * state. SPARK_GRAFT_SPREAD overrides (the per-deployment tuning
-    * knob). */
+    * state. */
   private def spread(s: SparkSession, dir: String, name: String,
       bytesPerPartition: Long): DataFrame = {
     val (df, state) = read(s, dir, name)
-    val w = sys.env.get("SPARK_GRAFT_SPREAD").map(_.toInt).getOrElse {
-      math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-        state.bytes / bytesPerPartition)).toInt
-    }
-    df.repartition(w)
+    df.repartition(math.max(1L, math.min(
+      s.sparkContext.defaultParallelism.toLong,
+      state.bytes / bytesPerPartition)).toInt)
   }
 
   def documents(s: SparkSession, d: String): DataFrame =

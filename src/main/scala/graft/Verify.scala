@@ -12,21 +12,10 @@ object Verify {
       case Array(a, b)    => (a, b, Seq.empty[String])
       case Array(a, b, c) => (a, b, c.split(",").toSeq)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Engine-wide Catalyst additions (range-join rewrite +
-      // graft_long_dot): the engine's own entry points get the same
-      // protections a spark-submit user gets via spark.sql.extensions.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // See Bench.scala: avoids serial re-shingling below repartition.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // embeddable like RunDeployment: reuse a live session (tests) and
+    // leave its lifecycle to the owner; close only a session we created
+    val preExisting = SparkSession.getDefaultSession.isDefined
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // run queries concurrently (Spark schedules concurrent actions
     // fine); each result is small, so the coalesce(1) writes are cheap
@@ -99,9 +88,6 @@ object Verify {
       .filter { case (k, _) => only.isEmpty || only.exists(k.startsWith) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.operators.DedupQueries.invalidateLabels(spark)
-    graft.operators.GraphQueries.invalidateEdges(spark)
-    graft.queries.Relational.invalidateBucketed(spark)
-    spark.stop()
+    if (!preExisting) GraftSession.close(spark)
   }
 }

@@ -813,16 +813,11 @@ object DedupQueries {
     * (id, lbl) row per clustered document, localCheckpointed — the
     * persisted intermediate a production pipeline writes between its
     * dedup and split stages. d10 ALWAYS computes fresh (its bench
-    * number honestly reflects the fixpoint cost) and publishes via
-    * putIfAbsent; d12 reuses the published table when present and
-    * computes it otherwise, so the dedup tail costs the CC loop once
-    * per session instead of twice. A fresh copy that loses the
-    * publish race is scope-released with its query; the published
-    * copy is pinned for the session (release via
-    * [[invalidateLabels]]). */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
+    * number honestly reflects the fixpoint cost) and publishes it;
+    * d12 reuses the published table when present and computes it
+    * otherwise, so the dedup tail costs the CC loop once per session
+    * instead of twice. Both go through [[graft.Resources]]' pinned
+    * tables, released when the session closes. */
   private def ccLabelsFresh(s: SparkSession, d: String): DataFrame = {
     val pairs = lshCandidates(Tables.documents(s, d))
       .select(col("id_a"), col("id_b"))
@@ -832,29 +827,13 @@ object DedupQueries {
     connectedComponents(edges)
   }
 
-  private def ccLabelsPublishing(s: SparkSession, d: String): DataFrame = {
-    val fresh = ccLabelsFresh(s, d)
-    if (labelCache.putIfAbsent((s, d), fresh) != null)
-      graft.Resources.releaseOnClose(fresh) // already published; extra copy
-    fresh
-  }
+  private def ccLabelsPublishing(s: SparkSession, d: String): DataFrame =
+    graft.Resources.publish(s, s"d10.labels:$d", ccLabelsFresh(s, d))(
+      unpersistCheckpoint)
 
   private def ccLabelsShared(s: SparkSession, d: String): DataFrame =
-    labelCache.computeIfAbsent((s, d), kv => ccLabelsFresh(kv._1, kv._2))
-
-  /** Drop (and unpersist) every label table published on `s` — for
-    * long-lived sessions whose corpus changes, and called by the
-    * engine mains before `spark.stop()`. */
-  def invalidateLabels(s: SparkSession): Unit = {
-    val it = labelCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        graft.Resources.unpersistCheckpoint(e.getValue)
-        it.remove()
-      }
-    }
-  }
+    graft.Resources.shared(s, s"d10.labels:$d")(ccLabelsFresh(s, d))(
+      unpersistCheckpoint)
 
   /** d10: d09's cluster resolution with TRUE connected components —
     * [[connectedComponents]] iterated to fixpoint, so duplicate

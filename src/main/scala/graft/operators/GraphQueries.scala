@@ -62,33 +62,15 @@ object GraphQueries {
     * first derivation per (session, sfDir) and reusing it. g01 always
     * computes fresh and publishes (its bench number honestly carries
     * the derivation cost); g02/g03 consume the published table when
-    * present. Release via [[invalidateEdges]] (wired into the engine
-    * mains next to invalidateLabels). */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private def edgesPublishing(s: SparkSession, d: String): DataFrame = {
-    val fresh = edgesFresh(s, d).localCheckpoint()
-    if (edgeCache.putIfAbsent((s, d), fresh) != null)
-      graft.Resources.releaseOnClose(fresh) // already published; extra copy
-    fresh
-  }
+    * present. The table is pinned in [[graft.Resources]] until the
+    * session closes. */
+  private def edgesPublishing(s: SparkSession, d: String): DataFrame =
+    graft.Resources.publish(s, s"g01.edges:$d",
+      edgesFresh(s, d).localCheckpoint())(graft.Resources.unpersistCheckpoint)
 
   private def edgesShared(s: SparkSession, d: String): DataFrame =
-    edgeCache.computeIfAbsent((s, d),
-      kv => edgesFresh(kv._1, kv._2).localCheckpoint())
-
-  /** Drop (and unpersist) every edge table published on `s`. */
-  def invalidateEdges(s: SparkSession): Unit = {
-    val it = edgeCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        graft.Resources.unpersistCheckpoint(e.getValue)
-        it.remove()
-      }
-    }
-  }
+    graft.Resources.shared(s, s"g01.edges:$d")(
+      edgesFresh(s, d).localCheckpoint())(graft.Resources.unpersistCheckpoint)
 
   private val edgesSql =
     """edges AS (

@@ -141,35 +141,16 @@ object Relational {
   /** One-time-per-(session, dir) publication of lineitem+orders
     * bucketed by orderkey — the curated-layout step a 100 TB
     * deployment runs once so every downstream fact-fact join on that
-    * key reads pre-partitioned (SCALE.md "Joins"). computeIfAbsent
-    * serializes Verify's concurrent query threads; bench's min-of-two
-    * measures the JOIN on the second run, the write having been paid
-    * on the first — exactly the amortization the layout exists for.
+    * key reads pre-partitioned (SCALE.md "Joins"). The table pair is
+    * pinned in [[graft.Resources]], whose computeIfAbsent serializes
+    * Verify's concurrent query threads; bench's min-of-two measures
+    * the JOIN on the second run, the write having been paid on the
+    * first — exactly the amortization the layout exists for. Closing
+    * the session drops both tables from the context's catalog.
     * External-table files go under the system tmpdir (stable path per
     * dir, overwritten on rebuild, so reruns never accumulate). */
-  private val bucketedReady =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Forget (and drop) the published bucketed tables — called by the
-    * engine mains before `spark.stop()` (the invalidateLabels
-    * pattern). Unlike q32/q34's path-addressed layouts, q30's tables
-    * live in the CONTEXT's catalog: a later session in a NEW context
-    * (e.g. a test suite running after an in-process Verify) would
-    * find the map claiming tables its catalog never heard of. */
-  def invalidateBucketed(s: SparkSession): Unit = {
-    val it = bucketedReady.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val (lt, ot) = e.getValue
-      try {
-        s.sql(s"DROP TABLE IF EXISTS $lt")
-        s.sql(s"DROP TABLE IF EXISTS $ot")
-      } catch { case _: Throwable => () } // context already gone: fine
-      it.remove()
-    }
-  }
   private def ensureBucketed(s: SparkSession, dir: String): (String, String) =
-    bucketedReady.computeIfAbsent(dir, _ => {
+    graft.Resources.shared(s, s"q30.bucketed:$dir") {
       val h = Integer.toHexString(dir.hashCode).replace('-', 'n')
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-bucketed-$h"
       val (lt, ot) = (s"graft_l_bkt_$h", s"graft_o_bkt_$h")
@@ -181,7 +162,7 @@ object Relational {
         Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
         ot, 8, Seq("o_orderkey"), Some(s"$base/o"))
       (lt, ot)
-    })
+    } { case (lt, ot) => Seq(lt, ot).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t")) }
 
   /** q04's exact semantics (same oracle SQL, same revenue hashes) with
     * the one fact-fact join reading the bucketed layout: both sides

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic quality of the approximate search paths, measured against
@@ -17,19 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * guard: a broken Lloyd step, a degenerate ADC table, or a
   * mis-ordered shortlist all crash recall to the ~10% chance floor
   * and fail here long before anyone reads a curve. */
-class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ann-recall-spec")
-    .getOrCreate()
+class AnnRecallSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pairs(name: String, q: String, n: String): Set[(Long, Long)] =
     SparkEntry.queries(name)(spark, sf)

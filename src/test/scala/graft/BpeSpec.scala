@@ -1,25 +1,14 @@
 package graft
 
 import graft.operators.TextQueries
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** t17's distributed BPE trainer against a naive in-memory reference:
   * the greedy left-to-right merge (BPE's one sequential step) must be
   * exactly reproduced by the self-delimiting \x01sym\x02 encoding +
   * plain string replace, and the (freq, a, b) struct argmax must be
   * deterministic under ties. Also pins t16's integer-log2 identity. */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("bpe-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpeSpec extends AnyFunSuite with SparkFixture {
 
   /** Naive reference BPE on a word-frequency dict: symbols as string
     * lists, greedy left-to-right merge, argmax tie-break by
@@ -114,5 +103,18 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val viaBits = 63 - java.lang.Long.numberOfLeadingZeros(k.toLong)
       assert(viaBin == viaBits, s"k=$k")
     }
+  }
+
+  test("t19 over zero-row tables reports 0, not NULL, at every stage") {
+    val sf = "/root/testdata/sf0.001"
+    val empty = java.nio.file.Files.createTempDirectory("t19-empty").toString
+    for (t <- Tables.all)
+      spark.read.parquet(s"$sf/$t.parquet").limit(0)
+        .write.parquet(s"$empty/$t.parquet")
+    val stages = SparkEntry.queries("t19_pretrain_pipeline")(spark, empty)
+      .collect().filter(_.getString(0) == "stage")
+    assert(stages.map(_.getString(1)).toSeq ==
+      Seq("a_quality", "b_dedup", "c_scrub", "d_lm", "e_tokens_kept"))
+    for (r <- stages) assert(!r.isNullAt(2) && r.getLong(2) == 0L, r)
   }
 }

@@ -1,30 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Bucketing removes the shuffle from co-located joins — the physical
   * plan of a bucketed lineitem⋈orders join must contain no Exchange,
   * while the plain parquet join does (SCALE.md "Joins"). */
-class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketingSpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val warehouse =
-    java.nio.file.Files.createTempDirectory("bucket-wh").toString
+  override protected lazy val spark =
+    newSession("spark.sql.autoBroadcastJoinThreshold" -> "-1") // force SMJ path
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    .config("spark.ui.enabled", "false")
-    .appName("bucketing-spec")
-    .getOrCreate()
+  private lazy val tableDir =
+    java.nio.file.Files.createTempDirectory("bucket-tables").toString
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("q32's partitioned layout prunes at planning time: the lang " +
       "predicate lands in PartitionFilters and only en files are read") {
@@ -66,10 +56,10 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bucketed join has no Exchange; plain join does") {
     Tables.writeBucketed(
       Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
-      "l_bucketed", 4, Seq("l_orderkey"))
+      "l_bucketed", 4, Seq("l_orderkey"), Some(s"$tableDir/l"))
     Tables.writeBucketed(
       Tables.orders(spark, sf).select("o_orderkey", "o_totalprice"),
-      "o_bucketed", 4, Seq("o_orderkey"))
+      "o_bucketed", 4, Seq("o_orderkey"), Some(s"$tableDir/o"))
 
     val bucketed = spark.table("l_bucketed")
       .join(spark.table("o_bucketed"), col("l_orderkey") === col("o_orderkey"))
@@ -94,11 +84,8 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Own session: this spec's base session kills broadcast joins to
     // force SMJ everywhere, but q30's own contract is that dimension
     // hops broadcast and ONLY the final aggregate shuffles — assert it
-    // under the engine's normal conf. (saveAsTable registers in the
-    // shared external catalog, so the bucketed tables q30 publishes
-    // are visible across sessions of this context.)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    // under the engine's normal conf.
+    val ss = newSession("spark.sql.autoBroadcastJoinThreshold" -> "10485760")
     val q30 = graft.SparkEntry.queries("q30_bucketed_join")(ss, sf)
     val q04 = graft.SparkEntry.queries("q04_multi_join")(ss, sf)
     def shuffles(df: org.apache.spark.sql.DataFrame): Int =

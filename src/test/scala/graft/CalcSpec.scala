@@ -1,10 +1,8 @@
 package graft
 
 import graft.functions.Calc
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Grammar/eval unit tests mirroring
   * /root/reference/tests/tasks/test_calculator.py:8-15 — every operator
@@ -12,16 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * Spark plan and compared against the reference semantics computed
   * with java.lang.Math.
   */
-class CalcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("calc-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CalcSpec extends AnyFunSuite with SparkFixture {
 
   /** Evaluate a formula with the given variable bindings via a real
     * one-row DataFrame — the compiled Column runs through Catalyst. */

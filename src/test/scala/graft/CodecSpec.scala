@@ -1,13 +1,12 @@
 package graft
 
 import graft.functions.{AudioKernel, Codec}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** G.711 μ-law codec and resampler kernels pinned to the exact integer
   * formulations that DspQueries p07/p08 run on both engines — so a
   * green oracle on those queries certifies the kernels too. */
-class CodecSpec extends AnyFunSuite {
+class CodecSpec extends AnyFunSuite with SparkFixture {
 
   /** The p07 oracle formulation, in plain Scala. */
   private def encFormula(x: Int): Int = {
@@ -142,11 +141,6 @@ class CodecSpec extends AnyFunSuite {
   test("PNG codec through the m03 mapPartitions mount: a real JVM " +
       "codec behind the Codec seam round-trips rgb24 bit-exactly " +
       "(test_audio_codec.py:10-28's round-trip property)") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     val (w, h) = (24, 16)
     // deterministic frames: LCG bytes (noise, worst case for DEFLATE)

@@ -3,10 +3,8 @@ package graft
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner
 import graft.streaming.StatefulRunner.{KEv, KOut}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Output-container synchronizer tests — hand-traced scenarios for the
   * wait_for algorithm of
@@ -18,16 +16,7 @@ import org.scalatest.BeforeAndAfterAll
   * quantum), topic 1 = video (time_base 1/30 s, frame 1 → 33.33 ms
   * quantum); max_desync = 100 ms.
   */
-class ContainerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("container-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ContainerSpec extends AnyFunSuite with SparkFixture {
 
   private def machine = new OutputContainerSync(Map(
     0 -> OcStreamCfg(1, 32000, 1024, "a"),

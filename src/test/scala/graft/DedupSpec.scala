@@ -1,10 +1,8 @@
 package graft
 
 import graft.operators.DedupQueries
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Property test for the prefix-filtered Jaccard self-join (d03): on
   * random small-vocab corpora (small vocab forces high shingle document
@@ -13,16 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * over word-3-gram shingles emits — the prefix filter and length
   * filter are candidate-pruning only, never result-changing.
   */
-class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("dedup-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DedupSpec extends AnyFunSuite with SparkFixture {
 
   private def check(p: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default

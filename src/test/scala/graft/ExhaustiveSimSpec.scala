@@ -3,9 +3,7 @@ package graft
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner
 import graft.streaming.StatefulRunner.KEv
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.collection.immutable.VectorMap
 
 /** Exhaustive event-permutation harness — the analogue of the
@@ -34,16 +32,7 @@ import scala.collection.immutable.VectorMap
   * compares every group against the pure fold — the exhaustive check of
   * the Spark mount itself, something the reference cannot do.
   */
-class ExhaustiveSimSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("exhaustive-sim")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ExhaustiveSimSpec extends AnyFunSuite with SparkFixture {
 
   /** An expectation model with the same fold signature as Machine but
     * an independent derivation (transcribed from the reference task). */

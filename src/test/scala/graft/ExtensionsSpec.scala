@@ -1,10 +1,7 @@
 package graft
 
-import graft.plans.GraftExtensions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** [[graft.plans.RangeJoinRewrite]] end-to-end through a real session:
   * the natural `abs(l.ts − r.ts) <= W` theta-join must (a) stop
@@ -12,20 +9,10 @@ import org.scalatest.BeforeAndAfterAll
   * installed, and (b) return exactly the pairs a naive in-memory
   * all-pairs filter returns, on the real sf0.001 events table.
   */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionsSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
   private val W = 3600000L
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .appName("extensions-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def sides() = {
     val e = Tables.eventsMs(spark, sf)

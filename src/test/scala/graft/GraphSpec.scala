@@ -1,10 +1,8 @@
 package graft
 
 import graft.operators.DedupQueries
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Fixpoint connected components (d10 / DedupQueries.connectedComponents)
   * pinned to a union-find model: on random graphs the distributed
@@ -14,16 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * (d09's 3 rounds) provably under-merges, so it gets a deterministic
   * test of its own.
   */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("graph-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphSpec extends AnyFunSuite with SparkFixture {
 
   /** Union-find with path compression — the sequential model. Returns
     * each edge-endpoint node's component minimum. */

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema-tolerant ingestion of the events table (SURVEY §1.2's
@@ -21,20 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * events-reading query at analysis (the round-7 incident: 66/132
   * registry entries lost to one hard-coded encoding).
   */
-class IngestionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    // UTC like every graft main: makes the NTZ-write leg deterministic
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ingestion-spec")
-    .getOrCreate()
+class IngestionSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   private type Encode =
     org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame

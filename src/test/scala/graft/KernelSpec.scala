@@ -8,20 +8,10 @@ import graft.streaming.StatefulRunner.KEv
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Time buffer / repeater machines, the 3-tier fntask surface, named
   * streams, and the image kernels. */
-class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("kernel-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KernelSpec extends AnyFunSuite with SparkFixture {
 
   // ------------------------------------------------------------- machines
   test("time buffer releases when newest - head >= size (timebuffer.py:44-63)") {

@@ -8,10 +8,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileContext, FileStatus,
   FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins the engine's local file system ([[NioRawLocalFileSystem]] and
   * its two checksummed wrappers): the classpath `core-site.xml` must
@@ -19,16 +17,7 @@ import org.scalatest.BeforeAndAfterAll
   * equal stock [[RawLocalFileSystem]]'s (the stock class serves only as
   * this spec's reference), and the `.crc` integrity layer must survive
   * on the checkpoint files Spark writes through it. */
-class LocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[1]")
-    .config("spark.sql.shuffle.partitions", "1")
-    .config("spark.ui.enabled", "false")
-    .appName("localfs-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LocalFsSpec extends AnyFunSuite with SparkFixture {
 
   private val local = URI.create("file:///")
 

@@ -1,27 +1,18 @@
 package graft
 
 import graft.functions.LongDot
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The codegen'd LongDotProduct expression vs the composable
   * zip_with/aggregate formulation it replaces. */
-class LongDotSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LongDotSpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("longdot-spec")
-      .getOrCreate()
+  override protected lazy val spark = {
+    val s = newSession()
     LongDot.ensureRegistered(s)
     s
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("matches zip_with/aggregate on random arrays (codegen path)") {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.DedupQueries.{mulMod61, LshA, LshB, LshP}
 
@@ -14,16 +12,7 @@ import graft.operators.DedupQueries.{mulMod61, LshA, LshB, LshP}
   * every LSH bucket, so the domain edges and the registry's actual
   * (A_j, B_j) constants are all pinned.
   */
-class LshHashSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("lsh-hash-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LshHashSpec extends AnyFunSuite with SparkFixture {
 
   private def model(h: Long, a: Long, b: Long): Long =
     ((BigInt(h) * a + b) mod BigInt(LshP)).toLong

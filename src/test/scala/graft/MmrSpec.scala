@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** s11 (MMR re-rank): the unrolled-join greedy recurrence checked
   * against a third, direct implementation (plain Scala greedy over the
@@ -12,22 +10,12 @@ import org.scalatest.BeforeAndAfterAll
   * first pick is the pure-relevance top-1, and MMR genuinely
   * diversifies (some query's selection differs from pure-rel top-k —
   * if it never did, the diversity term would be dead code). */
-class MmrSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("mmr-spec")
-    .getOrCreate()
+class MmrSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
   private val Shortlist = 12
   private val K = 5
   private val Lambda = 0.7
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Quantized vectors keyed by id — same floor(x*1000) integers as
     * the query plan. */

@@ -8,7 +8,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Model-based randomized tests in the style of the reference's
   * Simulator (/root/reference/tests/sim.py, tests/tasks/test_gate.py):
@@ -18,16 +17,7 @@ import org.scalatest.BeforeAndAfterAll
   * The generators cover equal-timestamp collisions (where the priority
   * tie-breaks matter) by drawing timestamps from a small grid.
   */
-class ModelCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("model-check")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ModelCheckSpec extends AnyFunSuite with SparkFixture {
 
   /** Run a ScalaCheck property (50 cases) and fail the suite on any
     * counterexample. */

@@ -25,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * compare shells out to scripts/dtype_gate.py — the same pattern as
   * scripts/check.py, which mimics the driver's value compare.
   */
-class OracleDtypeSpec extends AnyFunSuite {
+class OracleDtypeSpec extends AnyFunSuite with SparkFixture {
 
   private def pythonHasDuckdb: Boolean =
     try new ProcessBuilder("python3", "-c", "import duckdb, pandas")
@@ -45,6 +45,8 @@ class OracleDtypeSpec extends AnyFunSuite {
     // The real driver dump: all registered queries → parquet, all
     // registered oracles → oracle_sql.json. A query failure writes a
     // _FAILED marker, which the gate script reports as bad.
+    // on this suite's session, which Verify leaves running
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
     Verify.main(Array(sf, out.getAbsolutePath))
 
     val pb = new ProcessBuilder(

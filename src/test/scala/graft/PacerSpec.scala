@@ -1,25 +1,14 @@
 package graft
 
 import graft.sources.InputPacer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Input-pacer tests: restamp math against hand-computed values
   * (inputcontainer.py:74-77) and real-time paced emission — packets
   * are released only once the wall clock reaches their restamped
   * offset, and a late batch catches up instead of drifting. */
-class PacerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("pacer-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PacerSpec extends AnyFunSuite with SparkFixture {
 
   private def packetsDf(rows: Seq[(Long, String, Long, Long, Long)]) = {
     import spark.implicits._

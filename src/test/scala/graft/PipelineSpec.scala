@@ -6,23 +6,13 @@ import graft.plans.{PipelineManager, TaskReport, TaskStatus}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Deployment lifecycle tests mirroring the reference's task-system
   * integration tests (/root/reference/tests/system/test_task_system.py):
   * validation, batch compile of a multi-operator DAG, and the
   * schedule/start/status/stop lifecycle on a real streaming query.
   */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("pipeline-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineSpec extends AnyFunSuite with SparkFixture {
 
   private def env(rows: Seq[(Long, Double)]): DataFrame = {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Fixture tests for the round-5 corpus-pipeline additions:
   *
@@ -17,16 +15,7 @@ import org.scalatest.BeforeAndAfterAll
   *    all documents are assigned, and all three splits are non-empty
   *    at sf0.01.
   */
-class RankFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("rank-funnel-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RankFunnelSpec extends AnyFunSuite with SparkFixture {
 
   private def q(name: String) =
     QueryRegistry.all.find(_.name == name).get.fn

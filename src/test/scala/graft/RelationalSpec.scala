@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The relational family narrows lineitem money to Long-backed
@@ -13,19 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the engine runs Spark's default ANSI mode, where an out-of-range
   * cast raises NUMERIC_VALUE_OUT_OF_RANGE.
   */
-class RelationalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("relational-spec")
-    .getOrCreate()
+class RelationalSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   /** sf0.001's lineitem plus one row inside q01's shipdate filter whose
     * extended price is `price`, as a table directory. */

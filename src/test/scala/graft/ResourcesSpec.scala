@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins the engine's session-hygiene mechanism ([[Resources]]): scoped
   * checkpoints/caches must release when their scope closes, unscoped
@@ -12,16 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * in-flight intermediates — the invariants behind round 6's fix of
   * the bench-contamination artifact.
   */
-class ResourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("resources-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ResourcesSpec extends AnyFunSuite with SparkFixture {
 
   private def rddOf(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.analyzed match {
@@ -90,6 +80,35 @@ class ResourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(outer.storageLevel != StorageLevel.NONE, "outer still cached")
     }
     assert(outer.storageLevel == StorageLevel.NONE)
+  }
+
+  test("releasing a session unpins d10's labels, g01's edges and q30's " +
+      "bucketed tables; q30 on a later session rebuilds its tables") {
+    val sf = "/root/testdata/sf0.001"
+    def run(s: SparkSession, name: String): Unit =
+      Resources.withScope(SparkEntry.queries(name)(s, sf).collect())
+    def pinned(s: SparkSession, key: String): DataFrame =
+      Resources.shared[DataFrame](s, key)(fail(s"$key is not pinned"))(_ => ())
+    def bucketed(s: SparkSession): Seq[String] =
+      s.catalog.listTables().collect().map(_.name).toSeq
+        .filter(_.matches("graft_[lo]_bkt_.*")).sorted
+    val s = newSession()
+    Seq("g01_triangle_count", "d10_cc_fixpoint", "q30_bucketed_join")
+      .foreach(run(s, _))
+    val labels = rddOf(pinned(s, s"d10.labels:$sf"))
+    val edges = rddOf(pinned(s, s"g01.edges:$sf"))
+    assert(labels.getStorageLevel != StorageLevel.NONE)
+    assert(edges.getStorageLevel != StorageLevel.NONE)
+    assert(bucketed(s).size == 2)
+
+    Resources.releasePinned(s) // what GraftSession.close runs before stop
+    assert(labels.getStorageLevel == StorageLevel.NONE)
+    assert(edges.getStorageLevel == StorageLevel.NONE)
+    assert(bucketed(s).isEmpty)
+
+    val later = newSession()
+    run(later, "q30_bucketed_join")
+    assert(bucketed(later).size == 2)
   }
 
   test("the checkpoint-plan dump follows SPARK_GRAFT_EXPLAIN_CHECKPOINTS=1 " +

@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end test of the [[RunDeployment]] CLI: a stored deployment
   * JSON on disk + envelope parquet feeds → named-output parquet, the
   * full "run your streamtasks export here" loop with zero Scala.
   */
-class RunDeploymentSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("run-deployment-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
 
   test("a stored calc -> gate deployment runs from JSON + parquet " +
       "bindings to named-output parquet") {

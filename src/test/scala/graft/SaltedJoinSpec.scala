@@ -1,9 +1,7 @@
 package graft
 
 import graft.queries.Relational
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** q31's salted skew join: the executed plan must actually spread the
   * hot key — the join shuffles on BOTH (k, salt), and no broadcast
@@ -11,16 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * weight and hide the skew the pattern exists to solve). Correctness
   * (salting preserves the plain join's semantics) is the driver's
   * oracle hash; this spec pins the PLAN. */
-class SaltedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("salted-join-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SaltedJoinSpec extends AnyFunSuite with SparkFixture {
 
   private def fixtureLineitem = {
     import spark.implicits._

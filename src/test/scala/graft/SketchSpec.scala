@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Approximate sketches (HLL++ distinct, approximate percentile)
   * checked against exact answers within their error envelopes on the
   * sf0.001 events table — the oracle can't hash-compare
   * engine-specific sketches, so the spec owns this check. */
-class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("sketch-spec")
-    .getOrCreate()
+class SketchSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("approx_count_distinct within 5% of exact per event type") {
     val e = Tables.eventsMs(spark, sf)

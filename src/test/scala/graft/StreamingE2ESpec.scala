@@ -3,12 +3,10 @@ package graft
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner
 import graft.streaming.StatefulRunner.{KEv, KOut}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end Structured Streaming over the real test parquet:
   * readStream → event-time watermark → windowed aggregation → sink,
@@ -18,19 +16,17 @@ import org.scalatest.BeforeAndAfterAll
   * scale-path configuration: state spills to disk instead of heap,
   * SURVEY §7.4 "state growth").
   */
-class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingE2ESpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-e2e")
-    .getOrCreate()
+  override protected lazy val spark =
+    newSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
-  override def afterAll(): Unit = spark.stop()
+  /** A session whose stateful queries run on the RocksDB state store. */
+  private def rocksSession() = newSession(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   private val eventsSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", LongType),
@@ -204,155 +200,113 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stateful gate on the RocksDB state store provider") {
-    val rocks = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .appName("rocksdb-spec")
-      .getOrCreate()
+    val rocks = rocksSession()
+    implicit val sqlCtx = rocks.sqlContext
+    import rocks.implicits._
+    val mem = MemoryStream[KEv]
+    val q = StatefulRunner.runStreaming(new Gate(failOpen = false), mem.toDS())
+      .writeStream.format("memory").queryName("rocks_gate")
+      .outputMode("append").start()
     try {
-      implicit val sqlCtx = rocks.sqlContext
-      import rocks.implicits._
-      val mem = MemoryStream[KEv]
-      val q = StatefulRunner.runStreaming(new Gate(failOpen = false), mem.toDS())
-        .writeStream.format("memory").queryName("rocks_gate")
-        .outputMode("append").start()
-      try {
-        mem.addData(KEv("k", 1, 10, 1.0, null, false, 0),
-          KEv("k", 0, 20, 1.5, null, false, 1))
-        q.processAllAvailable()
-        mem.addData(KEv("k", 0, 30, 2.5, null, false, 2))
-        q.processAllAvailable()
-        val got = rocks.table("rocks_gate").as[KOut].collect()
-          .filter(!_.paused).map(_.value).sorted.toSeq
-        assert(got == Seq(1.5, 2.5))
-        // confirm RocksDB provider actually ran
-        assert(q.lastProgress.stateOperators.nonEmpty)
-      } finally q.stop()
-    } finally rocks.stop()
+      mem.addData(KEv("k", 1, 10, 1.0, null, false, 0),
+        KEv("k", 0, 20, 1.5, null, false, 1))
+      q.processAllAvailable()
+      mem.addData(KEv("k", 0, 30, 2.5, null, false, 2))
+      q.processAllAvailable()
+      val got = rocks.table("rocks_gate").as[KOut].collect()
+        .filter(!_.paused).map(_.value).sorted.toSeq
+      assert(got == Seq(1.5, 2.5))
+      // confirm RocksDB provider actually ran
+      assert(q.lastProgress.stateOperators.nonEmpty)
+    } finally q.stop()
   }
 
   test("transformWithState mount == flatMapGroupsWithState mount: gate " +
       "state crosses micro-batches on both (SURVEY §7.4 modern API)") {
-    val rocks = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .appName("tws-spec")
-      .getOrCreate()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      implicit val sqlCtx = rocks.sqlContext
-      import rocks.implicits._
-      val batches = Seq(
-        Seq(KEv("k", 1, 10, 1.0, null, false, 0),
-          KEv("k", 0, 20, 1.5, null, false, 1)),
-        Seq(KEv("k", 0, 30, 2.5, null, false, 2), // open from batch 1
-          KEv("k", 1, 40, 0.0, null, false, 3),
-          KEv("k", 0, 50, 3.5, null, false, 4)))
-      def run(name: String,
-          mount: org.apache.spark.sql.Dataset[KEv] => org.apache.spark.sql.Dataset[KOut]) = {
-        val mem = MemoryStream[KEv]
-        val q = mount(mem.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-          rocks.table(name).as[KOut].collect()
-            .map(o => (o.ts, o.value, o.paused)).sortBy(t => (t._1, t._2)).toSeq
-        } finally q.stop()
-      }
-      val tws = run("tws_gate",
-        ds => graft.streaming.TwsRunner.runStreaming(new Gate(failOpen = false), ds))
-      val fmgws = run("fmgws_gate",
-        ds => StatefulRunner.runStreaming(new Gate(failOpen = false), ds))
-      assert(tws == fmgws)
-      assert(tws.collect { case (ts, v, false) => (ts, v) } ==
-        Seq((20L, 1.5), (30L, 2.5)))
-    } finally rocks.stop()
+    val rocks = rocksSession()
+    implicit val sqlCtx = rocks.sqlContext
+    import rocks.implicits._
+    val batches = Seq(
+      Seq(KEv("k", 1, 10, 1.0, null, false, 0),
+        KEv("k", 0, 20, 1.5, null, false, 1)),
+      Seq(KEv("k", 0, 30, 2.5, null, false, 2), // open from batch 1
+        KEv("k", 1, 40, 0.0, null, false, 3),
+        KEv("k", 0, 50, 3.5, null, false, 4)))
+    def run(name: String,
+        mount: org.apache.spark.sql.Dataset[KEv] => org.apache.spark.sql.Dataset[KOut]) = {
+      val mem = MemoryStream[KEv]
+      val q = mount(mem.toDS()).writeStream.format("memory")
+        .queryName(name).outputMode("append").start()
+      try {
+        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+        rocks.table(name).as[KOut].collect()
+          .map(o => (o.ts, o.value, o.paused)).sortBy(t => (t._1, t._2)).toSeq
+      } finally q.stop()
+    }
+    val tws = run("tws_gate",
+      ds => graft.streaming.TwsRunner.runStreaming(new Gate(failOpen = false), ds))
+    val fmgws = run("fmgws_gate",
+      ds => StatefulRunner.runStreaming(new Gate(failOpen = false), ds))
+    assert(tws == fmgws)
+    assert(tws.collect { case (ts, v, false) => (ts, v) } ==
+      Seq((20L, 1.5), (30L, 2.5)))
   }
 
   test("transformWithState carries COMPOSITE machine state (switch: " +
       "insertion-ordered control vector + pause sets) across batches") {
-    val rocks = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .appName("tws-switch-spec")
-      .getOrCreate()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val rocks = rocksSession()
+    implicit val sqlCtx = rocks.sqlContext
+    import rocks.implicits._
+    val mem = MemoryStream[KEv]
+    val q = graft.streaming.TwsRunner
+      .runStreaming(new Switch(2), mem.toDS())
+      .writeStream.format("memory").queryName("tws_switch")
+      .outputMode("append").start()
     try {
-      implicit val sqlCtx = rocks.sqlContext
-      import rocks.implicits._
-      val mem = MemoryStream[KEv]
-      val q = graft.streaming.TwsRunner
-        .runStreaming(new Switch(2), mem.toDS())
-        .writeStream.format("memory").queryName("tws_switch")
-        .outputMode("append").start()
-      try {
-        // batch 1: tie between the pairs → insertion order (pair 0
-        // first) must survive serialization into the state store
-        mem.addData(KEv("k", 1, 10, 5.0, null, false, 0),
-          KEv("k", 3, 11, 5.0, null, false, 1))
-        q.processAllAvailable()
-        // batch 2: the tie-break decided in batch 1 picks pair 0
-        mem.addData(KEv("k", 0, 20, 1.0, null, false, 2),
-          KEv("k", 2, 21, 2.0, null, false, 3))
-        q.processAllAvailable()
-        // batch 3: control pause POPS pair 0 → pair 1 takes over
-        mem.addData(KEv("k", 1, 30, Double.NaN, null, true, 4),
-          KEv("k", 2, 40, 3.0, null, false, 5))
-        q.processAllAvailable()
-        val got = rocks.table("tws_switch").as[KOut].collect()
-          .filter(!_.paused).map(o => (o.ts, o.value)).sorted.toSeq
-        assert(got == Seq((20L, 1.0), (40L, 3.0)))
-      } finally q.stop()
-    } finally rocks.stop()
+      // batch 1: tie between the pairs → insertion order (pair 0
+      // first) must survive serialization into the state store
+      mem.addData(KEv("k", 1, 10, 5.0, null, false, 0),
+        KEv("k", 3, 11, 5.0, null, false, 1))
+      q.processAllAvailable()
+      // batch 2: the tie-break decided in batch 1 picks pair 0
+      mem.addData(KEv("k", 0, 20, 1.0, null, false, 2),
+        KEv("k", 2, 21, 2.0, null, false, 3))
+      q.processAllAvailable()
+      // batch 3: control pause POPS pair 0 → pair 1 takes over
+      mem.addData(KEv("k", 1, 30, Double.NaN, null, true, 4),
+        KEv("k", 2, 40, 3.0, null, false, 5))
+      q.processAllAvailable()
+      val got = rocks.table("tws_switch").as[KOut].collect()
+        .filter(!_.paused).map(o => (o.ts, o.value)).sorted.toSeq
+      assert(got == Seq((20L, 1.0), (40L, 3.0)))
+    } finally q.stop()
   }
 
   test("detector trailing 0 via transformWithState processing-time timer " +
       "(messagedetector.py timeout path on the modern API)") {
-    val rocks = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .appName("tws-timer-spec")
-      .getOrCreate()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val rocks = rocksSession()
+    implicit val sqlCtx = rocks.sqlContext
+    import rocks.implicits._
+    val mem = MemoryStream[KEv]
+    val q = graft.streaming.TwsRunner
+      .runStreaming(new MessageDetector(100), mem.toDS(), timeoutMs = 50)
+      .writeStream.format("memory").queryName("tws_det")
+      .outputMode("append").start()
     try {
-      implicit val sqlCtx = rocks.sqlContext
-      import rocks.implicits._
-      val mem = MemoryStream[KEv]
-      val q = graft.streaming.TwsRunner
-        .runStreaming(new MessageDetector(100), mem.toDS(), timeoutMs = 50)
-        .writeStream.format("memory").queryName("tws_det")
-        .outputMode("append").start()
-      try {
-        mem.addData(KEv("k", 0, 10, 1.0, null, false, 0))
-        // ProcessingTime keeps the micro-batch loop ticking on its own
-        // (that's how the timer fires) — processAllAvailable never
-        // settles, so poll the sink with a deadline instead
-        def rows() = rocks.table("tws_det").as[KOut]
-          .collect().map(o => (o.ts, o.value)).sorted.toSeq
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        var got = rows()
-        while (got.size < 2 && System.nanoTime() < deadline) {
-          Thread.sleep(200); got = rows()
-        }
-        // 1 at the message, trailing 0 at lastTs + timeout (110)
-        assert(got == Seq((10L, 1.0), (110L, 0.0)))
-      } finally q.stop()
-    } finally rocks.stop()
+      mem.addData(KEv("k", 0, 10, 1.0, null, false, 0))
+      // ProcessingTime keeps the micro-batch loop ticking on its own
+      // (that's how the timer fires) — processAllAvailable never
+      // settles, so poll the sink with a deadline instead
+      def rows() = rocks.table("tws_det").as[KOut]
+        .collect().map(o => (o.ts, o.value)).sorted.toSeq
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      var got = rows()
+      while (got.size < 2 && System.nanoTime() < deadline) {
+        Thread.sleep(200); got = rows()
+      }
+      // 1 at the message, trailing 0 at lastTs + timeout (110)
+      assert(got == Seq((10L, 1.0), (110L, 0.0)))
+    } finally q.stop()
   }
 
   // ---- RtmpSocketSource: the live-socket ingest path (e52) ----------------
@@ -392,25 +346,14 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     server
   }
 
-  /** Fresh session per socket test: the RocksDB tests above stop the
-    * shared SparkContext, so the suite-level lazy `spark` is dead by
-    * the time these run. */
-  private def socketSession(): SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("rtmp-socket-spec")
-    .getOrCreate()
-
   test("RtmpSocketSource drain mode: TCP handshake + incremental " +
       "dechunk over tiny reads, message identity, and the admission " +
       "control cap shaping ceil(n/max) micro-batches") {
     import graft.sources.Rtmp
-    val ss = socketSession()
     val msgs = rtmpFixture()
     // 41-byte slices: every chunk header and body straddles reads
     val server = serveLoopback(Rtmp.mux(msgs), slice = 41)
-    val src = ss.readStream
+    val src = spark.readStream
       .format(classOf[graft.sources.RtmpSocketSource].getName)
       .option("host", "127.0.0.1")
       .option("port", server.getLocalPort.toString)
@@ -422,7 +365,7 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = ss.table("rtmp_drain")
+    val got = spark.table("rtmp_drain")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3),
         r.getLong(4), r.getAs[Array[Byte]](5).toSeq))
@@ -443,7 +386,6 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       "streaming query — the documented scale-out path (one source " +
       "per ingest point) delivers every stream's messages") {
     import graft.sources.Rtmp
-    val ss = socketSession()
     // three independent captures on distinct message stream ids
     val caps = (0 until 3).map { c =>
       (0 until 6).map { i =>
@@ -453,7 +395,7 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val servers = caps.map(ms => serveLoopback(Rtmp.mux(ms), slice = 53))
     val srcs = servers.map { server =>
-      ss.readStream
+      spark.readStream
         .format(classOf[graft.sources.RtmpSocketSource].getName)
         .option("host", "127.0.0.1")
         .option("port", server.getLocalPort.toString)
@@ -467,7 +409,7 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = ss.table("rtmp_fanout")
+    val got = spark.table("rtmp_fanout")
       .collect()
       .map(r => (r.getLong(2), r.getLong(4), r.getAs[Array[Byte]](5).toSeq))
       .sortBy(g => (g._1, g._2))
@@ -481,10 +423,9 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   test("RtmpSocketSource live mode (no drain): messages flow as they " +
       "arrive and the stream converges to the full capture") {
     import graft.sources.Rtmp
-    val ss = socketSession()
     val msgs = rtmpFixture()
     val server = serveLoopback(Rtmp.mux(msgs), slice = 97)
-    val src = ss.readStream
+    val src = spark.readStream
       .format(classOf[graft.sources.RtmpSocketSource].getName)
       .option("host", "127.0.0.1")
       .option("port", server.getLocalPort.toString)
@@ -496,10 +437,10 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       .start()
     try {
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      def count() = ss.table("rtmp_live").count()
+      def count() = spark.table("rtmp_live").count()
       while (count() < msgs.length && System.nanoTime() < deadline)
         Thread.sleep(100)
-      val got = ss.table("rtmp_live")
+      val got = spark.table("rtmp_live")
         .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](5).toSeq))
         .sortBy(_._1)
       assert(got.length == msgs.length)

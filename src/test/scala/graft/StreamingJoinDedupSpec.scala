@@ -1,11 +1,9 @@
 package graft
 
 import graft.streaming.StatefulRunner.KEv
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** e43 (stream-stream interval join) and e44 (streaming dedup)
   * mechanics that the oracle hash alone cannot pin:
@@ -22,17 +20,7 @@ import org.scalatest.BeforeAndAfterAll
   *  - a duplicate arriving in a LATER batch is still suppressed
   *    (dedup state crosses the boundary).
   */
-class StreamingJoinDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-join-dedup-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingJoinDedupSpec extends AnyFunSuite with SparkFixture {
 
   private val W = 86400000L // e43's 24 h attribution window
   private val t0 = 1700000000000L

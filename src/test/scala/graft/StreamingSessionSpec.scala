@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** e42 (streaming sessionization): the session_window ↔
   * gaps-and-islands equivalence. session_window(gap) merges two events
@@ -16,20 +14,10 @@ import org.scalatest.BeforeAndAfterAll
   * breaks-on-strictly-greater rule at the SAME gap. The boundary test
   * pins Δt ∈ {gap−1, gap, gap+1}; the parity test runs the real
   * file-source stream mount against the batch formulation. */
-class StreamingSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-session-spec")
-    .getOrCreate()
+class StreamingSessionSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
   private val GapMs = 1800000L
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Batch gaps-and-islands sessions (e18 semantics) regrouped to
     * (user, start, end, count). */

@@ -3,11 +3,9 @@ package graft
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner
 import graft.streaming.StatefulRunner.{KEv, KOut}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Stateful-operator tests in the style of the reference's task tests
   * (/root/reference/tests/tasks/test_gate.py, tests/comm/test_sync.py):
@@ -15,18 +13,9 @@ import org.scalatest.BeforeAndAfterAll
   * across micro-batches, and batch-vs-window-analogue equivalence on
   * the real sf0.001 events table.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-spec")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   private def ev(topic: Int, ts: Long, v: Double = Double.NaN,
       text: String = null, paused: Boolean = false, seq: Long = 0) =

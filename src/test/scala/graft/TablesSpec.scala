@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables.load` infers a table's schema once per file state (leaf files
@@ -16,19 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * schema inferred under the default ones. (A rewritten table is
   * IngestionSpec's case.)
   */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("tables-spec")
-    .getOrCreate()
+class TablesSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Group of every job start the listener has seen, in posting order. */
   private lazy val jobGroups = {
@@ -96,7 +85,6 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("staging width is sized from the listed bytes") {
-    assume(!sys.env.contains("SPARK_GRAFT_SPREAD"), "width overridden")
     import org.apache.spark.sql.catalyst.plans.logical.Repartition
     val sc = spark.sparkContext
     for ((name, perPartition, df) <- Seq(

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The contract between the driver-generated testdata and the query
@@ -20,19 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * actually consume), not the raw parquet — Tables is the engine's
   * ingestion boundary and is allowed to adapt physical drift.
   */
-class TestdataContractSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("testdata-contract")
-    .getOrCreate()
+class TestdataContractSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   private def assertCols(table: String,
       df: org.apache.spark.sql.DataFrame, want: (String, String)*): Unit = {

@@ -7,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (repeater.py:36-69) under a deterministic injected clock — the
   * machines are pure; one streaming test exercises the re-arming
   * processing-time timeout (removeOnTimeout = false). */
-class TimeSyncSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
-
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("timesync-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TimeSyncSpec extends AnyFunSuite with SparkFixture {
 
   test("wall-clock repeater keeps ticking in streaming: the timeout " +
       "re-arms instead of dropping state") {

@@ -1,10 +1,8 @@
 package graft
 
 import graft.operators.{GraphQueries, TextQueries}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins the round-9 learned-filter additions:
   *  - ilog32 (the 1/32-bit integer log₂ behind t23's NB scores) is
@@ -19,18 +17,9 @@ import org.scalatest.BeforeAndAfterAll
   *    crafted graph (path + branch + disconnected island), including
   *    min-over-seeds semantics and the hop bound.
   */
-class TrainedFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("trained-filter-spec")
-    .getOrCreate()
+class TrainedFilterSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-
-  override def afterAll(): Unit = spark.stop()
 
   test("ilog32: monotone, exact on powers of two, error < 0.086 bits") {
     import spark.implicits._
