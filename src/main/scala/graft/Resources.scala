@@ -28,7 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Deliberately session-pinned intermediates — the duplicate-cluster
   * labels d10 publishes for d12/d16/d18, the edge table g01 publishes
-  * for the other graph queries, q30's bucketed tables — bypass the
+  * for the other graph queries, q30's bucketed tables, q32/q34's
+  * lang-partitioned documents and lang dimension files — bypass the
   * scope on purpose: they live in one map owned here ([[publish]],
   * [[shared]]) until [[releasePinned]], which [[GraftSession.close]]
   * runs before stopping the session.

@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.{DeploymentJson, Pipeline}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** The user-facing loop as a CLI: run a STORED streamtasks deployment
@@ -40,8 +41,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Default is batch semantics (the hash-gated engine path).
   * `--streaming` runs the SAME compiled DAG on the Structured
-  * Streaming branch instead: every bound input is staged and replayed
-  * as a file-source stream (one file per micro-batch), the machines
+  * Streaming branch instead: the bound inputs are staged together
+  * ([[graft.streaming.StreamRun.stage]]: two non-empty ts-range
+  * chunks, or the run is refused) and replayed as a file-source
+  * stream (one chunk per micro-batch), the machines
   * run as flatMapGroupsWithState over real state stores, and each
   * named output lands through a checkpointed parquet FILE SINK with
   * an `AvailableNow` trigger — the run drains the staged input and
@@ -116,23 +119,13 @@ object RunDeployment {
         require(schemas.size == 1,
           s"--streaming needs identical envelope schemas across inputs, " +
             s"got: ${schemas.mkString(" vs ")}")
-        val stage = s"$outDir/_stage"
+        val stage = new java.io.File(s"$outDir/_stage")
         val unified = tagged.reduce(_ unionByName _)
-        unified.repartitionByRange(2, col("ts"))
-          .write.mode("overwrite").parquet(stage)
-        // the file source orders by MODIFICATION TIME and a same-ms
-        // write leaves the chunk order to the filesystem — pin it
-        // explicitly, ascending in part order (the throughStream
-        // mount's convention): part-00000 must replay first
-        val parts = Option(new java.io.File(stage).listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).sortBy(_.getName)
-        val t0 = System.currentTimeMillis() - 600000L
-        parts.zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(t0 + i * 1000L) }
+        // re-staged on every run: two ts-range chunks, replayed in order
+        FileUtils.deleteQuietly(stage)
+        graft.streaming.StreamRun.stage(unified, Seq(col("ts")), 2, stage)
         val streamDf = spark.readStream.schema(unified.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage)
+          .option("maxFilesPerTrigger", 1).parquet(stage.toString)
         loaded.namedInputs.map { case (name, stream) =>
           stream -> streamDf.filter(col("__input") === name).drop("__input")
         }
@@ -145,8 +138,8 @@ object RunDeployment {
       // APPENDED to (the re-staged part files have fresh names, so a
       // surviving checkpoint replays everything as new)
       outputs.foreach { case (name, _) =>
-        rmTree(new java.io.File(s"$outDir/$name.parquet"))
-        rmTree(new java.io.File(s"$outDir/_checkpoints/$name"))
+        FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name.parquet"))
+        FileUtils.deleteQuietly(new java.io.File(s"$outDir/_checkpoints/$name"))
       }
       // start every sink first, then await: each query has its own
       // checkpoint, so the source replays overlap instead of running
@@ -170,10 +163,6 @@ object RunDeployment {
       .mkString("""{"deployment":"""" + loaded.deployment.name +
         """","outputs":{""", ",", "}}"))
     if (!preExisting) GraftSession.close(spark)
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** One bound input: envelope parquet, or a captured `.flv` (live

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{StateMachines, StatefulRunner}
+import graft.streaming.{StateMachines, StatefulRunner, StreamRun}
 import graft.streaming.StatefulRunner.KEv
 import org.apache.spark.sql.functions._
 
@@ -63,23 +63,7 @@ object StateStress {
       expr("concat_ws('', transform(sequence(0, 31), " +
         "i -> md5(cast(id * 37 + i as string))))").as("text"),
       lit(false).as("paused"), col("id").as("seq"))
-    val staged = new java.io.File(base, "staged")
-    fixture
-      .withColumn("__b", expr(s"(seq % $nKeys) * $batches DIV $nKeys"))
-      .repartition(col("__b")) // one part file per key-block chunk
-      .write.partitionBy("__b").parquet(staged.toString)
-    val t0m = System.currentTimeMillis() - 600000L
-    (0 until batches).foreach { b =>
-      val dir = new java.io.File(staged, s"__b=$b")
-      val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-      parts.zipWithIndex.foreach { case (f, i) =>
-        val dst = new java.io.File(src, f"chunk-$b%03d-$i%03d.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(t0m + b * 1000L)
-      }
-    }
+    StreamRun.stage(fixture, Seq(col("seq") % nKeys), batches, src)
     val srcAgg = spark.read.parquet(src.toString)
       .agg(count(lit(1)), sum(col("value")), sum(length(col("text"))))
       .head()
@@ -87,15 +71,16 @@ object StateStress {
       (srcAgg.getLong(0), srcAgg.getDouble(1), srcAgg.getLong(2))
 
     def startQuery(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", "256")
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      // RocksDB with a bounded memory budget, at the batch session's
+      // state width (the key count is corpus-sized here)
+      val ss = StreamRun.session(spark, Map(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider"),
+        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
+        "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "256",
+        "spark.sql.shuffle.partitions" ->
+          spark.conf.get("spark.sql.shuffle.partitions")))
       val in = ss.readStream.schema(StatefulRunner.kevEnc.schema)
         .option("maxFilesPerTrigger", "1") // one key-block chunk per batch
         .parquet(src.toString)
@@ -130,15 +115,8 @@ object StateStress {
       lit(1L << 41).as("ts"), lit(-1.0).as("value"),
       lit(null).cast("string").as("text"), lit(false).as("paused"),
       (col("id") + nRows).as("seq"))
-    val relStaged = new java.io.File(base, "rel")
-    release.repartition(1).write.parquet(relStaged.toString)
-    Option(relStaged.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
-        case (f, i) =>
-          val dst = new java.io.File(src, f"chunk-900-$i%03d.parquet")
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          dst.setLastModified(t0m + 900000L)
-      }
+    // replays after the ingest chunks: the only new file on restart
+    StreamRun.stage(release, Seq(col("key")), 1, src)
     val t1 = System.nanoTime()
     val q2 = startQuery()
     try q2.processAllAvailable() finally q2.stop()

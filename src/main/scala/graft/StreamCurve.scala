@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-throughput curve: the SAME `runStreaming` mount the
-  * parity queries drive (file source → flatMapGroupsWithState → file
-  * sink, graft.operators.StreamParityQueries.throughStream), at
+  * parity queries drive (graft.operators.StreamParityQueries
+  * .throughStream on [[graft.streaming.StreamRun]]: staged file source
+  * → flatMapGroupsWithState → drained file sink), at
   * pipeline counts ×{1,10,100} — the scaling axis SCALE.md's "a
   * million concurrent gates spread across the cluster" claim lives
   * on. Each replica re-keys the whole events fixture onto fresh

@@ -1342,6 +1342,34 @@ object CalcQueries {
        |  FROM rt)
        |ORDER BY kind, container, ts_ms""".stripMargin
 
+  /** e51/e52's click fixture: per container (user_id % 3) the click
+    * values as s16 samples with their (ts_ms, event_id) order keys. */
+  private def ingestClicks(s: SparkSession, d: String) = {
+    import s.implicits._
+    eventsMs(s, d).filter(col("event_type") === "click")
+      .select((col("user_id") % 3).as("c"),
+        least(greatest(round(col("value") * 100).cast(IntegerType),
+          lit(-32768)), lit(32767)).as("x"),
+        col("ts_ms"), col("event_id"))
+      .as[(Long, Int, Long, Long)]
+  }
+
+  /** e51/e52's shared tail: the loaded meter DAG over the PCM envelope
+    * stream `env`, drained into `dir` and projected to c14's vol rows. */
+  private def meterThroughStream(s: SparkSession, env: DataFrame,
+      dir: java.io.File, tag: String): DataFrame = {
+    import graft.plans.{DeploymentJson, Pipeline}
+    val loaded = DeploymentJson.load(c14Json, nodeName = Some(FixtureNode))
+    val streams = Pipeline.compile(loaded.deployment,
+      Map(loaded.namedInputs("rtmp://ingest/live#audio0") -> env))
+    graft.streaming.StreamRun
+      .drain(s, streams(loaded.namedOutputs("volume")), dir, tag)
+      .filter(!col("paused"))
+      .select(col("pipe").cast(LongType).as("container"),
+        col("ts").as("ts_ms"), col("value"), lit(125L).as("n"))
+      .orderBy(col("container"), col("ts_ms"))
+  }
+
   // ============================================= e51: LIVE INGEST on
   // the streaming engine — captured FLV segments ARRIVING AS FILES,
   // demuxed INSIDE the streaming plan. c14 proved the loaded rtmp
@@ -1359,24 +1387,14 @@ object CalcQueries {
 
   private def e51(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.plans.{DeploymentJson, Pipeline}
     import graft.sources.{Flv, Wav}
-    val loaded = DeploymentJson.load(c14Json, nodeName = Some(FixtureNode))
-    val clicks = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 3).as("c"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-    val tmpBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val base = new java.io.File(
-      s"$tmpBase/graft-e51-${System.nanoTime()}")
+    import graft.streaming.StreamRun
+    val base = StreamRun.workdir("e51")
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
     val srcPath = srcDir.toString
     // executor-side segment writes — bytes never at the driver; a
     // single-box spool dir here, HDFS/S3 on a cluster
-    clicks.groupByKey(_._1).mapGroups { (k, it) =>
+    ingestClicks(s, d).groupByKey(_._1).mapGroups { (k, it) =>
       val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
       val segs = Seq(xs.take(150), xs.drop(150)).filter(_.nonEmpty)
       segs.zipWithIndex.foreach { case (seg, si) =>
@@ -1390,32 +1408,25 @@ object CalcQueries {
       }
       k
     }.write.format("noop").mode("overwrite").save()
-    // pin replay order: segment generation 0 (all containers) strictly
-    // before generation 1 — the file source orders by mtime
-    val files = Option(srcDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".flv")).sortBy(_.getName)
-    require(files.nonEmpty, "e51: no FLV segments written")
-    val t0 = System.currentTimeMillis() - 600000L
-    files.foreach { f =>
-      val gen = f.getName.drop(4).takeWhile(_ != '-').toInt
-      f.setLastModified(t0 + gen * 1000L)
-    }
-    val perBatch = files.count(_.getName.startsWith("seg-000"))
-    // isolated session (the throughStream convention): per-stream conf
-    // never touches the shared batch session — and the conf is the
-    // point: a 3-key state stream at the batch session's corpus-sized
-    // shuffle width pays ~29 empty state-store tasks per micro-batch,
-    // and no machine here arms event-time timers, so no-data batches
-    // buy nothing
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    // replay segment generation 0 (all containers) strictly before
+    // generation 1, one generation per micro-batch
+    val gens = Option(srcDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".flv")).toSeq
+      .groupBy(_.getName.drop(4).takeWhile(_ != '-').toInt)
+      .toSeq.sortBy(_._1).map(_._2)
+    require(gens.nonEmpty, "e51: no FLV segments written")
+    StreamRun.pinReplayOrder(gens)
+    // the stream session's conf is the point: a 3-key state stream at
+    // the batch session's corpus-sized shuffle width pays ~29 empty
+    // state-store tasks per micro-batch, and no machine here arms
+    // event-time timers, so no-data batches buy nothing
+    val ss = StreamRun.session(s)
     import org.apache.spark.sql.types.{StructType, StructField, StringType => SString, BinaryType => SBinary, LongType => SLong, TimestampType => STs}
     val binSchema = StructType(Seq(
       StructField("path", SString), StructField("modificationTime", STs),
       StructField("length", SLong), StructField("content", SBinary)))
     val bin = ss.readStream.format("binaryFile").schema(binSchema)
-      .option("maxFilesPerTrigger", perBatch).load(srcPath)
+      .option("maxFilesPerTrigger", gens.head.size).load(srcPath)
       .select(col("path"), col("content"))
     // FLV demux + PCM explode INSIDE the streaming plan, per batch
     val env = bin.as[(String, Array[Byte])].flatMap { case (path, bytes) =>
@@ -1429,29 +1440,7 @@ object CalcQueries {
         }
       }
     }.toDF("pipe", "ts", "value", "text", "paused", "seq")
-    val ni = loaded.namedInputs
-    val no = loaded.namedOutputs
-    val streams = Pipeline.compile(loaded.deployment,
-      Map(ni("rtmp://ingest/live#audio0") -> env))
-    val sink = new java.io.File(base, "sink").toString
-    val q = streams(no("volume")).writeStream.format("parquet")
-      .option("path", sink)
-      .option("checkpointLocation", new java.io.File(base, "ck").toString)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // materialize before sweeping the spool/checkpoint dirs
-    val out = graft.Resources.checkpoint(
-      s.read.parquet(sink).filter(!col("paused"))
-        .select(col("pipe").cast(LongType).as("container"),
-          col("ts").as("ts_ms"), col("value"), lit(125L).as("n"))
-        .orderBy(col("container"), col("ts_ms")))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(base)
-    out
+    meterThroughStream(s, env, base, s"e51@$d")
   }
 
   private val e51Sql =
@@ -1489,19 +1478,9 @@ object CalcQueries {
 
   private def e52(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.plans.{DeploymentJson, Pipeline}
     import graft.sources.{Rtmp, Wav}
-    val loaded = DeploymentJson.load(c14Json, nodeName = Some(FixtureNode))
-    val clicks = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 3).as("c"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-    val tmpBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val base = new java.io.File(
-      s"$tmpBase/graft-e52-${System.nanoTime()}")
+    import graft.streaming.StreamRun
+    val base = StreamRun.workdir("e52")
     val capDir = new java.io.File(base, "cap"); capDir.mkdirs()
     val capPath = capDir.toString
     // executor-side capture: one chunk-stream segment per container on
@@ -1515,7 +1494,7 @@ object CalcQueries {
     // this is the feed FIXTURE, not the measured path) or write to
     // shared storage; the 'no capture segments' require fails loudly
     // rather than silently feeding an empty session.
-    clicks.groupByKey(_._1).mapGroups { (k, it) =>
+    ingestClicks(s, d).groupByKey(_._1).mapGroups { (k, it) =>
       val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
       val msgs = xs.grouped(50).zipWithIndex.map { case (blk, b) =>
         Rtmp.RtmpMessage(4 + k.toInt, k, Rtmp.TypeAudio, 50L * b,
@@ -1552,10 +1531,7 @@ object CalcQueries {
       } finally server.close()
     }, "e52-rtmp-replay")
     serverThread.setDaemon(true); serverThread.start()
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val src = ss.readStream
+    val src = StreamRun.session(s).readStream
       .format(classOf[graft.sources.RtmpSocketSource].getName)
       .option("host", "127.0.0.1")
       .option("port", server.getLocalPort.toString)
@@ -1569,28 +1545,7 @@ object CalcQueries {
           (c.toString, ts + j, v.toDouble, null: String, false, ts + j)
         }
       }.toDF("pipe", "ts", "value", "text", "paused", "seq")
-    val ni = loaded.namedInputs
-    val no = loaded.namedOutputs
-    val streams = Pipeline.compile(loaded.deployment,
-      Map(ni("rtmp://ingest/live#audio0") -> env))
-    val sink = new java.io.File(base, "sink").toString
-    val q = streams(no("volume")).writeStream.format("parquet")
-      .option("path", sink)
-      .option("checkpointLocation", new java.io.File(base, "ck").toString)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = graft.Resources.checkpoint(
-      s.read.parquet(sink).filter(!col("paused"))
-        .select(col("pipe").cast(LongType).as("container"),
-          col("ts").as("ts_ms"), col("value"), lit(125L).as("n"))
-        .orderBy(col("container"), col("ts_ms")))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(base)
-    out
+    meterThroughStream(s, env, base, s"e52@$d")
   }
 
   val all: Seq[Q] = Seq(

@@ -887,8 +887,6 @@ object GraphQueries {
         // 1-row bound check over the checkpointed frame — not a data
         // collect; an empty delta means no future round can change)
         val n = changedOf(nxt).count()
-        if (sys.env.contains("GRAFT_HB_DEBUG"))
-          System.err.println(s"[hb] round $t delta=$n at ${System.nanoTime / 1e9}")
         roundSizes.foreach(_ += n)
         fixed = n == 0
         merged = nxt

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.streaming.StatefulRunner
+import graft.streaming.{StatefulRunner, StreamRun}
 import graft.streaming.StatefulRunner.{KEv, KOut}
 import graft.streaming.StateMachines
 import graft.streaming.StateMachines.{Gate, TimeSyncRestamp}
@@ -49,47 +49,6 @@ import org.apache.spark.sql.types._
   * batch boundaries). */
 object StreamParityQueries {
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger()
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Best-effort sweep of stream workdirs leaked by ABNORMAL exits
-    * (kill -9 during a bench, OOM): the shutdown hook deletes this
-    * JVM's own dirs, but a crashed JVM leaves tmpfs-backed
-    * `graft-stream-*`/`graft-ckpt-*` dirs that would otherwise
-    * accumulate RAM across runs. Runs once per JVM, deletes only dirs
-    * whose mtime predates this process (a concurrent sibling run's
-    * live dirs are younger and survive). */
-  private lazy val sweepLeakedDirs: Unit = {
-    val jvmStart =
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-    for {
-      base <- Seq("/dev/shm", System.getProperty("java.io.tmpdir")).distinct
-      dir = new java.io.File(base)
-      if dir.isDirectory
-      f <- Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      if (f.getName.startsWith("graft-stream-") ||
-        f.getName.startsWith("graft-ckpt-")) && f.lastModified < jvmStart
-    } rmTree(f)
-  }
-
-  /** Workdirs stay on disk until JVM exit — the returned frame reads
-    * the file sink LAZILY (Verify/Bench consume it after this method
-    * returns), so eager deletion would race the read. Each dir is a
-    * few hundred KB of tmpfs; the hook + [[sweepLeakedDirs]] bound the
-    * residue. */
-  private val liveDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val installCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val it = liveDirs.iterator()
-      while (it.hasNext) rmTree(it.next())
-    }))
-
   /** Chunk-file directories by fixture tag — see [[throughStream]]'s
     * `tag` doc. computeIfAbsent serializes concurrent builders of the
     * same fixture (Verify runs e24 and e26 in parallel). */
@@ -99,43 +58,31 @@ object StreamParityQueries {
   /** Trained-model directories by tag (e40's bigram table): `build`
     * writes the model DISTRIBUTED into the returned dir (part files —
     * the ship-weights-by-path pattern); cached per JVM like the
-    * fixture chunks, cleaned by the same shutdown hook / sweep
-    * (`graft-stream-` prefix). */
+    * fixture chunks, in a [[StreamRun.workdir]]. */
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private[graft] def modelDirFor(tag: String)(build: String => Unit): String =
     modelCache.computeIfAbsent(tag, _ => {
-      sweepLeakedDirs
-      installCleanupHook
-      val tmpBase = if (new java.io.File("/dev/shm").isDirectory)
-        "/dev/shm" else System.getProperty("java.io.tmpdir")
-      val dir = new java.io.File(s"$tmpBase/graft-stream-model-" +
-        s"${streamSeq.incrementAndGet()}-${System.nanoTime()}")
-      liveDirs.add(dir)
-      build(dir.toString)
-      dir.toString
+      val dir = StreamRun.workdir("model").toString
+      build(dir)
+      dir
     })
 
   /** Runs `fixture` through a streaming mount end-to-end DISTRIBUTED,
     * returning the mount's output as a (lazy) KOut-shaped frame.
     *
-    *  1. `fixture` is chunked into 3 per-micro-batch parquet files by
-    *     range-partitioning on `order` (the fold order — each chunk is
-    *     a contiguous range, the property that makes chunked folds
-    *     equal the unchunked fold), one distributed write, then
-    *     per-chunk files sequenced by mtime AND name
-    *     (`chunk-000 < chunk-001`: the file source orders by timestamp
-    *     with path as tie-break, so either channel alone suffices).
-    *  2. The stream runs on an ISOLATED `s.newSession()` — same
-    *     SparkContext, private SQLConf — so per-stream conf pins
-    *     (state-store width, provider class) never touch the shared
-    *     batch session and concurrent stream starts cannot race each
-    *     other's conf. `maxFilesPerTrigger=1` replays one chunk per
-    *     micro-batch, oldest first; state crosses 2 batch boundaries.
-    *  3. Output goes to a parquet file sink (exactly-once via its
-    *     _spark_metadata commit log) and is read back as a batch frame
-    *     on the caller's session.
+    *  1. `fixture` is [[StreamRun.stage]]d into 3 per-micro-batch
+    *     parquet chunks, range-partitioned on `order` (the fold order —
+    *     each chunk is a contiguous range, the property that makes
+    *     chunked folds equal the unchunked fold).
+    *  2. The stream runs on a [[StreamRun.session]] with `streamConf`
+    *     on top, so per-stream conf pins (state-store width, provider
+    *     class) never touch the shared batch session.
+    *     `maxFilesPerTrigger=1` replays one chunk per micro-batch,
+    *     oldest first; state crosses 2 batch boundaries.
+    *  3. [[StreamRun.drain]] runs the mount into a parquet file sink
+    *     and reads it back as a batch frame on the caller's session.
     *
     * Watermark-advancing SENTINEL ROWS (event-time timer / windowed /
     * eviction mounts) ride the last data chunk — they carry the
@@ -144,12 +91,6 @@ object StreamParityQueries {
     * no-data micro-batch (enable noDataMicroBatches in `streamConf`):
     * the watermark is computed between batches, so the firing batch
     * is always the one after the advance.
-    *
-    * The offset/commit WALs fsync per micro-batch; the workdir goes on
-    * tmpfs when the box has one (measured ~0.5s/mount vs ext4 /tmp).
-    * Durability is a per-deployment choice: a production stream points
-    * the checkpoint at HDFS/S3 and pays the fsync as the price of
-    * exactly-once.
     *
     * `tag` keys the chunk-file cache: the fixture build is
     * deterministic in (tag, sf dir), so repeated runs in one JVM —
@@ -162,89 +103,17 @@ object StreamParityQueries {
       order: => Seq[Column], tag: String,
       mount: Dataset[KEv] => Dataset[KOut],
       streamConf: Map[String, String]): DataFrame = {
-    sweepLeakedDirs
-    installCleanupHook
-    val tmpBase = if (new java.io.File("/dev/shm").isDirectory)
-      "/dev/shm" else System.getProperty("java.io.tmpdir")
-    val batches = 3
     val srcDir = fixtureCache.computeIfAbsent(tag, _ => {
-      val base = new java.io.File(s"$tmpBase/graft-stream-src-" +
-        s"${streamSeq.incrementAndGet()}-${System.nanoTime()}")
-      liveDirs.add(base)
-      val src = new java.io.File(base, "src"); src.mkdirs()
-      // ---- 1. distributed chunk write: ONE job, one file per chunk.
-      // Chunk assignment = range partitioning on the fold order: each
-      // of the `batches` partitions is a CONTIGUOUS key range (equal
-      // keys never straddle a bound), which is the only property
-      // chunked folds need — intra-chunk order is free (the runner
-      // re-sorts each micro-batch), so no global sort, no single-task
-      // bottleneck: the write stays parallel. Sentinel rows (maximum
-      // order key by construction) land in the last chunk with the
-      // rest of the range.
-      val staged = new java.io.File(base, "staged")
-      val chunked = fixture
-        .repartitionByRange(batches, order: _*)
-        .withColumn("__b", spark_partition_id() + 1)
-      chunked.write.partitionBy("__b").parquet(staged.toString)
-      val t0 = System.currentTimeMillis() - 600000L
-      (1 to batches).foreach { b =>
-        val stagedDir = new java.io.File(staged, s"__b=$b")
-        val part = Option(stagedDir.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-        require(part.length == 1,
-          s"expected 1 chunk file in $stagedDir, got ${part.length}")
-        val dst = new java.io.File(src, f"chunk-${b - 1}%03d.parquet")
-        java.nio.file.Files.move(part.head.toPath, dst.toPath)
-        dst.setLastModified(t0 + (b - 1) * 1000L)
-      }
-      src
+      val dir = StreamRun.workdir("src")
+      StreamRun.stage(fixture, order, 3, dir)
+      dir
     })
-    // ---- 2. the stream: file source, one chunk per micro-batch
-    val runBase = new java.io.File(s"$tmpBase/graft-stream-run-" +
-      s"${streamSeq.incrementAndGet()}-${System.nanoTime()}")
-    liveDirs.add(runBase)
-    val ss = s.newSession()
-    // A streaming query locks state-store partition count (and
-    // provider) at FIRST start. Batch sessions size shuffle.partitions
-    // for corpus shuffles (32 here); a low-key-cardinality state stream
-    // then pays 32 mostly empty state-store tasks per micro-batch —
-    // pin a width sized to key cardinality, the knob a production job
-    // sets per stream.
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    // No-data micro-batches exist to fire event-time timers and evict
-    // watermarked state after a data batch advances the watermark; the
-    // non-timer machines here have neither, so the extra ~200ms batch
-    // per processAllAvailable buys nothing. The one timer mount (e34)
-    // overrides this back to true in its streamConf.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    streamConf.foreach { case (k, v) => ss.conf.set(k, v) }
-    val outDir = new java.io.File(runBase, "out")
-    val ckpt = new java.io.File(runBase, "ckpt")
-    val src = ss.readStream.schema(StatefulRunner.kevEnc.schema)
+    val src = StreamRun.session(s, streamConf).readStream
+      .schema(StatefulRunner.kevEnc.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir.toString)
       .as[KEv](StatefulRunner.kevEnc)
-    val tS0 = System.nanoTime()
-    val sq = mount(src)
-      .writeStream.format("parquet")
-      .option("path", outDir.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    val tS1 = System.nanoTime()
-    try sq.processAllAvailable() finally sq.stop()
-    val tS2 = System.nanoTime()
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PHASES")) {
-      System.err.println(f"[phases] tag=$tag " +
-        f"start=${(tS1-tS0)/1e9}%.2f run=${(tS2-tS1)/1e9}%.2f " +
-        f"batches=${sq.recentProgress.length}")
-      sq.recentProgress.foreach(p => System.err.println(
-        s"[phases]   batch=${p.batchId} rows=${p.numInputRows} " +
-          s"eventTime=${p.eventTime} durationMs=${p.durationMs}"))
-    }
-    // ---- 3. read the sink back (batch read honors _spark_metadata)
-    s.read.parquet(outDir.toString)
+    StreamRun.drain(s, mount(src).toDF(), StreamRun.workdir("run"), tag)
   }
 
   /** Shared harness: the e05 gate fixture through any streaming mount

@@ -908,12 +908,8 @@ final class PipelineManager(spark: SparkSession,
   /** Checkpoint root of the deployments started without a
     * [[checkpointRoot]]: each one's checkpoints go when it stops, the
     * rest when the JVM exits. */
-  private lazy val tempRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-deployments")
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
-    dir.toString
-  }
+  private lazy val tempRoot: String =
+    graft.streaming.StreamRun.workdir("deployments").toString
 
   private def dropTempCheckpoints(name: String): Unit =
     if (checkpointRoot.isEmpty)

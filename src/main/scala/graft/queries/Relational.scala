@@ -201,17 +201,25 @@ object Relational {
     * partition pruning happens at PLANNING time from directory names
     * alone (the executed plan's PartitionFilters, asserted by
     * BucketingSpec), before a single row is read. */
-  private val partitionedReady =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensurePartitioned(s: SparkSession, dir: String): String =
-    partitionedReady.computeIfAbsent(dir, _ => {
-      val h = Integer.toHexString(dir.hashCode).replace('-', 'n')
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-part-$h"
+    pinnedLayout(s, s"q32.partitioned:$dir", "q32") { path =>
       Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars", "lang")
         .write.mode("overwrite").partitionBy("lang").parquet(path)
+    }
+
+  /** A file layout written once per (session, `key`) into a fresh
+    * workdir, pinned with the session; releasing the session's pinned
+    * values ([[graft.Resources.releasePinned]]) deletes the files. */
+  private def pinnedLayout(s: SparkSession, key: String, tag: String)(
+      write: String => Unit): String =
+    graft.Resources.shared(s, key) {
+      val path = graft.streaming.StreamRun.workdir(tag).toString
+      write(path)
       path
-    })
+    } { path =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)); ()
+    }
 
   private def q32(spark: SparkSession, dir: String): DataFrame = {
     val path = ensurePartitioned(spark, dir)
@@ -868,19 +876,14 @@ object Relational {
     * (measured: an agg+limit dim does NOT trigger it; a filtered
     * dim table does), so the dim is a real 5-row parquet table.
     * BucketingSpec asserts `dynamicpruning` in the executed plan. */
-  private val langDimReady =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensureLangDim(s: SparkSession, dir: String): String =
-    langDimReady.computeIfAbsent(dir, _ => {
-      val h = Integer.toHexString(dir.hashCode).replace('-', 'n')
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-langdim-$h"
+    pinnedLayout(s, s"q34.langdim:$dir", "q34") { path =>
       import s.implicits._
       Seq(("en", "latin"), ("fr", "latin"), ("es", "latin"),
         ("de", "germanic"), ("zh", "cjk"))
         .toDF("dlang", "fam").coalesce(1)
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   private def q34(spark: SparkSession, dir: String): DataFrame = {
     val fact = spark.read.parquet(ensurePartitioned(spark, dir))

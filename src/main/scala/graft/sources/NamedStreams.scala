@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Named stream registry — the analogue of named outputs/inputs and
   * the NamedTopicManager (SURVEY §2.1 #18;
@@ -9,28 +8,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * named_topic_manager.py): string name → stream indirection across
   * deployments.
   *
-  * Batch streams register as temp views; streaming publishes with
-  * `writeStream.toTable` (or a memory sink when no warehouse is
-  * configured). Resolution is `spark.table(name)` either way — exactly
-  * the toTable/table mapping SURVEY §2.1 prescribes. In a production
-  * deployment the same API fronts Kafka topics by name.
+  * Streams register as temp views and resolve through
+  * `spark.table(name)` — the toTable/table mapping SURVEY §2.1
+  * prescribes; a running deployment's sinks are published the same way
+  * by [[graft.plans.PipelineManager]]. In a production deployment the
+  * same API fronts Kafka topics by name.
   */
 object NamedStreams {
 
   /** Publish a batch DataFrame under a name (named output). */
   def publish(df: DataFrame, name: String): Unit =
     df.createOrReplaceTempView(name)
-
-  /** Publish a streaming DataFrame under a name; returns the running
-    * query (named output, streaming). */
-  def publishStream(df: DataFrame, name: String,
-      useMemorySink: Boolean = true): StreamingQuery = {
-    require(df.isStreaming, s"publishStream('$name') needs a streaming frame")
-    if (useMemorySink)
-      df.writeStream.format("memory").queryName(name).outputMode("append").start()
-    else
-      df.writeStream.toTable(name)
-  }
 
   /** Resolve a named stream (named input). */
   def resolve(spark: SparkSession, name: String): DataFrame = spark.table(name)

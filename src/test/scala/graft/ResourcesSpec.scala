@@ -111,6 +111,25 @@ class ResourcesSpec extends AnyFunSuite with SparkFixture {
     assert(bucketed(later).size == 2)
   }
 
+  test("releasing a session deletes q32/q34's layout files; a later " +
+      "session writes them again") {
+    val sf = "/root/testdata/sf0.001"
+    val queries = Seq("q32_partition_pruned", "q34_dynamic_pruning")
+    def layouts(s: SparkSession): Seq[java.io.File] = {
+      queries.foreach(q =>
+        Resources.withScope(SparkEntry.queries(q)(s, sf).collect()))
+      Seq(s"q32.partitioned:$sf", s"q34.langdim:$sf").map(key =>
+        new java.io.File(Resources.shared[String](s, key)(
+          fail(s"$key is not pinned"))(_ => ())))
+    }
+    val s = newSession()
+    val files = layouts(s)
+    assert(files.forall(_.isDirectory))
+    Resources.releasePinned(s)
+    assert(files.forall(!_.exists()), "released layouts are deleted")
+    assert(layouts(newSession()).forall(_.isDirectory))
+  }
+
   test("the checkpoint-plan dump follows SPARK_GRAFT_EXPLAIN_CHECKPOINTS=1 " +
       "only") {
     val key = "SPARK_GRAFT_EXPLAIN_CHECKPOINTS"
