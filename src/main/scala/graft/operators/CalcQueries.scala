@@ -213,13 +213,14 @@ object CalcQueries {
     * compiled DAG (source → calculator → gate), same
     * [[graft.plans.Pipeline.compile]] call, but against STREAMING
     * source frames through the file-source micro-batch mount: the
-    * compiler's `isStreamingAny` branch mounts BOTH state machines as
-    * chained `flatMapGroupsWithState` operators in ONE streaming
-    * query (calc's var state and the gate's open/closed state live in
-    * the same query's state store, crossing micro-batch boundaries —
-    * chained fMGWS is supported in append mode with NoTimeout, probed
-    * and now pinned by PipelineSpec). This is the reference's core
-    * abstraction — a deployment (task_web.py:32-43) — executing
+    * one-variable calculator compiles to a projection (it keeps no
+    * state) and the compiler's `isStreamingAny` branch mounts the gate
+    * as the query's one `flatMapGroupsWithState` operator, its
+    * open/closed state crossing micro-batch boundaries in the state
+    * store. A calculator over two or more variables would mount a
+    * second, chained machine in the same query (append mode with
+    * NoTimeout; PipelineSpec pins both plans). This is the reference's
+    * core abstraction — a deployment (task_web.py:32-43) — executing
     * end-to-end on the production engine path, hash-equal to the
     * batch compile (c05) and to DuckDB at once. Same fixture
     * discipline as c05: controls pre-reduced to one row per ts in the
@@ -275,8 +276,9 @@ object CalcQueries {
     * serving two pipeline instances at once via the envelope's `pipe`
     * column ([[graft.plans.Pipeline]]'s multi-instance extension):
     * every stateful task keys its machine by `dep/task#pipe`, so the
-    * two gates (and two calculator var-states) live as separate
-    * state-store entries of the SAME operators — the "a million
+    * two gates live as separate state-store entries of the SAME
+    * operator (the one-variable calculator is a projection that hashes
+    * the same key into each row's seq) — the "a million
     * per-device gates spread across the cluster" shape expressed
     * through the deployment compiler rather than a hand-keyed mount.
     * The reference runs one task process per instance (task.py:28-34);
@@ -508,11 +510,11 @@ object CalcQueries {
     ]}"""
 
   /** c09: the LOADED deployment on the STREAMING engine — the
-    * synchronizer fan-in and the calculator mount as CHAINED
-    * flatMapGroupsWithState in one streaming query through the
-    * file-source micro-batch harness (c06's mount shape, now built by
-    * the JSON loader): the synchronizer's dict/queue state crosses 2
-    * micro-batch boundaries, blocked rows from batch N release in
+    * synchronizer fan-in mounts as flatMapGroupsWithState and the
+    * one-variable calculator as a projection over its output, in one
+    * streaming query through the file-source micro-batch harness
+    * (c06's mount shape, now built by the JSON loader): the
+    * synchronizer's dict/queue state crosses 2 micro-batch boundaries, blocked rows from batch N release in
     * batch N+1/N+2, and one trailing PAUSE sentinel per feed (riding
     * the last chunk — e27's in-band flush) releases the tail. Chunks
     * are seq-ranges, which is exactly the synchronizer's arrival-fold

@@ -28,6 +28,14 @@ import org.apache.spark.sql.types._
   * Dataset graph instead — composition happens at the plan level, so
   * chained stateless operators fuse into one whole-stage-codegen span.
   *
+  * Which ops run as machines: every op whose output depends on earlier
+  * messages (gate, latch, switch, synchronizer, buffers, a calculator
+  * over two or more variables, …) mounts a
+  * [[graft.streaming.StateMachines]] machine keyed by `dep/task[#pipe]`
+  * — `flatMapGroupsWithState` on a streaming input, `flatMapGroups` in
+  * batch. Stateless ops and a ONE-variable calculator compile to
+  * projections: no state store, no shuffle.
+  *
   * Envelope schema on every edge: (ts: Long ms, value: Double,
   * text: String, paused: Boolean, seq: Long) — §1.2's message types as
   * one nullable-payload row, pause markers in-band (SURVEY §7.4).
@@ -488,22 +496,24 @@ object Pipeline {
     df.select(cols: _*)
   }
 
+  /** The row's pipe, failing the row when it is NULL or holds a '#'.
+    * The composite key `key#pipe` is recovered by
+    * substring_index(key,'#',-1), so a '#' inside a pipe value would
+    * merge distinct instances, and a NULL pipe would be silently dropped
+    * by concat_ws (collapsing its rows into a phantom instance keyed by
+    * the task alone) — fail the row instead of corrupting state. */
+  private def checkedPipe(key: String): Column =
+    when(col(PipeCol).isNull || col(PipeCol).contains("#"),
+      raise_error(concat(
+        lit(s"task '$key': pipe value must be non-null and '#'-free, got '"),
+        coalesce(col(PipeCol), lit("NULL")), lit("'"))).cast(StringType))
+      .otherwise(col(PipeCol))
+
   private def toKEv(key: String, dfs: Seq[DataFrame]): Dataset[KEv] = {
     import StatefulRunner._
     val tagged = dfs.zipWithIndex.map { case (df, i) =>
-      // The composite key is recovered by substring_index(key,'#',-1), so
-      // a '#' inside a pipe value would merge distinct instances, and a
-      // NULL pipe would be silently dropped by concat_ws (collapsing its
-      // rows into a phantom instance keyed by the task alone) — fail the
-      // row instead of corrupting state.
-      val k = if (hasPipe(df)) {
-        val checked = when(col(PipeCol).isNull || col(PipeCol).contains("#"),
-          raise_error(concat(
-            lit(s"task '$key': pipe value must be non-null and '#'-free, got '"),
-            coalesce(col(PipeCol), lit("NULL")), lit("'"))).cast(StringType))
-          .otherwise(col(PipeCol))
-        concat_ws("#", lit(key), checked)
-      } else lit(key)
+      val k = if (hasPipe(df)) concat_ws("#", lit(key), checkedPipe(key))
+        else lit(key)
       df.select(k.as("key"), lit(i).as("topic"), col("ts"),
         col("value"), col("text"), col("paused"), col("seq"))
     }
@@ -534,6 +544,32 @@ object Pipeline {
       ds.toDF().select(col("ts"), col("value"), col("text"),
         col("paused"), // machines emit pause transitions in-band
         seqCol().as("seq"))
+
+  /** A one-variable calculator as a projection: the rows
+    * [[Calculator]] emits, `seq` included, without its state. With one
+    * variable the machine's last value is always overwritten by the
+    * message it evaluates (a pause reset included), so each output
+    * depends on that message alone. Paused and NaN rows emit nothing,
+    * as in `step`; a NULL in a field the machine decodes into a
+    * primitive fails the row, as the decode does. */
+  private def calcProjection(key: String, df: DataFrame,
+      f: Double => Double): DataFrame = {
+    val piped = hasPipe(df)
+    val complete = when(Seq("ts", "value", "paused", "seq")
+        .map(col(_).isNull).reduce(_ || _),
+      raise_error(lit(s"task '$key': ts, value, paused and seq must be " +
+        "non-null")).cast(BooleanType))
+      .otherwise(lit(true))
+    // checked ahead of the drops: the machine checks every row it reads
+    val valid = if (piped) complete && checkedPipe(key).isNotNull else complete
+    val out = df.filter(valid && !col("paused") && !isnan(col("value")))
+      .select((if (piped) Seq(checkedPipe(key).as(PipeCol)) else Nil) ++
+        Seq(col("ts"), udf(f).apply(col("value")).as("value"),
+          lit(null).cast(StringType).as("text"), lit(false).as("paused")): _*)
+    // the key string fromKOut hashes: `dep/task#pipe`, or none unpiped
+    out.withColumn("seq",
+      if (piped) seqCol(concat_ws("#", lit(key), col(PipeCol))) else seqCol())
+  }
 
   private def isStreamingAny(dfs: Seq[DataFrame]): Boolean = dfs.exists(_.isStreaming)
 
@@ -588,6 +624,11 @@ object Pipeline {
             maxDesync), ins)
       case GateOp(failOpen) => runMachine(key, new Gate(failOpen), ins)
       case SrLatchOp => runMachine(key, new SrLatch, ins)
+      case CalculatorOp(formula, Seq(v), _) =>
+        // one variable: no state to keep, so no machine (calcProjection);
+        // the defaults only ever reach a pause reset, never an output
+        val ast = Calc.parse(formula)
+        calcProjection(key, ins.head, x => evalAst(ast, Map(v -> x)))
       case CalculatorOp(formula, vars, defaults) =>
         // parse ONCE here; the closure only walks the AST per message
         // (the vectorized Column path is CalcQueries — this is the

@@ -141,28 +141,33 @@ object Relational {
   /** One-time-per-(session, dir) publication of lineitem+orders
     * bucketed by orderkey — the curated-layout step a 100 TB
     * deployment runs once so every downstream fact-fact join on that
-    * key reads pre-partitioned (SCALE.md "Joins"). The table pair is
-    * pinned in [[graft.Resources]], whose computeIfAbsent serializes
-    * Verify's concurrent query threads; bench's min-of-two measures
-    * the JOIN on the second run, the write having been paid on the
-    * first — exactly the amortization the layout exists for. Closing
-    * the session drops both tables from the context's catalog.
-    * External-table files go under the system tmpdir (stable path per
-    * dir, overwritten on rebuild, so reruns never accumulate). */
-  private def ensureBucketed(s: SparkSession, dir: String): (String, String) =
-    graft.Resources.shared(s, s"q30.bucketed:$dir") {
-      val h = Integer.toHexString(dir.hashCode).replace('-', 'n')
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-bucketed-$h"
-      val (lt, ot) = (s"graft_l_bkt_$h", s"graft_o_bkt_$h")
+    * key reads pre-partitioned (SCALE.md "Joins"). The pair is a
+    * [[pinnedLayout]]: computeIfAbsent serializes Verify's concurrent
+    * query threads; bench's min-of-two measures the JOIN on the second
+    * run, the write having been paid on the first — exactly the
+    * amortization the layout exists for. The files go in a fresh
+    * workdir per session and the tables are named after it, so two
+    * sessions never share either; closing the session drops both tables
+    * from the context's catalog and deletes the files. */
+  private def ensureBucketed(s: SparkSession, dir: String): Seq[String] =
+    bucketedTables(pinnedLayout(s, s"q30.bucketed:$dir", "q30",
+        bucketedTables) { path =>
+      val Seq(lt, ot) = bucketedTables(path)
       Tables.writeBucketed(
         Tables.lineitem(s, dir)
           .select("l_orderkey", "l_extendedprice", "l_discount"),
-        lt, 8, Seq("l_orderkey"), Some(s"$base/l"))
+        lt, 8, Seq("l_orderkey"), Some(s"$path/l"))
       Tables.writeBucketed(
         Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        ot, 8, Seq("o_orderkey"), Some(s"$base/o"))
-      (lt, ot)
-    } { case (lt, ot) => Seq(lt, ot).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t")) }
+        ot, 8, Seq("o_orderkey"), Some(s"$path/o"))
+    })
+
+  /** q30's lineitem and orders table names for the layout at `path`. */
+  private def bucketedTables(path: String): Seq[String] = {
+    val id = new java.io.File(path).getName.stripPrefix("graft-stream-")
+      .replaceAll("[^A-Za-z0-9]", "_")
+    Seq(s"graft_l_bkt_$id", s"graft_o_bkt_$id")
+  }
 
   /** q04's exact semantics (same oracle SQL, same revenue hashes) with
     * the one fact-fact join reading the bucketed layout: both sides
@@ -174,7 +179,7 @@ object Relational {
     * hops and the final group-by keep q04's broadcast/partial-agg
     * shape. */
   private def q30(spark: SparkSession, dir: String): DataFrame = {
-    val (lt, ot) = ensureBucketed(spark, dir)
+    val Seq(lt, ot) = ensureBucketed(spark, dir)
     val l = spark.table(lt)
     val o = spark.table(ot)
     val c = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
@@ -210,14 +215,17 @@ object Relational {
 
   /** A file layout written once per (session, `key`) into a fresh
     * workdir, pinned with the session; releasing the session's pinned
-    * values ([[graft.Resources.releasePinned]]) deletes the files. */
-  private def pinnedLayout(s: SparkSession, key: String, tag: String)(
+    * values ([[graft.Resources.releasePinned]]) drops the catalog
+    * tables `tables(path)` names and deletes the files. */
+  private def pinnedLayout(s: SparkSession, key: String, tag: String,
+      tables: String => Seq[String] = _ => Nil)(
       write: String => Unit): String =
     graft.Resources.shared(s, key) {
       val path = graft.streaming.StreamRun.workdir(tag).toString
       write(path)
       path
     } { path =>
+      tables(path).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)); ()
     }
 

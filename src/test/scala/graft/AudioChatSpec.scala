@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** AudioSequencer healing semantics (util.py:188-267) and the rolling
   * chat context (llamacppchat.py:49-77). Pure kernels — no Spark. */
-class AudioChatSpec extends AnyFunSuite {
+class AudioChatSpec extends AnyFunSuite with TempDirs {
 
   private val rate = 10 // 10 samples/sec for easy math
 
@@ -105,7 +105,7 @@ class AudioChatSpec extends AnyFunSuite {
 
   test("BigramLm decodes greedily from the context's last token, stops " +
       "at vocabulary edges, falls back to 'ok' (e40's learned kernel)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigram_")
+    val dir = tempDir("graft_bigram_")
     java.nio.file.Files.writeString(dir.resolve("part-00000"),
       "the\tquick\nquick\tbrown\nbrown\tfox\nfox\tjumps\nend\t.\n")
     try {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly reproduced by the self-delimiting \x01sym\x02 encoding +
   * plain string replace, and the (freq, a, b) struct argmax must be
   * deterministic under ties. Also pins t16's integer-log2 identity. */
-class BpeSpec extends AnyFunSuite with SparkFixture {
+class BpeSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   /** Naive reference BPE on a word-frequency dict: symbols as string
     * lists, greedy left-to-right merge, argmax tie-break by
@@ -107,7 +107,7 @@ class BpeSpec extends AnyFunSuite with SparkFixture {
 
   test("t19 over zero-row tables reports 0, not NULL, at every stage") {
     val sf = "/root/testdata/sf0.001"
-    val empty = java.nio.file.Files.createTempDirectory("t19-empty").toString
+    val empty = tempDir("t19-empty").toString
     for (t <- Tables.all)
       spark.read.parquet(s"$sf/$t.parquet").limit(0)
         .write.parquet(s"$empty/$t.parquet")

@@ -6,13 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Bucketing removes the shuffle from co-located joins — the physical
   * plan of a bucketed lineitem⋈orders join must contain no Exchange,
   * while the plain parquet join does (SCALE.md "Joins"). */
-class BucketingSpec extends AnyFunSuite with SparkFixture {
+class BucketingSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   override protected lazy val spark =
     newSession("spark.sql.autoBroadcastJoinThreshold" -> "-1") // force SMJ path
 
   private lazy val tableDir =
-    java.nio.file.Files.createTempDirectory("bucket-tables").toString
+    tempDir("bucket-tables").toString
 
   private val sf = "/root/testdata/sf0.001"
 

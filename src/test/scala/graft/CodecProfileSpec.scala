@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per family — so a user holding the real appendix tables has a
   * TESTED path from a JSON document to a decoded file, and the first
   * real-file attempt fails in a named place rather than silently. */
-class CodecProfileSpec extends AnyFunSuite {
+class CodecProfileSpec extends AnyFunSuite with TempDirs {
 
   // ---- Vlc ------------------------------------------------------------------
 
@@ -297,7 +297,7 @@ class CodecProfileSpec extends AnyFunSuite {
   test("RunDecode CLI: dump-standin per family is loadable JSON, and " +
       "each audio/video family decodes a file under an injected " +
       "profile end to end (the real-file smoke path)") {
-    val dir = java.nio.file.Files.createTempDirectory("rundecode-all")
+    val dir = tempDir("rundecode-all")
     def dump(family: String): String = {
       val out = dir.resolve(s"$family-standin.json")
       RunDecode.main(Array("dump-standin", family, out.toString))

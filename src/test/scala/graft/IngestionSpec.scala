@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * events-reading query at analysis (the round-7 incident: 66/132
   * registry entries lost to one hard-coded encoding).
   */
-class IngestionSpec extends AnyFunSuite with SparkFixture {
+class IngestionSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -44,7 +44,7 @@ class IngestionSpec extends AnyFunSuite with SparkFixture {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
   private def writeVariant(encode: Encode): String = {
-    val dir = java.nio.file.Files.createTempDirectory("events-enc").toString
+    val dir = tempDir("events-enc").toString
     writeEvents(encode, dir)
     dir
   }
@@ -76,7 +76,7 @@ class IngestionSpec extends AnyFunSuite with SparkFixture {
   test("a table rewritten in place with another ts encoding is never " +
       "read with a stale schema") {
     val want = tsSum(sf)
-    val dir = java.nio.file.Files.createTempDirectory("events-rewrite").toString
+    val dir = tempDir("events-rewrite").toString
     for ((label, encode) <- Seq[(String, Encode)]("int64-nanos" -> identity,
         "timestamp[us] utc" -> toLtz, "timestamp[us] naive" -> toNtz)) {
       writeEvents(encode, dir)
@@ -107,7 +107,7 @@ class IngestionSpec extends AnyFunSuite with SparkFixture {
 
   test("orders date columns: a DATE physical arrival widens to the " +
       "verified timestamp_ntz at identical values") {
-    val dir = java.nio.file.Files.createTempDirectory("orders-enc").toString
+    val dir = tempDir("orders-enc").toString
     val orig = Tables.orders(spark, sf)
     orig.withColumn("o_orderdate",
         col("o_orderdate").cast(org.apache.spark.sql.types.DateType))

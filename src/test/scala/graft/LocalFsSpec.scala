@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * equal stock [[RawLocalFileSystem]]'s (the stock class serves only as
   * this spec's reference), and the `.crc` integrity layer must survive
   * on the checkpoint files Spark writes through it. */
-class LocalFsSpec extends AnyFunSuite with SparkFixture {
+class LocalFsSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val local = URI.create("file:///")
 
@@ -43,7 +43,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
     nio.initialize(local, conf)
     val stock = new RawLocalFileSystem
     stock.initialize(local, conf)
-    val dir = new Path(Files.createTempDirectory("localfs-parity").toString)
+    val dir = new Path(tempDir("localfs-parity").toString)
     def fields(s: FileStatus) = (s.getPath, s.getLen, s.isDirectory,
       s.isSymlink, s.getPermission, s.getOwner, s.getGroup,
       s.getModificationTime, s.getBlockSize, s.getReplication)
@@ -110,7 +110,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
       "fails the read") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = Files.createTempDirectory("localfs-ckpt")
+    val ckpt = tempDir("localfs-ckpt")
     val mem = MemoryStream[Int]
     val q = mem.toDF().writeStream.format("memory").queryName("localfs_crc")
       .option("checkpointLocation", ckpt.toString).start()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Oracle-dtype contract gate (round-12 judge directive 2).
@@ -25,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * compare shells out to scripts/dtype_gate.py — the same pattern as
   * scripts/check.py, which mimics the driver's value compare.
   */
-class OracleDtypeSpec extends AnyFunSuite with SparkFixture {
+class OracleDtypeSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def pythonHasDuckdb: Boolean =
     try new ProcessBuilder("python3", "-c", "import duckdb, pandas")
@@ -40,7 +38,7 @@ class OracleDtypeSpec extends AnyFunSuite with SparkFixture {
     val gate = new java.io.File("scripts/dtype_gate.py")
     assert(gate.exists(), s"missing ${gate.getAbsolutePath}")
 
-    val out = Files.createTempDirectory("dtype_gate").toFile
+    val out = tempDir("dtype_gate").toFile
     out.deleteOnExit()
     // The real driver dump: all registered queries → parquet, all
     // registered oracles → oracle_sql.json. A query failure writes a

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * validation, batch compile of a multi-operator DAG, and the
   * schedule/start/status/stop lifecycle on a real streaming query.
   */
-class PipelineSpec extends AnyFunSuite with SparkFixture {
+class PipelineSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def env(rows: Seq[(Long, Double)]): DataFrame = {
     import spark.implicits._
@@ -52,57 +52,74 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(Pipeline.validate(dag).isEmpty)
   }
 
-  test("streaming compile mounts the DAG's machines as CHAINED " +
-      "flatMapGroupsWithState in one query; state crosses batches") {
-    import spark.implicits._
+  /** calc -> gate (the `dag` minus its trailing formatter) compiled
+    * over MemoryStreams and run for three micro-batches: the gate opens
+    * at 20 in batch 1, data at 30 passes in batch 2, the gate closes at
+    * 40 and drops data at 50 in batch 3. `vars` beyond "a" are empty
+    * sources. Returns the unpaused (ts, value) sink rows, the
+    * FlatMapGroupsWithState count of the executed plan and the last
+    * progress's state-operator count. */
+  private def streamCalcGate(name: String, formula: String,
+      vars: Seq[String]): (Seq[(Long, Double)], Int, Int) = {
     implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
     import graft.streaming.StatefulRunner.KEv
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val a = MemoryStream[KEv]
-    val c = MemoryStream[KEv]
-    def senv(ms: MemoryStream[KEv]) = ms.toDS().toDF()
-      .select(col("ts"), col("value"), col("text"), col("paused"),
-        col("seq"))
-    // same DAG minus the trailing formatter: calc -> gate, two
-    // stateful machines chained in ONE streaming query
-    val dep = Deployment("sdag", Seq(
-      TaskSpec("src_a", SourceOp(IOMeta.number), Nil, "a"),
+    val streams = (vars :+ "ctrl").map(v => v -> MemoryStream[KEv]).toMap
+    val dep = Deployment(name, vars.map(v =>
+        TaskSpec(s"src_$v", SourceOp(IOMeta.number), Nil, v)) ++ Seq(
       TaskSpec("src_ctrl", SourceOp(IOMeta.number), Nil, "ctrl"),
-      TaskSpec("doubler", CalculatorOp("a * 2 + 1", Seq("a")), Seq("a"),
-        "calc"),
+      TaskSpec("doubler", CalculatorOp(formula, vars), vars, "calc"),
       TaskSpec("gate", GateOp(), Seq("calc", "ctrl"), "gated")))
-    val out = Pipeline.compile(dep,
-      Map("a" -> senv(a), "ctrl" -> senv(c)))("gated")
+    val out = Pipeline.compile(dep, streams.map { case (v, ms) =>
+      v -> ms.toDS().toDF().select(col("ts"), col("value"), col("text"),
+        col("paused"), col("seq")) })("gated")
     assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("sdag_out")
+    val q = out.writeStream.format("memory").queryName(s"${name}_out")
       .outputMode("append").start()
     try {
-      def kev(topic: Int, ts: Long, v: Double, seq: Long) =
-        KEv("0", topic, ts, v, null, paused = false, seq = seq)
+      def kev(ts: Long, v: Double, seq: Long) =
+        KEv("0", 0, ts, v, null, paused = false, seq = seq)
+      val (a, c) = (streams("a"), streams("ctrl"))
       // batch 1: gate opens at ts=20 — control state must persist
-      c.addData(kev(0, 20L, 1.0, 1))
+      c.addData(kev(20L, 1.0, 1))
       q.processAllAvailable()
       // batch 2: data at 30 passes through calc (x2+1) AND the gate
-      // opened a batch earlier; data at 10 arrived before the open
-      // per the fold order within its batch
-      a.addData(kev(0, 30L, 2.0, 2))
+      // opened a batch earlier
+      a.addData(kev(30L, 2.0, 2))
       q.processAllAvailable()
       // batch 3: gate closes at 40, data at 50 is dropped
-      c.addData(kev(0, 40L, 0.0, 3))
-      a.addData(kev(0, 50L, 3.0, 4))
+      c.addData(kev(40L, 0.0, 3))
+      a.addData(kev(50L, 3.0, 4))
       q.processAllAvailable()
-      val got = spark.table("sdag_out").filter(!col("paused"))
+      val got = spark.table(s"${name}_out").filter(!col("paused"))
         .select("ts", "value").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-      assert(got == Seq((30L, 5.0)))
-      // the executed micro-batch plan genuinely chains two
-      // FlatMapGroupsWithState operators (calc's, then the gate's)
       val plan = q.asInstanceOf[
           org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
         .streamingQuery.lastExecution.executedPlan.toString
-      val n = "FlatMapGroupsWithState".r.findAllIn(plan).length
-      assert(n == 2, s"expected 2 chained fMGWS, got $n\n${plan.take(600)}")
+      (got, "FlatMapGroupsWithState".r.findAllIn(plan).length,
+        q.lastProgress.stateOperators.length)
     } finally q.stop()
+  }
+
+  test("streaming compile mounts the DAG's machines as CHAINED " +
+      "flatMapGroupsWithState in one query; state crosses batches") {
+    // the doubler reads a second (empty) variable: a one-variable
+    // calculator keeps no state and compiles to a projection
+    val (got, n, _) = streamCalcGate("sdag", "a * 2 + 1 + 0 * b", Seq("a", "b"))
+    assert(got == Seq((30L, 5.0)))
+    // the executed micro-batch plan genuinely chains two
+    // FlatMapGroupsWithState operators (calc's, then the gate's)
+    assert(n == 2, s"expected 2 chained fMGWS, got $n")
+  }
+
+  test("streaming compile of a ONE-variable calc -> gate mounts one " +
+      "flatMapGroupsWithState: the calculator is a projection") {
+    val (got, n, stateOps) = streamCalcGate("sdag1", "a * 2 + 1", Seq("a"))
+    assert(got == Seq((30L, 5.0)))
+    assert(n == 1, s"expected the gate's fMGWS only, got $n")
+    assert(stateOps == 1)
   }
 
   test("multi-pipeline compile: the pipe column multiplexes one DAG " +
@@ -506,8 +523,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       TaskSpec("src", SourceOp(IOMeta.number), Nil, "a"),
       TaskSpec("plus", CalculatorOp("a + 1", Seq("a")), Seq("a"), "out1"),
       TaskSpec("scale", CalculatorOp("a * 100", Seq("a")), Seq("a"), "out2")))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_").toString
+    val ckpt = tempDir("graft_ckpt_").toString
     val mgr = new PipelineManager(spark, Some(ckpt))
     val reports = scala.collection.mutable.Buffer.empty[TaskReport]
     mgr.onReport(reports += _)
@@ -582,7 +598,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       ("p1", 0, 10L, 7.0), ("p2", 0, 11L, 8.0), ("p2", 1, 12L, 0.0),
       ("p2", 0, 13L, 9.0)).zipWithIndex.map { case ((p, t, ts, v), i) =>
         PipedEv(p, t, ts, v, i.toLong) }
-    val root = java.nio.file.Files.createTempDirectory("graft_restart_").toString
+    val root = tempDir("graft_restart_").toString
     val mgr = new PipelineManager(spark, Some(root))
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[PipedEv]
     def run(part: Seq[PipedEv]): Unit = {
@@ -798,7 +814,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       "kernel through the JSON loader; fixpoint round-trip holds") {
     import graft.plans.DeploymentJson
     import spark.implicits._
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_chatjson_")
+    val modelDir = tempDir("graft_chatjson_")
     java.nio.file.Files.writeString(modelDir.resolve("part-00000"),
       "ping\tpong\npong\tdone\n")
     try {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * the engine runs Spark's default ANSI mode, where an out-of-range
   * cast raises NUMERIC_VALUE_OUT_OF_RANGE.
   */
-class RelationalSpec extends AnyFunSuite with SparkFixture {
+class RelationalSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
   /** sf0.001's lineitem plus one row inside q01's shipdate filter whose
     * extended price is `price`, as a table directory. */
   private def lineitemWith(price: Double): String = {
-    val dir = Files.createTempDirectory("lineitem-wide").toString
+    val dir = tempDir("lineitem-wide").toString
     val l = spark.read.parquet(s"$sf/lineitem.parquet")
     val extra = l.filter(col("l_shipdate") <= lit("2000-09-02").cast("timestamp_ntz"))
       .limit(1).withColumn("l_extendedprice", lit(price))

@@ -130,6 +130,33 @@ class ResourcesSpec extends AnyFunSuite with SparkFixture {
     assert(layouts(newSession()).forall(_.isDirectory))
   }
 
+  test("two sessions on one dir get their own q30 layout: releasing one " +
+      "deletes its files and leaves the other's q30 readable") {
+    val sf = "/root/testdata/sf0.001"
+    val t0 = System.currentTimeMillis() / 1000 * 1000
+    def run(s: SparkSession): Seq[String] = Resources.withScope(
+      SparkEntry.queries("q30_bucketed_join")(s, sf).collect()
+        .map(_.toString).toSeq)
+    def layout(s: SparkSession): java.io.File =
+      new java.io.File(Resources.shared[String](s, s"q30.bucketed:$sf")(
+        fail("q30's layout is not pinned"))(_ => ()))
+    val (s1, s2) = (newSession(), newSession())
+    val want = run(s1)
+    assert(run(s2) == want)
+    val (d1, d2) = (layout(s1), layout(s2))
+    assert(d1 != d2 && d1.isDirectory && d2.isDirectory)
+    Resources.releasePinned(s1)
+    assert(!d1.exists(), "the released session's files are deleted")
+    assert(d2.isDirectory)
+    assert(run(s2) == want)
+    Resources.releasePinned(s2)
+    assert(!d2.exists())
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val shared = Option(tmp.listFiles()).toSeq.flatten.filter(f =>
+      f.getName.startsWith("graft-bucketed-") && f.lastModified >= t0)
+    assert(shared.isEmpty, s"q30 wrote a shared layout: $shared")
+  }
+
   test("the checkpoint-plan dump follows SPARK_GRAFT_EXPLAIN_CHECKPOINTS=1 " +
       "only") {
     val key = "SPARK_GRAFT_EXPLAIN_CHECKPOINTS"

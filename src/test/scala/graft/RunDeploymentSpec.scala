@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * JSON on disk + envelope parquet feeds → named-output parquet, the
   * full "run your streamtasks export here" loop with zero Scala.
   */
-class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
+class RunDeploymentSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   test("a stored calc -> gate deployment runs from JSON + parquet " +
       "bindings to named-output parquet") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep")
+    val dir = tempDir("graft-rundep")
       .toString
     // the stored artifact: clicks -> calculator(a*2+1) -> gate(ctrl)
     val json = s"""{
@@ -76,7 +76,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
     assert(loaded.namedInputs.keySet == Set("clicks", "views", "ctrl"))
     assert(loaded.namedOutputs.keySet == Set("gated", "views_sync"))
     // and it RUNS through the CLI unchanged
-    val dir = java.nio.file.Files.createTempDirectory("graft-refexp")
+    val dir = tempDir("graft-refexp")
       .toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/export.json"), json)
@@ -112,7 +112,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
       "capture demuxes distributed, raw-s16 audio explodes to samples " +
       "on the declared clock, and the loaded meter DAG runs on it") {
     import graft.sources.{Flv, Wav}
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep3")
+    val dir = tempDir("graft-rundep3")
       .toString
     // capture: 300 samples of |x| = 1000 at 1 kHz in three 100-sample
     // audio tags, plus a video tag the audio bind must skip
@@ -159,7 +159,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
   test("an inputcontainer audio track binds a recorded .wav file on " +
       "the file's own sample clock") {
     import graft.sources.Wav
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep5")
+    val dir = tempDir("graft-rundep5")
       .toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/rec.wav"),
@@ -195,7 +195,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
   test("an inputcontainer audio track binds a recorded .flac file and " +
       "yields byte-identical meter output to the same samples as .wav") {
     import graft.sources.{Flac, Wav}
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep6")
+    val dir = tempDir("graft-rundep6")
       .toString
     val samples = Array.tabulate(300)(i =>
       (((i + 7) * 2654435761L) % 4000L - 2000L).toInt)
@@ -241,7 +241,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
       "moov layout) and meters identically to the same samples as .wav") {
     import graft.sources.{IsoBmff, Wav}
     import graft.sources.IsoBmff.{Mp4Sample, Mp4Track}
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep8")
+    val dir = tempDir("graft-rundep8")
       .toString
     val samples = Array.tabulate(300)(i =>
       (((i + 11) * 2654435761L) % 4000L - 2000L).toInt)
@@ -289,7 +289,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
   test("a coded .mp4 track refuses the raw-PCM bind loudly") {
     import graft.sources.IsoBmff
     import graft.sources.IsoBmff.{Mp4Sample, Mp4Track}
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep9")
+    val dir = tempDir("graft-rundep9")
       .toString
     val coded = Mp4Track(1, "audio", "ulaw", sampleRate = 1000, channels = 1)
     java.nio.file.Files.write(
@@ -322,7 +322,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
 
   test("a corrupt .flac bind fails loudly instead of metering garbage") {
     import graft.sources.Flac
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep7")
+    val dir = tempDir("graft-rundep7")
       .toString
     val bytes = Flac.encodeFile(
       Array(Array.tabulate(100)(i => i * 3 - 150)), 1000, blockSize = 64)
@@ -358,7 +358,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
       "checkpointed parquet sinks, AvailableNow drain — same rows as " +
       "the batch run") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep4")
+    val dir = tempDir("graft-rundep4")
       .toString
     val json = s"""{
       "deployment": {"id": "d", "label": "demo"},
@@ -420,7 +420,7 @@ class RunDeploymentSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("unbound named inputs fail loudly with the missing names") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rundep2")
+    val dir = tempDir("graft-rundep2")
       .toString
     val json = """[{"id": "1", "deployment_id": "d",
       "task_host_id": "namedinput", "label": "feed",

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * chunks replay one per batch in fold order, workdirs are reclaimed
   * only from dead owners, and no other `src/main` file makes the
   * substrate's decisions itself. */
-class StreamRunSpec extends AnyFunSuite with SparkFixture {
+class StreamRunSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def chunks(dir: File): Seq[String] =
     dir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
@@ -75,7 +75,7 @@ class StreamRunSpec extends AnyFunSuite with SparkFixture {
 
   test("the sweep deletes workdirs of exited owners and keeps a live " +
       "owner's, however old") {
-    val root = Files.createTempDirectory("streamrun-sweep").toFile
+    val root = tempDir("streamrun-sweep").toFile
     val child = new ProcessBuilder("true").start()
     child.waitFor()
     val dead = new File(root, s"graft-stream-${child.pid}-run-1")

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scale-path configuration: state spills to disk instead of heap,
   * SURVEY §7.4 "state growth").
   */
-class StreamingE2ESpec extends AnyFunSuite with SparkFixture {
+class StreamingE2ESpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -37,7 +37,7 @@ class StreamingE2ESpec extends AnyFunSuite with SparkFixture {
     // the file stream source watches a directory
     // materialize through Tables.events so the stream sees the engine's
     // normalized nanos-Long ts regardless of the fixture's physical type
-    val dir = java.nio.file.Files.createTempDirectory("events-stream")
+    val dir = tempDir("events-stream")
     Tables.events(spark, sf).coalesce(1)
       .write.mode("overwrite").parquet(dir.toString)
     val stream = spark.readStream
@@ -75,8 +75,8 @@ class StreamingE2ESpec extends AnyFunSuite with SparkFixture {
   test("state survives a query restart from checkpoint") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("gate-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("gate-out").toString
+    val ckpt = tempDir("gate-ckpt").toString
+    val outDir = tempDir("gate-out").toString
     val mem = MemoryStream[KEv]
     // memory sinks don't support recovery; the parquet file sink does
     def start() = StatefulRunner
@@ -112,7 +112,7 @@ class StreamingE2ESpec extends AnyFunSuite with SparkFixture {
     // via the sink's _spark_metadata) and with the gate's open state
     // restored from the state store.
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("fsrc").toString
+    val base = tempDir("fsrc").toString
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
     val ckpt = s"$base/ckpt"
     val outDir = s"$base/out"

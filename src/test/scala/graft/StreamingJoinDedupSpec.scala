@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a duplicate arriving in a LATER batch is still suppressed
   *    (dedup state crosses the boundary).
   */
-class StreamingJoinDedupSpec extends AnyFunSuite with SparkFixture {
+class StreamingJoinDedupSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val W = 86400000L // e43's 24 h attribution window
   private val t0 = 1700000000000L
@@ -103,8 +103,8 @@ class StreamingJoinDedupSpec extends AnyFunSuite with SparkFixture {
       "buffered before the stop matches a purchase arriving after") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("sj-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("sj-out").toString
+    val ckpt = tempDir("sj-ckpt").toString
+    val outDir = tempDir("sj-out").toString
     val clicks = MemoryStream[KEv]
     val purch = MemoryStream[KEv]
     def start() = joinStreams(clicks.toDS(), purch.toDS())
@@ -155,7 +155,7 @@ class StreamingJoinDedupSpec extends AnyFunSuite with SparkFixture {
       "and enriches keys arriving in later micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dimDir = java.nio.file.Files.createTempDirectory("dim").toString
+    val dimDir = tempDir("dim").toString
     Seq(("u1", "SEG_A"), ("u2", "SEG_B"), ("u3", "SEG_C"))
       .toDF("k", "seg").coalesce(1).write.mode("overwrite").parquet(dimDir)
     val mem = MemoryStream[KEv]

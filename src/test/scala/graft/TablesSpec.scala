@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * schema inferred under the default ones. (A rewritten table is
   * IngestionSpec's case.)
   */
-class TablesSpec extends AnyFunSuite with SparkFixture {
+class TablesSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -65,7 +65,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the first load of a new file state infers, later loads do not") {
-    val dir = Files.createTempDirectory("tables-copy")
+    val dir = tempDir("tables-copy")
     Files.copy(Paths.get(s"$sf/nation.parquet"), dir.resolve("nation.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val (_, cold) = jobsDuring(Tables.load(spark, dir.toString, "nation"))

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and levels exactly, and the reconstruction matches closed forms
   * for each 16×16 predictor. Complements the m40 oracle the way
   * FlacPropSpec complements p13. */
-class Vp8Spec extends AnyFunSuite {
+class Vp8Spec extends AnyFunSuite with TempDirs {
 
   private def check[A](gen: Gen[A], trials: Int)(p: A => Unit): Unit = {
     var seed = org.scalacheck.rng.Seed(40912L)
@@ -1431,7 +1431,7 @@ class Vp8Spec extends AnyFunSuite {
       ctx = cxE)
     val ivf = Ivf.mux(Ivf.IvfHeader("VP80", 32, 32, 30, 1, 2L),
       Seq(Ivf.IvfFrame(0L, key), Ivf.IvfFrame(1L, p1)))
-    val dir = java.nio.file.Files.createTempDirectory("rundecode")
+    val dir = tempDir("rundecode")
     val pj = dir.resolve("profile.json")
     java.nio.file.Files.write(pj,
       Vp8ProfileJson.render(altFull).getBytes("UTF-8"))
