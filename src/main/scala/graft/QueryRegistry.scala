@@ -8,7 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle  equivalent ANSI SQL for the DuckDB oracle; None → the
   *                driver records a weaker rows-only check (used for ops
   *                whose semantics are not SQL-expressible, e.g.
-  *                probabilistic sketches)
+  *                probabilistic sketches). Built on first read: some
+  *                inline kernel tables (p32/e58) the registry must not
+  *                compute.
   *
   * Determinism conventions (the driver hash-compares values):
   *  - money-style sums go through DECIMAL(18,2) so the sum is exact and
@@ -21,10 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - every query ends with a deterministic ORDER BY (ties broken by a
   *    unique key) so row order cannot differ.
   */
-final case class Q(
-    name: String,
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+final class Q(val name: String, val fn: (SparkSession, String) => DataFrame,
+    oracleSql: => Option[String]) { lazy val oracle: Option[String] = oracleSql }
+
+object Q {
+  def apply(name: String, fn: (SparkSession, String) => DataFrame,
+      oracle: => Option[String]): Q = new Q(name, fn, oracle)
+}
 
 object QueryRegistry {
   /** All modules contributing queries; SparkEntry aggregates this. */

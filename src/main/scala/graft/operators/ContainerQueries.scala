@@ -271,6 +271,10 @@ object ContainerQueries {
     java.security.MessageDigest.getInstance("MD5").digest(bytes)
       .map("%02x".format(_)).mkString
 
+  /** The first byte of the md5 of `str`: the kernels' seeded draws. */
+  private def hexbyte(str: String): Int =
+    Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
+
   /** m16: REAL WAV container round-trip under the oracle. Per
     * container key, click values become PCM16 samples, are muxed into
     * an actual RIFF/WAVE file ([[graft.sources.Wav]]), demuxed back,
@@ -1074,8 +1078,6 @@ object ContainerQueries {
   /** m28's per-container kernel, self-contained and explicitly
     * serializable so the flatMapGroups closure ships only this. */
   private[operators] object MotionKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     private def wrap16(v: Int): Int = ((v % 16) + 16) % 16
 
     /** The shared deterministic 16×16 test sequence (m28 + m36):
@@ -2012,8 +2014,6 @@ object ContainerQueries {
     * express. Scale: per-container mapGroups, the m38 envelope —
     * decode cost is bytes-proportional and data-parallel. */
   private[operators] object Vp8DecodeKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -2067,8 +2067,6 @@ object ContainerQueries {
     * space (all ten 4×4 predictors, random levels, context-coded
     * trees) is pinned by Vp8Spec properties. Scale: the m40 envelope. */
   private[operators] object Vp8BpredKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -2152,8 +2150,6 @@ object ContainerQueries {
     * WHT/IDCT → prediction for the exact container+codec pairing a
     * reference user holds. Scale: the m40 envelope. */
   private[operators] object WebmVp8DecodeKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -2245,8 +2241,6 @@ object ContainerQueries {
     * hand-built fixtures incl. the does-not-apply threshold side.
     * Scale: the m40 envelope. */
   private[operators] object Vp8LoopFilterKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -2380,8 +2374,6 @@ object ContainerQueries {
     * pinned by Vp8Spec. Scale: the m40 envelope — per-container
     * mapGroups, decode cost bytes-proportional and data-parallel. */
   private[operators] object Vp8PframesKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -2510,8 +2502,6 @@ object ContainerQueries {
     * (their filters don't admit a per-MB-constant closed form).
     * Scale: the m40 envelope. */
   private[operators] object Vp8MotionKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -2658,8 +2648,6 @@ object ContainerQueries {
     * planes incl. zero runs that force emulation escapes). Scale: the
     * m40 envelope — per-container mapGroups, bytes-proportional. */
   private[operators] object H264IpcmKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long)] = {
       import graft.sources.H264
@@ -2765,8 +2753,6 @@ object ContainerQueries {
     * anchors. Scale: the m40 envelope — per-container group
     * iterators, three extra plane buffers per stream, no shuffle. */
   private[operators] object Vp8BufferLifecycleKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Boolean, Boolean, Boolean,
           Long, Long)] = {
@@ -2931,8 +2917,6 @@ object ContainerQueries {
     * this (buffer lifecycle), the full decoder state surface is
     * gate-proven across real micro-batch boundaries. */
   private[operators] object Vp8LifecycleStreamKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(String, Int, Long, Double, String, Boolean, Long)] = {
       import graft.functions.Vp8
@@ -3075,8 +3059,6 @@ object ContainerQueries {
     * m54's per-segment readout replayed per frame. Scale: the m40
     * envelope plus one mbCount-int map per stream. */
   private[operators] object Vp8TemporalSegKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Boolean, Long, Long, Long,
           Long, Long)] = {
@@ -3224,8 +3206,6 @@ object ContainerQueries {
     * 256·V0 + 1600·r — the oracle replays it per frame on top of the
     * three cumulative chains. Scale: the m40 envelope. */
   private[operators] object Vp8IntraRefreshKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -3361,8 +3341,6 @@ object ContainerQueries {
     * rows∈{16,8} × cols∈{16,8} display pixels of its chain value, and
     * the chroma constant is 2·144·128. Scale: the m40 envelope. */
   private[operators] object Vp8CropKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -3470,8 +3448,6 @@ object ContainerQueries {
     * the ⌊out·den/num⌋ map, plus the ceil display dims and the
     * constant chroma 2·128·⌈16n/d⌉². Scale: the m40 envelope. */
   private[operators] object Vp8UpscaleKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int): Iterator[(Long, Long, Long, Long,
         Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -3621,8 +3597,6 @@ object ContainerQueries {
     * histogram explodes. Scale: the m40 envelope — per-container
     * mapGroups, bytes-proportional. */
   private[operators] object H264IntraModeKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long, Long)] = {
       import graft.sources.H264
@@ -3750,8 +3724,6 @@ object ContainerQueries {
     * (Σ coeff·scanIdx), and the nC lattice. Scale: the m40 envelope —
     * per-container mapGroups, bytes-proportional. */
   private[operators] object H264CavlcKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int): Iterator[(Long, Long, Long, Long,
         Long, Long, Long, Long, Long, Long, Long, Long, Long)] = {
       import graft.sources.H264
@@ -3983,8 +3955,6 @@ object ContainerQueries {
     * block's nC off the previous MB's column-3 counts. Scale: the m40
     * envelope. */
   private[operators] object H264I16Kernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int): Iterator[(Long, Long, Long, Long,
         Long, Long, Long, Long, Long, Long, Long, Long)] = {
       import graft.sources.H264
@@ -4243,8 +4213,6 @@ object ContainerQueries {
     * replays the skip lattice, mvd draws, and the m62 residual
     * machinery under the skip gate. Scale: the m40 envelope. */
   private[operators] object H264PSliceKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int): Iterator[(Long, Long, Long, Long,
         Long, Long, Long, Long, Long, Long, Long, Long)] = {
       import graft.sources.H264
@@ -4488,8 +4456,6 @@ object ContainerQueries {
     * availability gate keyed on each MB's slice start. Scale: the m40
     * envelope. */
   private[operators] object H264MultiSliceKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int): Iterator[(Long, Long, Long, Long,
         Long, Long, Long, Long, Long)] = {
       import graft.sources.H264
@@ -4898,8 +4864,6 @@ object ContainerQueries {
     * is inter-in-webm, the reference's daily shape. Scale: the m40
     * envelope. */
   private[operators] object WebmVp8StreamKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Boolean, Long, Long)] = {
       import graft.functions.Vp8
@@ -5013,8 +4977,6 @@ object ContainerQueries {
     * decode state (LAST planes) lives inside one group iterator. */
   private[operators] object Vp8SceneKernel extends Serializable {
     val CutThreshold = 3000L
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Boolean, Long)] = {
       import graft.functions.Vp8
@@ -5130,8 +5092,6 @@ object ContainerQueries {
     * bottom. Round-trip of the refGolden bit is required in-kernel.
     * Scale: the m40 envelope. */
   private[operators] object Vp8GoldenKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -5250,8 +5210,6 @@ object ContainerQueries {
     * socket/RTMP source feeding coded video into a stateful decode
     * stage with exactly-once state semantics. */
   private[operators] object Vp8StreamFixtureKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(String, Int, Long, Double, String, Boolean, Long)] = {
       import graft.functions.Vp8
@@ -5353,8 +5311,6 @@ object ContainerQueries {
     * semantics (Vp8Spec pins the bitstream-shrink and neighbor-context
     * effects). Scale: the m40 envelope. */
   private[operators] object Vp8SkipKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -5467,8 +5423,6 @@ object ContainerQueries {
     * oracle replays per frame. Vp8Spec pins all five delta slots and
     * the clamp edges. Scale: the m40 envelope. */
   private[operators] object Vp8QdeltaKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -5589,8 +5543,6 @@ object ContainerQueries {
     * envelope (and at real frame sizes, partitions are precisely the
     * intra-frame parallelism a wide executor would use). */
   private[operators] object Vp8PartitionKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -5701,8 +5653,6 @@ object ContainerQueries {
     * type-3 tokens, no Y2, LEFT/ABOVE contexts, chroma 4-MV average)
     * is pinned by Vp8Spec. Scale: the m40 envelope. */
   private[operators] object Vp8SplitKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -5848,8 +5798,6 @@ object ContainerQueries {
     * skip composition are pinned by Vp8Spec. Scale: the m40
     * envelope. */
   private[operators] object Vp8SegKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -5965,8 +5913,6 @@ object ContainerQueries {
     * and chroma filtering are pinned by Vp8Spec. Scale: the m40
     * envelope. */
   private[operators] object Vp8NormalFilterKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long, Long, Long)] = {
       import graft.functions.Vp8
@@ -6056,8 +6002,6 @@ object ContainerQueries {
     * change the BITS, not the values. The chunk cut is on (ts, seq):
     * every container's frames straddle all 3 micro-batches. */
   private[operators] object Vp8EntropyStreamKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int)
         : Iterator[(String, Int, Long, Double, String, Boolean, Long)] = {
       import graft.functions.Vp8
@@ -6439,6 +6383,8 @@ object ContainerQueries {
             pcmY += y.iterator.map(_ & 0xffL).sum
             pcmC += u.iterator.map(_ & 0xffL).sum +
               v.iterator.map(_ & 0xffL).sum
+          case _: H264.CabacCoded => throw new IllegalStateException(
+            "m69: the intra-slice parser returned a CabacCoded MB")
         }
         (cid, t.toLong, nPcm, modeSum, chromaSum, pcmY, pcmC)
       }
@@ -6875,6 +6821,8 @@ object ContainerQueries {
           case p2: H264.CabacPcm =>
             nPcm += 1
             pcmY += p2.y.iterator.map(_ & 0xffL).sum
+          case _: H264.CabacI4 => throw new IllegalStateException(
+            "m71: the coded-slice parser returned a CabacI4 MB")
         }
         (cid, t.toLong, nPcm, modeSum, cbpSum, qpFinal, coeffAbs, pcmY)
       }
@@ -7087,7 +7035,7 @@ object ContainerQueries {
       .orderBy(col("chunk_id"), col("i"))
   }
 
-  private val e58Sql =
+  private lazy val e58Sql =
     DspQueries.p32Lattice + s"""
       |SELECT fr.chunk_id, CAST(fr.i AS BIGINT) AS i,
       |  CAST(fr.seq AS BIGINT) AS seq,
@@ -7235,8 +7183,6 @@ object ContainerQueries {
     * [[graft.functions.Vp8.Ctx]] (≈4 KB) of decoder state per stream,
     * never crossing a shuffle. */
   private[operators] object Vp8ConformKernel extends Serializable {
-    private def hexbyte(str: String): Int =
-      Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
     def rows(k: Long, count: Int): Iterator[(Long, Long, Boolean, Long,
         Long, Long, Long, Long, Long, Long)] = {
       import graft.functions.Vp8

@@ -3944,7 +3944,7 @@ object DspQueries {
 
   /** The p32 lattice CTE chain (lines → requant → kernels), shared
     * verbatim with the e58 streaming twin's oracle. */
-  private[operators] val p32Lattice: String =
+  private[operators] lazy val p32Lattice: String =
     s"""WITH c AS (SELECT user_id % 16 AS chunk_id,
       |    least(6, count(*)) AS n
       |  FROM events WHERE event_type = 'click' GROUP BY 1),
@@ -4000,7 +4000,7 @@ object DspQueries {
       |specsum AS (SELECT chunk_id, i, SUM(abs(v)) AS spec_sum
       |  FROM x GROUP BY 1, 2)""".stripMargin
 
-  private val p32Sql = {
+  private lazy val p32Sql = {
     p32Lattice + s"""
       |SELECT fr.chunk_id, CAST(fr.i AS BIGINT) AS i,
       |  CAST(fr.seq AS BIGINT) AS seq,

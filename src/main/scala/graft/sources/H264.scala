@@ -1728,6 +1728,8 @@ object H264 {
             enc.decision(73 + cbpLumaInc(cbpL, mbCols, i, b8, sofar), 0)
           }
           enc.decision(77 + cbpChromaInc(cbpC, mbCols, i), 0)
+        case _: CabacCoded => throw new IllegalArgumentException(
+          "h264: a CabacCoded MB in an I4/PCM-only CABAC slice")
       }
       // end_of_slice_flag
       if (i == mbs.length - 1) enc.terminate(1)
@@ -2121,6 +2123,8 @@ object H264 {
               }
             }
           } else prevQpDelta = 0 // no delta coded → chain resets
+        case _: CabacI4 => throw new IllegalArgumentException(
+          "h264: a CabacI4 MB in a coded CABAC slice (use CabacCoded)")
       }
       if (i == nMb - 1) enc.terminate(1) else enc.terminate(0)
     }

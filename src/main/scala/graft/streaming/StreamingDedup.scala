@@ -77,8 +77,7 @@ object StreamingDedup {
   def nearDupStream(docs: DataFrame): Dataset[DupCand] = {
     bandRows(docs)
       .select(col("band"), col("bucket"), col("doc_id").as("docId"))
-      .as[BandHit]
-      .groupByKey(h => (h.band, h.bucket))
+      .groupBy(col("band"), col("bucket")).as[(Int, String), BandHit]
       .flatMapGroupsWithState[Long, DupCand](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: (Int, String), hits: Iterator[BandHit], gs: GroupState[Long]) =>

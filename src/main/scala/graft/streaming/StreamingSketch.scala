@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import StatefulRunner.{KEv, KOut, koutEnc, strEnc}
+import StatefulRunner.{KEv, KOut, koutEnc}
 
 /** Streaming cardinality — the online form of the batch HLL sketch
   * (operators/SketchQueries k02): events arrive on an unbounded
@@ -62,24 +62,30 @@ object StreamingSketch {
     * into the per-key register state and emits the running totals —
     * KOut(key, ts = events seen, value = running estimate,
     * text = "registersHit,registerSum"). */
-  def hllStream(ds: Dataset[KEv]): Dataset[KOut] = {
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[HllSt, KOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, evs: Iterator[KEv], gs: GroupState[HllSt]) =>
-          val st = gs.getOption.getOrElse(HllSt(new Array[Int](M), 0L))
-          val regs = st.regs.clone()
-          var n = st.n
-          evs.foreach { e =>
-            val b = e.topic; val r = e.value.toInt
-            if (r > regs(b)) regs(b) = r
-            n += 1
-          }
-          gs.update(HllSt(regs, n))
-          val (hit, s) = registerStats(regs)
-          Iterator(KOut(key, n, estimate(regs), s"$hit,$s"))
+  def hllStream(ds: Dataset[KEv]): Dataset[KOut] =
+    foldPerKey(ds, HllSt(new Array[Int](M), 0L)) { (st, evs) =>
+      val regs = st.regs.clone()
+      val n = evs.foldLeft(st.n) { (n, e) =>
+        regs(e.topic) = math.max(regs(e.topic), e.value.toInt)
+        n + 1
       }
-  }
+      HllSt(regs, n)
+    } { (key, st) =>
+      val (hit, s) = registerStats(st.regs)
+      KOut(key, st.n, estimate(st.regs), s"$hit,$s")
+    }
+
+  /** Per key and micro-batch: fold the batch into the key's state
+    * (`zero` for a new key) and emit one row of running totals. */
+  private def foldPerKey[St: Encoder](ds: Dataset[KEv], zero: => St)(
+      add: (St, Iterator[KEv]) => St)(emit: (String, St) => KOut): Dataset[KOut] =
+    StatefulRunner.byKey(ds).flatMapGroupsWithState[St, KOut](
+      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+      (key: String, evs: Iterator[KEv], gs: GroupState[St]) =>
+        val st = add(gs.getOption.getOrElse(zero), evs)
+        gs.update(st)
+        Iterator(emit(key, st))
+    }
 
   // ---- streaming dyadic quantile sketch (k10) --------------------------------
 
@@ -135,21 +141,12 @@ object StreamingSketch {
     * "cellsTotal,medianLo"). The registered query keeps the final row
     * per key; the oracle replays both integers (the counters are
     * exact, so the sketch is a deterministic function of the SET). */
-  def dyadicStream(ds: Dataset[KEv]): Dataset[KOut] = {
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[DyadicSt, KOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, evs: Iterator[KEv], gs: GroupState[DyadicSt]) =>
-          val st = gs.getOption.getOrElse(DyadicSt(Map.empty, 0L))
-          var cells = st.cells
-          var n = st.n
-          evs.foreach { e =>
-            cells = dyadicAdd(cells, e.value.toLong)
-            n += 1
-          }
-          gs.update(DyadicSt(cells, n))
-          val q50 = dyadicQuantileLo(cells, n, 0.5)
-          Iterator(KOut(key, n, q50.toDouble, s"${cells.size},$q50"))
-      }
-  }
+  def dyadicStream(ds: Dataset[KEv]): Dataset[KOut] =
+    foldPerKey(ds, DyadicSt(Map.empty, 0L)) { (st, evs) =>
+      evs.foldLeft(st)((st, e) =>
+        DyadicSt(dyadicAdd(st.cells, e.value.toLong), st.n + 1))
+    } { (key, st) =>
+      val q50 = dyadicQuantileLo(st.cells, st.n, 0.5)
+      KOut(key, st.n, q50.toDouble, s"${st.cells.size},$q50")
+    }
 }

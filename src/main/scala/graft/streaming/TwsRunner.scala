@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner.{KEv, KOut}
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -18,7 +18,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   *    [[StateMachines.Machine.arrivalOrder]], same as the fMGWS mount;
   *  - the machine state lives in a named `ValueState` (one state-store
   *    entry per pipeline key, RocksDB-capable — transformWithState
-  *    requires the RocksDB provider, which IS the scale-path config);
+  *    requires the RocksDB provider, which IS the scale-path config)
+  *    as [[StateCodec]] bytes of the state, the schema and bytes the
+  *    former Kryo `Encoder[S]` value state wrote; the batch is sorted and
+  *    folded by [[StatefulRunner]]'s own `sorted`/`fold`, grouped on
+  *    the `key` column as every mount is;
   *  - a [[StateMachines.Timed]] machine arms a processing-time TIMER
   *    re-registered on every batch with data; expiry runs `onTimeout`
   *    and drops the state (`removeOnTimeout`) or re-arms (repeater) —
@@ -38,22 +42,16 @@ object TwsRunner {
       extends StatefulProcessor[String, KEv, KOut] {
     @transient private var state: ValueState[S] = _
 
+    private def stored: Option[S] = if (state.exists) Some(state.get) else None
+
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[S]("machine", Encoders.kryo[S],
+      state = getHandle.getValueState[S]("machine", StateCodec.encoder[S],
         TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[KEv],
         tv: TimerValues): Iterator[KOut] = {
-      val s0 = if (state.exists) state.get else machine.init
-      val es =
-        if (machine.arrivalOrder) rows.toVector.sortBy(_.seq)
-        else rows.toVector.sortBy(e => (e.ts, machine.priority(e.topic), e.seq))
-      val (s, outs) = es.foldLeft((s0, Vector.empty[KOut])) {
-        case ((s1, acc), e) =>
-          val (s2, os) =
-            machine.step(s1, Ev(e.topic, e.ts, e.value, e.text, e.paused))
-          (s2, acc ++ os.map(o => KOut(key, o.ts, o.value, o.text, o.paused)))
-      }
+      val (s, outs) = StatefulRunner.fold(machine, key,
+        stored.getOrElse(machine.init), StatefulRunner.sorted(machine, rows))
       state.update(s)
       if (timeoutMs > 0) {
         // registerTimer ADDS a timer (unlike setTimeoutDuration, which
@@ -68,16 +66,13 @@ object TwsRunner {
 
     override def handleExpiredTimer(key: String, tv: TimerValues,
         info: ExpiredTimerInfo): Iterator[KOut] = {
-      val tail = machine match {
-        case t: Timed[S @unchecked] if state.exists => t.onTimeout(state.get)
-        case _ => Nil
-      }
+      val tail = StatefulRunner.onTimeout(machine, key, stored)
       machine match {
         case t: Timed[_] if !t.removeOnTimeout && timeoutMs > 0 =>
           getHandle.registerTimer(tv.getCurrentProcessingTimeInMs + timeoutMs)
         case _ => state.clear()
       }
-      tail.iterator.map(o => KOut(key, o.ts, o.value, o.text, o.paused))
+      tail.iterator
     }
   }
 
@@ -87,15 +82,13 @@ object TwsRunner {
     * the production configuration anyway). */
   def runStreaming[S: scala.reflect.ClassTag](machine: Machine[S], ds: Dataset[KEv],
       timeoutMs: Long = 0L): Dataset[KOut] = {
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    implicit val koutEnc: Encoder[KOut] = StatefulRunner.koutEnc
     // ProcessingTime keeps the micro-batch loop ticking to evaluate
     // timers (so processAllAvailable never settles) — request it only
     // when the machine actually needs timers
     val timeMode =
       if (timeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    ds.groupByKey(_.key).transformWithState(
+    StatefulRunner.byKey(ds).transformWithState(
       new MachineProcessor(machine, timeoutMs),
-      timeMode, OutputMode.Append())
+      timeMode, OutputMode.Append())(StatefulRunner.koutEnc)
   }
 }

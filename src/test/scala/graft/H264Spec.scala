@@ -977,6 +977,14 @@ class H264Spec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       H.writeCabacIntraSlice(0, sps, H.parsePps(H.writePps()), mbs)
     }
+    // so is a coded MB, which this slice writer cannot carry
+    intercept[IllegalArgumentException] {
+      H.writeCabacIntraSlice(0, sps, pps, mbs.updated(0,
+        H.CabacCoded(Array.fill(16)(2), 0, 0, 0,
+          Vector.fill(16)(new Array[Int](16)),
+          Vector.fill(2)(new Array[Int](4)),
+          Vector.fill(2)(Vector.fill(4)(new Array[Int](15))))))
+    }
     // an injected CABAC table set changes the bytes but round-trips
     val prof2 = H.Profile.StandIn.copy(
       cabacRangeLps = Array.tabulate(64, 4)((s2, q) =>
@@ -1079,6 +1087,11 @@ class H264Spec extends AnyFunSuite {
         Vector(new Array[Int](4), blk(4, 2 -> 3)),
         Vector.fill(2)(Vector.fill(4)(new Array[Int](15)))))
     val nal = H.writeCabacCodedSlice(0, sps, pps, mbs)
+    // an I4 MB belongs to the intra slice writer: rejected by type
+    intercept[IllegalArgumentException] {
+      H.writeCabacCodedSlice(0, sps, pps,
+        mbs.updated(1, H.CabacI4(Array.fill(16)(2), 0)))
+    }
     val (info, got) = H.parseCabacCodedSlice(nal, sps, pps)
     assert(info.isI && got.length == 6)
     got.zip(mbs).zipWithIndex.foreach {

@@ -57,10 +57,10 @@ class PipelineSpec extends AnyFunSuite with SparkFixture with TempDirs {
     * at 20 in batch 1, data at 30 passes in batch 2, the gate closes at
     * 40 and drops data at 50 in batch 3. `vars` beyond "a" are empty
     * sources. Returns the unpaused (ts, value) sink rows, the
-    * FlatMapGroupsWithState count of the executed plan and the last
-    * progress's state-operator count. */
+    * FlatMapGroupsWithState and AppendColumns counts of the executed
+    * plan and the last progress's state-operator count. */
   private def streamCalcGate(name: String, formula: String,
-      vars: Seq[String]): (Seq[(Long, Double)], Int, Int) = {
+      vars: Seq[String]): (Seq[(Long, Double)], Int, Int, Int) = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StatefulRunner.KEv
@@ -99,6 +99,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture with TempDirs {
           org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
         .streamingQuery.lastExecution.executedPlan.toString
       (got, "FlatMapGroupsWithState".r.findAllIn(plan).length,
+        "AppendColumns".r.findAllIn(plan).length,
         q.lastProgress.stateOperators.length)
     } finally q.stop()
   }
@@ -107,7 +108,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture with TempDirs {
       "flatMapGroupsWithState in one query; state crosses batches") {
     // the doubler reads a second (empty) variable: a one-variable
     // calculator keeps no state and compiles to a projection
-    val (got, n, _) = streamCalcGate("sdag", "a * 2 + 1 + 0 * b", Seq("a", "b"))
+    val (got, n, _, _) =
+      streamCalcGate("sdag", "a * 2 + 1 + 0 * b", Seq("a", "b"))
     assert(got == Seq((30L, 5.0)))
     // the executed micro-batch plan genuinely chains two
     // FlatMapGroupsWithState operators (calc's, then the gate's)
@@ -116,10 +118,13 @@ class PipelineSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   test("streaming compile of a ONE-variable calc -> gate mounts one " +
       "flatMapGroupsWithState: the calculator is a projection") {
-    val (got, n, stateOps) = streamCalcGate("sdag1", "a * 2 + 1", Seq("a"))
+    val (got, n, appends, stateOps) =
+      streamCalcGate("sdag1", "a * 2 + 1", Seq("a"))
     assert(got == Seq((30L, 5.0)))
     assert(n == 1, s"expected the gate's fMGWS only, got $n")
     assert(stateOps == 1)
+    // the gate groups on its key column: no per-row key lambda
+    assert(appends == 0, s"expected no AppendColumns, got $appends")
   }
 
   test("multi-pipeline compile: the pipe column multiplexes one DAG " +
@@ -624,6 +629,75 @@ class PipelineSpec extends AnyFunSuite with SparkFixture with TempDirs {
     // the restarted run continued the batch ids: one batch per event
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, "rs",
       "gated", "commits", (evs.size - 1).toString)))
+  }
+
+  /** The gate mount as it was before machine state moved to StateCodec
+    * bytes: a per-row key lambda and a Kryo state encoder. */
+  private def formerMount[S](m: graft.streaming.StateMachines.Machine[S],
+      ds: org.apache.spark.sql.Dataset[graft.streaming.StatefulRunner.KEv])
+      : org.apache.spark.sql.Dataset[graft.streaming.StatefulRunner.KOut] = {
+    import graft.streaming.StatefulRunner.{KEv, KOut, koutEnc, strEnc}
+    import graft.streaming.StateMachines.Ev
+    import org.apache.spark.sql.{Encoder, Encoders}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
+    implicit val se: Encoder[Option[S]] = Encoders.kryo[Option[S]]
+    ds.groupByKey(_.key).flatMapGroupsWithState[Option[S], KOut](
+      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+      (key: String, es: Iterator[KEv], gs: GroupState[Option[S]]) =>
+        val (s, outs) = es.toVector
+          .sortBy(e => (e.ts, m.priority(e.topic), e.seq))
+          .foldLeft((gs.getOption.flatten.getOrElse(m.init),
+            Vector.empty[KOut])) { case ((s0, acc), e) =>
+            val (s1, os) =
+              m.step(s0, Ev(e.topic, e.ts, e.value, e.text, e.paused))
+            (s1, acc ++ os.map(o => KOut(key, o.ts, o.value, o.text, o.paused)))
+          }
+        gs.update(Some(s))
+        outs.iterator
+    }
+  }
+
+  test("a calc -> gate checkpoint written by the former mount (key " +
+      "lambda, Kryo state encoder) resumes under the key-column, " +
+      "StateCodec mount, carrying the gate state") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StatefulRunner
+    import graft.streaming.StatefulRunner.{KEv, KOut}
+    import graft.streaming.StateMachines.Gate
+    import org.apache.spark.sql.Dataset
+    val gate = new Gate(failOpen = false)
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KEv]
+    // the calculator `a * 2 + 1` on topic 0; topic 1 is the gate control
+    def calc(ds: Dataset[KEv]) = ds.withColumn("value",
+      when(col("topic") === 0, col("value") * 2 + 1)
+        .otherwise(col("value"))).as[KEv]
+    val dir = tempDir("graft_codec_resume_")
+    def run(mount: Dataset[KEv] => Dataset[KOut], part: Seq[KEv]): Unit = {
+      val q = mount(calc(mem.toDS())).writeStream.format("parquet")
+        .option("checkpointLocation", s"$dir/ckpt").start(s"$dir/out")
+      try part.foreach { e => mem.addData(e); q.processAllAvailable() }
+      finally q.stop()
+    }
+    def ev(k: String, t: Int, ts: Long, v: Double) =
+      KEv(k, t, ts, v, null, paused = false, seq = ts)
+    // both gates open before the restart; p1 closes after it, so every
+    // data row after the restart passes only on the restored state
+    val first = Seq(ev("p1", 1, 1, 1.0), ev("p2", 1, 2, 1.0),
+      ev("p1", 0, 3, 1.0), ev("p2", 0, 4, 2.0))
+    val second = Seq(ev("p1", 0, 5, 3.0), ev("p2", 0, 6, 4.0),
+      ev("p1", 1, 7, 0.0), ev("p1", 0, 8, 5.0), ev("p2", 0, 9, 6.0))
+    run(formerMount(gate, _), first)
+    run(StatefulRunner.runStreaming(gate, _), second)
+    def rows(ds: Dataset[KOut]) =
+      ds.filter(!col("paused")).select("key", "ts", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val got = rows(spark.read.parquet(s"$dir/out").as[KOut])
+    assert(got == Seq(("p1", 3L, 3.0), ("p1", 5L, 7.0), ("p2", 4L, 5.0),
+      ("p2", 6L, 9.0), ("p2", 9L, 13.0)))
+    assert(got == rows(StatefulRunner.runBatch(gate,
+      calc(spark.createDataset(first ++ second)))))
   }
 
   test("a sink that fails to start stops the deployment's other sinks: " +
