@@ -41,7 +41,6 @@ object StateStress {
     val perKey = sys.env.getOrElse("SPARK_GRAFT_STRESS_PERKEY", "100").toLong
     val batches = 8
     val spark = GraftSession.build()
-    import spark.implicits._
 
     val base = new java.io.File(
       s"/tmp/graft-state-stress-${System.nanoTime()}")

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.streaming.StateMachines.{Ev, Machine, Out}
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession, TypedColumn}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udf
 

@@ -1112,8 +1112,7 @@ object Vp8 {
 
   /** Decode one block's levels (scan order); returns (levels, anyNz). */
   private def decodeBlock(d: BoolDecoder, blockType: Int, firstCoeff: Int,
-      ctx0: Int,
-      table: Array[Array[Array[Array[Int]]]] = CoeffProbs)
+      ctx0: Int, table: Array[Array[Array[Array[Int]]]])
       : (Array[Int], Boolean) = {
     val levels = new Array[Int](16)
     var ctx = ctx0
@@ -1153,7 +1152,7 @@ object Vp8 {
   /** Encode one block's scan-order levels; mirrors [[decodeBlock]]. */
   private def encodeBlock(e: BoolEncoder, blockType: Int, firstCoeff: Int,
       ctx0: Int, levels: Array[Int],
-      table: Array[Array[Array[Array[Int]]]] = CoeffProbs): Boolean = {
+      table: Array[Array[Array[Array[Int]]]]): Boolean = {
     var last = 15
     while (last >= firstCoeff && levels(last) == 0) last -= 1
     var ctx = ctx0
@@ -2410,8 +2409,7 @@ object Vp8 {
     * then the near/nearest count swap, best-MV promotion, clamping,
     * and the count-indexed tree probabilities. */
   private def findNearMvs(g: MvGrid, mr: Int, mc: Int,
-      modeContexts: Array[Array[Int]] = ModeContextProb,
-      curBias: Boolean = false)
+      modeContexts: Array[Array[Int]], curBias: Boolean)
       : (Mv, Mv, Mv, Array[Int]) = {
     val mvs = Array.fill(4)(Mv(0, 0))
     val cnt = new Array[Int](4)

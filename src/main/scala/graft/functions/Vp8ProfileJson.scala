@@ -27,8 +27,6 @@ import org.json4s.jackson.JsonMethods
   * in [1, 254]); malformed documents fail loudly by field name. */
 object Vp8ProfileJson {
 
-  private implicit val formats: Formats = DefaultFormats
-
   private def ints(v: JValue, field: String): Array[Int] = v match {
     case JArray(xs) => xs.map {
       case JInt(n) => n.toInt

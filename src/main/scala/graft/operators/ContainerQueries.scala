@@ -23,6 +23,17 @@ import org.apache.spark.sql.types._
   */
 object ContainerQueries {
 
+  import KernelGroups.{clickChunks, viewContainers}
+
+  /** The oracle head of the view-sized kernels: `cnt`, one row per
+    * container with n = least(cap, its views), over the containers with
+    * at least two views (`pairs`) or over all of them. */
+  private def viewCnt(cap: Int, pairs: Boolean = true): String =
+    s"""WITH cnt AS (SELECT user_id % 32 AS container,
+       |    least($cap, count(*)) AS n
+       |  FROM events WHERE event_type = 'view'""".stripMargin +
+      (if (pairs) "\n  GROUP BY 1 HAVING count(*) >= 2)," else " GROUP BY 1),")
+
   /** Two streams per pipeline: clicks as an audio-like stream
     * (time_base 1/32000 s, 1024-sample frames → 32 ms quantum), views
     * as a video-like stream (time_base 1/30 s, 1-frame advance →
@@ -1130,22 +1141,13 @@ object ContainerQueries {
 
   private def m28(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        MotionKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(MotionKernel.rows)
       .toDF("container", "t", "block", "mv_dx", "mv_dy", "sad", "block_sum")
       .orderBy(col("container"), col("t"), col("block"))
   }
 
   private val m28Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(24)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |steps AS (SELECT container, t,
@@ -1647,13 +1649,7 @@ object ContainerQueries {
 
   private def m36(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        GvcKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(GvcKernel.rows)
       .toDF("container", "t", "frame_type", "payload_bytes", "frame_sum")
       .orderBy(col("container"), col("t"))
   }
@@ -1665,10 +1661,7 @@ object ContainerQueries {
     * (SPS) + 4 + 1 + ⌈Σ(3+cost)/8⌉; P payload = 4 + 1 + ⌈Σ(9+cost)/8⌉
     * (per block: 3+3 MV bits + 3 k bits). */
   private val m36Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(24)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |steps AS (SELECT container, t,
@@ -1804,23 +1797,14 @@ object ContainerQueries {
 
   private def m37(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264Kernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264Kernel.rows)
       .toDF("container", "t", "nal_type", "is_idr", "slice_type",
         "frame_num", "width", "height", "sample_bytes")
       .orderBy(col("container"), col("t"))
   }
 
   private val m37Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(24)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t))
       |SELECT container, CAST(t AS BIGINT) AS t,
@@ -1881,23 +1865,14 @@ object ContainerQueries {
 
   private def m38(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8Kernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8Kernel.rows)
       .toDF("container", "t", "offset", "keyframe", "version",
         "show_frame", "part_size", "width", "height", "pts")
       .orderBy(col("container"), col("t"))
   }
 
   private val m38Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(24)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |-- per-frame sizes from the fixture + framing arithmetic:
@@ -1966,23 +1941,14 @@ object ContainerQueries {
 
   private def m39(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        WebmVp8Kernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(WebmVp8Kernel.rows)
       .toDF("container", "t", "ts_ms", "keyframe", "version",
         "width", "height")
       .orderBy(col("container"), col("t"))
   }
 
   private val m39Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(24)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t))
       |SELECT container, CAST(t AS BIGINT) AS t,
@@ -2102,22 +2068,13 @@ object ContainerQueries {
 
   private def m41(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8BpredKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8BpredKernel.rows)
       .toDF("container", "t", "levels_sum", "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m41Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |blk AS (SELECT container, t, grid.j, grid.c,
@@ -2191,23 +2148,14 @@ object ContainerQueries {
 
   private def m42(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        WebmVp8DecodeKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(WebmVp8DecodeKernel.rows)
       .toDF("container", "t", "ts_ms", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m42Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -2277,22 +2225,13 @@ object ContainerQueries {
 
   private def m43(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8LoopFilterKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8LoopFilterKernel.rows)
       .toDF("container", "t", "levels_sum", "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m43Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |v AS (SELECT container, t,
@@ -2317,23 +2256,14 @@ object ContainerQueries {
 
   private def m40(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8DecodeKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8DecodeKernel.rows)
       .toDF("container", "t", "width", "height", "levels_sum",
         "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m40Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |-- the per-MB Y2 DC level v, the same md5 draw the kernel codes
@@ -2438,23 +2368,14 @@ object ContainerQueries {
 
   private def m44(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8PframesKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8PframesKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m44Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |-- per-MB Y2-DC draw: keyframe 1+md5%100, P-frames md5%60
@@ -2563,23 +2484,14 @@ object ContainerQueries {
 
   private def m45(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8MotionKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8MotionKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m45Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -2698,22 +2610,13 @@ object ContainerQueries {
 
   private def m46(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264IpcmKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264IpcmKernel.rows)
       .toDF("container", "t", "width", "height", "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m46Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -2812,23 +2715,14 @@ object ContainerQueries {
 
   private def m58(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8BufferLifecycleKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8BufferLifecycleKernel.rows)
       .toDF("container", "t", "keyframe", "refresh_golden",
         "copy_to_alt", "refresh_last", "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m58Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -2960,13 +2854,8 @@ object ContainerQueries {
   private def e55(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.{StatefulRunner, Vp8Machine}
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    val fixture = KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8LifecycleStreamKernel.rows(k, it.size))
+    val fixture = KernelGroups.countKernel(viewContainers(s, d))(
+        Vp8LifecycleStreamKernel.rows)
       .toDF("key", "topic", "ts", "value", "text", "paused", "seq")
     StreamParityQueries.throughStream(s, fixture,
         Seq(col("ts"), col("seq")), s"e55@$d",
@@ -2981,10 +2870,7 @@ object ContainerQueries {
   }
 
   private val e55Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -3137,23 +3023,14 @@ object ContainerQueries {
 
   private def m59(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8TemporalSegKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8TemporalSegKernel.rows)
       .toDF("container", "t", "keyframe", "update_map", "r15", "r16",
         "luma_sum", "chroma_sum", "seg_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m59Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, n, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, n, t, jj.j,
@@ -3268,23 +3145,14 @@ object ContainerQueries {
 
   private def m60(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8IntraRefreshKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8IntraRefreshKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m60Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -3382,23 +3250,14 @@ object ContainerQueries {
 
   private def m61(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8CropKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8CropKernel.rows)
       .toDF("container", "t", "keyframe", "width", "luma_sum",
         "chroma_sum", "n_px")
       .orderBy(col("container"), col("t"))
   }
 
   private val m61Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -3498,23 +3357,14 @@ object ContainerQueries {
 
   private def m63(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8UpscaleKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8UpscaleKernel.rows)
       .toDF("container", "t", "wscale", "hscale", "disp_w", "disp_h",
         "up_luma_sum", "up_chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m63Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |sc AS (SELECT container, n,
       |    CAST(concat('0x', substr(md5('vp8uw' || container), 1, 2))
       |      AS BIGINT) % 4 AS ws,
@@ -3644,23 +3494,14 @@ object ContainerQueries {
 
   private def m57(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264IntraModeKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264IntraModeKernel.rows)
       .toDF("container", "t", "n_mbs", "mode_sum", "prev_count",
         "chroma_sum", "cbp_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m57Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |-- the per-4x4-block mode draws, with §6.4.3's luma4x4BlkIdx →
@@ -3810,13 +3651,7 @@ object ContainerQueries {
 
   private def m62(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264CavlcKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264CavlcKernel.rows)
       .toDF("container", "t", "mb", "cbp", "qp_delta", "tc_sum",
         "t1_sum", "tz_sum", "level_sum", "pos_sum", "nc_sum",
         "cdc_sum", "cac_sum")
@@ -3824,10 +3659,7 @@ object ContainerQueries {
   }
 
   private val m62Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mbs AS (SELECT container, t, m.mb,
@@ -4055,13 +3887,7 @@ object ContainerQueries {
 
   private def m64(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264I16Kernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264I16Kernel.rows)
       .toDF("container", "t", "mb", "mb_type", "qp_delta", "dc_tc",
         "dc_level_sum", "dc_pos_sum", "ac_tc_sum", "ac_level_sum",
         "nc_dc", "chroma_sum")
@@ -4069,10 +3895,7 @@ object ContainerQueries {
   }
 
   private val m64Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mbs AS (SELECT container, t, m.mb,
@@ -4311,13 +4134,7 @@ object ContainerQueries {
 
   private def m65(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264PSliceKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264PSliceKernel.rows)
       .toDF("container", "t", "mb", "skipped", "mvd_x", "mvd_y",
         "cbp", "qp_delta", "tc_sum", "level_sum", "nc_sum",
         "chroma_sum")
@@ -4325,10 +4142,7 @@ object ContainerQueries {
   }
 
   private val m65Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mbs AS (SELECT container, t, m.mb,
@@ -4545,23 +4359,14 @@ object ContainerQueries {
 
   private def m66(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264MultiSliceKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264MultiSliceKernel.rows)
       .toDF("container", "t", "mb", "slice_id", "split", "cbp",
         "tc_sum", "level_sum", "nc_sum")
       .orderBy(col("container"), col("t"), col("mb"))
   }
 
   private val m66Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t,
       |    1 + CAST(concat('0x', substr(md5('mslB' || container || '_'
       |      || g.t), 1, 2)) AS BIGINT) % 3 AS split
@@ -4741,13 +4546,7 @@ object ContainerQueries {
 
   private def m67(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        AacMp4Kernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(AacMp4Kernel.rows)
       .toDF("container", "t", "dts", "sample_bytes", "window_seq",
         "num_groups", "max_sfb", "sf_sum", "tns_order", "code_sum",
         "esc_count", "requant_sum")
@@ -4755,10 +4554,7 @@ object ContainerQueries {
   }
 
   private val m67Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |f AS (SELECT container, g.t, g.t + container * 7 AS fi
       |  FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
@@ -4917,23 +4713,14 @@ object ContainerQueries {
 
   private def m47(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        WebmVp8StreamKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(WebmVp8StreamKernel.rows)
       .toDF("container", "t", "ts_ms", "keyframe", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m47Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -5021,23 +4808,14 @@ object ContainerQueries {
 
   private def m48(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8SceneKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8SceneKernel.rows)
       .toDF("container", "t", "keyframe", "luma_sum", "delta", "cut",
         "scene_id")
       .orderBy(col("container"), col("t"))
   }
 
   private val m48Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(8, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(8)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, t // 4 AS gop, grid.j, grid.c,
@@ -5142,23 +4920,14 @@ object ContainerQueries {
 
   private def m49(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8GoldenKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8GoldenKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m49Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -5245,13 +5014,8 @@ object ContainerQueries {
   private def e53(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.{StatefulRunner, Vp8Machine}
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    val fixture = KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8StreamFixtureKernel.rows(k, it.size))
+    val fixture = KernelGroups.countKernel(viewContainers(s, d))(
+        Vp8StreamFixtureKernel.rows)
       .toDF("key", "topic", "ts", "value", "text", "paused", "seq")
     StreamParityQueries.throughStream(s, fixture,
         Seq(col("ts"), col("seq")), s"e53@$d",
@@ -5266,10 +5030,7 @@ object ContainerQueries {
   }
 
   private val e53Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -5362,23 +5123,14 @@ object ContainerQueries {
 
   private def m50(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8SkipKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8SkipKernel.rows)
       .toDF("container", "t", "keyframe", "n_skip", "levels_sum",
         "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m50Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |-- coded cells (j = c) draw residuals; skipped cells (j <> c)
@@ -5475,23 +5227,14 @@ object ContainerQueries {
 
   private def m51(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8QdeltaKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8QdeltaKernel.rows)
       .toDF("container", "t", "keyframe", "y2dc_delta", "levels_sum",
         "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m51Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t,
       |    CASE WHEN g.t = 0 THEN 6 ELSE (g.t % 11) - 5 END AS d
       |  FROM cnt,
@@ -5593,23 +5336,14 @@ object ContainerQueries {
 
   private def m52(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8PartitionKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8PartitionKernel.rows)
       .toDF("container", "t", "keyframe", "n_partitions", "levels_sum",
         "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m52Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -5711,23 +5445,14 @@ object ContainerQueries {
 
   private def m53(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8SplitKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8SplitKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m53Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -5850,23 +5575,14 @@ object ContainerQueries {
 
   private def m54(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8SegKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8SegKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m54Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -5945,23 +5661,14 @@ object ContainerQueries {
 
   private def m55(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8NormalFilterKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8NormalFilterKernel.rows)
       .toDF("container", "t", "r14", "r15", "r16", "r17", "luma_sum",
         "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m55Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |v AS (SELECT container, t,
@@ -6050,13 +5757,8 @@ object ContainerQueries {
   private def e54(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.{StatefulRunner, Vp8Machine}
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    val fixture = KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8EntropyStreamKernel.rows(k, it.size))
+    val fixture = KernelGroups.countKernel(viewContainers(s, d))(
+        Vp8EntropyStreamKernel.rows)
       .toDF("key", "topic", "ts", "value", "text", "paused", "seq")
     StreamParityQueries.throughStream(s, fixture,
         Seq(col("ts"), col("seq")), s"e54@$d",
@@ -6071,10 +5773,7 @@ object ContainerQueries {
   }
 
   private val e54Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, grid.j, grid.c,
@@ -6233,22 +5932,14 @@ object ContainerQueries {
 
   private def m68(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        H264ReconKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(H264ReconKernel.rows)
       .toDF("container", "t", "kind", "qp", "luma_sum", "chroma_sum",
         "y00")
       .orderBy(col("container"), col("t"))
   }
 
   private val m68Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view' GROUP BY 1),
+    s"""${viewCnt(6, pairs = false)}
       |frames AS (SELECT container, g.t,
       |    26 + (g.t + container) % 5 - 2 AS qp
       |  FROM cnt,
@@ -6393,22 +6084,14 @@ object ContainerQueries {
 
   private def m69(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        CabacKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(CabacKernel.rows)
       .toDF("container", "t", "n_pcm", "mode_sum", "chroma_sum",
         "pcm_y_sum", "pcm_c_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m69Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(5, count(*)) AS n
-      |  FROM events WHERE event_type = 'view' GROUP BY 1),
+    s"""${viewCnt(5, pairs = false)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, i.i,
@@ -6506,13 +6189,7 @@ object ContainerQueries {
 
   private def m70(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Mpeg4Kernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Mpeg4Kernel.rows)
       .toDF("container", "t", "offset", "coding_type", "modulo",
         "time_inc", "quant", "fcode", "width", "height", "inc_bits",
         "payload_sum")
@@ -6520,9 +6197,7 @@ object ContainerQueries {
   }
 
   private val m70Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(8, count(*)) AS n
-      |  FROM events WHERE event_type = 'view' GROUP BY 1),
+    s"""${viewCnt(8, pairs = false)}
       |vol AS (SELECT container, n,
       |    25 + (container * 7) % 100 AS res,
       |    container % 5 = 4 AS ext,
@@ -6663,22 +6338,14 @@ object ContainerQueries {
 
   private def m71(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        DeblockKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(DeblockKernel.rows)
       .toDF("container", "t", "kind", "qp", "luma_sum", "chroma_sum",
         "y00", "tail")
       .orderBy(col("container"), col("t"))
   }
 
   private val m71Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view' GROUP BY 1),
+    s"""${viewCnt(6, pairs = false)}
       |f AS (SELECT container, g.t,
       |    26 + (g.t + container) % 5 - 2 AS qp,
       |    (g.t + container) % 2 AS c0,
@@ -6831,22 +6498,14 @@ object ContainerQueries {
 
   private def m72(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        CabacResidualKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(CabacResidualKernel.rows)
       .toDF("container", "t", "n_pcm", "mode_sum", "cbp_sum",
         "qp_final", "coeff_abs_sum", "pcm_y_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m72Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(5, count(*)) AS n
-      |  FROM events WHERE event_type = 'view' GROUP BY 1),
+    s"""${viewCnt(5, pairs = false)}
       |frames AS (SELECT container, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, t, i.i,
@@ -6946,13 +6605,8 @@ object ContainerQueries {
   private def e57(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.{Mp3Machine, StatefulRunner}
-    val clicks = eventsMs(s, d)
-      .filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    val fixture = KernelGroups.flatMapKernel(clicks)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Mp3PcmStreamKernel.rows(k, it.size))
+    val fixture = KernelGroups.countKernel(clickChunks(s, d))(
+        Mp3PcmStreamKernel.rows)
       .toDF("key", "topic", "ts", "value", "text", "paused", "seq")
     StreamParityQueries.throughStream(s, fixture,
         Seq(col("ts"), col("seq")), s"e57@$d",
@@ -7013,13 +6667,8 @@ object ContainerQueries {
   private def e58(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.{AacMachine, StatefulRunner}
-    val clicks = eventsMs(s, d)
-      .filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    val fixture = KernelGroups.flatMapKernel(clicks)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        AacPcmStreamKernel.rows(k, it.size))
+    val fixture = KernelGroups.countKernel(clickChunks(s, d))(
+        AacPcmStreamKernel.rows)
       .toDF("key", "topic", "ts", "value", "text", "paused", "seq")
     StreamParityQueries.throughStream(s, fixture,
         Seq(col("ts"), col("seq")), s"e58@$d",
@@ -7053,13 +6702,8 @@ object ContainerQueries {
   private def e56(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.{Mp3Machine, StatefulRunner}
-    val clicks = eventsMs(s, d)
-      .filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    val fixture = KernelGroups.flatMapKernel(clicks)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Mp3ReservoirStreamKernel.rows(k, it.size))
+    val fixture = KernelGroups.countKernel(clickChunks(s, d))(
+        Mp3ReservoirStreamKernel.rows)
       .toDF("key", "topic", "ts", "value", "text", "paused", "seq")
     StreamParityQueries.throughStream(s, fixture,
         Seq(col("ts"), col("seq")), s"e56@$d",
@@ -7075,9 +6719,7 @@ object ContainerQueries {
   }
 
   private val e56Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${DspQueries.clickCnt(10)}
       |f AS (SELECT chunk_id, g.i, g.i + chunk_id * 7 AS fi FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |fg AS (SELECT chunk_id, i, fi, gg.gr FROM f,
@@ -7278,23 +6920,14 @@ object ContainerQueries {
 
   private def m56(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val views = eventsMs(s, d)
-      .filter(col("event_type") === "view")
-      .select((col("user_id") % 32).as("container"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(views)(_._1)(
-        (k: Long, it: Iterator[(Long, Long)]) =>
-        Vp8ConformKernel.rows(k, it.size))
+    KernelGroups.countKernel(viewContainers(s, d))(Vp8ConformKernel.rows)
       .toDF("container", "t", "keyframe", "levels_sum", "r14", "r15",
         "r16", "r17", "luma_sum", "chroma_sum")
       .orderBy(col("container"), col("t"))
   }
 
   private val m56Sql =
-    """WITH cnt AS (SELECT user_id % 32 AS container,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'view'
-      |  GROUP BY 1 HAVING count(*) >= 2),
+    s"""${viewCnt(6)}
       |frames AS (SELECT container, n, g.t FROM cnt,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(t)),
       |mb AS (SELECT container, n, t, jj.j,

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
-import graft.functions.Fft
+import graft.Q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,8 +23,17 @@ import org.apache.spark.sql.types._
 object DspQueries {
 
   import graft.Tables.eventsMs
+  import KernelGroups.clickChunks
   private val evMs = "SELECT *, epoch_ms(ts) AS ts_ms FROM events"
   private def dec(c: Column): Column = c.cast(DecimalType(12, 2))
+
+  /** The oracle head of the click-sized kernels (p15–p34 here, e56–e58
+    * in ContainerQueries): `c`, one row per chunk with
+    * n = least(cap, its clicks). */
+  private[operators] def clickCnt(cap: Int): String =
+    s"""WITH c AS (SELECT user_id % 16 AS chunk_id,
+       |    least($cap, count(*)) AS n
+       |  FROM events WHERE event_type = 'click' GROUP BY 1),""".stripMargin
 
   /** audio volume meter (media/audiovolumemeter.py:61-68 + AudioChunker
     * media/util.py:131-148): re-chunk each track into 1-min blocks,
@@ -906,32 +914,26 @@ object DspQueries {
   private def p15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.AudioIndex
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(24, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val adts = (0 until n).map { i =>
-          AudioIndex.AdtsFrame(i % 4, i % 13, 1 + i % 7, i % 3 == 0,
-            Array.tabulate(20 + (i * 7) % 50)(j => ((i * 31 + j) & 0xff).toByte))
-        }
-        val aidx = AudioIndex.adtsDemux(AudioIndex.adtsMux(adts))
-        require(aidx.size == n, s"chunk $cid: adts index size drift")
-        val mp3 = (0 until n).map { i =>
-          AudioIndex.Mp3Frame(1 + i % 14, i % 3, i % 2 == 0, i % 4)
-        }
-        val midx = AudioIndex.mp3Demux(AudioIndex.mp3Mux(mp3))
-        require(midx.size == n, s"chunk $cid: mp3 index size drift")
-        aidx.iterator.zipWithIndex.map { case ((off, f), i) =>
-          (cid, "adts", i.toLong, off, f.rate.toLong, f.profile.toLong,
-            f.channels.toLong, f.frameLen.toLong)
-        } ++ midx.iterator.zipWithIndex.map { case ((off, f), i) =>
-          (cid, "mp3", i.toLong, off, f.rate.toLong,
-            (f.bitrate / 1000).toLong, f.channelMode.toLong,
-            f.frameLen.toLong)
-        }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(24, count)
+      val adts = (0 until n).map { i =>
+        AudioIndex.AdtsFrame(i % 4, i % 13, 1 + i % 7, i % 3 == 0,
+          Array.tabulate(20 + (i * 7) % 50)(j => ((i * 31 + j) & 0xff).toByte))
+      }
+      val aidx = AudioIndex.adtsDemux(AudioIndex.adtsMux(adts))
+      require(aidx.size == n, s"chunk $cid: adts index size drift")
+      val mp3 = (0 until n).map { i =>
+        AudioIndex.Mp3Frame(1 + i % 14, i % 3, i % 2 == 0, i % 4)
+      }
+      val midx = AudioIndex.mp3Demux(AudioIndex.mp3Mux(mp3))
+      require(midx.size == n, s"chunk $cid: mp3 index size drift")
+      aidx.iterator.zipWithIndex.map { case ((off, f), i) =>
+        (cid, "adts", i.toLong, off, f.rate.toLong, f.profile.toLong,
+          f.channels.toLong, f.frameLen.toLong)
+      } ++ midx.iterator.zipWithIndex.map { case ((off, f), i) =>
+        (cid, "mp3", i.toLong, off, f.rate.toLong,
+          (f.bitrate / 1000).toLong, f.channelMode.toLong,
+          f.frameLen.toLong)
       }
     }.toDF("chunk_id", "kind", "i", "offset", "rate", "p1", "p2",
         "frame_bytes")
@@ -939,9 +941,7 @@ object DspQueries {
   }
 
   private val p15Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(24)}
       |f AS (SELECT chunk_id, g.i FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |adts AS (SELECT chunk_id, 'adts' AS kind, i,
@@ -985,38 +985,32 @@ object DspQueries {
   private def p16(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{AudioIndex, Ogg}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(24, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        var granule = 0L
-        val packets = (0 until n).map { i =>
-          val config = i % 32
-          val code = i % 4
-          val nf = code match {
-            case 0 => 1
-            case 3 => 1 + i % 2
-            case _ => 2
-          }
-          val body = Array.tabulate(5 + i % 7)(j => ((i * 17 + j) & 0xff).toByte)
-          val pkt = AudioIndex.opusPacket(config, i % 2 == 1, code,
-            Seq.fill(nf)(body))
-          val parsed = AudioIndex.opusParse(pkt)
-          granule += parsed.samples48k
-          Ogg.OggPacket(1L, granule, pkt)
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(24, count)
+      var granule = 0L
+      val packets = (0 until n).map { i =>
+        val config = i % 32
+        val code = i % 4
+        val nf = code match {
+          case 0 => 1
+          case 3 => 1 + i % 2
+          case _ => 2
         }
-        val (_, rec) = Ogg.demux(Ogg.mux(
-          Seq(Ogg.OggStream(1L, "opus")), packets))
-        require(rec.size == n, s"chunk $cid: ogg packet count drift")
-        rec.iterator.zipWithIndex.map { case (p, i) =>
-          val op = AudioIndex.opusParse(p.payload)
-          (cid, i.toLong, op.mode, op.bandwidth, op.stereo,
-            op.code.toLong, op.frames.toLong, op.durUs, op.samples48k,
-            p.granule)
-        }
+        val body = Array.tabulate(5 + i % 7)(j => ((i * 17 + j) & 0xff).toByte)
+        val pkt = AudioIndex.opusPacket(config, i % 2 == 1, code,
+          Seq.fill(nf)(body))
+        val parsed = AudioIndex.opusParse(pkt)
+        granule += parsed.samples48k
+        Ogg.OggPacket(1L, granule, pkt)
+      }
+      val (_, rec) = Ogg.demux(Ogg.mux(
+        Seq(Ogg.OggStream(1L, "opus")), packets))
+      require(rec.size == n, s"chunk $cid: ogg packet count drift")
+      rec.iterator.zipWithIndex.map { case (p, i) =>
+        val op = AudioIndex.opusParse(p.payload)
+        (cid, i.toLong, op.mode, op.bandwidth, op.stereo,
+          op.code.toLong, op.frames.toLong, op.durUs, op.samples48k,
+          p.granule)
       }
     }.toDF("chunk_id", "i", "mode", "bandwidth", "stereo", "code",
         "frames", "dur_us", "samples48k", "granule")
@@ -1024,9 +1018,7 @@ object DspQueries {
   }
 
   private val p16Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(24)}
       |f AS (SELECT chunk_id, g.i FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |t AS (SELECT chunk_id, i, i % 32 AS cfg, i % 4 AS code,
@@ -1078,40 +1070,34 @@ object DspQueries {
   private def p17(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp2
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(12, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val frames = (0 until n).map { i =>
-          val subs = Array.tabulate(Mp2.Sblimit) { sb =>
-            val q = (sb * 7 + i * 13) % 13
-            if (q == 0) Mp2.Mp2Sub(0, 0, Array.empty, Array.empty)
-            else {
-              val scfsi = (sb + i) % 4
-              val sf = Array.tabulate(Mp2.nsfStored(scfsi))(p =>
-                (sb * 3 + i * 5 + p * 11) % 63)
-              val l = Mp2.Levels(q)
-              val samples = Array.tabulate(36)(gx =>
-                (sb * 5 + (gx / 3) * 3 + (gx % 3) * 7 + i * 11) % l)
-              Mp2.Mp2Sub(q, scfsi, sf, samples)
-            }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(12, count)
+      val frames = (0 until n).map { i =>
+        val subs = Array.tabulate(Mp2.Sblimit) { sb =>
+          val q = (sb * 7 + i * 13) % 13
+          if (q == 0) Mp2.Mp2Sub(0, 0, Array.empty, Array.empty)
+          else {
+            val scfsi = (sb + i) % 4
+            val sf = Array.tabulate(Mp2.nsfStored(scfsi))(p =>
+              (sb * 3 + i * 5 + p * 11) % 63)
+            val l = Mp2.Levels(q)
+            val samples = Array.tabulate(36)(gx =>
+              (sb * 5 + (gx / 3) * 3 + (gx % 3) * 7 + i * 11) % l)
+            Mp2.Mp2Sub(q, scfsi, sf, samples)
           }
-          Mp2.Mp2FrameData(bitrateIndex = 14, rateIndex = 2,
-            padding = i % 2 == 1, subs)
         }
-        val rec = Mp2.demux(Mp2.mux(frames))
-        require(rec.size == n, s"chunk $cid: mp2 frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val alloc = f.subs.filter(_.q > 0)
-          (cid, i.toLong, off, f.frameLen.toLong, f.bodyBits.toLong,
-            alloc.length.toLong,
-            alloc.map(s => Mp2.nsfStored(s.scfsi).toLong).sum,
-            alloc.flatMap(_.sf).map(_.toLong).sum,
-            alloc.flatMap(_.samples).map(_.toLong).sum)
-        }
+        Mp2.Mp2FrameData(bitrateIndex = 14, rateIndex = 2,
+          padding = i % 2 == 1, subs)
+      }
+      val rec = Mp2.demux(Mp2.mux(frames))
+      require(rec.size == n, s"chunk $cid: mp2 frame count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        val alloc = f.subs.filter(_.q > 0)
+        (cid, i.toLong, off, f.frameLen.toLong, f.bodyBits.toLong,
+          alloc.length.toLong,
+          alloc.map(s => Mp2.nsfStored(s.scfsi).toLong).sum,
+          alloc.flatMap(_.sf).map(_.toLong).sum,
+          alloc.flatMap(_.samples).map(_.toLong).sum)
       }
     }.toDF("chunk_id", "i", "offset", "frame_bytes", "body_bits",
         "n_alloc", "sf_count", "sf_sum", "code_sum")
@@ -1119,9 +1105,7 @@ object DspQueries {
   }
 
   private val p17Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(12, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(12)}
       |f AS (SELECT chunk_id, g.i FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |sb AS (SELECT chunk_id, i, s.sb,
@@ -1191,61 +1175,55 @@ object DspQueries {
   private def p18(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{AudioIndex, Ogg}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(24, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val preSkip = 312 + (cid % 100).toInt
-        val head = AudioIndex.opusHeadMux(AudioIndex.OpusHead(
-          channels = 1, preSkip = preSkip, inputRate = 48000L, gainQ8 = 0))
-        val tags = AudioIndex.opusTagsMux("graft p18")
-        var granule = 0L
-        val data = (0 until n).map { i =>
-          val config = i % 32
-          val code = i % 4
-          val nf = code match {
-            case 0 => 1
-            case 3 => 1 + i % 2
-            case _ => 2
-          }
-          val body = Array.tabulate(5 + i % 7)(j =>
-            ((i * 17 + j) & 0xff).toByte)
-          val pkt = AudioIndex.opusPacket(config, i % 2 == 1, code,
-            Seq.fill(nf)(body))
-          val parsed = AudioIndex.opusParse(pkt)
-          // a granule jump beyond the decoded samples = lost packets;
-          // the final page granule is SHORT by the end-trim instead
-          val gap = if (i % 5 == 3 && i < n - 1) i * 120L + 240L else 0L
-          granule += parsed.samples48k + gap
-          val g = if (i == n - 1) granule - 57L else granule
-          Ogg.OggPacket(1L, g, pkt)
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(24, count)
+      val preSkip = 312 + (cid % 100).toInt
+      val head = AudioIndex.opusHeadMux(AudioIndex.OpusHead(
+        channels = 1, preSkip = preSkip, inputRate = 48000L, gainQ8 = 0))
+      val tags = AudioIndex.opusTagsMux("graft p18")
+      var granule = 0L
+      val data = (0 until n).map { i =>
+        val config = i % 32
+        val code = i % 4
+        val nf = code match {
+          case 0 => 1
+          case 3 => 1 + i % 2
+          case _ => 2
         }
-        val packets = Ogg.OggPacket(1L, 0L, head) +:
-          Ogg.OggPacket(1L, 0L, tags) +: data
-        val (_, rec) = Ogg.demux(Ogg.mux(
-          Seq(Ogg.OggStream(1L, "opus")), packets))
-        require(rec.size == n + 2, s"chunk $cid: ogg packet count drift")
-        // the audit reads ONLY demuxed bytes: headers validated and
-        // parsed back, then the granule ledger recomputed per packet
-        val gotHead = AudioIndex.opusHeadParse(rec.head.payload)
-        require(gotHead.preSkip == preSkip && gotHead.channels == 1,
-          s"chunk $cid: OpusHead drift through the pages")
-        require(AudioIndex.opusTagsParse(rec(1).payload) == "graft p18",
-          s"chunk $cid: OpusTags drift")
-        var prevG = 0L
-        rec.drop(2).iterator.zipWithIndex.map { case (p, i) =>
-          val op = AudioIndex.opusParse(p.payload)
-          val delta = p.granule - prevG - op.samples48k
-          prevG = p.granule
-          val gapS = math.max(delta, 0L)
-          val trimS = math.max(-delta, 0L)
-          (cid, i.toLong, op.samples48k, p.granule, gapS, trimS,
-            trimS == 0L || i == n - 1,
-            math.max(p.granule - gotHead.preSkip, 0L))
-        }
+        val body = Array.tabulate(5 + i % 7)(j =>
+          ((i * 17 + j) & 0xff).toByte)
+        val pkt = AudioIndex.opusPacket(config, i % 2 == 1, code,
+          Seq.fill(nf)(body))
+        val parsed = AudioIndex.opusParse(pkt)
+        // a granule jump beyond the decoded samples = lost packets;
+        // the final page granule is SHORT by the end-trim instead
+        val gap = if (i % 5 == 3 && i < n - 1) i * 120L + 240L else 0L
+        granule += parsed.samples48k + gap
+        val g = if (i == n - 1) granule - 57L else granule
+        Ogg.OggPacket(1L, g, pkt)
+      }
+      val packets = Ogg.OggPacket(1L, 0L, head) +:
+        Ogg.OggPacket(1L, 0L, tags) +: data
+      val (_, rec) = Ogg.demux(Ogg.mux(
+        Seq(Ogg.OggStream(1L, "opus")), packets))
+      require(rec.size == n + 2, s"chunk $cid: ogg packet count drift")
+      // the audit reads ONLY demuxed bytes: headers validated and
+      // parsed back, then the granule ledger recomputed per packet
+      val gotHead = AudioIndex.opusHeadParse(rec.head.payload)
+      require(gotHead.preSkip == preSkip && gotHead.channels == 1,
+        s"chunk $cid: OpusHead drift through the pages")
+      require(AudioIndex.opusTagsParse(rec(1).payload) == "graft p18",
+        s"chunk $cid: OpusTags drift")
+      var prevG = 0L
+      rec.drop(2).iterator.zipWithIndex.map { case (p, i) =>
+        val op = AudioIndex.opusParse(p.payload)
+        val delta = p.granule - prevG - op.samples48k
+        prevG = p.granule
+        val gapS = math.max(delta, 0L)
+        val trimS = math.max(-delta, 0L)
+        (cid, i.toLong, op.samples48k, p.granule, gapS, trimS,
+          trimS == 0L || i == n - 1,
+          math.max(p.granule - gotHead.preSkip, 0L))
       }
     }.toDF("chunk_id", "i", "samples48k", "granule", "gap_samples",
         "trim_samples", "trim_legal", "net_playable")
@@ -1253,9 +1231,7 @@ object DspQueries {
   }
 
   private val p18Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(24, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(24)}
       |f AS (SELECT chunk_id, n, g.i FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |t AS (SELECT chunk_id, n, i, i % 32 AS cfg,
@@ -1310,35 +1286,29 @@ object DspQueries {
   private def p19(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp2
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(12, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val frames = (0 until n).map { i =>
-          val subs = Array.tabulate(32) { sb =>
-            val a = (sb * 7 + i * 11) % 15
-            if (a == 0) Mp2.Mp1Sub(0, 0, Array.empty)
-            else {
-              val lv = (1 << (a + 1)) - 1
-              Mp2.Mp1Sub(a, (sb * 11 + i * 3) % 63,
-                Array.tabulate(12)(g => (sb * 3 + g * 5 + i * 7) % lv))
-            }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(12, count)
+      val frames = (0 until n).map { i =>
+        val subs = Array.tabulate(32) { sb =>
+          val a = (sb * 7 + i * 11) % 15
+          if (a == 0) Mp2.Mp1Sub(0, 0, Array.empty)
+          else {
+            val lv = (1 << (a + 1)) - 1
+            Mp2.Mp1Sub(a, (sb * 11 + i * 3) % 63,
+              Array.tabulate(12)(g => (sb * 3 + g * 5 + i * 7) % lv))
           }
-          Mp2.Mp1FrameData(bitrateIndex = 14, rateIndex = 2,
-            padding = i % 2 == 1, subs)
         }
-        val rec = Mp2.demuxL1(Mp2.muxL1(frames))
-        require(rec.size == n, s"chunk $cid: mp1 frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val alloc = f.subs.filter(_.a > 0)
-          (cid, i.toLong, off, f.frameLen.toLong, f.bodyBits.toLong,
-            alloc.length.toLong,
-            alloc.map(_.sf.toLong).sum,
-            alloc.flatMap(_.samples).map(_.toLong).sum)
-        }
+        Mp2.Mp1FrameData(bitrateIndex = 14, rateIndex = 2,
+          padding = i % 2 == 1, subs)
+      }
+      val rec = Mp2.demuxL1(Mp2.muxL1(frames))
+      require(rec.size == n, s"chunk $cid: mp1 frame count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        val alloc = f.subs.filter(_.a > 0)
+        (cid, i.toLong, off, f.frameLen.toLong, f.bodyBits.toLong,
+          alloc.length.toLong,
+          alloc.map(_.sf.toLong).sum,
+          alloc.flatMap(_.samples).map(_.toLong).sum)
       }
     }.toDF("chunk_id", "i", "offset", "frame_bytes", "body_bits",
         "n_alloc", "sf_sum", "code_sum")
@@ -1346,9 +1316,7 @@ object DspQueries {
   }
 
   private val p19Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(12, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(12)}
       |f AS (SELECT chunk_id, g.i FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |sb AS (SELECT chunk_id, i, s.sb,
@@ -1399,59 +1367,51 @@ object DspQueries {
   private def p20(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp2
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(8, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val frames = (0 until n).map { i =>
-          val subs = Array.tabulate(Mp2.Sblimit) { sb =>
-            if (sb != 0) Mp2.Mp2Sub(0, 0, Array.empty, Array.empty)
-            else {
-              val scfsi = i % 4
-              val sf = Array.tabulate(Mp2.nsfStored(scfsi))(p =>
-                (i * 5 + p * 11) % 63)
-              // q = 5 → 15 levels, codes drawn like p17's sb = 0 row
-              Mp2.Mp2Sub(5, scfsi, sf, Array.tabulate(36)(gx =>
-                ((gx / 3) * 3 + (gx % 3) * 7 + i * 11) % 15))
-            }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(8, count)
+      val frames = (0 until n).map { i =>
+        val subs = Array.tabulate(Mp2.Sblimit) { sb =>
+          if (sb != 0) Mp2.Mp2Sub(0, 0, Array.empty, Array.empty)
+          else {
+            val scfsi = i % 4
+            val sf = Array.tabulate(Mp2.nsfStored(scfsi))(p =>
+              (i * 5 + p * 11) % 63)
+            // q = 5 → 15 levels, codes drawn like p17's sb = 0 row
+            Mp2.Mp2Sub(5, scfsi, sf, Array.tabulate(36)(gx =>
+              ((gx / 3) * 3 + (gx % 3) * 7 + i * 11) % 15))
           }
-          Mp2.Mp2FrameData(bitrateIndex = 14, rateIndex = 2,
-            padding = i % 2 == 1, subs)
         }
-        val rec = Mp2.demux(Mp2.mux(frames))
-        require(rec.size == n, s"chunk $cid: mp2 frame count drift")
-        val synth = new Mp2.Synth()
-        val sVec = new Array[Int](32)
-        rec.iterator.zipWithIndex.map { case ((_, f), i) =>
-          require(f.subs(0).q == 5 && f.subs.drop(1).forall(_.q == 0),
-            s"chunk $cid frame $i: allocation drift through the bits")
-          var pcm = 0L
-          var s0 = 0L
-          var code = 0L
-          var gx = 0
-          while (gx < 36) {
-            sVec(0) = f.subs(0).samples(gx)
-            code += sVec(0)
-            val out = synth.step(sVec)
-            s0 += out(0)
-            var j = 0
-            while (j < 32) { pcm += out(j); j += 1 }
-            gx += 1
-          }
-          (cid, i.toLong, code, pcm, s0)
+        Mp2.Mp2FrameData(bitrateIndex = 14, rateIndex = 2,
+          padding = i % 2 == 1, subs)
+      }
+      val rec = Mp2.demux(Mp2.mux(frames))
+      require(rec.size == n, s"chunk $cid: mp2 frame count drift")
+      val synth = new Mp2.Synth()
+      val sVec = new Array[Int](32)
+      rec.iterator.zipWithIndex.map { case ((_, f), i) =>
+        require(f.subs(0).q == 5 && f.subs.drop(1).forall(_.q == 0),
+          s"chunk $cid frame $i: allocation drift through the bits")
+        var pcm = 0L
+        var s0 = 0L
+        var code = 0L
+        var gx = 0
+        while (gx < 36) {
+          sVec(0) = f.subs(0).samples(gx)
+          code += sVec(0)
+          val out = synth.step(sVec)
+          s0 += out(0)
+          var j = 0
+          while (j < 32) { pcm += out(j); j += 1 }
+          gx += 1
         }
+        (cid, i.toLong, code, pcm, s0)
       }
     }.toDF("chunk_id", "i", "code_sum", "pcm_sum", "s0_sum")
       .orderBy(col("chunk_id"), col("i"))
   }
 
   private val p20Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(8, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(8)}
       |f AS (SELECT chunk_id, g.i FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |-- subband-0 code per global step (36 per frame), the p17 draw
@@ -1509,80 +1469,74 @@ object DspQueries {
   private def p21(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp3
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val cubes = Array(0, 1, 8)
-        val cubes2 = Array(0, 1, 8, 27)
-        def granule(i: Int, gr: Int, g0: Option[Mp3.Granule],
-            scfsi: Vector[Boolean]): Mp3.Granule = {
-          val bv = 10 + (i * 7 + gr * 3) % 30
-          val rc0 = (i + gr) % 6
-          val rc1 = (i * 3 + gr) % 6
-          val t0 = (i + gr) % 14
-          val t1 = 1 + (i * 5 + gr) % 14
-          val t2 = 18 + (i + gr) % 2
-          val r0 = math.min(bv, (rc0 + 1) * (rc0 + 2) / 2)
-          val r1 = math.min(bv,
-            (rc0 + rc1 + 2) * (rc0 + rc1 + 3) / 2) - r0
-          val pairs = Vector.tabulate(bv) { p =>
-            def v(s2: Int): Int = {
-              val idx = p * 2 + s2
-              val m =
-                if (p < r0 + r1) cubes((i * 5 + idx * 7 + gr * 11) % 3)
-                else cubes2((i * 5 + idx * 7 + gr * 11) % 4)
-              if (m != 0 && (idx + i) % 2 == 1) -m else m
-            }
-            (v(0), v(1))
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val cubes = Array(0, 1, 8)
+      val cubes2 = Array(0, 1, 8, 27)
+      def granule(i: Int, gr: Int, g0: Option[Mp3.Granule],
+          scfsi: Vector[Boolean]): Mp3.Granule = {
+        val bv = 10 + (i * 7 + gr * 3) % 30
+        val rc0 = (i + gr) % 6
+        val rc1 = (i * 3 + gr) % 6
+        val t0 = (i + gr) % 14
+        val t1 = 1 + (i * 5 + gr) % 14
+        val t2 = 18 + (i + gr) % 2
+        val r0 = math.min(bv, (rc0 + 1) * (rc0 + 2) / 2)
+        val r1 = math.min(bv,
+          (rc0 + rc1 + 2) * (rc0 + rc1 + 3) / 2) - r0
+        val pairs = Vector.tabulate(bv) { p =>
+          def v(s2: Int): Int = {
+            val idx = p * 2 + s2
+            val m =
+              if (p < r0 + r1) cubes((i * 5 + idx * 7 + gr * 11) % 3)
+              else cubes2((i * 5 + idx * 7 + gr * 11) % 4)
+            if (m != 0 && (idx + i) % 2 == 1) -m else m
           }
-          val c1 = Vector.tabulate((i * 3 + gr) % 8) { q =>
-            def cv(pos: Int): Int = ((i + q * 5 + pos * 3 + gr) % 3) - 1
-            (cv(0), cv(1), cv(2), cv(3))
-          }
-          val sfc = (i + 2 * gr) % 16
-          val (s1, s2) = Mp3.Slen(sfc)
-          val sfs = Vector.tabulate(21) { band =>
-            val shared = gr == 1 &&
-              scfsi(Mp3.ScfsiBands.indexWhere(_.contains(band)))
-            if (shared) g0.get.scalefacs(band)
-            else {
-              val len = if (band < 11) s1 else s2
-              if (len > 0) (i * 3 + band * 5 + gr * 7) % (1 << len)
-              else 0
-            }
-          }
-          Mp3.Granule(pairs, c1, 210 + 4 * ((i + gr) % 10), sfc,
-            (t0, t1, t2), rc0, rc1, preflag = (i + gr) % 2 == 0,
-            scalefacScale = i % 2 == 1, scalefacs = sfs)
+          (v(0), v(1))
         }
-        val frames = (0 until n).map { i =>
-          val scfsi = Vector.tabulate(4)(b => (i + b) % 3 == 0)
-          val g0 = granule(i, 0, None, scfsi)
-          val g1 = granule(i, 1, Some(g0), scfsi)
-          Mp3.Mp3FrameData(bitrateIndex = 14, rateIndex = 2,
-            padding = i % 2 == 1, scfsi, Vector(g0, g1))
+        val c1 = Vector.tabulate((i * 3 + gr) % 8) { q =>
+          def cv(pos: Int): Int = ((i + q * 5 + pos * 3 + gr) % 3) - 1
+          (cv(0), cv(1), cv(2), cv(3))
         }
-        val rec = Mp3.demux(Mp3.mux(frames))
-        require(rec.size == n, s"chunk $cid: mp3 frame count drift")
-        rec.iterator.zipWithIndex.flatMap { case ((off, f), i) =>
-          (0 until 2).iterator.map { gr =>
-            val g = f.granules(gr)
-            val (r0, r1, r2) = g.regionPairs
-            val vals = g.bigValues.flatMap(p => Seq(p._1, p._2))
-            val c1vals = g.count1.flatMap(q =>
-              Seq(q._1, q._2, q._3, q._4))
-            (cid, i.toLong, gr.toLong, off, f.frameLen.toLong,
-              f.part23Length(gr).toLong, g.bigValues.length.toLong,
-              r0.toLong, r1.toLong, r2.toLong,
-              vals.map(v => math.abs(v).toLong).sum,
-              c1vals.count(_ != 0).toLong,
-              g.scalefacs.map(_.toLong).sum,
-              vals.map(v => Mp3.requantExact(v, g.globalGain)).sum)
+        val sfc = (i + 2 * gr) % 16
+        val (s1, s2) = Mp3.Slen(sfc)
+        val sfs = Vector.tabulate(21) { band =>
+          val shared = gr == 1 &&
+            scfsi(Mp3.ScfsiBands.indexWhere(_.contains(band)))
+          if (shared) g0.get.scalefacs(band)
+          else {
+            val len = if (band < 11) s1 else s2
+            if (len > 0) (i * 3 + band * 5 + gr * 7) % (1 << len)
+            else 0
           }
+        }
+        Mp3.Granule(pairs, c1, 210 + 4 * ((i + gr) % 10), sfc,
+          (t0, t1, t2), rc0, rc1, preflag = (i + gr) % 2 == 0,
+          scalefacScale = i % 2 == 1, scalefacs = sfs)
+      }
+      val frames = (0 until n).map { i =>
+        val scfsi = Vector.tabulate(4)(b => (i + b) % 3 == 0)
+        val g0 = granule(i, 0, None, scfsi)
+        val g1 = granule(i, 1, Some(g0), scfsi)
+        Mp3.Mp3FrameData(bitrateIndex = 14, rateIndex = 2,
+          padding = i % 2 == 1, scfsi, Vector(g0, g1))
+      }
+      val rec = Mp3.demux(Mp3.mux(frames))
+      require(rec.size == n, s"chunk $cid: mp3 frame count drift")
+      rec.iterator.zipWithIndex.flatMap { case ((off, f), i) =>
+        (0 until 2).iterator.map { gr =>
+          val g = f.granules(gr)
+          val (r0, r1, r2) = g.regionPairs
+          val vals = g.bigValues.flatMap(p => Seq(p._1, p._2))
+          val c1vals = g.count1.flatMap(q =>
+            Seq(q._1, q._2, q._3, q._4))
+          (cid, i.toLong, gr.toLong, off, f.frameLen.toLong,
+            f.part23Length(gr).toLong, g.bigValues.length.toLong,
+            r0.toLong, r1.toLong, r2.toLong,
+            vals.map(v => math.abs(v).toLong).sum,
+            c1vals.count(_ != 0).toLong,
+            g.scalefacs.map(_.toLong).sum,
+            vals.map(v => Mp3.requantExact(v, g.globalGain)).sum)
         }
       }
     }.toDF("chunk_id", "i", "gr", "offset", "frame_bytes", "part23",
@@ -1592,9 +1546,7 @@ object DspQueries {
   }
 
   private val p21Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i, gg.gr FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i),
       |  (SELECT unnest(range(2)) AS gr) gg),
@@ -1717,28 +1669,22 @@ object DspQueries {
   private def p22(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp3
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val frames = (0 until n)
-          .map(i => Mp3Fixtures.reservoirFrame(i + cid.toInt * 7))
-        val rec = Mp3.demuxReservoir(Mp3.muxReservoir(frames))
-        require(rec.size == n, s"chunk $cid: mp3 frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, mdb, f), i) =>
-          val want = frames(i)
-          require(f.granules.map(_.bigValues) ==
-            want.granules.map(_.bigValues),
-            s"chunk $cid frame $i: reservoir walk drift")
-          (cid, i.toLong, off, f.frameLen.toLong, mdb.toLong,
-            ((f.bodyBits + 7) / 8).toLong, f.bodyBits.toLong,
-            f.granules.iterator.flatMap(_.bigValues.iterator
-              .flatMap(p => Seq(p._1, p._2)))
-              .map(v => math.abs(v).toLong).sum)
-        }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val frames = (0 until n)
+        .map(i => Mp3Fixtures.reservoirFrame(i + cid.toInt * 7))
+      val rec = Mp3.demuxReservoir(Mp3.muxReservoir(frames))
+      require(rec.size == n, s"chunk $cid: mp3 frame count drift")
+      rec.iterator.zipWithIndex.map { case ((off, mdb, f), i) =>
+        val want = frames(i)
+        require(f.granules.map(_.bigValues) ==
+          want.granules.map(_.bigValues),
+          s"chunk $cid frame $i: reservoir walk drift")
+        (cid, i.toLong, off, f.frameLen.toLong, mdb.toLong,
+          ((f.bodyBits + 7) / 8).toLong, f.bodyBits.toLong,
+          f.granules.iterator.flatMap(_.bigValues.iterator
+            .flatMap(p => Seq(p._1, p._2)))
+            .map(v => math.abs(v).toLong).sum)
       }
     }.toDF("chunk_id", "i", "offset", "frame_bytes", "mdb",
         "main_bytes", "part23", "code_sum")
@@ -1804,9 +1750,7 @@ object DspQueries {
   }
 
   private val p22Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i, g.i + chunk_id * 7 AS fi FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |fg AS (SELECT chunk_id, i, fi, gg.gr FROM f,
@@ -1921,76 +1865,70 @@ object DspQueries {
   private def p23(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp3
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val regimes = Vector((2, false), (2, true), (1, false), (3, false))
-        def granule(i: Int, gr: Int): Mp3.Granule = {
-          val (bt, mixed) = regimes((i + gr) % 4)
-          val bs = Mp3.BlockSplit(bt, mixed,
-            ((i + gr) % 4, (i * 3 + gr) % 4, (i + 2 * gr) % 4))
-          val bv = 10 + (i * 7 + gr * 3) % 30
-          val boundary = if (bt == 2 && !mixed) 18 else 36
-          val r0 = math.min(bv, boundary)
-          val cubes = Array(0, 1, 8)
-          val cubes2 = Array(0, 1, 8, 27)
-          val pairs = Vector.tabulate(bv) { p =>
-            def v(s2: Int): Int = {
-              val idx = p * 2 + s2
-              val m = if (p < r0) cubes((i * 5 + idx * 7 + gr * 11) % 3)
-                else cubes2((i * 5 + idx * 7 + gr * 11) % 4)
-              if (m != 0 && (idx + i) % 2 == 1) -m else m
-            }
-            (v(0), v(1))
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val regimes = Vector((2, false), (2, true), (1, false), (3, false))
+      def granule(i: Int, gr: Int): Mp3.Granule = {
+        val (bt, mixed) = regimes((i + gr) % 4)
+        val bs = Mp3.BlockSplit(bt, mixed,
+          ((i + gr) % 4, (i * 3 + gr) % 4, (i + 2 * gr) % 4))
+        val bv = 10 + (i * 7 + gr * 3) % 30
+        val boundary = if (bt == 2 && !mixed) 18 else 36
+        val r0 = math.min(bv, boundary)
+        val cubes = Array(0, 1, 8)
+        val cubes2 = Array(0, 1, 8, 27)
+        val pairs = Vector.tabulate(bv) { p =>
+          def v(s2: Int): Int = {
+            val idx = p * 2 + s2
+            val m = if (p < r0) cubes((i * 5 + idx * 7 + gr * 11) % 3)
+              else cubes2((i * 5 + idx * 7 + gr * 11) % 4)
+            if (m != 0 && (idx + i) % 2 == 1) -m else m
           }
-          val sfc = (i + 2 * gr) % 16
-          val (s1, s2) = Mp3.Slen(sfc)
-          val nSf = if (bt != 2) 21 else if (mixed) 35 else 36
-          val sfs = Vector.tabulate(nSf) { slot =>
-            val isS1 = if (bt != 2) slot < 11
-              else if (mixed) slot < 17 else slot < 18
-            val len = if (isS1) s1 else s2
-            if (len > 0) (i * 3 + slot * 5 + gr * 7) % (1 << len) else 0
-          }
-          Mp3.Granule(pairs, Vector.empty, 234 + 4 * ((i + gr) % 6),
-            sfc, ((i + gr) % 14, 18 + (i * 5 + gr) % 2, 0), 0, 0,
-            preflag = false, scalefacScale = i % 2 == 1,
-            scalefacs = sfs, blockSplit = Some(bs))
+          (v(0), v(1))
         }
-        val frames = (0 until n).map { i =>
-          Mp3.Mp3FrameData(14, 2, padding = i % 2 == 1,
-            Vector.fill(4)(false),
-            Vector(granule(i, 0), granule(i, 1)))
+        val sfc = (i + 2 * gr) % 16
+        val (s1, s2) = Mp3.Slen(sfc)
+        val nSf = if (bt != 2) 21 else if (mixed) 35 else 36
+        val sfs = Vector.tabulate(nSf) { slot =>
+          val isS1 = if (bt != 2) slot < 11
+            else if (mixed) slot < 17 else slot < 18
+          val len = if (isS1) s1 else s2
+          if (len > 0) (i * 3 + slot * 5 + gr * 7) % (1 << len) else 0
         }
-        val rec = Mp3.demux(Mp3.mux(frames))
-        require(rec.size == n, s"chunk $cid: mp3 frame count drift")
-        rec.iterator.zipWithIndex.flatMap { case ((off, f), i) =>
-          (0 until 2).iterator.map { gr =>
-            val g = f.granules(gr)
-            val bs = g.blockSplit.get
-            val (r0, r1, r2) = g.regionPairs
-            require(r2 == 0, "window switching leaves region 2 empty")
-            val vals = g.bigValues.flatMap(p => Seq(p._1, p._2))
-            val requant = vals.zipWithIndex.map { case (v, j) =>
-              val gain =
-                if (bs.blockType != 2) g.globalGain
-                else if (bs.mixed && j < 36) g.globalGain
-                else g.globalGain - 8 * bs.sbg(Mp3.shortWindow(j, bs.mixed))
-              Mp3.requantExact(v, gain)
-            }.sum
-            (cid, i.toLong, gr.toLong, off,
-              bs.blockType.toLong, if (bs.mixed) 1L else 0L,
-              f.part23Length(gr).toLong, g.bigValues.length.toLong,
-              r0.toLong, r1.toLong,
-              g.scalefacs.map(_.toLong).sum,
-              (bs.subblockGain._1 + bs.subblockGain._2 +
-                bs.subblockGain._3).toLong,
-              vals.map(v => math.abs(v).toLong).sum, requant)
-          }
+        Mp3.Granule(pairs, Vector.empty, 234 + 4 * ((i + gr) % 6),
+          sfc, ((i + gr) % 14, 18 + (i * 5 + gr) % 2, 0), 0, 0,
+          preflag = false, scalefacScale = i % 2 == 1,
+          scalefacs = sfs, blockSplit = Some(bs))
+      }
+      val frames = (0 until n).map { i =>
+        Mp3.Mp3FrameData(14, 2, padding = i % 2 == 1,
+          Vector.fill(4)(false),
+          Vector(granule(i, 0), granule(i, 1)))
+      }
+      val rec = Mp3.demux(Mp3.mux(frames))
+      require(rec.size == n, s"chunk $cid: mp3 frame count drift")
+      rec.iterator.zipWithIndex.flatMap { case ((off, f), i) =>
+        (0 until 2).iterator.map { gr =>
+          val g = f.granules(gr)
+          val bs = g.blockSplit.get
+          val (r0, r1, r2) = g.regionPairs
+          require(r2 == 0, "window switching leaves region 2 empty")
+          val vals = g.bigValues.flatMap(p => Seq(p._1, p._2))
+          val requant = vals.zipWithIndex.map { case (v, j) =>
+            val gain =
+              if (bs.blockType != 2) g.globalGain
+              else if (bs.mixed && j < 36) g.globalGain
+              else g.globalGain - 8 * bs.sbg(Mp3.shortWindow(j, bs.mixed))
+            Mp3.requantExact(v, gain)
+          }.sum
+          (cid, i.toLong, gr.toLong, off,
+            bs.blockType.toLong, if (bs.mixed) 1L else 0L,
+            f.part23Length(gr).toLong, g.bigValues.length.toLong,
+            r0.toLong, r1.toLong,
+            g.scalefacs.map(_.toLong).sum,
+            (bs.subblockGain._1 + bs.subblockGain._2 +
+              bs.subblockGain._3).toLong,
+            vals.map(v => math.abs(v).toLong).sum, requant)
         }
       }
     }.toDF("chunk_id", "i", "gr", "offset", "block_type", "mixed_flag",
@@ -2000,9 +1938,7 @@ object DspQueries {
   }
 
   private val p23Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i, gg.gr FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i),
       |  (SELECT unnest(range(2)) AS gr) gg),
@@ -2107,101 +2043,95 @@ object DspQueries {
   private def p24(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp3
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val modes = Vector((0, 0), (1, 2), (1, 1), (1, 3))
-        def granule(i: Int, gr: Int, ch: Int, ext: Int): Mp3.Granule = {
-          val isCh = ch == 1 && (ext & 1) == 1
-          val bv = if (isCh) 4 + (i * 5 + gr) % 8
-            else 10 + (i * 7 + gr * 3 + ch * 5) % 30
-          val rc0 = (i + gr + ch) % 6
-          val rc1 = (i * 3 + gr + ch) % 6
-          val r0 = math.min(bv, (rc0 + 1) * (rc0 + 2) / 2)
-          val r1 = math.min(bv,
-            (rc0 + rc1 + 2) * (rc0 + rc1 + 3) / 2) - r0
-          val cubes = Array(0, 1, 8); val cubes2 = Array(0, 1, 8, 27)
-          val pairs = Vector.tabulate(bv) { p =>
-            def v(s2: Int): Int = {
-              val idx = p * 2 + s2
-              var m = if (p < r0 + r1)
-                cubes((i * 5 + idx * 7 + gr * 11 + ch * 13) % 3)
-              else cubes2((i * 5 + idx * 7 + gr * 11 + ch * 13) % 4)
-              if (idx == 2 * bv - 1 && m == 0) m = 1 // zero_part edge
-              if (m != 0 && (idx + i + ch) % 2 == 1) -m else m
-            }
-            (v(0), v(1))
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val modes = Vector((0, 0), (1, 2), (1, 1), (1, 3))
+      def granule(i: Int, gr: Int, ch: Int, ext: Int): Mp3.Granule = {
+        val isCh = ch == 1 && (ext & 1) == 1
+        val bv = if (isCh) 4 + (i * 5 + gr) % 8
+          else 10 + (i * 7 + gr * 3 + ch * 5) % 30
+        val rc0 = (i + gr + ch) % 6
+        val rc1 = (i * 3 + gr + ch) % 6
+        val r0 = math.min(bv, (rc0 + 1) * (rc0 + 2) / 2)
+        val r1 = math.min(bv,
+          (rc0 + rc1 + 2) * (rc0 + rc1 + 3) / 2) - r0
+        val cubes = Array(0, 1, 8); val cubes2 = Array(0, 1, 8, 27)
+        val pairs = Vector.tabulate(bv) { p =>
+          def v(s2: Int): Int = {
+            val idx = p * 2 + s2
+            var m = if (p < r0 + r1)
+              cubes((i * 5 + idx * 7 + gr * 11 + ch * 13) % 3)
+            else cubes2((i * 5 + idx * 7 + gr * 11 + ch * 13) % 4)
+            if (idx == 2 * bv - 1 && m == 0) m = 1 // zero_part edge
+            if (m != 0 && (idx + i + ch) % 2 == 1) -m else m
           }
-          val sfc = if (isCh) 13 else (i + 2 * gr + ch) % 16
-          val (s1, s2) = Mp3.Slen(sfc)
-          val sfs = Vector.tabulate(21) { band =>
-            val len = if (band < 11) s1 else s2
-            if (isCh) Array(0, 3, 6)((i + band) % 3)
-            else if (len > 0) (i * 3 + band * 5 + gr * 7 + ch) % (1 << len)
-            else 0
-          }
-          Mp3.Granule(pairs, Vector.empty, 214 + 4 * ((i + gr + ch) % 7),
-            sfc, ((i + gr + ch) % 14, 1 + (i * 5 + gr + ch) % 14,
-              18 + (i + gr + ch) % 2), rc0, rc1,
-            preflag = false, scalefacScale = false, scalefacs = sfs)
+          (v(0), v(1))
         }
-        val frames = (0 until n).map { i =>
-          val (mode, ext) = modes(i % 4)
-          Mp3.Mp3StereoFrame(14, 2, padding = i % 2 == 1, mode, ext,
-            Vector.fill(2)(Vector.fill(4)(false)),
-            Vector.tabulate(2)(gr =>
-              Vector.tabulate(2)(ch => granule(i, gr, ch, ext))))
+        val sfc = if (isCh) 13 else (i + 2 * gr + ch) % 16
+        val (s1, s2) = Mp3.Slen(sfc)
+        val sfs = Vector.tabulate(21) { band =>
+          val len = if (band < 11) s1 else s2
+          if (isCh) Array(0, 3, 6)((i + band) % 3)
+          else if (len > 0) (i * 3 + band * 5 + gr * 7 + ch) % (1 << len)
+          else 0
         }
-        val rec = Mp3.demuxStereo(Mp3.muxStereo(frames))
-        require(rec.size == n, s"chunk $cid: stereo frame count drift")
-        rec.iterator.zipWithIndex.flatMap { case ((off, f), i) =>
-          (0 until 2).iterator.map { gr =>
-            val g0 = f.granules(gr)(0); val g1 = f.granules(gr)(1)
-            def xr(g: Mp3.Granule, j: Int): Long = {
-              val vals = g.bigValues
-              if (j >= 2 * vals.length) 0L
-              else {
-                val p = vals(j / 2)
-                Mp3.requantExact(if (j % 2 == 0) p._1 else p._2,
-                  g.globalGain)
-              }
+        Mp3.Granule(pairs, Vector.empty, 214 + 4 * ((i + gr + ch) % 7),
+          sfc, ((i + gr + ch) % 14, 1 + (i * 5 + gr + ch) % 14,
+            18 + (i + gr + ch) % 2), rc0, rc1,
+          preflag = false, scalefacScale = false, scalefacs = sfs)
+      }
+      val frames = (0 until n).map { i =>
+        val (mode, ext) = modes(i % 4)
+        Mp3.Mp3StereoFrame(14, 2, padding = i % 2 == 1, mode, ext,
+          Vector.fill(2)(Vector.fill(4)(false)),
+          Vector.tabulate(2)(gr =>
+            Vector.tabulate(2)(ch => granule(i, gr, ch, ext))))
+      }
+      val rec = Mp3.demuxStereo(Mp3.muxStereo(frames))
+      require(rec.size == n, s"chunk $cid: stereo frame count drift")
+      rec.iterator.zipWithIndex.flatMap { case ((off, f), i) =>
+        (0 until 2).iterator.map { gr =>
+          val g0 = f.granules(gr)(0); val g1 = f.granules(gr)(1)
+          def xr(g: Mp3.Granule, j: Int): Long = {
+            val vals = g.bigValues
+            if (j >= 2 * vals.length) 0L
+            else {
+              val p = vals(j / 2)
+              Mp3.requantExact(if (j % 2 == 0) p._1 else p._2,
+                g.globalGain)
             }
-            val maxJ = 2 * math.max(g0.bigValues.length,
-              g1.bigValues.length)
-            val bound = if ((f.modeExt & 1) == 1) Mp3.intensityBound(g1)
-              else 22
-            val isStart = if (bound <= 21) Mp3.SfbOffsets(bound)
-              else Int.MaxValue
-            val msAbs = if ((f.modeExt & 2) == 2)
-              (0 until math.min(maxJ, isStart)).map { j =>
-                val (l, r) = Mp3.msScaled(xr(g0, j), xr(g1, j))
-                math.abs(l) + math.abs(r)
-              }.sum
-            else 0L
-            val (isL, isR) = if ((f.modeExt & 1) == 1) {
-              val sums = (isStart until 2 * g0.bigValues.length).map { j =>
-                val band = (0 until 21).find(b =>
-                  j < Mp3.SfbOffsets(b + 1)).getOrElse(21)
-                Mp3.intensityExact(xr(g0, j), g1.scalefacs(band))
-              }
-              (sums.map(_._1).sum, sums.map(_._2).sum)
-            } else (0L, 0L)
-            (cid, i.toLong, gr.toLong, off, f.mode.toLong,
-              f.modeExt.toLong,
-              g0.bigValues.length.toLong, g1.bigValues.length.toLong,
-              f.part23Length(gr, 0).toLong, f.part23Length(gr, 1).toLong,
-              g0.scalefacs.map(_.toLong).sum,
-              g1.scalefacs.map(_.toLong).sum,
-              g0.bigValues.map(p => math.abs(p._1).toLong +
-                math.abs(p._2)).sum,
-              g1.bigValues.map(p => math.abs(p._1).toLong +
-                math.abs(p._2)).sum,
-              bound.toLong, msAbs, isL, isR)
           }
+          val maxJ = 2 * math.max(g0.bigValues.length,
+            g1.bigValues.length)
+          val bound = if ((f.modeExt & 1) == 1) Mp3.intensityBound(g1)
+            else 22
+          val isStart = if (bound <= 21) Mp3.SfbOffsets(bound)
+            else Int.MaxValue
+          val msAbs = if ((f.modeExt & 2) == 2)
+            (0 until math.min(maxJ, isStart)).map { j =>
+              val (l, r) = Mp3.msScaled(xr(g0, j), xr(g1, j))
+              math.abs(l) + math.abs(r)
+            }.sum
+          else 0L
+          val (isL, isR) = if ((f.modeExt & 1) == 1) {
+            val sums = (isStart until 2 * g0.bigValues.length).map { j =>
+              val band = (0 until 21).find(b =>
+                j < Mp3.SfbOffsets(b + 1)).getOrElse(21)
+              Mp3.intensityExact(xr(g0, j), g1.scalefacs(band))
+            }
+            (sums.map(_._1).sum, sums.map(_._2).sum)
+          } else (0L, 0L)
+          (cid, i.toLong, gr.toLong, off, f.mode.toLong,
+            f.modeExt.toLong,
+            g0.bigValues.length.toLong, g1.bigValues.length.toLong,
+            f.part23Length(gr, 0).toLong, f.part23Length(gr, 1).toLong,
+            g0.scalefacs.map(_.toLong).sum,
+            g1.scalefacs.map(_.toLong).sum,
+            g0.bigValues.map(p => math.abs(p._1).toLong +
+              math.abs(p._2)).sum,
+            g1.bigValues.map(p => math.abs(p._1).toLong +
+              math.abs(p._2)).sum,
+            bound.toLong, msAbs, isL, isR)
         }
       }
     }.toDF("chunk_id", "i", "gr", "offset", "mode", "mode_ext",
@@ -2212,9 +2142,7 @@ object DspQueries {
   }
 
   private val p24Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i, gg.gr,
       |    list_extract([0, 1, 1, 1], CAST(g.i % 4 + 1 AS INT)) AS mode,
       |    list_extract([0, 2, 1, 3], CAST(g.i % 4 + 1 AS INT)) AS ext
@@ -2386,83 +2314,77 @@ object DspQueries {
   private def p25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Aac, AudioIndex}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        def mags(cb: Int): Array[Int] =
-          if (cb >= 11) Array(0, 1, 8, 27)
-          else if (cb >= 9) Array(0, 1, 8)
-          else Array(0, 1)
-        def sce(i: Int): Aac.AacIcs = {
-          val ws = Array(0, 2, 1, 3)(i % 4)
-          val short = ws == 2
-          val maxSfb = if (short) 4 else 6 + i % 3
-          val grouping = if (short) (i * 37) % 128 else 0
-          val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
-          val cycleL = Array(1, 3, 5, 7, 9, 11, 6, 0)
-          val cycleS = Array(3, 9, 11, 5)
-          def cb(w: Int): Int =
-            if (short) cycleS((i + w) % 4) else cycleL((i + w) % 8)
-          val groups = info.groupLens
-          val sections = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.map(w =>
-              Aac.Section(cb(w), w, w + 1)))
-          def dpcmOf(w: Int): Int =
-            if (short) (if (w % 2 == 0) 4 else -4)
-            else 4 * (((i + w) % 3) - 1)
-          val dpcm = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.filter(cb(_) != 0).map(dpcmOf))
-          val counters = scala.collection.mutable.Map[Int, Int]()
-          val spectral = groups.indices.toVector.map { gi =>
-            (0 until maxSfb).toVector.map { w =>
-              if (cb(w) == 0) Vector.empty[Int]
-              else Vector.fill(info.sfbWidth(w, groups(gi))) {
-                val t = counters.getOrElse(w, 0); counters(w) = t + 1
-                val a = mags(cb(w))
-                val m = a((i * 5 + w * 11 + t * 7) % a.length)
-                if (m != 0 && (t + i) % 2 == 1) -m else m
-              }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      def mags(cb: Int): Array[Int] =
+        if (cb >= 11) Array(0, 1, 8, 27)
+        else if (cb >= 9) Array(0, 1, 8)
+        else Array(0, 1)
+      def sce(i: Int): Aac.AacIcs = {
+        val ws = Array(0, 2, 1, 3)(i % 4)
+        val short = ws == 2
+        val maxSfb = if (short) 4 else 6 + i % 3
+        val grouping = if (short) (i * 37) % 128 else 0
+        val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
+        val cycleL = Array(1, 3, 5, 7, 9, 11, 6, 0)
+        val cycleS = Array(3, 9, 11, 5)
+        def cb(w: Int): Int =
+          if (short) cycleS((i + w) % 4) else cycleL((i + w) % 8)
+        val groups = info.groupLens
+        val sections = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.map(w =>
+            Aac.Section(cb(w), w, w + 1)))
+        def dpcmOf(w: Int): Int =
+          if (short) (if (w % 2 == 0) 4 else -4)
+          else 4 * (((i + w) % 3) - 1)
+        val dpcm = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.filter(cb(_) != 0).map(dpcmOf))
+        val counters = scala.collection.mutable.Map[Int, Int]()
+        val spectral = groups.indices.toVector.map { gi =>
+          (0 until maxSfb).toVector.map { w =>
+            if (cb(w) == 0) Vector.empty[Int]
+            else Vector.fill(info.sfbWidth(w, groups(gi))) {
+              val t = counters.getOrElse(w, 0); counters(w) = t + 1
+              val a = mags(cb(w))
+              val m = a((i * 5 + w * 11 + t * 7) % a.length)
+              if (m != 0 && (t + i) % 2 == 1) -m else m
             }
           }
-          val tns = if (!short && i % 2 == 0) Some(Vector(
-            Aac.TnsFilter((i / 2) % 2, (i * 7) % 20, i % 4, i % 2, 0,
-              Vector.tabulate(i % 4)(j =>
-                (i + j * 3) % (1 << ((i / 2) % 2 + 3))))))
-          else None
-          Aac.AacIcs(132 + 4 * (i % 5), info, sections, dpcm, tns,
-            spectral)
         }
-        val adts = AudioIndex.adtsMux((0 until n).map(i =>
-          AudioIndex.AdtsFrame(1, 4, 1, crcPresent = false,
-            Aac.muxSce(sce(i)))))
-        val rec = AudioIndex.adtsDemux(adts)
-        require(rec.size == n, s"chunk $cid: adts frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val (_, ics) = Aac.demuxSce(f.payload)
-          val sfs = ics.scalefactors
-          val sfSum = sfs.flatten.flatten.map(_.toLong).sum
-          val vals = ics.spectral.flatten.flatten
-          val codeSum = vals.map(v => math.abs(v).toLong).sum
-          val escCount = vals.count(v => math.abs(v) >= 16).toLong
-          // requant: sf is per (group, sfb); values pair with their
-          // group's scalefactor
-          val requant = ics.info.groupLens.indices.map { gi =>
-            (0 until ics.info.maxSfb).map { w =>
-              ics.spectral(gi)(w).map(v =>
-                Aac.requantExact(v, sfs(gi)(w).get)).sum
-            }.sum
+        val tns = if (!short && i % 2 == 0) Some(Vector(
+          Aac.TnsFilter((i / 2) % 2, (i * 7) % 20, i % 4, i % 2, 0,
+            Vector.tabulate(i % 4)(j =>
+              (i + j * 3) % (1 << ((i / 2) % 2 + 3))))))
+        else None
+        Aac.AacIcs(132 + 4 * (i % 5), info, sections, dpcm, tns,
+          spectral)
+      }
+      val adts = AudioIndex.adtsMux((0 until n).map(i =>
+        AudioIndex.AdtsFrame(1, 4, 1, crcPresent = false,
+          Aac.muxSce(sce(i)))))
+      val rec = AudioIndex.adtsDemux(adts)
+      require(rec.size == n, s"chunk $cid: adts frame count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        val (_, ics) = Aac.demuxSce(f.payload)
+        val sfs = ics.scalefactors
+        val sfSum = sfs.flatten.flatten.map(_.toLong).sum
+        val vals = ics.spectral.flatten.flatten
+        val codeSum = vals.map(v => math.abs(v).toLong).sum
+        val escCount = vals.count(v => math.abs(v) >= 16).toLong
+        // requant: sf is per (group, sfb); values pair with their
+        // group's scalefactor
+        val requant = ics.info.groupLens.indices.map { gi =>
+          (0 until ics.info.maxSfb).map { w =>
+            ics.spectral(gi)(w).map(v =>
+              Aac.requantExact(v, sfs(gi)(w).get)).sum
           }.sum
-          val tnsOrder = ics.tns.map(_.map(_.order.toLong).sum)
-            .getOrElse(0L)
-          (cid, i.toLong, off, ics.info.windowSequence.toLong,
-            ics.info.groupLens.length.toLong,
-            ics.info.maxSfb.toLong, f.payload.length.toLong,
-            sfSum, tnsOrder, codeSum, escCount, requant)
-        }
+        }.sum
+        val tnsOrder = ics.tns.map(_.map(_.order.toLong).sum)
+          .getOrElse(0L)
+        (cid, i.toLong, off, ics.info.windowSequence.toLong,
+          ics.info.groupLens.length.toLong,
+          ics.info.maxSfb.toLong, f.payload.length.toLong,
+          sfSum, tnsOrder, codeSum, escCount, requant)
       }
     }.toDF("chunk_id", "i", "offset", "window_seq", "num_groups",
         "max_sfb", "payload_bytes", "sf_sum", "tns_order", "code_sum",
@@ -2471,9 +2393,7 @@ object DspQueries {
   }
 
   private val p25Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i,
       |    list_extract([0, 2, 1, 3], CAST(g.i % 4 + 1 AS INT)) AS ws,
       |    g.i % 4 = 1 AS short,
@@ -2593,100 +2513,94 @@ object DspQueries {
   private def p26(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Aac, AudioIndex}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        def mags(cb: Int): Array[Int] =
-          if (cb >= 11) Array(0, 1, 8, 27)
-          else if (cb >= 9) Array(0, 1, 8)
-          else Array(0, 1)
-        def ics(i: Int, ch: Int): Aac.AacIcs = {
-          val ws = Array(0, 2, 1, 3)(i % 4)
-          val short = ws == 2
-          val maxSfb = if (short) 4 else 6 + i % 3
-          val grouping = if (short) (i * 37) % 128 else 0
-          val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
-          val cycleL = Array(1, 3, 5, 7, 9, 11, 6, 0)
-          val cycleS = Array(3, 9, 11, 5)
-          def cb(w: Int): Int =
-            if (short) cycleS((i + w + ch) % 4)
-            else cycleL((i + w + ch) % 8)
-          val groups = info.groupLens
-          val sections = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.map(w =>
-              Aac.Section(cb(w), w, w + 1)))
-          def dpcmOf(w: Int): Int =
-            if (short) (if (w % 2 == 0) 4 else -4)
-            else 4 * (((i + w + ch) % 3) - 1)
-          val dpcm = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.filter(cb(_) != 0).map(dpcmOf))
-          val counters = scala.collection.mutable.Map[Int, Int]()
-          val spectral = groups.indices.toVector.map { gi =>
-            (0 until maxSfb).toVector.map { w =>
-              if (cb(w) == 0) Vector.empty[Int]
-              else Vector.fill(info.sfbWidth(w, groups(gi))) {
-                val t = counters.getOrElse(w, 0); counters(w) = t + 1
-                val a = mags(cb(w))
-                val m = a((i * 5 + w * 11 + t * 7 + ch * 13) % a.length)
-                if (m != 0 && (t + i + ch) % 2 == 1) -m else m
-              }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      def mags(cb: Int): Array[Int] =
+        if (cb >= 11) Array(0, 1, 8, 27)
+        else if (cb >= 9) Array(0, 1, 8)
+        else Array(0, 1)
+      def ics(i: Int, ch: Int): Aac.AacIcs = {
+        val ws = Array(0, 2, 1, 3)(i % 4)
+        val short = ws == 2
+        val maxSfb = if (short) 4 else 6 + i % 3
+        val grouping = if (short) (i * 37) % 128 else 0
+        val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
+        val cycleL = Array(1, 3, 5, 7, 9, 11, 6, 0)
+        val cycleS = Array(3, 9, 11, 5)
+        def cb(w: Int): Int =
+          if (short) cycleS((i + w + ch) % 4)
+          else cycleL((i + w + ch) % 8)
+        val groups = info.groupLens
+        val sections = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.map(w =>
+            Aac.Section(cb(w), w, w + 1)))
+        def dpcmOf(w: Int): Int =
+          if (short) (if (w % 2 == 0) 4 else -4)
+          else 4 * (((i + w + ch) % 3) - 1)
+        val dpcm = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.filter(cb(_) != 0).map(dpcmOf))
+        val counters = scala.collection.mutable.Map[Int, Int]()
+        val spectral = groups.indices.toVector.map { gi =>
+          (0 until maxSfb).toVector.map { w =>
+            if (cb(w) == 0) Vector.empty[Int]
+            else Vector.fill(info.sfbWidth(w, groups(gi))) {
+              val t = counters.getOrElse(w, 0); counters(w) = t + 1
+              val a = mags(cb(w))
+              val m = a((i * 5 + w * 11 + t * 7 + ch * 13) % a.length)
+              if (m != 0 && (t + i + ch) % 2 == 1) -m else m
             }
           }
-          Aac.AacIcs(132 + 4 * ((i + ch) % 5), info, sections, dpcm,
-            None, spectral)
         }
-        val adts = AudioIndex.adtsMux((0 until n).map { i =>
-          val l = ics(i, 0); val r = ics(i, 1)
-          val msp = i % 3
-          val ms = if (msp == 1) l.info.groupLens.indices.toVector.map(
-            _ => Vector.tabulate(l.info.maxSfb)(w => (i + w) % 2 == 0))
-          else Vector.empty[Vector[Boolean]]
-          AudioIndex.AdtsFrame(1, 4, 2, crcPresent = false,
-            Aac.muxCpe(l, r, ms, msp))
-        })
-        val rec = AudioIndex.adtsDemux(adts)
-        require(rec.size == n, s"chunk $cid: adts frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val (_, l, r, msp, msUsed) = Aac.demuxCpe(f.payload)
-          def xrs(g: Aac.AacIcs): Vector[Vector[Vector[Long]]] = {
-            val sfs = g.scalefactors
-            g.info.groupLens.indices.toVector.map { gi =>
-              (0 until g.info.maxSfb).toVector.map { w =>
-                g.spectral(gi)(w).map(v =>
-                  Aac.requantExact(v, sfs(gi)(w).get))
-              }
+        Aac.AacIcs(132 + 4 * ((i + ch) % 5), info, sections, dpcm,
+          None, spectral)
+      }
+      val adts = AudioIndex.adtsMux((0 until n).map { i =>
+        val l = ics(i, 0); val r = ics(i, 1)
+        val msp = i % 3
+        val ms = if (msp == 1) l.info.groupLens.indices.toVector.map(
+          _ => Vector.tabulate(l.info.maxSfb)(w => (i + w) % 2 == 0))
+        else Vector.empty[Vector[Boolean]]
+        AudioIndex.AdtsFrame(1, 4, 2, crcPresent = false,
+          Aac.muxCpe(l, r, ms, msp))
+      })
+      val rec = AudioIndex.adtsDemux(adts)
+      require(rec.size == n, s"chunk $cid: adts frame count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        val (_, l, r, msp, msUsed) = Aac.demuxCpe(f.payload)
+        def xrs(g: Aac.AacIcs): Vector[Vector[Vector[Long]]] = {
+          val sfs = g.scalefactors
+          g.info.groupLens.indices.toVector.map { gi =>
+            (0 until g.info.maxSfb).toVector.map { w =>
+              g.spectral(gi)(w).map(v =>
+                Aac.requantExact(v, sfs(gi)(w).get))
             }
           }
-          val xl = xrs(l); val xr = xrs(r)
-          def sel(w: Int): Boolean = msp match {
-            case 2 => true
-            case 1 => msUsed.head(w)
-            case _ => false
-          }
-          val msAbs = l.info.groupLens.indices.map { gi =>
-            (0 until l.info.maxSfb).withFilter(sel).map { w =>
-              val width = l.info.sfbWidth(w, l.info.groupLens(gi))
-              (0 until width).map { k =>
-                val m = xl(gi)(w).lift(k).getOrElse(0L)
-                val s2 = xr(gi)(w).lift(k).getOrElse(0L)
-                val (a, b) = Aac.msReconstruct(m, s2)
-                math.abs(a) + math.abs(b)
-              }.sum
+        }
+        val xl = xrs(l); val xr = xrs(r)
+        def sel(w: Int): Boolean = msp match {
+          case 2 => true
+          case 1 => msUsed.head(w)
+          case _ => false
+        }
+        val msAbs = l.info.groupLens.indices.map { gi =>
+          (0 until l.info.maxSfb).withFilter(sel).map { w =>
+            val width = l.info.sfbWidth(w, l.info.groupLens(gi))
+            (0 until width).map { k =>
+              val m = xl(gi)(w).lift(k).getOrElse(0L)
+              val s2 = xr(gi)(w).lift(k).getOrElse(0L)
+              val (a, b) = Aac.msReconstruct(m, s2)
+              math.abs(a) + math.abs(b)
             }.sum
           }.sum
-          def codeSum(g: Aac.AacIcs): Long =
-            g.spectral.flatten.flatten.map(v => math.abs(v).toLong).sum
-          def sfSum(g: Aac.AacIcs): Long =
-            g.scalefactors.flatten.flatten.map(_.toLong).sum
-          (cid, i.toLong, off, l.info.windowSequence.toLong,
-            l.info.groupLens.length.toLong, l.info.maxSfb.toLong,
-            msp.toLong, f.payload.length.toLong,
-            sfSum(l), sfSum(r), codeSum(l), codeSum(r), msAbs)
-        }
+        }.sum
+        def codeSum(g: Aac.AacIcs): Long =
+          g.spectral.flatten.flatten.map(v => math.abs(v).toLong).sum
+        def sfSum(g: Aac.AacIcs): Long =
+          g.scalefactors.flatten.flatten.map(_.toLong).sum
+        (cid, i.toLong, off, l.info.windowSequence.toLong,
+          l.info.groupLens.length.toLong, l.info.maxSfb.toLong,
+          msp.toLong, f.payload.length.toLong,
+          sfSum(l), sfSum(r), codeSum(l), codeSum(r), msAbs)
       }
     }.toDF("chunk_id", "i", "offset", "window_seq", "num_groups",
         "max_sfb", "ms_mask", "payload_bytes", "sf_sum0", "sf_sum1",
@@ -2695,9 +2609,7 @@ object DspQueries {
   }
 
   private val p26Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i,
       |    list_extract([0, 2, 1, 3], CAST(g.i % 4 + 1 AS INT)) AS ws,
       |    g.i % 4 = 1 AS short,
@@ -2837,96 +2749,90 @@ object DspQueries {
   private def p27(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Aac, AudioIndex}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val cycleL = Array(3, 9, 11, 7, 9, 11)
-        val cycleR = Array(9, 11, 3)
-        def mags(cb: Int): Array[Int] =
-          if (cb >= 11) Array(0, 1, 8, 27)
-          else if (cb >= 9) Array(0, 1, 8)
-          else Array(0, 1)
-        def mkIcs(i: Int, ch: Int): Aac.AacIcs = {
-          val ws = Array(0, 2, 1, 3)(i % 4)
-          val short = ws == 2
-          val maxSfb = if (short) 4 else 6 + i % 3
-          val grouping = if (short) (i * 37) % 128 else 0
-          val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
-          def cb(w: Int): Int =
-            if (ch == 0) cycleL((i + w) % 6)
-            else if (w % 2 == 0) cycleR((i + w) % 3)
-            else if ((i + w) % 4 < 2) 15
-            else 14
-          val groups = info.groupLens
-          val sections = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.map(w =>
-              Aac.Section(cb(w), w, w + 1)))
-          // one dpcm stream, two accumulators: spectral slots ±4 by
-          // even/odd w (left) or by (w/2) parity (right, both classes)
-          def dpcmOf(w: Int): Int =
-            if (ch == 0) (if (w % 2 == 0) 4 else -4)
-            else (if ((w / 2) % 2 == 0) 4 else -4)
-          val dpcm = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.map(dpcmOf))
-          val counters = scala.collection.mutable.Map[Int, Int]()
-          val spectral = groups.indices.toVector.map { gi =>
-            (0 until maxSfb).toVector.map { w =>
-              if (ch == 1 && w % 2 == 1) Vector.empty[Int]
-              else Vector.fill(info.sfbWidth(w, groups(gi))) {
-                val t = counters.getOrElse(w, 0); counters(w) = t + 1
-                val a = mags(cb(w))
-                val m = a((i * 5 + w * 11 + t * 7 + ch * 13) % a.length)
-                if (m != 0 && (t + i + ch) % 2 == 1) -m else m
-              }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val cycleL = Array(3, 9, 11, 7, 9, 11)
+      val cycleR = Array(9, 11, 3)
+      def mags(cb: Int): Array[Int] =
+        if (cb >= 11) Array(0, 1, 8, 27)
+        else if (cb >= 9) Array(0, 1, 8)
+        else Array(0, 1)
+      def mkIcs(i: Int, ch: Int): Aac.AacIcs = {
+        val ws = Array(0, 2, 1, 3)(i % 4)
+        val short = ws == 2
+        val maxSfb = if (short) 4 else 6 + i % 3
+        val grouping = if (short) (i * 37) % 128 else 0
+        val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
+        def cb(w: Int): Int =
+          if (ch == 0) cycleL((i + w) % 6)
+          else if (w % 2 == 0) cycleR((i + w) % 3)
+          else if ((i + w) % 4 < 2) 15
+          else 14
+        val groups = info.groupLens
+        val sections = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.map(w =>
+            Aac.Section(cb(w), w, w + 1)))
+        // one dpcm stream, two accumulators: spectral slots ±4 by
+        // even/odd w (left) or by (w/2) parity (right, both classes)
+        def dpcmOf(w: Int): Int =
+          if (ch == 0) (if (w % 2 == 0) 4 else -4)
+          else (if ((w / 2) % 2 == 0) 4 else -4)
+        val dpcm = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.map(dpcmOf))
+        val counters = scala.collection.mutable.Map[Int, Int]()
+        val spectral = groups.indices.toVector.map { gi =>
+          (0 until maxSfb).toVector.map { w =>
+            if (ch == 1 && w % 2 == 1) Vector.empty[Int]
+            else Vector.fill(info.sfbWidth(w, groups(gi))) {
+              val t = counters.getOrElse(w, 0); counters(w) = t + 1
+              val a = mags(cb(w))
+              val m = a((i * 5 + w * 11 + t * 7 + ch * 13) % a.length)
+              if (m != 0 && (t + i + ch) % 2 == 1) -m else m
             }
           }
-          Aac.AacIcs(
-            if (ch == 0) 132 + 4 * (i % 5) else 136 + 4 * ((i + 1) % 5),
-            info, sections, dpcm, None, spectral)
         }
-        val adts = AudioIndex.adtsMux((0 until n).map { i =>
-          val l = mkIcs(i, 0); val r = mkIcs(i, 1)
-          val msp = i % 3
-          val ms = if (msp == 1) l.info.groupLens.indices.toVector.map(
-            _ => Vector.tabulate(l.info.maxSfb)(w => (i + w) % 2 == 0))
-          else Vector.empty[Vector[Boolean]]
-          AudioIndex.AdtsFrame(1, 4, 2, crcPresent = false,
-            Aac.muxCpe(l, r, ms, msp))
-        })
-        val rec = AudioIndex.adtsDemux(adts)
-        require(rec.size == n, s"chunk $cid: adts frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val (_, l, r, msp, msUsed) = Aac.demuxCpe(f.payload)
-          val sfsL = l.scalefactors
-          val sfsR = r.scalefactors
-          val isSfbs = (0 until r.info.maxSfb)
-            .filter(w => r.cbOf(0, w) >= 14)
-          val outPhase = isSfbs.count(w => r.cbOf(0, w) == 14).toLong
-          val isPosSum = r.info.groupLens.indices.map { gi =>
-            isSfbs.map(w => sfsR(gi)(w).get.toLong).sum
-          }.sum
-          val intensitySum = l.info.groupLens.indices.map { gi =>
-            isSfbs.map { w =>
-              val inPhase = r.cbOf(gi, w) == 15
-              val invert = msp == 1 && msUsed(gi)(w)
-              l.spectral(gi)(w).map { v =>
-                val xl = Aac.requantExact(v, sfsL(gi)(w).get)
-                Aac.intensityExact(xl, sfsR(gi)(w).get, inPhase, invert)
-              }.sum
+        Aac.AacIcs(
+          if (ch == 0) 132 + 4 * (i % 5) else 136 + 4 * ((i + 1) % 5),
+          info, sections, dpcm, None, spectral)
+      }
+      val adts = AudioIndex.adtsMux((0 until n).map { i =>
+        val l = mkIcs(i, 0); val r = mkIcs(i, 1)
+        val msp = i % 3
+        val ms = if (msp == 1) l.info.groupLens.indices.toVector.map(
+          _ => Vector.tabulate(l.info.maxSfb)(w => (i + w) % 2 == 0))
+        else Vector.empty[Vector[Boolean]]
+        AudioIndex.AdtsFrame(1, 4, 2, crcPresent = false,
+          Aac.muxCpe(l, r, ms, msp))
+      })
+      val rec = AudioIndex.adtsDemux(adts)
+      require(rec.size == n, s"chunk $cid: adts frame count drift")
+      rec.iterator.zipWithIndex.map { case ((_, f), i) =>
+        val (_, l, r, msp, msUsed) = Aac.demuxCpe(f.payload)
+        val sfsL = l.scalefactors
+        val sfsR = r.scalefactors
+        val isSfbs = (0 until r.info.maxSfb)
+          .filter(w => r.cbOf(0, w) >= 14)
+        val outPhase = isSfbs.count(w => r.cbOf(0, w) == 14).toLong
+        val isPosSum = r.info.groupLens.indices.map { gi =>
+          isSfbs.map(w => sfsR(gi)(w).get.toLong).sum
+        }.sum
+        val intensitySum = l.info.groupLens.indices.map { gi =>
+          isSfbs.map { w =>
+            val inPhase = r.cbOf(gi, w) == 15
+            val invert = msp == 1 && msUsed(gi)(w)
+            l.spectral(gi)(w).map { v =>
+              val xl = Aac.requantExact(v, sfsL(gi)(w).get)
+              Aac.intensityExact(xl, sfsR(gi)(w).get, inPhase, invert)
             }.sum
           }.sum
-          def codeSum(g: Aac.AacIcs): Long =
-            g.spectral.flatten.flatten.map(v => math.abs(v).toLong).sum
-          (cid, i.toLong, l.info.windowSequence.toLong,
-            l.info.groupLens.length.toLong, l.info.maxSfb.toLong,
-            msp.toLong, f.payload.length.toLong,
-            isSfbs.size.toLong, outPhase, isPosSum,
-            codeSum(l), codeSum(r), intensitySum)
-        }
+        }.sum
+        def codeSum(g: Aac.AacIcs): Long =
+          g.spectral.flatten.flatten.map(v => math.abs(v).toLong).sum
+        (cid, i.toLong, l.info.windowSequence.toLong,
+          l.info.groupLens.length.toLong, l.info.maxSfb.toLong,
+          msp.toLong, f.payload.length.toLong,
+          isSfbs.size.toLong, outPhase, isPosSum,
+          codeSum(l), codeSum(r), intensitySum)
       }
     }.toDF("chunk_id", "i", "window_seq", "num_groups", "max_sfb",
         "ms_mask", "payload_bytes", "is_count", "out_phase",
@@ -2935,9 +2841,7 @@ object DspQueries {
   }
 
   private val p27Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i,
       |    list_extract([0, 2, 1, 3], CAST(g.i % 4 + 1 AS INT)) AS ws,
       |    g.i % 4 = 1 AS short,
@@ -3070,90 +2974,84 @@ object DspQueries {
   private def p28(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Aac, AudioIndex}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        def mkIcs(i: Int): Aac.AacIcs = {
-          val ws = Array(0, 2, 1, 3)(i % 4)
-          val short = ws == 2
-          val maxSfb = if (short) 4 else 6 + i % 3
-          val grouping = if (short) (i * 37) % 128 else 0
-          val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
-          def cb(w: Int): Int = (i + w) % 3 match {
-            case 0 => 13
-            case 1 => 9
-            case _ => 11
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      def mkIcs(i: Int): Aac.AacIcs = {
+        val ws = Array(0, 2, 1, 3)(i % 4)
+        val short = ws == 2
+        val maxSfb = if (short) 4 else 6 + i % 3
+        val grouping = if (short) (i * 37) % 128 else 0
+        val info = Aac.IcsInfo(ws, i % 2, maxSfb, grouping)
+        def cb(w: Int): Int = (i + w) % 3 match {
+          case 0 => 13
+          case 1 => 9
+          case _ => 11
+        }
+        val groups = info.groupLens
+        val sections = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.map(w =>
+            Aac.Section(cb(w), w, w + 1)))
+        // long: ±4 alternating per CLASS position; short: all 0
+        // (group invariance — the accumulators cross groups)
+        def dpcmOf(w: Int): Int =
+          if (short) 0
+          else {
+            val r = (3 - i % 3) % 3 // noise residue: (i+w)%3 == 0
+            val pos =
+              if (cb(w) == 13) (w - r) / 3
+              else w - (if (w >= r) (w - r) / 3 + 1 else 0)
+            if (pos % 2 == 0) 4 else -4
           }
-          val groups = info.groupLens
-          val sections = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.map(w =>
-              Aac.Section(cb(w), w, w + 1)))
-          // long: ±4 alternating per CLASS position; short: all 0
-          // (group invariance — the accumulators cross groups)
-          def dpcmOf(w: Int): Int =
-            if (short) 0
-            else {
-              val r = (3 - i % 3) % 3 // noise residue: (i+w)%3 == 0
-              val pos =
-                if (cb(w) == 13) (w - r) / 3
-                else w - (if (w >= r) (w - r) / 3 + 1 else 0)
-              if (pos % 2 == 0) 4 else -4
-            }
-          val dpcm = groups.indices.toVector.map(_ =>
-            (0 until maxSfb).toVector.map(dpcmOf))
-          val counters = scala.collection.mutable.Map[Int, Int]()
-          def mags(c: Int) = if (c >= 11) Array(0, 1, 8, 27)
-            else Array(0, 1, 8)
-          val spectral = groups.indices.toVector.map { gi =>
-            (0 until maxSfb).toVector.map { w =>
-              if (cb(w) == 13) Vector.empty[Int]
-              else Vector.fill(info.sfbWidth(w, groups(gi))) {
-                val t = counters.getOrElse(w, 0); counters(w) = t + 1
-                val a = mags(cb(w))
-                val m = a((i * 5 + w * 11 + t * 7) % a.length)
-                if (m != 0 && (t + i) % 2 == 1) -m else m
-              }
+        val dpcm = groups.indices.toVector.map(_ =>
+          (0 until maxSfb).toVector.map(dpcmOf))
+        val counters = scala.collection.mutable.Map[Int, Int]()
+        def mags(c: Int) = if (c >= 11) Array(0, 1, 8, 27)
+          else Array(0, 1, 8)
+        val spectral = groups.indices.toVector.map { gi =>
+          (0 until maxSfb).toVector.map { w =>
+            if (cb(w) == 13) Vector.empty[Int]
+            else Vector.fill(info.sfbWidth(w, groups(gi))) {
+              val t = counters.getOrElse(w, 0); counters(w) = t + 1
+              val a = mags(cb(w))
+              val m = a((i * 5 + w * 11 + t * 7) % a.length)
+              if (m != 0 && (t + i) % 2 == 1) -m else m
             }
           }
-          Aac.AacIcs(194 + 4 * (i % 5), info, sections, dpcm, None,
-            spectral)
         }
-        val adts = AudioIndex.adtsMux((0 until n).map(i =>
-          AudioIndex.AdtsFrame(1, 4, 1, crcPresent = false,
-            Aac.muxSce(mkIcs(i)))))
-        val rec = AudioIndex.adtsDemux(adts)
-        require(rec.size == n, s"chunk $cid: adts frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val (_, ics) = Aac.demuxSce(f.payload)
-          val sfs = ics.scalefactors
-          val groups = ics.info.groupLens
-          val noiseSfbs = (0 until ics.info.maxSfb)
-            .filter(w => ics.cbOf(0, w) == 13)
-          val nrgSum = groups.indices.map { gi =>
-            noiseSfbs.map(w => sfs(gi)(w).get.toLong).sum
+        Aac.AacIcs(194 + 4 * (i % 5), info, sections, dpcm, None,
+          spectral)
+      }
+      val adts = AudioIndex.adtsMux((0 until n).map(i =>
+        AudioIndex.AdtsFrame(1, 4, 1, crcPresent = false,
+          Aac.muxSce(mkIcs(i)))))
+      val rec = AudioIndex.adtsDemux(adts)
+      require(rec.size == n, s"chunk $cid: adts frame count drift")
+      rec.iterator.zipWithIndex.map { case ((_, f), i) =>
+        val (_, ics) = Aac.demuxSce(f.payload)
+        val sfs = ics.scalefactors
+        val groups = ics.info.groupLens
+        val noiseSfbs = (0 until ics.info.maxSfb)
+          .filter(w => ics.cbOf(0, w) == 13)
+        val nrgSum = groups.indices.map { gi =>
+          noiseSfbs.map(w => sfs(gi)(w).get.toLong).sum
+        }.sum
+        val sfSum = groups.indices.map { gi =>
+          (0 until ics.info.maxSfb)
+            .filter(w => ics.cbOf(gi, w) != 13)
+            .map(w => sfs(gi)(w).get.toLong).sum
+        }.sum
+        val noiseAbs = groups.indices.map { gi =>
+          noiseSfbs.map { w =>
+            Aac.pnsStandIn(ics.info.sfbWidth(w, groups(gi)),
+              sfs(gi)(w).get).map(math.abs).sum
           }.sum
-          val sfSum = groups.indices.map { gi =>
-            (0 until ics.info.maxSfb)
-              .filter(w => ics.cbOf(gi, w) != 13)
-              .map(w => sfs(gi)(w).get.toLong).sum
-          }.sum
-          val noiseAbs = groups.indices.map { gi =>
-            noiseSfbs.map { w =>
-              Aac.pnsStandIn(ics.info.sfbWidth(w, groups(gi)),
-                sfs(gi)(w).get).map(math.abs).sum
-            }.sum
-          }.sum
-          val codeSum = ics.spectral.flatten.flatten
-            .map(v => math.abs(v).toLong).sum
-          (cid, i.toLong, ics.info.windowSequence.toLong,
-            groups.length.toLong, ics.info.maxSfb.toLong,
-            f.payload.length.toLong, noiseSfbs.size.toLong,
-            nrgSum, sfSum, noiseAbs, codeSum)
-        }
+        }.sum
+        val codeSum = ics.spectral.flatten.flatten
+          .map(v => math.abs(v).toLong).sum
+        (cid, i.toLong, ics.info.windowSequence.toLong,
+          groups.length.toLong, ics.info.maxSfb.toLong,
+          f.payload.length.toLong, noiseSfbs.size.toLong,
+          nrgSum, sfSum, noiseAbs, codeSum)
       }
     }.toDF("chunk_id", "i", "window_seq", "num_groups", "max_sfb",
         "payload_bytes", "noise_count", "nrg_sum", "sf_sum",
@@ -3162,9 +3060,7 @@ object DspQueries {
   }
 
   private val p28Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i,
       |    list_extract([0, 2, 1, 3], CAST(g.i % 4 + 1 AS INT)) AS ws,
       |    g.i % 4 = 1 AS short,
@@ -3261,47 +3157,41 @@ object DspQueries {
   private def p29(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp2
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val modes = Vector((0, 0), (1, 0), (1, 2), (2, 0))
-        def mkFrame(i: Int): Mp2.Mp2StereoFrame = {
-          val (mode, ext) = modes(i % 4)
-          val bound = if (mode == 1) 4 + 4 * ext else Mp2.Sblimit
-          val subs = Array.tabulate(2, Mp2.Sblimit) { (ch, sb) =>
-            val chEff = if (sb < bound) ch else 0
-            val q = (i * 3 + sb * 5 + chEff * 7) % 9
-            if (q == 0) Mp2.Mp2Sub(0, 0, Array.empty, Array.empty)
-            else {
-              val scfsi = (i + sb + ch) % 4
-              Mp2.Mp2Sub(q, scfsi,
-                Array.tabulate(Mp2.nsfStored(scfsi))(j =>
-                  (i + sb * 3 + ch * 5 + j * 7) % 63),
-                Array.tabulate(36)(k =>
-                  (i * 7 + sb * 11 + chEff * 13 + k * 3) % Mp2.Levels(q)))
-            }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val modes = Vector((0, 0), (1, 0), (1, 2), (2, 0))
+      def mkFrame(i: Int): Mp2.Mp2StereoFrame = {
+        val (mode, ext) = modes(i % 4)
+        val bound = if (mode == 1) 4 + 4 * ext else Mp2.Sblimit
+        val subs = Array.tabulate(2, Mp2.Sblimit) { (ch, sb) =>
+          val chEff = if (sb < bound) ch else 0
+          val q = (i * 3 + sb * 5 + chEff * 7) % 9
+          if (q == 0) Mp2.Mp2Sub(0, 0, Array.empty, Array.empty)
+          else {
+            val scfsi = (i + sb + ch) % 4
+            Mp2.Mp2Sub(q, scfsi,
+              Array.tabulate(Mp2.nsfStored(scfsi))(j =>
+                (i + sb * 3 + ch * 5 + j * 7) % 63),
+              Array.tabulate(36)(k =>
+                (i * 7 + sb * 11 + chEff * 13 + k * 3) % Mp2.Levels(q)))
           }
-          Mp2.Mp2StereoFrame(14, 2, padding = i % 2 == 1, mode, ext, subs)
         }
-        val frames = (0 until n).map(mkFrame)
-        val rec = Mp2.demuxStereo(Mp2.muxStereo(frames))
-        require(rec.size == n, s"chunk $cid: mp2 stereo count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          def allocCount(ch: Int): Long =
-            f.subs(ch).count(_.q > 0).toLong
-          def sfSum(ch: Int): Long =
-            f.subs(ch).flatMap(_.sf).map(_.toLong).sum
-          def codeSum(ch: Int): Long =
-            f.subs(ch).flatMap(_.samples).map(_.toLong).sum
-          (cid, i.toLong, off, f.mode.toLong, f.modeExt.toLong,
-            f.bound.toLong, f.bodyBits.toLong,
-            allocCount(0), allocCount(1), sfSum(0), sfSum(1),
-            codeSum(0), codeSum(1))
-        }
+        Mp2.Mp2StereoFrame(14, 2, padding = i % 2 == 1, mode, ext, subs)
+      }
+      val frames = (0 until n).map(mkFrame)
+      val rec = Mp2.demuxStereo(Mp2.muxStereo(frames))
+      require(rec.size == n, s"chunk $cid: mp2 stereo count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        def allocCount(ch: Int): Long =
+          f.subs(ch).count(_.q > 0).toLong
+        def sfSum(ch: Int): Long =
+          f.subs(ch).flatMap(_.sf).map(_.toLong).sum
+        def codeSum(ch: Int): Long =
+          f.subs(ch).flatMap(_.samples).map(_.toLong).sum
+        (cid, i.toLong, off, f.mode.toLong, f.modeExt.toLong,
+          f.bound.toLong, f.bodyBits.toLong,
+          allocCount(0), allocCount(1), sfSum(0), sfSum(1),
+          codeSum(0), codeSum(1))
       }
     }.toDF("chunk_id", "i", "offset", "mode", "mode_ext", "bound",
         "body_bits", "alloc0", "alloc1", "sf_sum0", "sf_sum1",
@@ -3310,9 +3200,7 @@ object DspQueries {
   }
 
   private val p29Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i,
       |    list_extract([0, 1, 1, 2], CAST(g.i % 4 + 1 AS INT)) AS mode,
       |    list_extract([0, 0, 2, 0], CAST(g.i % 4 + 1 AS INT)) AS ext,
@@ -3401,42 +3289,36 @@ object DspQueries {
   private def p30(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Mp2
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(10, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val modes = Vector((0, 0), (1, 0), (1, 2), (2, 0))
-        def mkFrame(i: Int): Mp2.Mp1StereoFrame = {
-          val (mode, ext) = modes(i % 4)
-          val bound = if (mode == 1) 4 + 4 * ext else 32
-          val subs = Array.tabulate(2, 32) { (ch, sb) =>
-            val chEff = if (sb < bound) ch else 0
-            val a = (i * 3 + sb * 3 + chEff * 7) % 5
-            if (a == 0) Mp2.Mp1Sub(0, 0, Array.empty)
-            else Mp2.Mp1Sub(a, (i + sb * 3 + ch * 5) % 63,
-              Array.tabulate(12)(k =>
-                (i * 7 + sb * 11 + chEff * 13 + k * 3) %
-                  ((1 << (a + 1)) - 1)))
-          }
-          Mp2.Mp1StereoFrame(14, 2, padding = i % 2 == 1, mode, ext,
-            subs)
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(10, count)
+      val modes = Vector((0, 0), (1, 0), (1, 2), (2, 0))
+      def mkFrame(i: Int): Mp2.Mp1StereoFrame = {
+        val (mode, ext) = modes(i % 4)
+        val bound = if (mode == 1) 4 + 4 * ext else 32
+        val subs = Array.tabulate(2, 32) { (ch, sb) =>
+          val chEff = if (sb < bound) ch else 0
+          val a = (i * 3 + sb * 3 + chEff * 7) % 5
+          if (a == 0) Mp2.Mp1Sub(0, 0, Array.empty)
+          else Mp2.Mp1Sub(a, (i + sb * 3 + ch * 5) % 63,
+            Array.tabulate(12)(k =>
+              (i * 7 + sb * 11 + chEff * 13 + k * 3) %
+                ((1 << (a + 1)) - 1)))
         }
-        val frames = (0 until n).map(mkFrame)
-        val rec = Mp2.demuxL1Stereo(Mp2.muxL1Stereo(frames))
-        require(rec.size == n, s"chunk $cid: mp1 stereo count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          (cid, i.toLong, off, f.mode.toLong, f.modeExt.toLong,
-            f.bound.toLong, f.bodyBits.toLong,
-            f.subs(0).count(_.a > 0).toLong,
-            f.subs(1).count(_.a > 0).toLong,
-            f.subs(0).map(_.sf.toLong).sum,
-            f.subs(1).map(_.sf.toLong).sum,
-            f.subs(0).flatMap(_.samples).map(_.toLong).sum,
-            f.subs(1).flatMap(_.samples).map(_.toLong).sum)
-        }
+        Mp2.Mp1StereoFrame(14, 2, padding = i % 2 == 1, mode, ext,
+          subs)
+      }
+      val frames = (0 until n).map(mkFrame)
+      val rec = Mp2.demuxL1Stereo(Mp2.muxL1Stereo(frames))
+      require(rec.size == n, s"chunk $cid: mp1 stereo count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        (cid, i.toLong, off, f.mode.toLong, f.modeExt.toLong,
+          f.bound.toLong, f.bodyBits.toLong,
+          f.subs(0).count(_.a > 0).toLong,
+          f.subs(1).count(_.a > 0).toLong,
+          f.subs(0).map(_.sf.toLong).sum,
+          f.subs(1).map(_.sf.toLong).sum,
+          f.subs(0).flatMap(_.samples).map(_.toLong).sum,
+          f.subs(1).flatMap(_.samples).map(_.toLong).sum)
       }
     }.toDF("chunk_id", "i", "offset", "mode", "mode_ext", "bound",
         "body_bits", "alloc0", "alloc1", "sf_sum0", "sf_sum1",
@@ -3445,9 +3327,7 @@ object DspQueries {
   }
 
   private val p30Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(10, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(10)}
       |f AS (SELECT chunk_id, g.i,
       |    list_extract([0, 1, 1, 2], CAST(g.i % 4 + 1 AS INT)) AS mode,
       |    list_extract([0, 0, 2, 0], CAST(g.i % 4 + 1 AS INT)) AS ext,
@@ -3581,38 +3461,32 @@ object DspQueries {
   private def p31(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Mp3, Mp3Pcm}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(6, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val frames = (0 until n).map(i =>
-          Mp3PcmFixtures.frame(i + cid.toInt * 7, padding = i % 2 == 1))
-        val rec = Mp3.demux(Mp3.mux(frames))
-        require(rec.size == n, s"chunk $cid: mp3 frame count drift")
-        val hybrid = new Mp3Pcm.Hybrid()
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val perGr = (0 until 2).map { gr =>
-            val g = f.granules(gr)
-            val boundaries = g.blockSplit match {
-              case Some(bs) if bs.blockType == 2 =>
-                if (bs.mixed) 1 else 0
-              case _ => 31
-            }
-            val xa = Mp3Pcm.aliasReduce(Mp3Pcm.dequantGranule(g),
-              boundaries)
-            val pcm = hybrid.granule(g)
-            (xa.iterator.flatten.sum, pcm.sum, pcm(0),
-              f.part23Length(gr), (i + cid.toInt * 7 + gr) % 5)
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(6, count)
+      val frames = (0 until n).map(i =>
+        Mp3PcmFixtures.frame(i + cid.toInt * 7, padding = i % 2 == 1))
+      val rec = Mp3.demux(Mp3.mux(frames))
+      require(rec.size == n, s"chunk $cid: mp3 frame count drift")
+      val hybrid = new Mp3Pcm.Hybrid()
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        val perGr = (0 until 2).map { gr =>
+          val g = f.granules(gr)
+          val boundaries = g.blockSplit match {
+            case Some(bs) if bs.blockType == 2 =>
+              if (bs.mixed) 1 else 0
+            case _ => 31
           }
-          (cid, i.toLong, off,
-            perGr(0)._5.toLong, perGr(1)._5.toLong,
-            perGr(0)._4.toLong, perGr(1)._4.toLong,
-            perGr(0)._1, perGr(1)._1,
-            perGr(0)._2 + perGr(1)._2, perGr(0)._3)
+          val xa = Mp3Pcm.aliasReduce(Mp3Pcm.dequantGranule(g),
+            boundaries)
+          val pcm = hybrid.granule(g)
+          (xa.iterator.flatten.sum, pcm.sum, pcm(0),
+            f.part23Length(gr), (i + cid.toInt * 7 + gr) % 5)
         }
+        (cid, i.toLong, off,
+          perGr(0)._5.toLong, perGr(1)._5.toLong,
+          perGr(0)._4.toLong, perGr(1)._4.toLong,
+          perGr(0)._1, perGr(1)._1,
+          perGr(0)._2 + perGr(1)._2, perGr(0)._3)
       }
     }.toDF("chunk_id", "i", "offset", "regime0", "regime1",
         "part23_0", "part23_1", "xa_sum0", "xa_sum1",
@@ -3663,9 +3537,7 @@ object DspQueries {
     import graft.sources.Mp3Pcm
     val cs = Mp3Pcm.CsQ.mkString("[", ",", "]")
     val ca = Mp3Pcm.CaQ.mkString("[", ",", "]")
-    s"""WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(6)}
       |f AS (SELECT chunk_id, g.i, g.i + chunk_id * 7 AS fi FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |gr AS (SELECT chunk_id, i, fi, gg.gr, (fi + gg.gr) % 5 AS regime,
@@ -3885,31 +3757,25 @@ object DspQueries {
   private def p32(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Aac, AacPcm}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(6, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val frames = (0 until n).map(i =>
-          AacPcmFixtures.sce(i + cid.toInt * 7))
-        val overlap = new AacPcm.Overlap()
-        frames.iterator.zipWithIndex.map { case (ics, i) =>
-          val (tag, rec) = Aac.demuxSce(Aac.muxSce(ics))
-          require(tag == 0 && rec.spectral == ics.spectral,
-            s"chunk $cid frame $i: SCE round-trip drift")
-          val lines = AacPcm.dequantIcs(rec)
-          val out = overlap.frame(lines, rec.info.windowSequence)
-          val sfSum = rec.scalefactors.iterator.flatten.flatten
-            .map(_.toLong).sum
-          (cid, i.toLong, rec.info.windowSequence.toLong,
-            lines.iterator.map(math.abs).sum, sfSum,
-            out.sum,
-            out.iterator.zipWithIndex
-              .map { case (v, j) => if (j % 2 == 1) -v else v }.sum,
-            out(0))
-        }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(6, count)
+      val frames = (0 until n).map(i =>
+        AacPcmFixtures.sce(i + cid.toInt * 7))
+      val overlap = new AacPcm.Overlap()
+      frames.iterator.zipWithIndex.map { case (ics, i) =>
+        val (tag, rec) = Aac.demuxSce(Aac.muxSce(ics))
+        require(tag == 0 && rec.spectral == ics.spectral,
+          s"chunk $cid frame $i: SCE round-trip drift")
+        val lines = AacPcm.dequantIcs(rec)
+        val out = overlap.frame(lines, rec.info.windowSequence)
+        val sfSum = rec.scalefactors.iterator.flatten.flatten
+          .map(_.toLong).sum
+        (cid, i.toLong, rec.info.windowSequence.toLong,
+          lines.iterator.map(math.abs).sum, sfSum,
+          out.sum,
+          out.iterator.zipWithIndex
+            .map { case (v, j) => if (j % 2 == 1) -v else v }.sum,
+          out(0))
       }
     }.toDF("chunk_id", "i", "seq", "spec_sum", "sf_sum",
         "pcm_sum", "pcm_alt", "pcm0")
@@ -3945,9 +3811,7 @@ object DspQueries {
   /** The p32 lattice CTE chain (lines → requant → kernels), shared
     * verbatim with the e58 streaming twin's oracle. */
   private[operators] lazy val p32Lattice: String =
-    s"""WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(6)}
       |f AS (SELECT chunk_id, g.i, g.i + chunk_id * 7 AS fi,
       |    (g.i + chunk_id * 7) % 4 AS seq
       |  FROM c,
@@ -4035,66 +3899,60 @@ object DspQueries {
   private def p33(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Mp3, Mp3Pcm}
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(6, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        val cubes = Array(0, 1, 8)
-        def granule(fi: Int, gr: Int, ch: Int): Mp3.Granule = {
-          val bv = 16 + (fi * 7 + gr * 3 + ch * 5) % 8
-          val pairs = Vector.tabulate(bv) { pi =>
-            def v(s2: Int): Int = {
-              val idx = 2 * pi + s2
-              val m = cubes((fi * 5 + idx * 7 + gr * 11 + ch * 13) % 3)
-              if (m != 0 && (idx + fi + ch) % 2 == 1) -m else m
-            }
-            (v(0), v(1))
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(6, count)
+      val cubes = Array(0, 1, 8)
+      def granule(fi: Int, gr: Int, ch: Int): Mp3.Granule = {
+        val bv = 16 + (fi * 7 + gr * 3 + ch * 5) % 8
+        val pairs = Vector.tabulate(bv) { pi =>
+          def v(s2: Int): Int = {
+            val idx = 2 * pi + s2
+            val m = cubes((fi * 5 + idx * 7 + gr * 11 + ch * 13) % 3)
+            if (m != 0 && (idx + fi + ch) % 2 == 1) -m else m
           }
-          Mp3.Granule(pairs, Vector.empty,
-            210 + 4 * ((fi + gr + ch) % 2), 0, (2, 18, 19), 1, 2,
-            preflag = false, scalefacScale = false,
-            scalefacs = Vector.fill(21)(0))
+          (v(0), v(1))
         }
-        val frames = (0 until n).map { i =>
-          val fi = i + cid.toInt * 7
-          val mode = fi % 2
-          Mp3.Mp3StereoFrame(14, 2, padding = i % 2 == 1, mode,
-            if (mode == 1) 2 else 0,
-            Vector.fill(2)(Vector.fill(4)(false)),
-            Vector.tabulate(2)(gr =>
-              Vector.tabulate(2)(ch => granule(fi, gr, ch))))
+        Mp3.Granule(pairs, Vector.empty,
+          210 + 4 * ((fi + gr + ch) % 2), 0, (2, 18, 19), 1, 2,
+          preflag = false, scalefacScale = false,
+          scalefacs = Vector.fill(21)(0))
+      }
+      val frames = (0 until n).map { i =>
+        val fi = i + cid.toInt * 7
+        val mode = fi % 2
+        Mp3.Mp3StereoFrame(14, 2, padding = i % 2 == 1, mode,
+          if (mode == 1) 2 else 0,
+          Vector.fill(2)(Vector.fill(4)(false)),
+          Vector.tabulate(2)(gr =>
+            Vector.tabulate(2)(ch => granule(fi, gr, ch))))
+      }
+      val rec = Mp3.demuxStereo(Mp3.muxStereo(frames))
+      require(rec.size == n, s"chunk $cid: stereo frame count drift")
+      val hybrids = Array.fill(2)(new Mp3Pcm.Hybrid())
+      rec.iterator.zipWithIndex.map { case ((_, f), i) =>
+        var specL = 0L; var specR = 0L
+        var pcmL = 0L; var pcmR = 0L
+        var pcm0L = 0L; var pcm0R = 0L
+        (0 until 2).foreach { gr =>
+          val x0 = Mp3Pcm.dequantGranule(f.granules(gr)(0))
+          val x1 = Mp3Pcm.dequantGranule(f.granules(gr)(1))
+          val (xl, xr) =
+            if (f.mode == 1 && (f.modeExt & 2) != 0) {
+              val l = Array.tabulate(32, 18)((sb, k) =>
+                x0(sb)(k) + x1(sb)(k))
+              val r = Array.tabulate(32, 18)((sb, k) =>
+                x0(sb)(k) - x1(sb)(k))
+              (l, r)
+            } else (x0, x1)
+          specL += xl.iterator.flatten.map(math.abs).sum
+          specR += xr.iterator.flatten.map(math.abs).sum
+          val outL = hybrids(0).granuleSpectrum(xl, None)
+          val outR = hybrids(1).granuleSpectrum(xr, None)
+          pcmL += outL.sum; pcmR += outR.sum
+          if (gr == 0) { pcm0L = outL(0); pcm0R = outR(0) }
         }
-        val rec = Mp3.demuxStereo(Mp3.muxStereo(frames))
-        require(rec.size == n, s"chunk $cid: stereo frame count drift")
-        val hybrids = Array.fill(2)(new Mp3Pcm.Hybrid())
-        rec.iterator.zipWithIndex.map { case ((_, f), i) =>
-          var specL = 0L; var specR = 0L
-          var pcmL = 0L; var pcmR = 0L
-          var pcm0L = 0L; var pcm0R = 0L
-          (0 until 2).foreach { gr =>
-            val x0 = Mp3Pcm.dequantGranule(f.granules(gr)(0))
-            val x1 = Mp3Pcm.dequantGranule(f.granules(gr)(1))
-            val (xl, xr) =
-              if (f.mode == 1 && (f.modeExt & 2) != 0) {
-                val l = Array.tabulate(32, 18)((sb, k) =>
-                  x0(sb)(k) + x1(sb)(k))
-                val r = Array.tabulate(32, 18)((sb, k) =>
-                  x0(sb)(k) - x1(sb)(k))
-                (l, r)
-              } else (x0, x1)
-            specL += xl.iterator.flatten.map(math.abs).sum
-            specR += xr.iterator.flatten.map(math.abs).sum
-            val outL = hybrids(0).granuleSpectrum(xl, None)
-            val outR = hybrids(1).granuleSpectrum(xr, None)
-            pcmL += outL.sum; pcmR += outR.sum
-            if (gr == 0) { pcm0L = outL(0); pcm0R = outR(0) }
-          }
-          (cid, i.toLong, f.mode.toLong, specL, specR,
-            pcmL, pcmR, pcm0L, pcm0R)
-        }
+        (cid, i.toLong, f.mode.toLong, specL, specR,
+          pcmL, pcmR, pcm0L, pcm0R)
       }
     }.toDF("chunk_id", "i", "mode", "spec_l", "spec_r",
         "pcm_sum_l", "pcm_sum_r", "pcm0_l", "pcm0_r")
@@ -4102,9 +3960,7 @@ object DspQueries {
   }
 
   private val p33Sql =
-    s"""WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(6, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(6)}
       |f AS (SELECT chunk_id, g.i, g.i + chunk_id * 7 AS fi,
       |    (g.i + chunk_id * 7) % 2 AS mode
       |  FROM c,
@@ -4246,62 +4102,56 @@ object DspQueries {
   private def p34(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Ac3
-    val e = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("chunk_id"), col("event_id"))
-      .as[(Long, Long)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, it: Iterator[(Long, Long)]) =>
-      val n = math.min(8, it.size)
-      if (n < 1) Iterator.empty
-      else {
-        def frame(fi: Int): Ac3.Ac3Frame = {
-          val acmod = fi % 8
-          val hasC = (acmod & 1) == 1 && acmod != 1
-          val hasS = acmod >= 4
-          val bsi = Ac3.Bsi(
-            bsmod = fi % 8, acmod = acmod,
-            cmixlev = if (hasC) fi % 3 else 0,
-            surmixlev = if (hasS) (fi + 1) % 3 else 0,
-            dsurmod = if (acmod == 2) fi % 3 else 0,
-            lfeon = fi % 2 == 1,
-            dialnorm = (fi * 7) % 32,
-            compr = if (fi % 3 == 0) Some((fi * 11) % 256) else None,
-            langcod = if (fi % 4 == 1) Some((fi * 13) % 256) else None,
-            audprod = if (fi % 5 == 2) Some(((fi * 3) % 32, fi % 3))
-              else None,
-            dialnorm2 = if (acmod == 0) (fi * 5 + 3) % 32 else 0,
-            copyrightb = fi % 2 == 0, origbs = fi % 3 == 1,
-            timecod1 = if (fi % 2 == 0) Some((fi * 97) % 16384) else None,
-            timecod2 = if (fi % 5 == 0) Some((fi * 53) % 16384) else None,
-            addbsi = if (fi % 4 == 3)
-              Array.tabulate(1 + fi % 5)(k => ((fi + k * 9) % 251).toByte)
-            else Array.empty)
-          Ac3.Ac3Frame(fi % 3, 10 + (fi * 3) % 20, bsi,
-            Array.tabulate(24 + fi % 8)(k => ((fi * 3 + k * 7) % 251).toByte))
-        }
-        val frames = (0 until n).map(i => frame(i + cid.toInt * 7))
-        val rec = Ac3.demux(Ac3.mux(frames))
-        require(rec.size == n, s"chunk $cid: ac3 frame count drift")
-        rec.iterator.zipWithIndex.map { case ((off, f), i) =>
-          val b = f.bsi
-          val optMask = (if (b.compr.isDefined) 1L else 0L) |
-            (if (b.langcod.isDefined) 2L else 0L) |
-            (if (b.audprod.isDefined) 4L else 0L) |
-            (if (b.timecod1.isDefined) 8L else 0L) |
-            (if (b.timecod2.isDefined) 16L else 0L) |
-            (if (b.addbsi.nonEmpty) 32L else 0L)
-          val fieldSum = b.dialnorm.toLong + b.dialnorm2 + b.cmixlev +
-            b.surmixlev + b.dsurmod + b.bsmod +
-            b.compr.getOrElse(0) + b.langcod.getOrElse(0) +
-            b.audprod.map { case (m, r) => m + r }.getOrElse(0) +
-            b.timecod1.getOrElse(0) + b.timecod2.getOrElse(0)
-          (cid, i.toLong, off, f.frameLen.toLong,
-            Ac3.Rates(f.fscod).toLong,
-            (Ac3.acmodChannels(b.acmod) + (if (b.lfeon) 1 else 0)).toLong,
-            b.acmod.toLong, optMask, fieldSum,
-            b.addbsi.iterator.map(_ & 0xffL).sum,
-            f.payload.iterator.map(_ & 0xffL).sum,
-            f.payload.length.toLong)
-        }
+    KernelGroups.countKernel(clickChunks(s, d)) { (cid, count) =>
+      val n = math.min(8, count)
+      def frame(fi: Int): Ac3.Ac3Frame = {
+        val acmod = fi % 8
+        val hasC = (acmod & 1) == 1 && acmod != 1
+        val hasS = acmod >= 4
+        val bsi = Ac3.Bsi(
+          bsmod = fi % 8, acmod = acmod,
+          cmixlev = if (hasC) fi % 3 else 0,
+          surmixlev = if (hasS) (fi + 1) % 3 else 0,
+          dsurmod = if (acmod == 2) fi % 3 else 0,
+          lfeon = fi % 2 == 1,
+          dialnorm = (fi * 7) % 32,
+          compr = if (fi % 3 == 0) Some((fi * 11) % 256) else None,
+          langcod = if (fi % 4 == 1) Some((fi * 13) % 256) else None,
+          audprod = if (fi % 5 == 2) Some(((fi * 3) % 32, fi % 3))
+            else None,
+          dialnorm2 = if (acmod == 0) (fi * 5 + 3) % 32 else 0,
+          copyrightb = fi % 2 == 0, origbs = fi % 3 == 1,
+          timecod1 = if (fi % 2 == 0) Some((fi * 97) % 16384) else None,
+          timecod2 = if (fi % 5 == 0) Some((fi * 53) % 16384) else None,
+          addbsi = if (fi % 4 == 3)
+            Array.tabulate(1 + fi % 5)(k => ((fi + k * 9) % 251).toByte)
+          else Array.empty)
+        Ac3.Ac3Frame(fi % 3, 10 + (fi * 3) % 20, bsi,
+          Array.tabulate(24 + fi % 8)(k => ((fi * 3 + k * 7) % 251).toByte))
+      }
+      val frames = (0 until n).map(i => frame(i + cid.toInt * 7))
+      val rec = Ac3.demux(Ac3.mux(frames))
+      require(rec.size == n, s"chunk $cid: ac3 frame count drift")
+      rec.iterator.zipWithIndex.map { case ((off, f), i) =>
+        val b = f.bsi
+        val optMask = (if (b.compr.isDefined) 1L else 0L) |
+          (if (b.langcod.isDefined) 2L else 0L) |
+          (if (b.audprod.isDefined) 4L else 0L) |
+          (if (b.timecod1.isDefined) 8L else 0L) |
+          (if (b.timecod2.isDefined) 16L else 0L) |
+          (if (b.addbsi.nonEmpty) 32L else 0L)
+        val fieldSum = b.dialnorm.toLong + b.dialnorm2 + b.cmixlev +
+          b.surmixlev + b.dsurmod + b.bsmod +
+          b.compr.getOrElse(0) + b.langcod.getOrElse(0) +
+          b.audprod.map { case (m, r) => m + r }.getOrElse(0) +
+          b.timecod1.getOrElse(0) + b.timecod2.getOrElse(0)
+        (cid, i.toLong, off, f.frameLen.toLong,
+          Ac3.Rates(f.fscod).toLong,
+          (Ac3.acmodChannels(b.acmod) + (if (b.lfeon) 1 else 0)).toLong,
+          b.acmod.toLong, optMask, fieldSum,
+          b.addbsi.iterator.map(_ & 0xffL).sum,
+          f.payload.iterator.map(_ & 0xffL).sum,
+          f.payload.length.toLong)
       }
     }.toDF("chunk_id", "i", "offset", "frame_len", "rate", "channels",
         "acmod", "opt_mask", "field_sum", "addbsi_sum", "payload_sum",
@@ -4310,9 +4160,7 @@ object DspQueries {
   }
 
   private val p34Sql =
-    """WITH c AS (SELECT user_id % 16 AS chunk_id,
-      |    least(8, count(*)) AS n
-      |  FROM events WHERE event_type = 'click' GROUP BY 1),
+    s"""${clickCnt(8)}
       |f AS (SELECT chunk_id, g.i, g.i + chunk_id * 7 AS fi FROM c,
       |  unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS g(i)),
       |b AS (SELECT *, fi % 8 AS acmod, fi % 3 AS fscod,

@@ -175,7 +175,6 @@ object SimilarityQueries {
     * cells only — the read-2-of-k-cells ANN shape. */
   private def s03(s: SparkSession, d: String): DataFrame = {
     val v = quantized(s, d)
-    val dims = 64
     val cents = v.select(col("label"), posexplode(col("q")).as(Seq("i", "x")))
       .groupBy(col("label"), col("i")).agg(sum(col("x")).as("cx"))
       .groupBy(col("label"))

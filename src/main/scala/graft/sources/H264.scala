@@ -1723,7 +1723,7 @@ object H264 {
             }
           }
           // coded_block_pattern = 0: 4 luma bins + chroma bin 0
-          var sofar = 0
+          val sofar = 0
           (0 until 4).foreach { b8 =>
             enc.decision(73 + cbpLumaInc(cbpL, mbCols, i, b8, sofar), 0)
           }
@@ -1900,8 +1900,8 @@ object H264 {
           if (prefix == 0) binCtx0 else binCtxN, 0)
         else if (absM1 >= 14) {
           // EG0 over absM1 − 14
-          var value = absM1 - 14 + 1
-          var bits = 31 - Integer.numberOfLeadingZeros(value)
+          val value = absM1 - 14 + 1
+          val bits = 31 - Integer.numberOfLeadingZeros(value)
           (0 until bits).foreach(_ => enc.bypass(1))
           enc.bypass(0)
           var j = bits - 1

@@ -123,9 +123,11 @@ object InputPacer {
       .select(col("container"), col("stream"), col("dts"),
         col("offset_ms"), col("ts"), col("bucket"))
       .as[PacedPacket]
-    val initialState = stamped.groupByKey(_.bucket)
-      .mapGroups((b, it) => b -> it.toList)
-      .groupByKey(_._1)
+    // one aggregation stages each bucket's packets as its state row;
+    // the keyed view over it only names the state key
+    val initialState = stamped.groupBy(col("bucket"))
+      .agg(collect_list(struct(stamped.columns.map(col): _*)).as("due"))
+      .groupBy(col("bucket")).as[Long, (Long, List[PacedPacket])]
       .mapValues(_._2)
     val ticks = spark.readStream
       .format("rate")
@@ -133,7 +135,7 @@ object InputPacer {
       .load()
       .select(col("value").as("bucket"), col("timestamp").as("tick_wall"))
       .as[PacedTick]
-    ticks.groupByKey(_.bucket)
+    ticks.groupBy(col("bucket")).as[Long, PacedTick]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
         initialState) {
         (bucket: Long, tk: Iterator[PacedTick],
