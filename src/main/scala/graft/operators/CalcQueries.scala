@@ -24,6 +24,7 @@ import org.apache.spark.sql.types._
 object CalcQueries {
 
   import graft.Tables.eventsMs
+  import KernelGroups.{pcmClicks, sortedKernel}
   private val evMs = "SELECT *, epoch_ms(ts) AS ts_ms FROM events"
 
   // One calculator instance per pipeline shard (see EventOps.pipeline):
@@ -641,16 +642,11 @@ object CalcQueries {
     import graft.sources.Wav
     val loaded = DeploymentJson.load(c10Json, nodeName = Some(FixtureNode))
     val e = eventsMs(s, d)
-    val clicks = e.filter(col("event_type") === "click")
-      .select((col("user_id") % 3).as("c"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
+    val clicks = pcmClicks(s, d, 3)
     // mux each container's PCM into real WAV bytes, demux them back,
     // emit one row per decoded sample + one metadata row per file
-    val demuxed = clicks.groupByKey(_._1).flatMapGroups { (k, it) =>
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+    val demuxed = sortedKernel(clicks, "key") { (k, it) =>
+      val xs = it.map(_._2).toArray
       val wav = Wav.mux(Wav.WavData(1000, 1, 16, Wav.pcm16(xs)))
       val dec = Wav.samples16(Wav.demux(wav).data)
       val md5 = md5Hex(wav.map("%02x".format(_)).mkString.getBytes("UTF-8"))
@@ -667,7 +663,7 @@ object CalcQueries {
     // clock (ts = event_id mod container sample count), value > 10 ⇒
     // gain 2.0 else attenuation 0.5 — collides with data timestamps on
     // purpose (the scale-first tie-break is part of the pinned fold)
-    val nc = clicks.groupBy(col("c")).agg(count(lit(1)).as("nc"))
+    val nc = clicks.groupBy(col("key").as("c")).agg(count(lit(1)).as("nc"))
     val scales = e.filter(col("event_type") === "error")
       .select((col("user_id") % 3).as("c"), col("value"), col("event_id"))
       .join(nc, "c")
@@ -1247,15 +1243,9 @@ object CalcQueries {
     import graft.plans.{DeploymentJson, Pipeline}
     import graft.sources.Rtmp
     val loaded = DeploymentJson.load(c14Json, nodeName = Some(FixtureNode))
-    val clicks = eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 3).as("c"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-    val demuxed = clicks.groupByKey(_._1).flatMapGroups { (k, it) =>
+    val demuxed = sortedKernel(pcmClicks(s, d, 3), "key") { (k, it) =>
       import graft.sources.Wav
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+      val xs = it.map(_._2).toArray
       // 50-sample PCM16LE messages on a 50 ms clock (1 kHz): the short
       // tail block exercises the fmt-1 leg of the compression ladder
       val msgs = xs.grouped(50).zipWithIndex.map { case (blk, b) =>
@@ -1344,18 +1334,6 @@ object CalcQueries {
        |  FROM rt)
        |ORDER BY kind, container, ts_ms""".stripMargin
 
-  /** e51/e52's click fixture: per container (user_id % 3) the click
-    * values as s16 samples with their (ts_ms, event_id) order keys. */
-  private def ingestClicks(s: SparkSession, d: String) = {
-    import s.implicits._
-    eventsMs(s, d).filter(col("event_type") === "click")
-      .select((col("user_id") % 3).as("c"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-  }
-
   /** e51/e52's shared tail: the loaded meter DAG over the PCM envelope
     * stream `env`, drained into `dir` and projected to c14's vol rows. */
   private def meterThroughStream(s: SparkSession, env: DataFrame,
@@ -1396,8 +1374,8 @@ object CalcQueries {
     val srcPath = srcDir.toString
     // executor-side segment writes — bytes never at the driver; a
     // single-box spool dir here, HDFS/S3 on a cluster
-    ingestClicks(s, d).groupByKey(_._1).mapGroups { (k, it) =>
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+    sortedKernel(pcmClicks(s, d, 3), "key") { (k, it) =>
+      val xs = it.map(_._2).toArray
       val segs = Seq(xs.take(150), xs.drop(150)).filter(_.nonEmpty)
       segs.zipWithIndex.foreach { case (seg, si) =>
         val off = if (si == 0) 0L else 150L
@@ -1408,7 +1386,7 @@ object CalcQueries {
         val f = new java.io.File(srcPath, f"seg-$si%03d-c$k.flv")
         java.nio.file.Files.write(f.toPath, Flv.mux(tags))
       }
-      k
+      Iterator.single(k)
     }.write.format("noop").mode("overwrite").save()
     // replay segment generation 0 (all containers) strictly before
     // generation 1, one generation per micro-batch
@@ -1496,15 +1474,15 @@ object CalcQueries {
     // this is the feed FIXTURE, not the measured path) or write to
     // shared storage; the 'no capture segments' require fails loudly
     // rather than silently feeding an empty session.
-    ingestClicks(s, d).groupByKey(_._1).mapGroups { (k, it) =>
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+    sortedKernel(pcmClicks(s, d, 3), "key") { (k, it) =>
+      val xs = it.map(_._2).toArray
       val msgs = xs.grouped(50).zipWithIndex.map { case (blk, b) =>
         Rtmp.RtmpMessage(4 + k.toInt, k, Rtmp.TypeAudio, 50L * b,
           Wav.pcm16(blk))
       }.toSeq
       val f = new java.io.File(capPath, f"cap-c$k%03d.rtmp")
       java.nio.file.Files.write(f.toPath, Rtmp.mux(msgs))
-      k
+      Iterator.single(k)
     }.write.format("noop").mode("overwrite").save()
     val files = Option(capDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".rtmp")).sortBy(_.getName)

@@ -23,7 +23,8 @@ import org.apache.spark.sql.types._
   */
 object ContainerQueries {
 
-  import KernelGroups.{clickChunks, viewContainers}
+  import KernelGroups.{clickChunks, pcmClicks, sortedKernel, trackEvents,
+    viewContainers}
 
   /** The oracle head of the view-sized kernels: `cnt`, one row per
     * container with n = least(cap, its views), over the containers with
@@ -33,6 +34,20 @@ object ContainerQueries {
        |    least($cap, count(*)) AS n
        |  FROM events WHERE event_type = 'view'""".stripMargin +
       (if (pairs) "\n  GROUP BY 1 HAVING count(*) >= 2)," else " GROUP BY 1),")
+
+  /** The oracle head of the two-track muxing kernels: `e`, every view
+    * (track 1) and click (track 2) keyed by container, and `k`, each
+    * event's 0-based index `i` in its container's track, in
+    * (tms, event_id) order. */
+  private val trackIdx =
+    """WITH e AS (SELECT user_id % 32 AS container,
+      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
+      |    event_id, epoch_ms(ts) AS tms
+      |  FROM events WHERE event_type IN ('view','click')),
+      |k AS (SELECT container, track, event_id,
+      |        row_number() OVER (PARTITION BY container, track
+      |                           ORDER BY tms, event_id) - 1 AS i
+      |      FROM e),""".stripMargin
 
   /** Two streams per pipeline: clicks as an audio-like stream
     * (time_base 1/32000 s, 1024-sample frames → 32 ms quantum), views
@@ -305,23 +320,16 @@ object ContainerQueries {
   private def m14(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Wav
-    val rows = eventsMs(s, d)
-      .filter(col("event_type") === "click")
-      .select((col("user_id") % 8).as("container"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.mapKernel(rows)(_._1) { (k, it) =>
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+    sortedKernel(pcmClicks(s, d, 8), "key") { (k, it) =>
+      val xs = it.map(_._2).toArray
       val wav = Wav.mux(Wav.WavData(16000, 1, 16, Wav.pcm16(xs)))
       val back = Wav.demux(wav)
       val ss = Wav.samples16(back.data)
-      (k, ss.length.toLong, wav.length.toLong,
+      Iterator.single((k, ss.length.toLong, wav.length.toLong,
         back.sampleRate.toLong, back.channels.toLong,
         back.bitsPerSample.toLong,
         ss.foldLeft(0L)(_ + _), ss.min.toLong, ss.max.toLong,
-        md5Hex(wav.map("%02x".format(_)).mkString.getBytes("UTF-8")))
+        md5Hex(wav.map("%02x".format(_)).mkString.getBytes("UTF-8"))))
     }.toDF("container", "n_samples", "file_len", "sample_rate",
         "channels", "bits", "sample_sum", "sample_min", "sample_max",
         "wav_md5")
@@ -377,24 +385,19 @@ object ContainerQueries {
   private def m15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Avi
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 0).otherwise(1).as("stream"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
     val streams = Seq(
       Avi.AviStream("vids", scale = 1, rate = 30, width = 64, height = 48),
       Avi.AviStream("auds", scale = 1, rate = 16000, channels = 1,
         bitsPerSample = 16))
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
-      val pkts = it.toArray.sortBy(r => (r._4, r._3)).map { r =>
-        val payload = md5Hex(s"$k:${r._2}:${r._3}".getBytes("UTF-8"))
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
+      val pkts = it.map { r =>
+        val stream = r._2 - 1
+        val payload = md5Hex(s"$k:$stream:${r._3}".getBytes("UTF-8"))
           .getBytes("US-ASCII")
-        Avi.AviPacket(r._2,
-          keyframe = r._2 != 0 || r._3 % 4 == 0, payload)
-      }
-      val avi = Avi.mux(streams, pkts.toSeq)
+        Avi.AviPacket(stream,
+          keyframe = stream != 0 || r._3 % 4 == 0, payload)
+      }.toSeq
+      val avi = Avi.mux(streams, pkts)
       val (ds, dp) = Avi.demux(avi)
       dp.zipWithIndex.map { case (p, i) =>
         val kind = ds(p.stream).kind
@@ -447,22 +450,17 @@ object ContainerQueries {
   private def m18(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Avi, InputPacer}
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 0).otherwise(1).as("stream"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
     val streams = Seq(
       Avi.AviStream("vids", scale = 1, rate = 30, width = 64, height = 48),
       Avi.AviStream("auds", scale = 1, rate = 16000, channels = 1,
         bitsPerSample = 16))
-    val packets = KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
-      val pkts = it.toArray.sortBy(r => (r._4, r._3)).map { r =>
-        Avi.AviPacket(r._2, keyframe = true,
-          md5Hex(s"$k:${r._2}:${r._3}".getBytes("UTF-8")).getBytes("US-ASCII"))
-      }
-      val (ds, dp) = Avi.demux(Avi.mux(streams, pkts.toSeq))
+    val packets = sortedKernel(trackEvents(s, d), "container") { (k, it) =>
+      val pkts = it.map { r =>
+        val stream = r._2 - 1
+        Avi.AviPacket(stream, keyframe = true,
+          md5Hex(s"$k:$stream:${r._3}".getBytes("UTF-8")).getBytes("US-ASCII"))
+      }.toSeq
+      val (ds, dp) = Avi.demux(Avi.mux(streams, pkts))
       // per-stream running index in FILE order; dts advances one frame
       // (video) / one 1024-sample packet (audio) per demuxed packet,
       // on the clock PARSED from the container's strh
@@ -517,19 +515,13 @@ object ContainerQueries {
   private def m19(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Ebml, Mkv}
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
     val tracks = Seq(
       Mkv.MkvTrack(1, "video", "V_GRAFT", width = 64, height = 48),
       Mkv.MkvTrack(2, "audio", "A_PCM/INT/LIT", sampleRate = 16000.0,
         channels = 1))
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       val blocks = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           Mkv.MkvBlock(trk, if (trk == 1) i * 33L else i * 32L,
             keyframe = trk == 2 || r._3 % 4 == 0,
             md5Hex(s"$k:$trk:${r._3}".getBytes("UTF-8")).getBytes("US-ASCII"))
@@ -563,14 +555,7 @@ object ContainerQueries {
   }
 
   private val m19Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track, event_id,
       |          CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS ts_ms,
       |          (track = 2 OR event_id % 4 = 0) AS keyframe,
@@ -613,15 +598,8 @@ object ContainerQueries {
   private def m20(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.Wav
-    val rows = eventsMs(s, d)
-      .filter(col("event_type") === "click")
-      .select((col("user_id") % 8).as("container"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.mapKernel(rows)(_._1) { (k, it) =>
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+    sortedKernel(pcmClicks(s, d, 8), "key") { (k, it) =>
+      val xs = it.map(_._2).toArray
       val inWav = Wav.mux(Wav.WavData(16000, 1, 16, Wav.pcm16(xs)))
       // the deployment: demux → gain ×1/2 → noise gate ±50 → mux
       val decoded = Wav.samples16(Wav.demux(inWav).data)
@@ -630,11 +608,11 @@ object ContainerQueries {
         if (math.abs(y) < 50) 0 else y
       }
       val outWav = Wav.mux(Wav.WavData(16000, 1, 16, Wav.pcm16(processed)))
-      (k, processed.length.toLong,
+      Iterator.single((k, processed.length.toLong,
         processed.count(_ == 0).toLong, // gate engagement is visible
         processed.foldLeft(0L)(_ + _),
         md5Hex(inWav.map("%02x".format(_)).mkString.getBytes("UTF-8")),
-        md5Hex(outWav.map("%02x".format(_)).mkString.getBytes("UTF-8")))
+        md5Hex(outWav.map("%02x".format(_)).mkString.getBytes("UTF-8"))))
     }.toDF("container", "n_samples", "n_gated", "sample_sum",
         "in_md5", "out_md5")
       .orderBy(col("container"))
@@ -695,18 +673,12 @@ object ContainerQueries {
     import s.implicits._
     import graft.sources.IsoBmff
     import graft.sources.IsoBmff.{Mp4Sample, Mp4Track}
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
     val tracks = Seq(
       Mp4Track(1, "video", "grft", width = 64, height = 48),
       Mp4Track(2, "audio", "gpcm", sampleRate = 16000, channels = 1))
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       val samples = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           Mp4Sample(trk, if (trk == 1) i * 33L else i * 32L,
             dur = if (trk == 1) 33L else 32L,
             keyframe = trk == 2 || r._3 % 4 == 0,
@@ -753,14 +725,7 @@ object ContainerQueries {
   }
 
   private val m25Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track, event_id,
       |          CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS ts_ms,
       |          CASE WHEN track = 1 THEN 33 ELSE 32 END AS dur,
@@ -805,15 +770,9 @@ object ContainerQueries {
     import s.implicits._
     import graft.sources.MpegTs
     import graft.sources.MpegTs.TsSample
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       val samples = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           val tsMs = if (trk == 1) i * 33L else i * 32L
           val tag = md5Hex(s"$k:$trk:${r._3}".getBytes("UTF-8"))
           (tsMs, trk, TsSample(if (trk == 1) "video" else "audio",
@@ -834,14 +793,7 @@ object ContainerQueries {
   }
 
   private val m26Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track, event_id,
       |          CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS pts_ms,
       |          repeat(md5(container::VARCHAR || ':' || track::VARCHAR
@@ -887,16 +839,10 @@ object ContainerQueries {
   private def m27(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.{Avi, IsoBmff, Mkv, MpegTs}
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       // the shared timeline: (track, tsMs, keyframe, payload)
       val blocks = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           (trk, if (trk == 1) i * 33L else i * 32L,
             trk == 2 || r._3 % 4 == 0,
             md5Hex(s"$k:$trk:${r._3}".getBytes("UTF-8"))
@@ -1038,14 +984,7 @@ object ContainerQueries {
   }
 
   private val m27Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track,
       |          CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS ts_ms,
       |          md5(container::VARCHAR || ':' || track::VARCHAR || ':'
@@ -1222,15 +1161,9 @@ object ContainerQueries {
     import s.implicits._
     import graft.sources.Flv
     val Base = 20000000L // > 2^24 ms: forces TimestampExtended ≠ 0
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       val tags = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           val payload = (md5Hex(s"$k:$trk:${r._3}".getBytes("UTF-8"))
             * (1 + (r._3 % 3)).toInt).getBytes("US-ASCII")
           if (trk == 1)
@@ -1253,14 +1186,7 @@ object ContainerQueries {
   }
 
   private val m30Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track, event_id,
       |          20000000 + CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS ts_ms,
       |          (track = 2 OR event_id % 4 = 0) AS keyframe,
@@ -1304,15 +1230,9 @@ object ContainerQueries {
     import graft.sources.Rtmp
     import graft.sources.Rtmp.RtmpMessage
     val Base = 20000000L // > 2^24 ms: forces the extended-ts sentinel
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       val msgs = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           val payload = (md5Hex(s"$k:$trk:${r._3}".getBytes("UTF-8"))
             * (1 + (r._3 % 3)).toInt).getBytes("US-ASCII")
           val (csid, tid, step) =
@@ -1344,14 +1264,7 @@ object ContainerQueries {
   }
 
   private val m31Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track, event_id, i,
       |          20000000 + CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS ts_ms,
       |          32 * (1 + event_id % 3) AS plen,
@@ -1416,15 +1329,8 @@ object ContainerQueries {
     import graft.sources.{Amf, Rtmp}
     import graft.sources.Amf._
     import graft.sources.Rtmp.RtmpMessage
-    val rows = eventsMs(s, d)
-      .filter(col("event_type") === "click")
-      .select((col("user_id") % 16).as("c"),
-        least(greatest(round(col("value") * 100).cast(IntegerType),
-          lit(-32768)), lit(32767)).as("x"),
-        col("ts_ms"), col("event_id"))
-      .as[(Long, Int, Long, Long)]
-    KernelGroups.mapKernel(rows)(_._1) { (k, it) =>
-      val xs = it.toArray.sortBy(r => (r._3, r._4)).map(_._2)
+    sortedKernel(pcmClicks(s, d, 16), "key") { (k, it) =>
+      val xs = it.map(_._2).toArray
       val sumAbs = xs.map(v => math.abs(v).toLong).sum
       val meta = Amf.encode(Seq(AmfString("onMetaData"), AmfEcmaArray(Seq(
         "duration" -> AmfNumber(xs.length / 1000.0),
@@ -1451,7 +1357,8 @@ object ContainerQueries {
             m("avgabs").asInstanceOf[AmfNumber].v)
         case other => sys.error(s"unexpected AMF shape: $other")
       }
-      (k, dur, rate, stereo, avg, meta.length.toLong, msgs.size.toLong)
+      Iterator.single(
+        (k, dur, rate, stereo, avg, meta.length.toLong, msgs.size.toLong))
     }.toDF("container", "duration", "samplerate", "stereo", "avgabs",
         "amf_len", "n_msgs")
       .orderBy(col("container"))
@@ -1496,18 +1403,12 @@ object ContainerQueries {
     import s.implicits._
     import graft.sources.IsoBmff
     import graft.sources.IsoBmff.{Mp4Sample, Mp4Track}
-    val rows = eventsMs(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("user_id") % 32).as("container"),
-        when(col("event_type") === "view", 1).otherwise(2).as("track"),
-        col("event_id"), col("ts_ms"))
-      .as[(Long, Int, Long, Long)]
     val tracks = Seq(
       Mp4Track(1, "video", "grft", width = 64, height = 48),
       Mp4Track(2, "audio", "gpcm", sampleRate = 16000, channels = 1))
-    KernelGroups.flatMapKernel(rows)(_._1) { (k, it) =>
+    sortedKernel(trackEvents(s, d), "container") { (k, it) =>
       val samples = it.toArray.groupBy(_._2).toSeq.flatMap { case (trk, evs) =>
-        evs.sortBy(r => (r._4, r._3)).zipWithIndex.map { case (r, i) =>
+        evs.zipWithIndex.map { case (r, i) =>
           Mp4Sample(trk, if (trk == 1) i * 33L else i * 32L,
             dur = if (trk == 1) 33L else 32L,
             keyframe = trk == 2 || r._3 % 4 == 0,
@@ -1568,14 +1469,7 @@ object ContainerQueries {
   }
 
   private val m35Sql =
-    """WITH e AS (SELECT user_id % 32 AS container,
-      |    CASE WHEN event_type = 'view' THEN 1 ELSE 2 END AS track,
-      |    event_id, epoch_ms(ts) AS tms
-      |  FROM events WHERE event_type IN ('view','click')),
-      |k AS (SELECT container, track, event_id,
-      |        row_number() OVER (PARTITION BY container, track
-      |                           ORDER BY tms, event_id) - 1 AS i
-      |      FROM e),
+    s"""$trackIdx
       |blk AS (SELECT container, track, event_id, i,
       |          CASE WHEN track = 1 THEN i * 33 ELSE i * 32 END AS ts_ms,
       |          CASE WHEN track = 1 THEN 33 ELSE 32 END AS dur,

@@ -471,8 +471,8 @@ object DspQueries {
         (col("event_id") * 2654435761L % 65536L - 32768L)
           .cast(IntegerType).as("pcm"))
       .as[(Long, Long, Long, Int)]
-    KernelGroups.flatMapKernel(e)(_._1) { (cid: Long, rows: Iterator[(Long, Long, Long, Int)]) =>
-        val xs = rows.toVector.sortBy(r => (r._2, r._3)).map(_._4).toArray
+    KernelGroups.sortedKernel(e, "chunk_id") { (cid, rows) =>
+        val xs = rows.map(_._4).toArray
         val packet = graft.functions.Codec.ImaAdpcm.encodeSamples(xs)
         val dec = graft.functions.Codec.ImaAdpcm.decodeSamples(packet, xs.length)
         dec.iterator.zipWithIndex.map { case (v, i) =>
@@ -757,8 +757,8 @@ object DspQueries {
         (col("event_id") * 2654435761L % 65536L - 32768L)
           .cast(IntegerType).as("pcm"))
       .as[(Long, Long, Long, Int)]
-    KernelGroups.mapKernel(e)(_._1) { (cid: Long, rows: Iterator[(Long, Long, Long, Int)]) =>
-        val xs = rows.toVector.sortBy(r => (r._2, r._3)).map(_._4).toArray
+    KernelGroups.sortedKernel(e, "chunk_id") { (cid, rows) =>
+        val xs = rows.map(_._4).toArray
         val bytes = graft.sources.Flac.encodeFile(Array(xs), 16000,
           blockSize = 256)
         val (si, dec) = graft.sources.Flac.decodeFile(bytes)
@@ -766,8 +766,8 @@ object DspQueries {
           java.util.Arrays.equals(dec(0), xs) &&
           si.md5.sameElements(graft.sources.Flac.rawMd5(Array(xs))) &&
           si.totalSamples == xs.length.toLong
-        (cid, xs.length.toLong, ((xs.length + 255) / 256).toLong,
-          bytes.length.toLong, lossless)
+        Iterator.single((cid, xs.length.toLong,
+          ((xs.length + 255) / 256).toLong, bytes.length.toLong, lossless))
       }
       .toDF("chunk_id", "n_samples", "n_frames", "file_bytes", "lossless")
       .orderBy(col("chunk_id"))

@@ -653,9 +653,9 @@ object MultimodalQueries {
         when(col("event_id") % 3 === 0, 0)
           .otherwise(col("event_id") % 5 + 1).cast(IntegerType).as("cls"))
       .as[(Long, Long, Long, Int)]
-    KernelGroups.flatMapKernel(e)(_._1) { (utt: Long, rows: Iterator[(Long, Long, Long, Int)]) =>
+    KernelGroups.sortedKernel(e, "utt") { (utt, rows) =>
         val m = graft.functions.AsrTiny.model // from the jar, once per JVM
-        val frames = rows.toVector.sortBy(r => (r._2, r._3))
+        val frames = rows.toVector
         val preds = frames.map { case (_, _, eid, cls) =>
           m.predict(graft.functions.AsrTiny.frameSynth(cls, eid))
         }

@@ -872,7 +872,7 @@ final class PipelineManager(spark: SparkSession,
 
   private final case class Running(dep: Deployment,
       planned: Seq[(String, DataFrame)], queries: Seq[StreamingQuery],
-      explicitStop: Boolean, terminal: Option[TaskStatus] = None)
+      terminal: Option[TaskStatus] = None)
   private var deployments = Map.empty[String, Running]
   // sink tables by name, kept for a restart from the checkpoint root
   private var tables = Map.empty[String, SinkTable]
@@ -897,7 +897,7 @@ final class PipelineManager(spark: SparkSession,
       s"deployment '${dep.name}' already scheduled")
     val streams = compile(dep, sources)
     deployments += dep.name ->
-      Running(dep, sinks.map(s => s -> streams(s)), Nil, explicitStop = false)
+      Running(dep, sinks.map(s => s -> streams(s)), Nil)
     broadcastAll(dep, TaskStatus.Scheduled)
   }
 
@@ -971,38 +971,37 @@ final class PipelineManager(spark: SparkSession,
     start(dep.name)
   }
 
+  /** What a deployment's queries report now: Scheduled before start,
+    * Failed on the first exception, Running while every query is
+    * active, else Ended (its sources drained). */
+  private def observed(r: Running): TaskStatus =
+    if (r.queries.isEmpty) TaskStatus.Scheduled
+    else r.queries.flatMap(_.exception).headOption match {
+      case Some(e) => TaskStatus.Failed(e.getMessage)
+      case None if r.queries.forall(_.isActive) => TaskStatus.Running
+      case None => TaskStatus.Ended
+    }
+
+  /** A deployment's status: its terminal once stopped, else what its
+    * queries report. */
+  private def current(r: Running): TaskStatus =
+    r.terminal.getOrElse(observed(r))
+
   /** Status of one deployment's tasks (uniform per deployment — one
     * fused plan per sink — but reported per task like the reference). */
   def taskStatus(name: String): Map[String, TaskStatus] =
-    deployments.get(name) match {
-      case None => Map.empty
-      case Some(r) =>
-        val st: TaskStatus = r.terminal.getOrElse {
-          if (r.queries.isEmpty) TaskStatus.Scheduled
-          else r.queries.flatMap(_.exception).headOption match {
-            case Some(e) => TaskStatus.Failed(e.getMessage)
-            case None if r.queries.forall(_.isActive) => TaskStatus.Running
-            case None if r.explicitStop => TaskStatus.Stopped
-            case None => TaskStatus.Ended
-          }
-        }
-        r.dep.tasks.map(_.name -> st).toMap
+    deployments.get(name).fold(Map.empty[String, TaskStatus]) { r =>
+      val st = current(r)
+      r.dep.tasks.map(_.name -> st).toMap
     }
 
   /** Deployment-coarse status string (round-1 surface, kept). */
-  def status(name: String): String =
-    deployments.get(name) match {
-      case None => "stopped"
-      case Some(r) if r.terminal.isDefined =>
-        r.terminal.get match {
-          case TaskStatus.Failed(_) => "failed"
-          case _ => "stopped" // Stopped and Ended are both terminal
-        }
-      case Some(r) if r.queries.isEmpty => "scheduled"
-      case Some(r) if r.queries.exists(_.exception.isDefined) => "failed"
-      case Some(r) if r.queries.forall(_.isActive) => "running"
-      case _ => "stopped"
-    }
+  def status(name: String): String = deployments.get(name).map(current) match {
+    case Some(TaskStatus.Scheduled) => "scheduled"
+    case Some(TaskStatus.Running) => "running"
+    case Some(TaskStatus.Failed(_)) => "failed"
+    case _ => "stopped" // unknown, Stopped and Ended
+  }
 
   /** Stop a deployment, broadcasting its TRUE terminal status: a query
     * that already failed reports Failed, one whose source drained
@@ -1013,17 +1012,13 @@ final class PipelineManager(spark: SparkSession,
     deployments.get(name).filter(_.terminal.isEmpty).foreach { r =>
       // a second stop must NOT recompute the terminal from now-inactive
       // queries (it would overwrite Stopped with Ended and re-broadcast)
-      val terminal: TaskStatus =
-        if (r.queries.isEmpty) TaskStatus.Stopped
-        else r.queries.flatMap(_.exception).headOption match {
-          case Some(e) => TaskStatus.Failed(e.getMessage)
-          case None if r.queries.forall(_.isActive) => TaskStatus.Stopped
-          case None => TaskStatus.Ended
-        }
+      val terminal = observed(r) match {
+        case st if st.isActive => TaskStatus.Stopped
+        case st => st
+      }
       r.queries.foreach(_.stop())
       dropTempCheckpoints(name)
-      deployments += name ->
-        r.copy(explicitStop = true, terminal = Some(terminal))
+      deployments += name -> r.copy(terminal = Some(terminal))
       broadcastAll(r.dep, terminal)
     }
   }

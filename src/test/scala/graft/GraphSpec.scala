@@ -175,7 +175,6 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
   test("g06 distributed peeling == direct k-core model on the fixture " +
       "and on adversarial graphs; fixpoint rounds fit the oracle unroll") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     def run(edges: Set[(Long, Long)], k: Int): (Map[Long, Long], Int) = {
       val df = edges.toSeq.toDF("u", "v")
       val (core, rounds) = graft.operators.GraphQueries.kcore(df, k)

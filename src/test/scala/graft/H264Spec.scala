@@ -830,8 +830,7 @@ class H264Spec extends AnyFunSuite {
       chromaModes, cbps, qpd, luma, cdc, cac)
     val (info, mbs) = H264.parseIntraCodedSlice(nal, sps, pps)
     val planes = H264Recon.decodeI4Frame(info, mbs, sps, pps)
-    // closed form: u(block) = (c·LS(27%6,0,0)·16 + 32) >> 6, LS=14
-    val qP = 27
+    // closed form at qP 27: u(block) = (c·LS(27%6,0,0)·16 + 32) >> 6, LS=14
     def u(mb: Int, blk: Int): Long =
       (cOf(mb, blk).toLong * 14 * 16 + 32) >> 6
     def blkIdx(bx: Int, by: Int): Int =
@@ -1108,7 +1107,7 @@ class H264Spec extends AnyFunSuite {
           w.chromaAc.map(_.map(_.toSeq)), s"mb $i cac")
       case ((g: H.CabacPcm, w: H.CabacPcm), i) =>
         assert(g.y.toSeq == w.y.toSeq, s"mb $i pcm")
-      case ((g, w), i) => fail(s"mb $i kind drift")
+      case (_, i) => fail(s"mb $i kind drift")
     }
     // injected CABAC tables: different bytes, same decode
     val prof2 = H.Profile.StandIn.copy(

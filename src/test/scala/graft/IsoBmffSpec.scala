@@ -255,6 +255,7 @@ class IsoBmffSpec extends AnyFunSuite {
   test("classic demux accepts moov BEFORE mdat and skips unknown boxes") {
     val bytes = muxFlat(tracks, samples, chunkMax = 3)
     val top = boxes(bytes, 0, bytes.length)
+    assert(top.map(_.kind) == Seq("ftyp", "mdat", "moov"))
     // stco offsets are absolute: moving moov ahead of mdat would shift
     // mdat, so instead splice an unknown box AFTER moov (offsets hold)
     // and separately verify a moov-after-mdat file (the muxer's own

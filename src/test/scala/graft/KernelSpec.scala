@@ -5,7 +5,7 @@ import graft.sources.NamedStreams
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner
 import graft.streaming.StatefulRunner.KEv
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

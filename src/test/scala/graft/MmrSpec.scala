@@ -47,7 +47,6 @@ class MmrSpec extends AnyFunSuite with SparkFixture {
         .map { case (id, q) => (id, cos(v(qid), q)) }
         .sortBy { case (id, r) => (-r, id) }
         .take(Shortlist)
-      val relMap = rel.toMap
       var selected = Vector(rel.head._1)
       while (selected.size < K) {
         val pick = rel.filterNot(c => selected.contains(c._1))

@@ -3,7 +3,7 @@ package graft
 import graft.streaming.StateMachines._
 import graft.streaming.StatefulRunner
 import graft.streaming.StatefulRunner.KEv
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}

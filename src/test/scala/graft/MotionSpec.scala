@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.Motion
 import graft.functions.Motion._
 import org.scalatest.funsuite.AnyFunSuite
 

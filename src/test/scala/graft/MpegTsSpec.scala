@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.MpegTs
 import graft.sources.MpegTs._
 import org.scalatest.funsuite.AnyFunSuite
 

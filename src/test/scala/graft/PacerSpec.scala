@@ -64,7 +64,6 @@ class PacerSpec extends AnyFunSuite with SparkFixture {
 
   test("paced source releases packets only when the wall clock reaches " +
       "their offset (inputcontainer.py:78-80)") {
-    import spark.implicits._
     // 6 audio frames, 128 ms apart (dts step 4096 at 1/32000).
     val packets = packetsDf((0 until 6).map(k =>
       (0L, "audio", k.toLong * 4096, 1L, 32000L)))

@@ -3,7 +3,7 @@ package graft
 import graft.plans.Pipeline
 import graft.plans.Pipeline._
 import graft.plans.{PipelineManager, TaskReport, TaskStatus}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -111,7 +111,6 @@ class StreamingE2ESpec extends AnyFunSuite with SparkFixture with TempDirs {
     // checkpointed offsets without reprocessing chunk 0 (exactly-once
     // via the sink's _spark_metadata) and with the gate's open state
     // restored from the state store.
-    import spark.implicits._
     val base = tempDir("fsrc").toString
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
     val ckpt = s"$base/ckpt"

@@ -18,7 +18,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   private val sf = "/root/testdata/sf0.001"
 
   private def ev(topic: Int, ts: Long, v: Double = Double.NaN,
-      text: String = null, paused: Boolean = false, seq: Long = 0) =
+      text: String = null, paused: Boolean = false, seq: Long) =
     KEv("k", topic, ts, v, text, paused, seq)
 
   private def runB[S](m: Machine[S], es: Seq[KEv]): Seq[KOut] = {
