@@ -95,8 +95,8 @@ import scala.collection.mutable.ArrayBuffer
   * implemented: refresh_golden/refresh_alternate/refresh_last flags,
   * the conditional 2-bit copy_buffer fields (copies reading the
   * pre-update buffers in field order), keyframes re-anchoring all
-  * three ([[decodeStream]] and [[graft.streaming.Vp8Machine]] apply
-  * the lifecycle).
+  * three — in one per-frame [[step]], which [[decodeStream]] and
+  * [[graft.streaming.Vp8Machine]] fold.
   *
   * Additional inter stand-ins (same seam class as CoeffProbs, ALL of
   * them [[Profile]] fields): the default MV context probabilities,
@@ -3287,71 +3287,92 @@ object Vp8 {
       modeInfo.map(m => if (m.inter) m.eff else Mv(0, 0)), yP, uP, vP)
   }
 
+  /** One frame's planes: luma `y`, chroma `u`/`v`. */
+  final case class Planes(y: Array[Int], u: Array[Int], v: Array[Int])
+
+  /** A stream's §16.3 reference buffers between frames: the LAST,
+    * GOLDEN and ALTREF planes, macroblock-padded [§9.1], at the
+    * display size `width` x `height` of the keyframe that anchored
+    * them. */
+  final case class Refs(width: Int, height: Int,
+      last: Planes, golden: Planes, altref: Planes)
+
   /** One decoded frame of a stream walk: DISPLAY-cropped planes
     * (luma width x height, chroma ceil-halved) — the reference
-    * buffers stay padded internally [§9.1]. */
-  final case class StreamFrame(keyframe: Boolean, width: Int, height: Int,
-      y: Array[Int], u: Array[Int], v: Array[Int])
+    * buffers stay padded internally [§9.1] — and the frame's full
+    * decode (`Left` for a keyframe, `Right` for an inter frame): coded
+    * levels, macroblock modes, effective MVs, segment ids and header
+    * flags. */
+  final case class StreamFrame(width: Int, height: Int,
+      y: Array[Int], u: Array[Int], v: Array[Int],
+      coded: Either[Decoded, DecodedInter]) {
+    def keyframe: Boolean = coded.isLeft
+  }
+
+  /** THE per-frame step of a stream walk, the one place the §9.7
+    * reference-buffer lifecycle lives: maps the buffers before a frame
+    * (`null` before the first keyframe), its payload and the stream's
+    * [[Ctx]] to the buffers after it and the decoded frame.
+    *  - A keyframe anchors all three buffers at its decode [§16.3].
+    *  - An inter frame predicts from them per macroblock; then the
+    *    conditional copy fields read the PRE-update buffers (parallel
+    *    assignment: copy_golden = 1 with copy_alt = 2 moves LAST into
+    *    GOLDEN and the OLD golden into ALTREF), and the refresh flags
+    *    replace their buffer with this frame's decode
+    *    (refresh_last = 0 leaves LAST at the previous frame).
+    * Pure up to `ctx`, which carries the entropy, lf-delta and
+    * segmentation state [§9.7/§9.4/§9.3] from frame to frame:
+    * [[decodeStream]] folds it over a payload sequence and
+    * [[graft.streaming.Vp8Machine]] over a state store. */
+  def step(refs: Refs, payload: Array[Byte], ctx: Ctx)
+      : (Refs, StreamFrame) = {
+    val (next, p, coded): (Refs, Planes, Either[Decoded, DecodedInter]) =
+      if (graft.sources.Ivf.parseVp8Tag(payload).keyframe) {
+        val dec = decode(payload, ctx = ctx)
+        val p = Planes(dec.y, dec.u, dec.v)
+        (Refs(dec.frame.width, dec.frame.height, p, p, p), p, Left(dec))
+      } else {
+        require(refs != null, "vp8: inter frame before any keyframe")
+        val (l, g, a) = (refs.last, refs.golden, refs.altref)
+        val dec = decodeInter(payload, refs.width, refs.height,
+          l.y, l.u, l.v, g.y, g.u, g.v,
+          altY = a.y, altU = a.u, altV = a.v, ctx = ctx)
+        val f = dec.frame
+        val p = Planes(dec.y, dec.u, dec.v)
+        // a copy field is absent (0) when its refresh flag is set
+        val golden =
+          if (f.refreshGolden) p
+          else if (f.copyToGolden == 1) l
+          else if (f.copyToGolden == 2) a
+          else g
+        val altref =
+          if (f.refreshAlt) p
+          else if (f.copyToAlt == 1) l
+          else if (f.copyToAlt == 2) g
+          else a
+        (Refs(refs.width, refs.height,
+          if (f.refreshLast) p else l, golden, altref), p, Right(dec))
+      }
+    val (w, h) = (next.width, next.height)
+    (next, StreamFrame(w, h, crop(p.y, pad16(w), w, h),
+      crop(p.u, pad16(w) / 2, (w + 1) / 2, (h + 1) / 2),
+      crop(p.v, pad16(w) / 2, (w + 1) / 2, (h + 1) / 2), coded))
+  }
 
   /** Decode a frame sequence (e.g. the payloads of one IVF file or one
-    * WebM track): the first frame must be a keyframe; later keyframes
-    * re-anchor all three reference buffers; inter frames read
-    * LAST/GOLDEN/ALTREF and update them per their §9.7 header flags
-    * (refresh_last/golden/alternate and the copy fields). */
+    * WebM track) by folding [[step]] over it: the first frame must be a
+    * keyframe; `ctx` (a fresh one of `profile` when null) carries the
+    * entropy state across the frames. */
   def decodeStream(payloads: Seq[Array[Byte]],
       profile: Profile = Profile.StandIn,
       ctx: Ctx = null): Vector[StreamFrame] = {
     require(payloads.nonEmpty, "vp8: empty stream")
     val cx = if (ctx != null) ctx else new Ctx(profile)
-    var w = 0; var hgt = 0
-    var lastY: Array[Int] = null
-    var lastU: Array[Int] = null
-    var lastV: Array[Int] = null
-    var goldY: Array[Int] = null
-    var goldU: Array[Int] = null
-    var goldV: Array[Int] = null
-    var altY: Array[Int] = null
-    var altU: Array[Int] = null
-    var altV: Array[Int] = null
-    payloads.iterator.zipWithIndex.map { case (p, i) =>
-      val tag = graft.sources.Ivf.parseVp8Tag(p)
-      if (tag.keyframe) {
-        val dec = decode(p, ctx = cx)
-        w = dec.frame.width; hgt = dec.frame.height
-        lastY = dec.y; lastU = dec.u; lastV = dec.v
-        // §16.3: a keyframe refreshes ALL reference buffers
-        goldY = dec.y; goldU = dec.u; goldV = dec.v
-        altY = dec.y; altU = dec.u; altV = dec.v
-        StreamFrame(keyframe = true, w, hgt,
-          crop(dec.y, pad16(w), w, hgt),
-          crop(dec.u, pad16(w) / 2, (w + 1) / 2, (hgt + 1) / 2),
-          crop(dec.v, pad16(w) / 2, (w + 1) / 2, (hgt + 1) / 2))
-      } else {
-        require(lastY != null,
-          s"vp8: stream frame $i is inter but no keyframe precedes it")
-        val dec = decodeInter(p, w, hgt, lastY, lastU, lastV,
-          goldY, goldU, goldV, altY = altY, altU = altU, altV = altV,
-          ctx = cx)
-        // §9.7 buffer lifecycle: BOTH copies read the pre-update
-        // buffers (parallel assignment — copy_golden=1 + copy_alt=2
-        // in one frame moves last→golden and OLD-golden→alt), then
-        // the refresh flags overwrite with THIS frame's decode.
-        val f = dec.frame
-        val (plY, plU, plV) = (lastY, lastU, lastV)
-        val (pgY, pgU, pgV) = (goldY, goldU, goldV)
-        val (paY, paU, paV) = (altY, altU, altV)
-        if (f.copyToGolden == 1) { goldY = plY; goldU = plU; goldV = plV }
-        else if (f.copyToGolden == 2) { goldY = paY; goldU = paU; goldV = paV }
-        if (f.copyToAlt == 1) { altY = plY; altU = plU; altV = plV }
-        else if (f.copyToAlt == 2) { altY = pgY; altU = pgU; altV = pgV }
-        if (f.refreshGolden) { goldY = dec.y; goldU = dec.u; goldV = dec.v }
-        if (f.refreshAlt) { altY = dec.y; altU = dec.u; altV = dec.v }
-        if (f.refreshLast) { lastY = dec.y; lastU = dec.u; lastV = dec.v }
-        StreamFrame(keyframe = false, w, hgt,
-          crop(dec.y, pad16(w), w, hgt),
-          crop(dec.u, pad16(w) / 2, (w + 1) / 2, (hgt + 1) / 2),
-          crop(dec.v, pad16(w) / 2, (w + 1) / 2, (hgt + 1) / 2))
-      }
+    var refs: Refs = null
+    payloads.iterator.map { p =>
+      val (next, frame) = step(refs, p, cx)
+      refs = next
+      frame
     }.toVector
   }
 }

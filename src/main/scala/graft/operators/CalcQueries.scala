@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Q
+import graft.{Q, Resources}
 import graft.functions.Calc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -645,7 +645,7 @@ object CalcQueries {
     val clicks = pcmClicks(s, d, 3)
     // mux each container's PCM into real WAV bytes, demux them back,
     // emit one row per decoded sample + one metadata row per file
-    val demuxed = sortedKernel(clicks, "key") { (k, it) =>
+    val demuxed = Resources.cache(sortedKernel(clicks, "key") { (k, it) =>
       val xs = it.map(_._2).toArray
       val wav = Wav.mux(Wav.WavData(1000, 1, 16, Wav.pcm16(xs)))
       val dec = Wav.samples16(Wav.demux(wav).data)
@@ -653,7 +653,7 @@ object CalcQueries {
       dec.iterator.zipWithIndex.map { case (x, i) =>
         ("s", k, i.toLong, x.toLong, null: String)
       } ++ Iterator(("w", k, wav.length.toLong, 0L, md5))
-    }.toDF("kind", "c", "a", "b", "md5").cache()
+    }.toDF("kind", "c", "a", "b", "md5"))
     val samples = demuxed.filter(col("kind") === "s")
       .select(col("c").cast(StringType).as("pipe"), col("a").as("ts"),
         col("b").cast(DoubleType).as("value"),
@@ -1243,7 +1243,8 @@ object CalcQueries {
     import graft.plans.{DeploymentJson, Pipeline}
     import graft.sources.Rtmp
     val loaded = DeploymentJson.load(c14Json, nodeName = Some(FixtureNode))
-    val demuxed = sortedKernel(pcmClicks(s, d, 3), "key") { (k, it) =>
+    val clicks = pcmClicks(s, d, 3)
+    val demuxed = Resources.cache(sortedKernel(clicks, "key") { (k, it) =>
       import graft.sources.Wav
       val xs = it.map(_._2).toArray
       // 50-sample PCM16LE messages on a 50 ms clock (1 kHz): the short
@@ -1261,7 +1262,7 @@ object CalcQueries {
           ("s", k, m.tsMs + j, v.toLong, null: String)
         }
       } ++ Iterator(("r", k, bytes.length.toLong, stats.fmt3, md5))
-    }.toDF("kind", "c", "a", "b", "md5").cache()
+    }.toDF("kind", "c", "a", "b", "md5"))
     val samples = demuxed.filter(col("kind") === "s")
       .select(col("c").cast(StringType).as("pipe"), col("a").as("ts"),
         col("b").cast(DoubleType).as("value"),

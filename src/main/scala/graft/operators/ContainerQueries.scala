@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.Tables.eventsMs
+import graft.functions.Vp8
 import graft.streaming.StatefulRunner
 import graft.streaming.StateMachines._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -300,6 +301,52 @@ object ContainerQueries {
   /** The first byte of the md5 of `str`: the kernels' seeded draws. */
   private def hexbyte(str: String): Int =
     Integer.parseInt(md5Hex(str.getBytes("UTF-8")).take(2), 16)
+
+  /** The 2x2 macroblock grid of a 32x32 VP8 fixture frame, raster
+    * order: (0,0), (0,1), (1,0), (1,1). */
+  private def mbGrid[A](mb: (Int, Int) => A): Vector[A] =
+    Vector(mb(0, 0), mb(0, 1), mb(1, 0), mb(1, 1))
+
+  /** `n` VP8 coefficient blocks of zero levels. */
+  private def zeroBlocks(n: Int): Array[Array[Int]] =
+    Array.fill(n)(new Array[Int](16))
+
+  private def y2Block(dc: Int): Array[Int] = {
+    val y2 = new Array[Int](16); y2(0) = dc; y2
+  }
+
+  /** The VP8 fixtures' keyframe macroblock: V_PRED luma, DC_PRED
+    * chroma, and one coded level, the Y2 DC `dc` (so the macroblock
+    * reconstructs flat). */
+  private def vp8KeyMb(dc: Int, segment: Int = 0): Vp8.MbCoding =
+    Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2Block(dc), zeroBlocks(16),
+      zeroBlocks(4), zeroBlocks(4), segment = segment)
+
+  /** The VP8 fixtures' inter macroblock: `mvMode`/`mv` against LAST
+    * (GOLDEN or ALTREF when flagged) and one coded level, the Y2 DC
+    * `dc`. */
+  private def vp8InterMb(dc: Int, mvMode: Int = Vp8.ZeroMv,
+      mv: Vp8.Mv = Vp8.Mv(0, 0), refGolden: Boolean = false,
+      refAltref: Boolean = false, skip: Boolean = false,
+      segment: Int = 0): Vp8.InterMb =
+    Vp8.InterMb(inter = true, mvMode, mv, 0, 0, y2Block(dc),
+      zeroBlocks(16), zeroBlocks(4), zeroBlocks(4), refGolden = refGolden,
+      skip = skip, refAltref = refAltref, segment = segment)
+
+  /** Σ of a VP8 stream frame's Y2-DC levels, keyframe or inter. */
+  private def y2Levels(f: Vp8.StreamFrame): Long =
+    f.coded.fold(_.frame.mbs.iterator.map(_.y2(0).toLong).sum,
+      _.frame.mbs.iterator.map(_.y2(0).toLong).sum)
+
+  private def lumaSum(f: Vp8.StreamFrame): Long =
+    f.y.iterator.map(_.toLong).sum
+
+  private def chromaSum(f: Vp8.StreamFrame): Long =
+    f.u.iterator.map(_.toLong).sum + f.v.iterator.map(_.toLong).sum
+
+  /** Σ luma of display row `r`. */
+  private def rowSum(f: Vp8.StreamFrame, r: Int): Long =
+    (0 until f.width).map(x => f.y(r * f.width + x).toLong).sum
 
   /** m16: REAL WAV container round-trip under the oracle. Per
     * container key, click values become PCM16 samples, are muxed into
@@ -1876,19 +1923,12 @@ object ContainerQueries {
   private[operators] object Vp8DecodeKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       import graft.sources.Ivf
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       val frames = (0 until n).map { t =>
-        val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-          val v = 1 + hexbyte(s"vp8${k}_${t}_${j}_${c}") % 100
-          val y2 = new Array[Int](16); y2(0) = v
-          Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-            Array.fill(16)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)))
-        }).toVector
+        val mbs = mbGrid((j, c) =>
+          vp8KeyMb(1 + hexbyte(s"vp8${k}_${t}_${j}_${c}") % 100))
         Vp8.KeyFrame(32, 32, 0, mbs)
       }
       val ivf = Ivf.mux(Ivf.IvfHeader("VP80", 32, 32, 30, 1, n.toLong),
@@ -1929,7 +1969,6 @@ object ContainerQueries {
   private[operators] object Vp8BpredKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       (0 until n).iterator.map { t =>
@@ -1942,9 +1981,7 @@ object ContainerQueries {
             blk(0) = vOf(mj * 4 + b / 4, mc * 4 + b % 4); blk
           }
           Vp8.MbCoding(Vp8.BPred, Vp8.DcPred, new Array[Int](16), y,
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(16)(Vp8.BTm))
+            zeroBlocks(4), zeroBlocks(4), Array.fill(16)(Vp8.BTm))
         }
         val dec = Vp8.decode(Vp8.encode(Vp8.KeyFrame(32, 32, 0, mbs)))
         require(dec.frame.mbs.forall(m => m.yMode == Vp8.BPred &&
@@ -2003,19 +2040,12 @@ object ContainerQueries {
   private[operators] object WebmVp8DecodeKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       import graft.sources.{Ivf, Mkv}
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       val blocks = (0 until n).map { t =>
-        val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-          val v = 1 + hexbyte(s"vp8w${k}_${t}_${j}_${c}") % 100
-          val y2 = new Array[Int](16); y2(0) = v
-          Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-            Array.fill(16)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)))
-        }).toVector
+        val mbs = mbGrid((j, c) =>
+          vp8KeyMb(1 + hexbyte(s"vp8w${k}_${t}_${j}_${c}") % 100))
         Mkv.MkvBlock(1, t * 33L, keyframe = true,
           Vp8.encode(Vp8.KeyFrame(32, 32, 0, mbs)))
       }
@@ -2085,17 +2115,9 @@ object ContainerQueries {
   private[operators] object Vp8LoopFilterKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       (0 until n).iterator.map { t =>
-        def rowMb(v: Int) = {
-          val y2 = new Array[Int](16); y2(0) = v
-          Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-            Array.fill(16)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)))
-        }
         val v0 = 1 + hexbyte(s"vp8f${k}_${t}_0") % 100
         // v1 ≤ 40 keeps d ≤ 5 so f1 ≤ 1: the MB(1,1) left-edge pass
         // (which runs between the two top-edge passes and sees a
@@ -2103,7 +2125,7 @@ object ContainerQueries {
         // closed form holds on every pixel — Vp8Spec pins both sides
         // of that regime boundary
         val v1 = 1 + hexbyte(s"vp8f${k}_${t}_1") % 40
-        val mbs = Vector(rowMb(v0), rowMb(v0), rowMb(v1), rowMb(v1))
+        val mbs = mbGrid((j, _) => vp8KeyMb(if (j == 0) v0 else v1))
         val dec = Vp8.decode(Vp8.encode(
           Vp8.KeyFrame(32, 32, 0, mbs, filterLevel = 18)))
         require(dec.frame.filterLevel == 18,
@@ -2200,62 +2222,29 @@ object ContainerQueries {
   private[operators] object Vp8PframesKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
-      import graft.functions.Vp8
       import graft.sources.Ivf
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8p${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8p${k}_0_${j}_${c}") % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
         (1 until n).map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8p${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
-          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs))
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8p${k}_${t}_${j}_${c}") % 60))))
         }
       val ivf = Ivf.mux(Ivf.IvfHeader("VP80", 32, 32, 30, 1, n.toLong),
         payloads.zipWithIndex.map { case (p, t) =>
           Ivf.IvfFrame(t.toLong, p) })
       val (hdr, rec) = Ivf.demux(ivf)
       require(hdr.frameCount == n, s"container $k: IVF header drift")
-      // decode the chain manually so each frame's coded LEVELS are in
-      // hand (decodeStream returns planes only); the reference walk is
-      // identical
-      var lastY: Array[Int] = null
-      var lastU: Array[Int] = null
-      var lastV: Array[Int] = null
-      rec.iterator.zipWithIndex.map { case ((_, fr), t) =>
-        val tag = Ivf.parseVp8Tag(fr.payload)
-        require(tag.keyframe == (t == 0),
-          s"container $k frame $t: keyframe bit drift")
-        val (levels, y, u, v) =
-          if (t == 0) {
-            val dec = Vp8.decode(fr.payload)
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          } else {
-            val dec = Vp8.decodeInter(fr.payload, 32, 32, lastY, lastU, lastV)
-            require(dec.frame.mbs.forall(m => m.inter &&
-              m.mvMode == Vp8.ZeroMv && m.mv.isZero),
-              s"container $k frame $t: mode drift through the bitstream")
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          }
-        lastY = y; lastU = u; lastV = v
-        (k, t.toLong, t == 0, levels,
-          y.iterator.map(_.toLong).sum,
-          u.iterator.map(_.toLong).sum + v.iterator.map(_.toLong).sum)
+      Vp8.decodeStream(rec.map(_._2.payload)).iterator.zipWithIndex.map {
+        case (f, t) =>
+          require(f.keyframe == (t == 0),
+            s"container $k frame $t: keyframe bit drift")
+          f.coded.foreach(d => require(d.frame.mbs.forall(m => m.inter &&
+            m.mvMode == Vp8.ZeroMv && m.mv.isZero),
+            s"container $k frame $t: mode drift through the bitstream"))
+          (k, t.toLong, t == 0, y2Levels(f), lumaSum(f), chromaSum(f))
       }
     }
   }
@@ -2319,59 +2308,29 @@ object ContainerQueries {
   private[operators] object Vp8MotionKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8m${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      def pMb(mvMode: Int, mv: Vp8.Mv, v: Int): Vp8.InterMb = {
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.InterMb(inter = true, mvMode, mv, 0, 0, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8m${k}_0_${j}_${c}") % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
         (1 until n).map { t =>
           def v(j: Int, c: Int) = hexbyte(s"vp8m${k}_${t}_${j}_${c}") % 60
           val mbs = Vector(
-            pMb(Vp8.ZeroMv, Vp8.Mv(0, 0), v(0, 0)),
-            pMb(Vp8.NewMv, Vp8.Mv(0, -128), v(0, 1)),
-            pMb(Vp8.NewMv, Vp8.Mv(-128, 0), v(1, 0)),
-            if (t == 1) pMb(Vp8.NewMv, Vp8.Mv(-128, -128), v(1, 1))
-            else pMb(Vp8.NearestMv, Vp8.Mv(0, 0), v(1, 1)))
+            vp8InterMb(v(0, 0)),
+            vp8InterMb(v(0, 1), Vp8.NewMv, Vp8.Mv(0, -128)),
+            vp8InterMb(v(1, 0), Vp8.NewMv, Vp8.Mv(-128, 0)),
+            if (t == 1) vp8InterMb(v(1, 1), Vp8.NewMv, Vp8.Mv(-128, -128))
+            else vp8InterMb(v(1, 1), Vp8.NearestMv))
           Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs))
         }
-      var lastY: Array[Int] = null
-      var lastU: Array[Int] = null
-      var lastV: Array[Int] = null
-      payloads.iterator.zipWithIndex.map { case (p, t) =>
-        val (levels, y, u, v) =
-          if (t == 0) {
-            val dec = Vp8.decode(p)
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          } else {
-            val dec = Vp8.decodeInter(p, 32, 32, lastY, lastU, lastV)
-            // the survey must resolve MB(1,1)'s NEARESTMV to its above
-            // neighbor's vector — a decode-side invariant, not an input
-            if (t >= 2)
-              require(dec.frame.mbs(3).mvMode == Vp8.NearestMv &&
-                dec.effMvs(3) == Vp8.Mv(0, -128),
-                s"container $k frame $t: NEARESTMV survey drift")
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          }
-        lastY = y; lastU = u; lastV = v
-        (k, t.toLong, t == 0, levels,
-          y.iterator.map(_.toLong).sum,
-          u.iterator.map(_.toLong).sum + v.iterator.map(_.toLong).sum)
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        // the survey must resolve MB(1,1)'s NEARESTMV to its above
+        // neighbor's vector — a decode-side invariant, not an input
+        if (t >= 2)
+          require(f.coded.exists(d => d.frame.mbs(3).mvMode ==
+            Vp8.NearestMv && d.effMvs(3) == Vp8.Mv(0, -128)),
+            s"container $k frame $t: NEARESTMV survey drift")
+        (k, t.toLong, t == 0, y2Levels(f), lumaSum(f), chromaSum(f))
       }
     }
   }
@@ -2532,6 +2491,24 @@ object ContainerQueries {
       |  CAST(sum(64 * (cb + cr)) AS BIGINT) AS chroma_sum
       |FROM mb GROUP BY container, t ORDER BY container, t""".stripMargin
 
+  /** The §9.7 lifecycle stream m58 and e55 decode: the keyframe, then
+    * `n - 1` ZEROMV P-frames whose MB(0,1) reads GOLDEN and MB(1,0)
+    * ALTREF; refresh_golden on t ≡ 1 (mod 3), copy GOLDEN → ALTREF on
+    * t ≡ 2 (mod 3), refresh_last = 0 on t = 3. `draw(t, j, c)` seeds
+    * each macroblock's level. */
+  private def vp8LifecyclePayloads(n: Int, draw: (Int, Int, Int) => Int)
+      : Seq[Array[Byte]] =
+    Vp8.encode(Vp8.KeyFrame(32, 32, 0,
+      mbGrid((j, c) => vp8KeyMb(1 + draw(0, j, c) % 100)))) +:
+      (1 until n).map { t =>
+        Vp8.encodeInter(32, 32, Vp8.InterFrame(0,
+          mbGrid((j, c) => vp8InterMb(draw(t, j, c) % 60,
+            refGolden = j == 0 && c == 1, refAltref = j == 1 && c == 0)),
+          refreshLast = t != 3,
+          refreshGolden = t % 3 == 1,
+          copyToAlt = if (t % 3 == 2) 2 else 0))
+      }
+
   /** m58: VP8 REFERENCE-BUFFER LIFECYCLE (§9.7) — the header flags
     * every real encoder drives its buffer strategy with, through real
     * coded bits and [[graft.functions.Vp8.decodeStream]]'s production
@@ -2553,56 +2530,21 @@ object ContainerQueries {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Boolean, Boolean, Boolean,
           Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      def draw(t: Int, j: Int, c: Int): Int =
-        hexbyte(s"vp8r${k}_${t}_${j}_${c}")
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val y2 = new Array[Int](16); y2(0) = 1 + draw(0, j, c) % 100
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
-        (1 until n).map { t =>
-          def mbOf(j: Int, c: Int): Vp8.InterMb = {
-            val y2 = new Array[Int](16); y2(0) = draw(t, j, c) % 60
-            val base = Vp8.InterMb(inter = true, Vp8.ZeroMv,
-              Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-            if (j == 0 && c == 1) base.copy(refGolden = true)
-            else if (j == 1 && c == 0) base.copy(refAltref = true)
-            else base
-          }
-          Vp8.encodeInter(32, 32, Vp8.InterFrame(0,
-            Vector(mbOf(0, 0), mbOf(0, 1), mbOf(1, 0), mbOf(1, 1)),
-            refreshLast = t != 3,
-            refreshGolden = t % 3 == 1,
-            copyToAlt = if (t % 3 == 2) 2 else 0))
-        }
-      val st = Vp8.decodeStream(payloads)
+      val st = Vp8.decodeStream(vp8LifecyclePayloads(n, (t, j, c) =>
+        hexbyte(s"vp8r${k}_${t}_${j}_${c}")))
       require(st.length == n, s"container $k: stream length drift")
-      // header fidelity spot check: frame 1 decoded standalone
-      if (n > 1) {
-        val d1 = Vp8.decodeInter(payloads(1), 32, 32,
-          st(0).y, st(0).u, st(0).v, st(0).y, st(0).u, st(0).v,
-          altY = st(0).y, altU = st(0).u, altV = st(0).v)
-        require(d1.frame.refreshGolden && d1.frame.refreshLast &&
-          d1.frame.copyToAlt == 0,
-          s"container $k: lifecycle header drift")
-      }
+      // header fidelity spot check: frame 1's decoded lifecycle flags
+      require(st(1).coded.exists(d => d.frame.refreshGolden &&
+        d.frame.refreshLast && d.frame.copyToAlt == 0),
+        s"container $k: lifecycle header drift")
       st.iterator.zipWithIndex.map { case (f, t) =>
         (k, t.toLong, t == 0,
           t > 0 && t % 3 == 1,  // refresh_golden (oracle replays)
           t > 0 && t % 3 == 2,  // copy_to_alt
           t != 3,               // refresh_last
-          f.y.iterator.map(_.toLong).sum,
-          f.u.iterator.map(_.toLong).sum +
-            f.v.iterator.map(_.toLong).sum)
+          lumaSum(f), chromaSum(f))
       }
     }
   }
@@ -2707,37 +2649,10 @@ object ContainerQueries {
   private[operators] object Vp8LifecycleStreamKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(String, Int, Long, Double, String, Boolean, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      def draw(t: Int, j: Int, c: Int): Int =
-        hexbyte(s"vp8z${k}_${t}_${j}_${c}")
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val y2 = new Array[Int](16); y2(0) = 1 + draw(0, j, c) % 100
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
-        (1 until n).map { t =>
-          def mbOf(j: Int, c: Int): Vp8.InterMb = {
-            val y2 = new Array[Int](16); y2(0) = draw(t, j, c) % 60
-            val base = Vp8.InterMb(inter = true, Vp8.ZeroMv,
-              Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-            if (j == 0 && c == 1) base.copy(refGolden = true)
-            else if (j == 1 && c == 0) base.copy(refAltref = true)
-            else base
-          }
-          Vp8.encodeInter(32, 32, Vp8.InterFrame(0,
-            Vector(mbOf(0, 0), mbOf(0, 1), mbOf(1, 0), mbOf(1, 1)),
-            refreshLast = t != 3,
-            refreshGolden = t % 3 == 1,
-            copyToAlt = if (t % 3 == 2) 2 else 0))
-        }
+      val payloads = vp8LifecyclePayloads(n, (t, j, c) =>
+        hexbyte(s"vp8z${k}_${t}_${j}_${c}"))
       val hex = java.util.HexFormat.of()
       payloads.iterator.zipWithIndex.map { case (p, t) =>
         (k.toString, 0, t.toLong, 0.0, hex.formatHex(p), false, t.toLong)
@@ -2842,7 +2757,6 @@ object ContainerQueries {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Boolean, Long, Long, Long,
           Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       def seg(updateMap: Boolean, updateData: Boolean = true) =
@@ -2852,29 +2766,16 @@ object ContainerQueries {
           updateData = updateData)
       def draw(t: Int, j: Int): Int = hexbyte(s"vp8g${k}_${t}_$j")
       val cxE = new Vp8.Ctx(Vp8.Profile.StandIn)
-      val cxD = new Vp8.Ctx(Vp8.Profile.StandIn)
-      def kMb(v: Int, sid: Int) = {
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)), segment = sid)
-      }
-      def pMb(v: Int, sid: Int) = {
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)), segment = sid)
-      }
       val payloads = Vp8.encode(Vp8.KeyFrame(16, 32, 0,
-        Vector(kMb(1 + draw(0, 0) % 100, 0), kMb(1 + draw(0, 1) % 100, 1)),
+        Vector(vp8KeyMb(1 + draw(0, 0) % 100),
+          vp8KeyMb(1 + draw(0, 1) % 100, segment = 1)),
         segmentation = Some(seg(updateMap = true))), ctx = cxE) +:
         (1 until n).map { t =>
           // seg 1 dequants at 48: cap its residuals (% 8) so the
           // five-frame chain stays below the 255 pixel clamp
           Vp8.encodeInter(16, 32, Vp8.InterFrame(0,
-            Vector(pMb(draw(t, 0) % 60, 0), pMb(draw(t, 1) % 8, 1)),
+            Vector(vp8InterMb(draw(t, 0) % 60),
+              vp8InterMb(draw(t, 1) % 8, segment = 1)),
             filterLevel = if (t == n - 1) 18 else 0,
             normalFilter = true,
             // odd frames re-state the feature data, even frames
@@ -2883,34 +2784,17 @@ object ContainerQueries {
             segmentation = Some(seg(updateMap = false,
               updateData = t % 2 == 1))), ctx = cxE)
         }
-      var lastY: Array[Int] = null
-      var lastU: Array[Int] = null
-      var lastV: Array[Int] = null
-      payloads.iterator.zipWithIndex.map { case (p, t) =>
-        val (segIds, updMap, y, u, v) =
-          if (t == 0) {
-            val dec = Vp8.decode(p, ctx = cxD)
-            (dec.frame.mbs.map(_.segment),
-              dec.frame.segmentation.exists(_.updateMap),
-              dec.y, dec.u, dec.v)
-          } else {
-            val dec = Vp8.decodeInter(p, 16, 32, lastY, lastU, lastV,
-              ctx = cxD)
-            (dec.frame.mbs.map(_.segment),
-              dec.frame.segmentation.exists(_.updateMap),
-              dec.y, dec.u, dec.v)
-          }
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        val (segIds, sg) = f.coded.fold(
+          d => (d.frame.mbs.map(_.segment), d.frame.segmentation),
+          d => (d.frame.mbs.map(_.segment), d.frame.segmentation))
+        val updMap = sg.exists(_.updateMap)
         require(segIds == Vector(0, 1),
           s"container $k frame $t: segment map drift")
         require(updMap == (t == 0),
           s"container $k frame $t: update_mb_segmentation_map drift")
-        lastY = y; lastU = u; lastV = v
-        def rowSum(r: Int): Long =
-          (0 until 16).map(x => y(r * 16 + x).toLong).sum
-        (k, t.toLong, t == 0, updMap, rowSum(15), rowSum(16),
-          y.iterator.map(_.toLong).sum,
-          u.iterator.map(_.toLong).sum + v.iterator.map(_.toLong).sum,
-          segIds.map(_.toLong).sum)
+        (k, t.toLong, t == 0, updMap, rowSum(f, 15), rowSum(f, 16),
+          lumaSum(f), chromaSum(f), segIds.map(_.toLong).sum)
       }
     }
   }
@@ -2979,60 +2863,32 @@ object ContainerQueries {
   private[operators] object Vp8IntraRefreshKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       def draw(t: Int, j: Int, c: Int): Int =
         hexbyte(s"vp8i${k}_${t}_${j}_${c}")
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val y2 = new Array[Int](16); y2(0) = 1 + draw(0, j, c) % 100
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) => vp8KeyMb(1 + draw(0, j, c) % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
         (1 until n).map { t =>
-          def zMb(j: Int, c: Int) = {
-            val y2 = new Array[Int](16); y2(0) = draw(t, j, c) % 60
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0,
-              y2, Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }
           val vD = draw(t, 0, 1) % 6
           val bMb = Vp8.InterMb(inter = false, 0, Vp8.Mv(0, 0),
             Vp8.BPred, Vp8.DcPred, new Array[Int](16),
             Array.fill(16) { val a = new Array[Int](16); a(0) = vD; a },
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            bModes = Array.fill(16)(Vp8.BTm))
-          Vp8.encodeInter(32, 32, Vp8.InterFrame(0,
-            Vector(zMb(0, 0), bMb, zMb(1, 0), zMb(1, 1))))
+            zeroBlocks(4), zeroBlocks(4), bModes = Array.fill(16)(Vp8.BTm))
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            if (j == 0 && c == 1) bMb
+            else vp8InterMb(draw(t, j, c) % 60))))
         }
-      var lastY: Array[Int] = null
-      var lastU: Array[Int] = null
-      var lastV: Array[Int] = null
-      payloads.iterator.zipWithIndex.map { case (p, t) =>
-        val (levels, y, u, v) =
-          if (t == 0) {
-            val dec = Vp8.decode(p)
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          } else {
-            val dec = Vp8.decodeInter(p, 32, 32, lastY, lastU, lastV)
-            val mb1 = dec.frame.mbs(1)
-            require(!mb1.inter && mb1.yMode == Vp8.BPred &&
-              mb1.bModes.forall(_ == Vp8.BTm),
-              s"container $k frame $t: intra-refresh mode drift")
-            (dec.frame.mbs.iterator.map(m =>
-              m.y2(0).toLong + m.y.iterator.map(_.head.toLong).sum).sum,
-              dec.y, dec.u, dec.v)
-          }
-        lastY = y; lastU = u; lastV = v
-        (k, t.toLong, t == 0, levels,
-          y.iterator.map(_.toLong).sum,
-          u.iterator.map(_.toLong).sum + v.iterator.map(_.toLong).sum)
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        val levels = f.coded.fold(_ => y2Levels(f), { d =>
+          val mb1 = d.frame.mbs(1)
+          require(!mb1.inter && mb1.yMode == Vp8.BPred &&
+            mb1.bModes.forall(_ == Vp8.BTm),
+            s"container $k frame $t: intra-refresh mode drift")
+          d.frame.mbs.iterator.map(m =>
+            m.y2(0).toLong + m.y.iterator.map(_.head.toLong).sum).sum
+        })
+        (k, t.toLong, t == 0, levels, lumaSum(f), chromaSum(f))
       }
     }
   }
@@ -3105,27 +2961,14 @@ object ContainerQueries {
   private[operators] object Vp8CropKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       def draw(t: Int, j: Int, c: Int): Int =
         hexbyte(s"vp8d${k}_${t}_${j}_${c}")
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val y2 = new Array[Int](16); y2(0) = 1 + draw(0, j, c) % 100
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) => vp8KeyMb(1 + draw(0, j, c) % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(24, 24, 0, keyMbs)) +:
         (1 until n).map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val y2 = new Array[Int](16); y2(0) = draw(t, j, c) % 60
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0,
-              y2, Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) => vp8InterMb(draw(t, j, c) % 60))
           Vp8.encodeInter(24, 24, Vp8.InterFrame(0, mbs))
         }
       val st = Vp8.decodeStream(payloads)
@@ -3134,9 +2977,7 @@ object ContainerQueries {
           f.y.length == 24 * 24 && f.u.length == 12 * 12,
           s"container $k frame $t: display-crop drift")
         (k, t.toLong, t == 0, f.width.toLong,
-          f.y.iterator.map(_.toLong).sum,
-          f.u.iterator.map(_.toLong).sum +
-            f.v.iterator.map(_.toLong).sum,
+          lumaSum(f), chromaSum(f),
           f.y.length.toLong)
       }
     }
@@ -3203,7 +3044,6 @@ object ContainerQueries {
   private[operators] object Vp8UpscaleKernel extends Serializable {
     def rows(k: Long, count: Int): Iterator[(Long, Long, Long, Long,
         Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       import graft.sources.Ivf
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
@@ -3211,23 +3051,11 @@ object ContainerQueries {
       val hs = hexbyte(s"vp8uh$k") % 4
       def draw(t: Int, j: Int, c: Int): Int =
         hexbyte(s"vp8u${k}_${t}_${j}_${c}")
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val y2 = new Array[Int](16); y2(0) = 1 + draw(0, j, c) % 100
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) => vp8KeyMb(1 + draw(0, j, c) % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs,
         widthScale = ws, heightScale = hs)) +:
         (1 until n).map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val y2 = new Array[Int](16); y2(0) = draw(t, j, c) % 60
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0,
-              y2, Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) => vp8InterMb(draw(t, j, c) % 60))
           Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs))
         }
       val tag = Ivf.parseVp8Tag(payloads.head)
@@ -4556,28 +4384,15 @@ object ContainerQueries {
   private[operators] object WebmVp8StreamKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Boolean, Long, Long)] = {
-      import graft.functions.Vp8
       import graft.sources.{Ivf, Mkv}
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8s${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8s${k}_0_${j}_${c}") % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
         (1 until n).map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8s${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8s${k}_${t}_${j}_${c}") % 60))
           Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs))
         }
       val blocks = payloads.zipWithIndex.map { case (p, t) =>
@@ -4598,9 +4413,7 @@ object ContainerQueries {
           require(fr.width == 32 && fr.height == 32,
             s"container $k frame $t: decoded dimensions drift")
           (k, t.toLong, b.tsMs, fr.keyframe,
-            fr.y.iterator.map(_.toLong).sum,
-            fr.u.iterator.map(_.toLong).sum +
-              fr.v.iterator.map(_.toLong).sum)
+            lumaSum(fr), chromaSum(fr))
       }
     }
   }
@@ -4660,29 +4473,16 @@ object ContainerQueries {
     val CutThreshold = 3000L
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Boolean, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(8, count)
       if (n < 2) return Iterator.empty
       val payloads = (0 until n).map { t =>
         if (t % 4 == 0) {
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = 1 + hexbyte(s"vp8c${k}_${t}_${j}_${c}") % 100
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) =>
+            vp8KeyMb(1 + hexbyte(s"vp8c${k}_${t}_${j}_${c}") % 100))
           Vp8.encode(Vp8.KeyFrame(32, 32, 0, mbs))
         } else {
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8c${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8c${k}_${t}_${j}_${c}") % 60))
           Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs))
         }
       }
@@ -4690,7 +4490,7 @@ object ContainerQueries {
       var prevLuma = 0L
       var scenes = 0L
       frames.iterator.zipWithIndex.map { case (fr, t) =>
-        val luma = fr.y.iterator.map(_.toLong).sum
+        val luma = lumaSum(fr)
         val delta = if (t == 0) 0L else math.abs(luma - prevLuma)
         prevLuma = luma
         val cut = t == 0 || delta >= CutThreshold
@@ -4766,49 +4566,22 @@ object ContainerQueries {
   private[operators] object Vp8GoldenKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8g${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val key = Vp8.decode(Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)))
-      var lastY = key.y; var lastU = key.u; var lastV = key.v
-      val out = Iterator.single(
-        (k, 0L, true, keyMbs.iterator.map(_.y2(0).toLong).sum,
-          key.y.iterator.map(_.toLong).sum,
-          key.u.iterator.map(_.toLong).sum +
-            key.v.iterator.map(_.toLong).sum)) ++
-        (1 until n).iterator.map { t =>
-          def pMb(j: Int, c: Int): Vp8.InterMb = {
-            val v = hexbyte(s"vp8g${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              refGolden = j == 1)
-          }
-          val mbs = Vector(pMb(0, 0), pMb(0, 1), pMb(1, 0), pMb(1, 1))
-          val dec = Vp8.decodeInter(
-            Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs)), 32, 32,
-            lastY, lastU, lastV, key.y, key.u, key.v)
-          require(dec.frame.mbs.map(_.refGolden) ==
-            Vector(false, false, true, true),
-            s"container $k frame $t: refGolden drift through the bitstream")
-          lastY = dec.y; lastU = dec.u; lastV = dec.v
-          (k, t.toLong, false,
-            dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-            dec.y.iterator.map(_.toLong).sum,
-            dec.u.iterator.map(_.toLong).sum +
-              dec.v.iterator.map(_.toLong).sum)
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8g${k}_0_${j}_${c}") % 100))
+      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
+        (1 until n).map { t =>
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8g${k}_${t}_${j}_${c}") % 60,
+              refGolden = j == 1))))
         }
-      out
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        f.coded.foreach(d => require(d.frame.mbs.map(_.refGolden) ==
+          Vector(false, false, true, true),
+          s"container $k frame $t: refGolden drift through the bitstream"))
+        (k, t.toLong, t == 0, y2Levels(f), lumaSum(f), chromaSum(f))
+      }
     }
   }
 
@@ -4875,27 +4648,14 @@ object ContainerQueries {
   private[operators] object Vp8StreamFixtureKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(String, Int, Long, Double, String, Boolean, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8e${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8e${k}_0_${j}_${c}") % 100))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
         (1 until n).map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8e${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8e${k}_${t}_${j}_${c}") % 60))
           Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs))
         }
       val hex = java.util.HexFormat.of()
@@ -4968,50 +4728,24 @@ object ContainerQueries {
   private[operators] object Vp8SkipKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8k${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val key = Vp8.decode(Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)))
-      var lastY = key.y; var lastU = key.u; var lastV = key.v
-      Iterator.single((k, 0L, true, 0L,
-        keyMbs.iterator.map(_.y2(0).toLong).sum,
-        key.y.iterator.map(_.toLong).sum,
-        key.u.iterator.map(_.toLong).sum +
-          key.v.iterator.map(_.toLong).sum)) ++
-        (1 until n).iterator.map { t =>
-          def pMb(j: Int, c: Int): Vp8.InterMb = {
-            val coded = j == c // (0,0)/(1,1) code, (0,1)/(1,0) skip
-            val v = if (coded) hexbyte(s"vp8k${k}_${t}_${j}_${c}") % 60
-              else 0
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)), skip = !coded)
-          }
-          val mbs = Vector(pMb(0, 0), pMb(0, 1), pMb(1, 0), pMb(1, 1))
-          val dec = Vp8.decodeInter(
-            Vp8.encodeInter(32, 32,
-              Vp8.InterFrame(0, mbs, skipEnabled = true)),
-            32, 32, lastY, lastU, lastV)
-          require(dec.frame.skipEnabled &&
-            dec.frame.mbs.map(_.skip) == Vector(false, true, true, false),
-            s"container $k frame $t: skip flags drift through the bitstream")
-          lastY = dec.y; lastU = dec.u; lastV = dec.v
-          (k, t.toLong, false, 2L,
-            dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-            dec.y.iterator.map(_.toLong).sum,
-            dec.u.iterator.map(_.toLong).sum +
-              dec.v.iterator.map(_.toLong).sum)
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8k${k}_0_${j}_${c}") % 100))
+      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
+        (1 until n).map { t =>
+          // (0,0)/(1,1) code, (0,1)/(1,0) skip
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            if (j == c) vp8InterMb(hexbyte(s"vp8k${k}_${t}_${j}_${c}") % 60)
+            else vp8InterMb(0, skip = true)), skipEnabled = true))
         }
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        f.coded.foreach(d => require(d.frame.skipEnabled &&
+          d.frame.mbs.map(_.skip) == Vector(false, true, true, false),
+          s"container $k frame $t: skip flags drift through the bitstream"))
+        (k, t.toLong, t == 0, if (t == 0) 0L else 2L, y2Levels(f),
+          lumaSum(f), chromaSum(f))
+      }
     }
   }
 
@@ -5071,51 +4805,26 @@ object ContainerQueries {
   private[operators] object Vp8QdeltaKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8q${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val key = Vp8.decode(Vp8.encode(
-        Vp8.KeyFrame(32, 32, 0, keyMbs,
-          qDeltas = Vp8.QDeltas(y2dc = 6))))
-      require(key.frame.qDeltas == Vp8.QDeltas(y2dc = 6),
-        s"container $k: keyframe qdelta drift")
-      var lastY = key.y; var lastU = key.u; var lastV = key.v
-      Iterator.single((k, 0L, true, 6L,
-        keyMbs.iterator.map(_.y2(0).toLong).sum,
-        key.y.iterator.map(_.toLong).sum,
-        key.u.iterator.map(_.toLong).sum +
-          key.v.iterator.map(_.toLong).sum)) ++
-        (1 until n).iterator.map { t =>
-          val d = (t % 11) - 5
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8q${k}_${t}_${j}_${c}") % 40
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
-          val dec = Vp8.decodeInter(
-            Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs,
-              qDeltas = Vp8.QDeltas(y2dc = d))),
-            32, 32, lastY, lastU, lastV)
-          require(dec.frame.qDeltas == Vp8.QDeltas(y2dc = d),
-            s"container $k frame $t: qdelta drift through the header")
-          lastY = dec.y; lastU = dec.u; lastV = dec.v
-          (k, t.toLong, false, d.toLong,
-            dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-            dec.y.iterator.map(_.toLong).sum,
-            dec.u.iterator.map(_.toLong).sum +
-              dec.v.iterator.map(_.toLong).sum)
+      // y2dc delta per frame: 6 on the keyframe, then (t % 11) - 5
+      def delta(t: Int): Int = if (t == 0) 6 else (t % 11) - 5
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8q${k}_0_${j}_${c}") % 100))
+      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs,
+        qDeltas = Vp8.QDeltas(y2dc = delta(0)))) +:
+        (1 until n).map { t =>
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8q${k}_${t}_${j}_${c}") % 40)),
+            qDeltas = Vp8.QDeltas(y2dc = delta(t))))
         }
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        require(f.coded.fold(_.frame.qDeltas, _.frame.qDeltas) ==
+          Vp8.QDeltas(y2dc = delta(t)),
+          s"container $k frame $t: qdelta drift through the header")
+        (k, t.toLong, t == 0, delta(t).toLong, y2Levels(f), lumaSum(f),
+          chromaSum(f))
+      }
     }
   }
 
@@ -5182,49 +4891,23 @@ object ContainerQueries {
   private[operators] object Vp8PartitionKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8t${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val key = Vp8.decode(Vp8.encode(
-        Vp8.KeyFrame(32, 32, 0, keyMbs, tokenPartitions = 2)))
-      require(key.frame.tokenPartitions == 2,
-        s"container $k: keyframe partition count drift")
-      var lastY = key.y; var lastU = key.u; var lastV = key.v
-      Iterator.single((k, 0L, true, 2L,
-        keyMbs.iterator.map(_.y2(0).toLong).sum,
-        key.y.iterator.map(_.toLong).sum,
-        key.u.iterator.map(_.toLong).sum +
-          key.v.iterator.map(_.toLong).sum)) ++
-        (1 until n).iterator.map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8t${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
-          val dec = Vp8.decodeInter(
-            Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs,
-              tokenPartitions = 2)),
-            32, 32, lastY, lastU, lastV)
-          require(dec.frame.tokenPartitions == 2,
-            s"container $k frame $t: partition count drift")
-          lastY = dec.y; lastU = dec.u; lastV = dec.v
-          (k, t.toLong, false, 2L,
-            dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-            dec.y.iterator.map(_.toLong).sum,
-            dec.u.iterator.map(_.toLong).sum +
-              dec.v.iterator.map(_.toLong).sum)
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8t${k}_0_${j}_${c}") % 100))
+      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs,
+        tokenPartitions = 2)) +:
+        (1 until n).map { t =>
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8t${k}_${t}_${j}_${c}") % 60)),
+            tokenPartitions = 2))
         }
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        require(f.coded.fold(_.frame.tokenPartitions,
+          _.frame.tokenPartitions) == 2,
+          s"container $k frame $t: partition count drift")
+        (k, t.toLong, t == 0, 2L, y2Levels(f), lumaSum(f), chromaSum(f))
+      }
     }
   }
 
@@ -5283,57 +4966,30 @@ object ContainerQueries {
   private[operators] object Vp8SplitKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8x${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
-      val key = Vp8.decode(Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)))
-      var lastY = key.y; var lastU = key.u; var lastV = key.v
-      Iterator.single((k, 0L, true,
-        keyMbs.iterator.map(_.y2(0).toLong).sum,
-        key.y.iterator.map(_.toLong).sum,
-        key.u.iterator.map(_.toLong).sum +
-          key.v.iterator.map(_.toLong).sum)) ++
-        (1 until n).iterator.map { t =>
-          def zMb(j: Int, c: Int): Vp8.InterMb = {
-            val v = hexbyte(s"vp8x${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }
-          val collage = Vp8.InterMb(inter = true, Vp8.SplitMv,
-            Vp8.Mv(0, 0), 0, 0, new Array[Int](16),
-            Array.fill(16)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            splitType = 2,
-            subModes = Array(Vp8.SubNew, Vp8.SubNew, Vp8.SubNew,
-              Vp8.SubZero),
-            subNewMvs = Array(Vp8.Mv(-128, -128), Vp8.Mv(-128, 0),
-              Vp8.Mv(0, -128), Vp8.Mv(0, 0)))
-          val mbs = Vector(zMb(0, 0), zMb(0, 1), zMb(1, 0), collage)
-          val dec = Vp8.decodeInter(
-            Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs)),
-            32, 32, lastY, lastU, lastV)
-          require(dec.frame.mbs(3).mvMode == Vp8.SplitMv &&
-            dec.frame.mbs(3).splitType == 2,
-            s"container $k frame $t: split mode drift")
-          lastY = dec.y; lastU = dec.u; lastV = dec.v
-          (k, t.toLong, false,
-            dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-            dec.y.iterator.map(_.toLong).sum,
-            dec.u.iterator.map(_.toLong).sum +
-              dec.v.iterator.map(_.toLong).sum)
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8x${k}_0_${j}_${c}") % 100))
+      val collage = Vp8.InterMb(inter = true, Vp8.SplitMv,
+        Vp8.Mv(0, 0), 0, 0, new Array[Int](16),
+        zeroBlocks(16), zeroBlocks(4), zeroBlocks(4),
+        splitType = 2,
+        subModes = Array(Vp8.SubNew, Vp8.SubNew, Vp8.SubNew,
+          Vp8.SubZero),
+        subNewMvs = Array(Vp8.Mv(-128, -128), Vp8.Mv(-128, 0),
+          Vp8.Mv(0, -128), Vp8.Mv(0, 0)))
+      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs)) +:
+        (1 until n).map { t =>
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            if (j == 1 && c == 1) collage
+            else vp8InterMb(hexbyte(s"vp8x${k}_${t}_${j}_${c}") % 60))))
         }
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        f.coded.foreach(d => require(d.frame.mbs(3).mvMode == Vp8.SplitMv &&
+          d.frame.mbs(3).splitType == 2,
+          s"container $k frame $t: split mode drift"))
+        (k, t.toLong, t == 0, y2Levels(f), lumaSum(f), chromaSum(f))
+      }
     }
   }
 
@@ -5419,51 +5075,26 @@ object ContainerQueries {
   private[operators] object Vp8SegKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Boolean, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       val seg = Vp8.Segmentation(absMode = true,
         Array(0, 20, 0, 0), Array(100, 128, 160))
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8s2${k}_0_${j}_${c}") % 40
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)), segment = (j + c) % 2)
-      }).toVector
-      val key = Vp8.decode(Vp8.encode(
-        Vp8.KeyFrame(32, 32, 0, keyMbs, segmentation = Some(seg))))
-      require(key.frame.mbs.map(_.segment) == Vector(0, 1, 1, 0),
-        s"container $k: segment map drift through the bitstream")
-      var lastY = key.y; var lastU = key.u; var lastV = key.v
-      Iterator.single((k, 0L, true,
-        keyMbs.iterator.map(_.y2(0).toLong).sum,
-        key.y.iterator.map(_.toLong).sum,
-        key.u.iterator.map(_.toLong).sum +
-          key.v.iterator.map(_.toLong).sum)) ++
-        (1 until n).iterator.map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8s2${k}_${t}_${j}_${c}") % 12
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)), segment = (j + c) % 2)
-          }).toVector
-          val dec = Vp8.decodeInter(
-            Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbs,
-              segmentation = Some(seg))),
-            32, 32, lastY, lastU, lastV)
-          require(dec.frame.mbs.map(_.segment) == Vector(0, 1, 1, 0),
-            s"container $k frame $t: segment map drift")
-          lastY = dec.y; lastU = dec.u; lastV = dec.v
-          (k, t.toLong, false,
-            dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-            dec.y.iterator.map(_.toLong).sum,
-            dec.u.iterator.map(_.toLong).sum +
-              dec.v.iterator.map(_.toLong).sum)
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8s2${k}_0_${j}_${c}") % 40,
+          segment = (j + c) % 2))
+      val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs,
+        segmentation = Some(seg))) +:
+        (1 until n).map { t =>
+          Vp8.encodeInter(32, 32, Vp8.InterFrame(0, mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8s2${k}_${t}_${j}_${c}") % 12,
+              segment = (j + c) % 2)), segmentation = Some(seg)))
         }
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        require(f.coded.fold(_.frame.mbs.map(_.segment),
+          _.frame.mbs.map(_.segment)) == Vector(0, 1, 1, 0),
+          s"container $k frame $t: segment map drift through the bitstream")
+        (k, t.toLong, t == 0, y2Levels(f), lumaSum(f), chromaSum(f))
+      }
     }
   }
 
@@ -5525,21 +5156,13 @@ object ContainerQueries {
   private[operators] object Vp8NormalFilterKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(Long, Long, Long, Long, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       (0 until n).iterator.map { t =>
-        def mbOf(v: Int) = {
-          val y2 = new Array[Int](16); y2(0) = v
-          Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-            Array.fill(16)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)),
-            Array.fill(4)(new Array[Int](16)))
-        }
         val v0 = 1 + hexbyte(s"vp8n${k}_${t}_0") % 100
         val v1 = hexbyte(s"vp8n${k}_${t}_1") % 13 // d <= 2: u9 = 0
         val dec = Vp8.decode(Vp8.encode(Vp8.KeyFrame(16, 32, 0,
-          Vector(mbOf(v0), mbOf(v1)), filterLevel = 18,
+          Vector(vp8KeyMb(v0), vp8KeyMb(v1)), filterLevel = 18,
           normalFilter = true)))
         require(dec.frame.normalFilter && dec.frame.filterLevel == 18,
           s"container $k frame $t: filter header drift")
@@ -5605,32 +5228,19 @@ object ContainerQueries {
   private[operators] object Vp8EntropyStreamKernel extends Serializable {
     def rows(k: Long, count: Int)
         : Iterator[(String, Int, Long, Double, String, Boolean, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       val cxE = new Vp8.Ctx(Vp8.Profile.StandIn)
-      val keyMbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-        val v = 1 + hexbyte(s"vp8y${k}_0_${j}_${c}") % 100
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }).toVector
+      val keyMbs = mbGrid((j, c) =>
+        vp8KeyMb(1 + hexbyte(s"vp8y${k}_0_${j}_${c}") % 100))
       val kfUpd = Vector(
         Vp8.CoeffUpdate(1, 0, 0, 0, 1 + hexbyte(s"vp8yp${k}_0") % 254),
         Vp8.CoeffUpdate(1, 0, 1, 0, 1 + hexbyte(s"vp8yp${k}_1") % 254))
       val payloads = Vp8.encode(Vp8.KeyFrame(32, 32, 0, keyMbs,
         coeffUpdates = kfUpd), ctx = cxE) +:
         (1 until n).map { t =>
-          val mbs = (for (j <- 0 until 2; c <- 0 until 2) yield {
-            val v = hexbyte(s"vp8y${k}_${t}_${j}_${c}") % 60
-            val y2 = new Array[Int](16); y2(0) = v
-            Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-              Array.fill(16)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)),
-              Array.fill(4)(new Array[Int](16)))
-          }).toVector
+          val mbs = mbGrid((j, c) =>
+            vp8InterMb(hexbyte(s"vp8y${k}_${t}_${j}_${c}") % 60))
           val (upd, refresh) = t match {
             case 1 => (Vector(Vp8.CoeffUpdate(1, 0, 0, 0,
               1 + hexbyte(s"vp8yq${k}_$t") % 254)), false)
@@ -6721,32 +6331,17 @@ object ContainerQueries {
   private[operators] object Vp8ConformKernel extends Serializable {
     def rows(k: Long, count: Int): Iterator[(Long, Long, Boolean, Long,
         Long, Long, Long, Long, Long, Long)] = {
-      import graft.functions.Vp8
       val n = math.min(6, count)
       if (n < 2) return Iterator.empty
       def draw(tag: String, t: Int, j: Int = -1): Int =
         hexbyte(if (j < 0) s"vp8$tag${k}_$t" else s"vp8$tag${k}_${t}_$j")
-      def mbK(v: Int) = {
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.MbCoding(Vp8.VPred, Vp8.DcPred, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }
-      def mbP(v: Int) = {
-        val y2 = new Array[Int](16); y2(0) = v
-        Vp8.InterMb(inter = true, Vp8.ZeroMv, Vp8.Mv(0, 0), 0, 0, y2,
-          Array.fill(16)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)),
-          Array.fill(4)(new Array[Int](16)))
-      }
       val cxE = new Vp8.Ctx(Vp8.Profile.StandIn)
-      val cxD = new Vp8.Ctx(Vp8.Profile.StandIn)
-      def kfUpdates = Vector(
-        Vp8.CoeffUpdate(1, 0, 0, 0, 1 + draw("p", 0, 0) % 254),
-        Vp8.CoeffUpdate(1, 0, 1, 0, 1 + draw("p", 0, 1) % 254),
-        Vp8.CoeffUpdate(1, 0, 2, 0, 1 + draw("p", 0, 2) % 254))
-      def pUpd(t: Int): (Vector[Vp8.CoeffUpdate], Boolean) = t match {
+      // (coefficient-probability updates, refresh_entropy_probs)
+      def upd(t: Int): (Vector[Vp8.CoeffUpdate], Boolean) = t match {
+        case 0 => (Vector(
+          Vp8.CoeffUpdate(1, 0, 0, 0, 1 + draw("p", 0, 0) % 254),
+          Vp8.CoeffUpdate(1, 0, 1, 0, 1 + draw("p", 0, 1) % 254),
+          Vp8.CoeffUpdate(1, 0, 2, 0, 1 + draw("p", 0, 2) % 254)), true)
         case 1 => (Vector(Vp8.CoeffUpdate(1, 0, 0, 0,
           1 + draw("q", t) % 254)), false)
         case 3 => (Vector(Vp8.CoeffUpdate(1, 0, 0, 0,
@@ -6759,55 +6354,35 @@ object ContainerQueries {
           (1, draw("b", t) % 19 - 9), (5, draw("c", t) % 19 - 9))))
         else None
       val payloads = Vp8.encode(Vp8.KeyFrame(16, 32, 0,
-        Vector(mbK(1 + draw("u", 0, 0) % 100),
-          mbK(1 + draw("u", 0, 1) % 100)),
+        Vector(vp8KeyMb(1 + draw("u", 0, 0) % 100),
+          vp8KeyMb(1 + draw("u", 0, 1) % 100)),
         filterLevel = 18, normalFilter = true,
         sharpness = draw("s", 0) % 8, lfDeltaEnabled = true,
-        lfDeltaUpdate = lfUpd(0), coeffUpdates = kfUpdates),
+        lfDeltaUpdate = lfUpd(0), coeffUpdates = upd(0)._1),
         ctx = cxE) +:
         (1 until n).map { t =>
-          val (cu, refresh) = pUpd(t)
+          val (cu, refresh) = upd(t)
           Vp8.encodeInter(16, 32, Vp8.InterFrame(0,
-            Vector(mbP(draw("u", t, 0) % 60), mbP(draw("u", t, 1) % 60)),
+            Vector(vp8InterMb(draw("u", t, 0) % 60),
+              vp8InterMb(draw("u", t, 1) % 60)),
             filterLevel = if (t == n - 1) 18 else 0, normalFilter = true,
             sharpness = draw("s", t) % 8, lfDeltaEnabled = true,
             lfDeltaUpdate = lfUpd(t), refreshEntropy = refresh,
             coeffUpdates = cu), ctx = cxE)
         }
-      var lastY: Array[Int] = null
-      var lastU: Array[Int] = null
-      var lastV: Array[Int] = null
-      payloads.iterator.zipWithIndex.map { case (p, t) =>
-        val (levels, y, u, v) =
-          if (t == 0) {
-            val dec = Vp8.decode(p, ctx = cxD)
-            require(dec.frame.sharpness == draw("s", 0) % 8 &&
-              dec.frame.lfDeltaEnabled &&
-              dec.frame.lfDeltaUpdate == lfUpd(0) &&
-              dec.frame.refreshEntropy &&
-              dec.frame.coeffUpdates == kfUpdates,
-              s"container $k keyframe: conformance header drift")
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          } else {
-            val dec = Vp8.decodeInter(p, 16, 32, lastY, lastU, lastV,
-              ctx = cxD)
-            val (cu, refresh) = pUpd(t)
-            require(dec.frame.sharpness == draw("s", t) % 8 &&
-              dec.frame.lfDeltaEnabled &&
-              dec.frame.lfDeltaUpdate == lfUpd(t) &&
-              dec.frame.refreshEntropy == refresh &&
-              dec.frame.coeffUpdates == cu,
-              s"container $k frame $t: conformance header drift")
-            (dec.frame.mbs.iterator.map(_.y2(0).toLong).sum,
-              dec.y, dec.u, dec.v)
-          }
-        lastY = y; lastU = u; lastV = v
-        def rowSum(r: Int): Long =
-          (0 until 16).map(x => y(r * 16 + x).toLong).sum
-        (k, t.toLong, t == 0, levels, rowSum(14), rowSum(15),
-          rowSum(16), rowSum(17), y.iterator.map(_.toLong).sum,
-          u.iterator.map(_.toLong).sum + v.iterator.map(_.toLong).sum)
+      Vp8.decodeStream(payloads).iterator.zipWithIndex.map { case (f, t) =>
+        val (cu, refresh) = upd(t)
+        require(f.coded.fold(
+          d => (d.frame.sharpness, d.frame.lfDeltaEnabled,
+            d.frame.lfDeltaUpdate, d.frame.refreshEntropy,
+            d.frame.coeffUpdates),
+          d => (d.frame.sharpness, d.frame.lfDeltaEnabled,
+            d.frame.lfDeltaUpdate, d.frame.refreshEntropy,
+            d.frame.coeffUpdates)) ==
+          (draw("s", t) % 8, true, lfUpd(t), refresh, cu),
+          s"container $k frame $t: conformance header drift")
+        (k, t.toLong, t == 0, y2Levels(f), rowSum(f, 14), rowSum(f, 15),
+          rowSum(f, 16), rowSum(f, 17), lumaSum(f), chromaSum(f))
       }
     }
   }

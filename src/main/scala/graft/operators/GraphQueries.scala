@@ -434,17 +434,16 @@ object GraphQueries {
     * GraphSpec pins that the fixture fixpoint lands well inside it).
     * Returns (surviving adjacency degrees, rounds-to-fixpoint). */
   private[graft] def kcore(e: DataFrame, k: Int): (DataFrame, Int) = {
-    var cur = adj(e).localCheckpoint()
+    var cur = graft.Resources.checkpoint(adj(e))
     var n = cur.count() // 2|E| of the current subgraph, monotone ↓
     var rounds = 0
     var done = n == 0
     while (!done) {
       val keep = cur.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("x").as("node"))
-      val nxt = cur
+      val nxt = graft.Resources.checkpoint(cur
         .join(keep.select(col("node").as("x")), Seq("x"), "left_semi")
-        .join(keep.select(col("node").as("y")), Seq("y"), "left_semi")
-        .localCheckpoint()
+        .join(keep.select(col("node").as("y")), Seq("y"), "left_semi"))
       val m = nxt.count()
       rounds += 1
       done = m == n // no row removed ⟺ no node peeled ⟺ fixpoint
@@ -561,7 +560,7 @@ object GraphQueries {
   private[graft] def sssp(s: SparkSession, d: String,
       roundSizes: Option[scala.collection.mutable.Buffer[Long]] = None)
       : (DataFrame, Int) = {
-    val wadj = weightedAdj(s, d).localCheckpoint()
+    val wadj = graft.Resources.checkpoint(weightedAdj(s, d))
     val seed = degrees(edgesShared(s, d))
       .orderBy(col("deg").desc, col("node")).limit(1)
       .select(col("node"), lit(0L).as("dist"))
@@ -573,10 +572,9 @@ object GraphQueries {
     // no second checkpoint, no recompute of the relax join.
     // old = NULL marks the seed as newly-discovered → round 1's
     // frontier is exactly the seed
-    var merged = seed
+    var merged = graft.Resources.checkpoint(seed
       .select(col("node"), lit(null).cast("long").as("old"),
-        col("dist").as("cand"))
-      .localCheckpoint()
+        col("dist").as("cand")))
     def distOf(m: DataFrame): DataFrame =
       m.select(col("node"),
         when(col("old").isNull, col("cand"))
@@ -595,11 +593,10 @@ object GraphQueries {
         .select(wadj("y").as("node"),
           (frontier("dist") + wadj("cost")).as("dist"))
       val best = relax.groupBy(col("node")).agg(min(col("dist")).as("cand"))
-      val nxt = dist.toDF("dnode", "old")
+      val nxt = graft.Resources.checkpoint(dist.toDF("dnode", "old")
         .join(best, col("dnode") === best("node"), "full_outer")
         .select(coalesce(col("dnode"), best("node")).as("node"),
-          col("old"), col("cand"))
-        .localCheckpoint()
+          col("old"), col("cand")))
       // frontier bound (1-row-style check over the checkpointed frame)
       val n = frontierOf(nxt).count()
       roundSizes.foreach(_ += n)
@@ -608,7 +605,6 @@ object GraphQueries {
       graft.Resources.unpersistCheckpoint(merged)
       merged = nxt
     }
-    graft.Resources.unpersistCheckpoint(wadj)
     (distOf(merged), rounds)
   }
 
@@ -825,7 +821,7 @@ object GraphQueries {
   private[graft] def hyperballOn(adjDf: DataFrame,
       roundSizes: Option[scala.collection.mutable.Buffer[Long]] = None)
       : DataFrame = {
-    val ad = adjDf.localCheckpoint()
+    val ad = graft.Resources.checkpoint(adjDf)
     val nodes = ad.select(col("x").as("v")).distinct()
     // WIDE register layout: ONE row per vertex, old0..old15 = the
     // registers before this round (NULL = empty), cand0..cand15 = the

@@ -1,19 +1,18 @@
 package graft.streaming
 
 import graft.functions.Vp8
-import graft.sources.Ivf
 import graft.streaming.StateMachines.{Ev, Machine, Out}
 
 /** VP8 decode as a STATEFUL STREAMING OPERATOR — what a live ingest
   * pipeline actually needs from a codec: frames arrive one micro-batch
   * at a time, and the decoder's cross-frame state crosses batch
   * boundaries through the state store exactly like any other operator
-  * state. That state is (RFC 6386):
-  *  - the REFERENCE PLANES — LAST, GOLDEN and ALTREF (§16.3's buffer
-  *    model; keyframes (re-)anchor all three, inter frames read any of
-  *    them per-MB and update them per their §9.7 header flags —
-  *    refresh_last/golden/alternate and the conditional copy fields,
-  *    applied exactly as in [[Vp8.decodeStream]]);
+  * state. Each event runs [[Vp8.step]], the same per-frame step
+  * [[Vp8.decodeStream]] folds over a batch, so the §9.7 buffer
+  * lifecycle has one definition. The state it carries (RFC 6386):
+  *  - the REFERENCE PLANES — LAST, GOLDEN and ALTREF ([[Vp8.Refs]],
+  *    §16.3's buffer model), flattened into [[DecState]]'s plane
+  *    fields;
   *  - the PERSISTENT ENTROPY STATE (§9.7) — the coefficient/MV/mode
   *    probability tables as updated by refresh_entropy_probs = 1
   *    frames (an inter frame arriving three micro-batches after the
@@ -22,13 +21,15 @@ import graft.streaming.StateMachines.{Ev, Machine, Out}
   * The entropy + lf-delta + segmentation state rides
   * [[Vp8.Ctx.toFlat]] (~1120 ints plus the segment map, a few KB)
   * next to the ~10 KB of planes — a RocksDB state-store entry,
-  * not a broadcast.
+  * not a broadcast. [[DecState]]'s field layout is the stored schema:
+  * checkpoints written by earlier builds resume.
   *
   * The payload rides the envelope's `text` field hex-encoded (the
   * envelope is a NumberMessage/TextMessage shape, not a byte one);
-  * emits carry Σluma in `value` and "Σchroma,kf" in `text`. Purity
-  * (state, event) → (state, emits) gives batch/streaming parity for
-  * free.
+  * emits carry Σluma in `value` and "Σchroma,kf" in `text`, summed
+  * over the display-cropped planes (§9.1) exactly as over
+  * decodeStream's frames. Purity (state, event) → (state, emits) gives
+  * batch/streaming parity for free.
   */
 object Vp8Machine {
 
@@ -43,63 +44,26 @@ object Vp8Machine {
       null, null, null, null, null)
 
     def step(s: DecState, e: Ev): (DecState, Seq[Out]) = {
-      val payload = java.util.HexFormat.of().parseHex(e.text)
-      val tag = Ivf.parseVp8Tag(payload)
-      // rebuild the mutable decoder context from the stored flat state
-      // (a fresh default one before the first keyframe)
+      // rebuild the mutable decoder context and the reference buffers
+      // from the stored state (fresh ones before the first keyframe)
       val cx =
         if (s.ctx == null) new Vp8.Ctx(Vp8.Profile.StandIn)
         else Vp8.Ctx.fromFlat(Vp8.Profile.StandIn, s.ctx)
-      if (tag.keyframe) {
-        val dec = Vp8.decode(payload, ctx = cx)
-        // §16.3: a keyframe refreshes ALL reference buffers
-        val ns = DecState(dec.frame.width, dec.frame.height,
-          dec.y, dec.u, dec.v, dec.y, dec.u, dec.v, dec.y, dec.u, dec.v,
-          Vp8.Ctx.toFlat(cx))
-        (ns, Seq(emit(e.ts, dec.y, dec.u, dec.v, dec.frame.width,
-          dec.frame.height, keyframe = true)))
-      } else {
-        require(s.lastY != null,
-          s"vp8 stream: inter frame at ts ${e.ts} before any keyframe")
-        val dec = Vp8.decodeInter(payload, s.w, s.h,
-          s.lastY, s.lastU, s.lastV, s.goldY, s.goldU, s.goldV,
-          altY = s.altY, altU = s.altU, altV = s.altV, ctx = cx)
-        // §9.7 buffer lifecycle, exactly decodeStream's: BOTH copies
-        // read the pre-update buffers (parallel assignment), then the
-        // refresh flags overwrite with this frame's decode
-        val f = dec.frame
-        var (gY, gU, gV) = (s.goldY, s.goldU, s.goldV)
-        var (aY, aU, aV) = (s.altY, s.altU, s.altV)
-        if (f.copyToGolden == 1) { gY = s.lastY; gU = s.lastU; gV = s.lastV }
-        else if (f.copyToGolden == 2) { gY = s.altY; gU = s.altU; gV = s.altV }
-        if (f.copyToAlt == 1) { aY = s.lastY; aU = s.lastU; aV = s.lastV }
-        else if (f.copyToAlt == 2) { aY = s.goldY; aU = s.goldU; aV = s.goldV }
-        if (f.refreshGolden) { gY = dec.y; gU = dec.u; gV = dec.v }
-        if (f.refreshAlt) { aY = dec.y; aU = dec.u; aV = dec.v }
-        val ns = s.copy(
-          lastY = if (f.refreshLast) dec.y else s.lastY,
-          lastU = if (f.refreshLast) dec.u else s.lastU,
-          lastV = if (f.refreshLast) dec.v else s.lastV,
-          goldY = gY, goldU = gU, goldV = gV,
-          altY = aY, altU = aU, altV = aV,
-          ctx = Vp8.Ctx.toFlat(cx))
-        (ns, Seq(emit(e.ts, dec.y, dec.u, dec.v, s.w, s.h,
-          keyframe = false)))
-      }
-    }
-
-    /** Sums run over the DISPLAY-cropped planes (§9.1), mirroring
-      * decodeStream's StreamFrame output, so batch/streaming parity
-      * holds for non-multiple-of-16 dimensions too. */
-    private def emit(ts: Long, y: Array[Int], u: Array[Int],
-        v: Array[Int], w: Int, h: Int, keyframe: Boolean): Out = {
-      val cy = Vp8.crop(y, Vp8.pad16(w), w, h)
-      val cu = Vp8.crop(u, Vp8.pad16(w) / 2, (w + 1) / 2, (h + 1) / 2)
-      val cv = Vp8.crop(v, Vp8.pad16(w) / 2, (w + 1) / 2, (h + 1) / 2)
-      val luma = cy.iterator.map(_.toLong).sum
-      val chroma = cu.iterator.map(_.toLong).sum +
-        cv.iterator.map(_.toLong).sum
-      Out(ts, luma.toDouble, s"$chroma,${if (keyframe) 1 else 0}")
+      val refs =
+        if (s.lastY == null) null
+        else Vp8.Refs(s.w, s.h, Vp8.Planes(s.lastY, s.lastU, s.lastV),
+          Vp8.Planes(s.goldY, s.goldU, s.goldV),
+          Vp8.Planes(s.altY, s.altU, s.altV))
+      val (r, f) =
+        Vp8.step(refs, java.util.HexFormat.of().parseHex(e.text), cx)
+      val ns = DecState(r.width, r.height,
+        r.last.y, r.last.u, r.last.v, r.golden.y, r.golden.u, r.golden.v,
+        r.altref.y, r.altref.u, r.altref.v, Vp8.Ctx.toFlat(cx))
+      val luma = f.y.iterator.map(_.toLong).sum
+      val chroma = f.u.iterator.map(_.toLong).sum +
+        f.v.iterator.map(_.toLong).sum
+      (ns, Seq(Out(e.ts, luma.toDouble,
+        s"$chroma,${if (f.keyframe) 1 else 0}")))
     }
   }
 }

@@ -157,6 +157,38 @@ class ResourcesSpec extends AnyFunSuite with SparkFixture {
     assert(shared.isEmpty, s"q30 wrote a shared layout: $shared")
   }
 
+  /** Run `name` at sf0.001 to a noop sink inside one query scope. */
+  private def scopedNoop(s: SparkSession, name: String): Unit =
+    Resources.withScope(SparkEntry.queries(name)(s, "/root/testdata/sf0.001")
+      .write.format("noop").mode("overwrite").save())
+
+  test("the graph fixpoints (g06 kcore, g07 sssp, g08 hyperballOn) leave " +
+      "no persistent RDD behind their scope; g01's edges stay pinned") {
+    val s = newSession()
+    scopedNoop(s, "g01_triangle_count") // pins the shared edge table
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (q <- Seq("g06_kcore", "g07_sssp", "g08_hyperball")) {
+      scopedNoop(s, q)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$q left persistent RDDs $left")
+    }
+    assert(before.subsetOf(sc.getPersistentRDDs.keySet),
+      "the pinned g01 edges outlive the graph queries' scopes")
+    Resources.releasePinned(s)
+  }
+
+  test("c10 and c14 cache their demux output only for the query's scope: " +
+      "the CacheManager is empty after each scoped run") {
+    val s = newSession()
+    val cache = s.sharedState.cacheManager
+    s.catalog.clearCache()
+    for (q <- Seq("c10_media_deployment", "c14_live_deployment")) {
+      scopedNoop(s, q)
+      assert(cache.isEmpty, s"$q left a cached plan")
+    }
+  }
+
   test("the checkpoint-plan dump follows SPARK_GRAFT_EXPLAIN_CHECKPOINTS=1 " +
       "only") {
     val key = "SPARK_GRAFT_EXPLAIN_CHECKPOINTS"

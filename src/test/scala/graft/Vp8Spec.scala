@@ -1916,4 +1916,23 @@ class Vp8Spec extends AnyFunSuite with TempDirs {
     assert(up54.length == 40 * 32)
     assert(up54.take(6).toSeq == Seq(0, 0, 1, 2, 3, 4))
   }
+
+  test("Vp8.scala is the only src/main file that decodes an inter frame " +
+      "or moves §9.7 reference buffers: every other stream walk goes " +
+      "through Vp8.step") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main")
+    val sources = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        new String(Files.readAllBytes(p), ISO_8859_1))
+      .toSeq
+    for (needle <- Seq("Vp8.decodeInter(", "copyToGolden")) {
+      val hits = sources.collect { case (p, t) if t.contains(needle) => p }
+      assert(hits.forall(_ == "scala/graft/functions/Vp8.scala"),
+        s"$needle outside Vp8.scala: $hits")
+    }
+  }
 }
